@@ -12,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   * deltas unattributable noise (the round-2 verdict's q07 "+13%").
   *
   * REGRESSION GATE: the previous round's medians are read from the
-  * newest BENCH_r*.json in the working directory and every query whose
-  * median grew by >1.5x AND >0.1 s absolute (the floor keeps
+  * newest same-core-count bench_medians_r*.json in the working
+  * directory (see `baselines`) and every query whose median grew
+  * by >1.5x AND >0.1 s absolute (the floor keeps
   * sub-100 ms queries from flapping the gate on scheduler noise) is
   * listed under "regressions" in the output line — so an unexplained
   * swing like round 4's q24 +44% is flagged the round it happens, not
@@ -22,46 +23,20 @@ import org.apache.spark.sql.SparkSession
   * BEST-EVER GATE: the prev-round compare alone lets a slow drift
   * through (+40% spread over three rounds never trips 1.5x once), so
   * the same thresholds are ALSO applied against each query's best-ever
-  * median across ALL BENCH_r*.json files → "regressions_vs_best".
+  * median across all those medians files → "regressions_vs_best".
   */
 object Bench {
 
-  /** Per-query medians from a previous round's BENCH_r*.json. The
-    * driver wraps the bench line in a log-tail string with escaped
-    * quotes — AND keeps only the final ~2 KB, so once the suite grew
-    * past ~90 entries the head of the "queries" object (the label
-    * included) is truncated away: an object-scoped scrape returns {}
-    * and silently disables the vs-prev gate (round 7 found BENCH_r06
-    * in exactly that state). Medians and ratios are instead told
-    * apart by OUR OWN print format: medians are always f"%.3f",
-    * regression/suspect ratios always f"%.2f" — so scrape every
-    * `qNN_name":D.DDD` pair with exactly three decimals anywhere in
-    * the content. A truncated tail then still yields the surviving
-    * partial baseline (missing queries simply aren't compared)
-    * instead of nothing.
-    */
-  def parsePrevMedians(content: String): Map[String, Double] =
-    """(q\d{2,}_[a-z0-9_]+)\\?":(-?\d+\.\d{3})(?!\d)""".r
-      .findAllMatchIn(content)
-      .map(m => m.group(1) -> m.group(2).toDouble)
-      .toMap
-
-  /** THE format invariant the tail-scrape above depends on: medians
-    * (and confirm times, which are fresh medians) always print with
-    * exactly 3 decimals, ratios with exactly 2 — every per-query
-    * double in the output line MUST go through one of these two
-    * formatters, so a future field can't silently poison next-round
-    * baselines with an ambiguous format (round-7 advice).
+  /** Every per-query double in the output lines prints through one of
+    * these: medians (and confirm times, which are fresh medians) with
+    * three decimals, ratios with two.
     */
   def fmtMedian(d: Double): String = f"$d%.3f"
   def fmtRatio(d: Double): String = f"$d%.2f"
 
-  /** Round-8: the medians the gates compare against are persisted as
-    * committed `bench_medians_r{N}.json` files — the driver's
-    * BENCH_r*.json keeps only the final ~2 KB of stdout, which has
-    * twice destroyed the per-query map (see parsePrevMedians). The
-    * tail-scrape stays as FALLBACK for rounds that predate the
-    * medians files; where both exist for a round, the file wins.
+  /** Per-query medians from a committed `bench_medians_r{N}.json` or
+    * `bench_quiet_r{N}.json` file (the `_cpus` tag is not a qNN key and
+    * never matches).
     */
   def parseMediansFile(content: String): Map[String, Double] =
     """"(q\d{2,}_[a-z0-9_]+)"\s*:\s*(-?\d+(?:\.\d+)?)""".r
@@ -158,74 +133,13 @@ object Bench {
     }
   }
 
-  /** MEASUREMENT-REGIME EPOCH (round-18). Two measurement regimes
-    * coexist in this file's history and rounds 16/17 proved they must
-    * never share a baseline store:
-    *   - SWEEP regime: a reading taken inside the 402-entry bench
-    *     session (~1,200 plan executions in one JVM). Session aging
-    *     inflates sub-second entries 2-3x over a fresh JVM (q01 sweep
-    *     0.34 s vs 0.102 s forked, same commit, same minute).
-    *   - QUIET regime: a flagship-gated fresh-JVM fork (QuickTime).
-    * Through round 17, `baselineMerge` folded quiet confirm values
-    * into the committed medians via min() — so every confirmed entry
-    * acquired a quiet-regime baseline that the NEXT sweep (sweep
-    * regime, 2-3x higher on the same plan) could never meet: the
-    * entry re-flagged every round, re-confirmed every round, and the
-    * confirm budget drowned (r16/r17 both published
-    * confirm_skipped_budget:true with a 16-entry backlog; 44 of the
-    * r36-baseline entries sat >1.5x their own polluted best-ever).
-    * The fix is regime separation: bench_medians_r{N}.json holds
-    * SWEEP-regime medians only (see baselineMerge), a parallel
-    * bench_quiet_r{N}.json holds QUIET-regime adjudicated medians
-    * (see quietStore), and files older than this epoch — whose values
-    * are an unrecoverable mix of the two — feed no gate. The epoch
-    * cut itself is adjudicated, not hidden: SURVEY §7.3a's round-18
-    * table records, for every entry in the r17 confirm backlog, the
-    * polluted best, the fresh K=10 quiet median, and the fresh sweep
-    * median, with same-window IoProbe anchors.
-    */
-  val regimeEpoch = 37
-
-  def epochRounds(
-      byRound: Seq[(Int, Map[String, Double])]): Seq[(Int, Map[String, Double])] =
-    byRound.filter(_._1 >= regimeEpoch)
-
-  /** CORE-COUNT REGIME (round-19). The driver runs the bench at BOTH
-    * $SPARK_GRAFT_CPUS=32 and a lower core count (8, the scaling
-    * probe), and both runs wrote medians/quiet files —
-    * `mayPublishMedians` only checked the SF. At sf0.1 the suite is
-    * fixed-overhead-bound, so 8-core readings sit systematically
-    * LOWER on many entries (q173_bpe_extend 1.44 s at 8c vs
-    * 2.4-3.4 s at 32c across five 32c sweeps); round 18's 8-core
-    * file (bench_medians_r41 — byte-identical to BENCH_r18_c8's
-    * values, provenance checked) entered the 32-core prev/best-ever
-    * chains and manufactured phantom "regressions" two rounds in a
-    * row (r18's q13_join_anti/q170_zipf_audit verdict gate; this
-    * round's q173/q21/q205/q274 flags, all of which read AT their
-    * 32-core baselines in a same-window clean-tree sweep). Files now
-    * carry an `"_cpus"` key — invisible to `parseMediansFile`'s
-    * qNN-only regex, so older parsers are unaffected — and every
-    * gate reads only files of its own core-count regime. Legacy
-    * files without the key are attributed by provenance: medians r41
-    * is the 8-core driver run; everything else pre-tag was written
-    * at 32 cores.
+  /** The `"_cpus"` core-count tag of a store file (see `baselines`);
+    * files written before the tag are 32-core runs.
     */
   def parseFileCpus(content: String): Option[Int] =
     """"_cpus"\s*:\s*(\d+)""".r.findFirstMatchIn(content)
       .map(_.group(1).toInt)
-  val legacyMedianCpus: Map[Int, Int] = Map(41 -> 8)
-  def fileCpus(round: Int, content: String): Int =
-    parseFileCpus(content).getOrElse(legacyMedianCpus.getOrElse(round, 32))
-
-  /** Legacy quiet files whose carry-forward MIXES core regimes:
-    * bench_quiet_r41 (32c base ++ the 8-core run's adjudications —
-    * e.g. q170_zipf_audit 0.377 at 8c vs its 32c quiet 1.385) and
-    * r42, which carried r41's 8-core delta forward. Their pure-32c
-    * adjudications were reconstructed into the `_cpus`-tagged
-    * bench_quiet_r43 (round-19); the mixed files feed no gate in
-    * either regime.
-    */
-  val legacyQuietMixed: Set[Int] = Set(41, 42)
+  def fileCpus(content: String): Int = parseFileCpus(content).getOrElse(32)
 
   /** The quiet-regime store: latest adjudicated fresh-JVM median per
     * entry, later files overriding earlier ones (each write already
@@ -240,6 +154,66 @@ object Bench {
       case (acc, (_, content)) =>
         acc ++ parseMediansFile(content).filter(_._2 > 0)
     }
+
+  /** What the gates compare one run against: `prev` is the newest
+    * same-core-count medians file (named by `prevFile`, "none" when
+    * there is none), `best` the per-entry minimum over all of them,
+    * `quiet` the same-core-count quiet store, and `nextRound` the
+    * number this run's files take.
+    */
+  final case class Baselines(
+      prev: Map[String, Double], prevFile: String,
+      best: Map[String, Double], quiet: Map[String, Double], nextRound: Int)
+
+  /** MEASUREMENT REGIMES (round-18). Two regimes must never share a
+    * baseline store:
+    *   - SWEEP regime: a reading taken inside the 402-entry bench
+    *     session (~1,200 plan executions in one JVM). Session aging
+    *     inflates sub-second entries 2-3x over a fresh JVM (q01 sweep
+    *     0.34 s vs 0.102 s forked, same commit, same minute).
+    *   - QUIET regime: a flagship-gated fresh-JVM fork (QuickTime).
+    * Through round 17, `baselineMerge` folded quiet confirm values
+    * into the committed medians via min() — so every confirmed entry
+    * acquired a quiet-regime baseline that the NEXT sweep could never
+    * meet: the entry re-flagged every round, re-confirmed every round,
+    * and the confirm budget drowned (r16/r17 both published
+    * confirm_skipped_budget:true with a 16-entry backlog).
+    * bench_medians_r{N}.json therefore holds SWEEP-regime medians only
+    * (see baselineMerge) and bench_quiet_r{N}.json QUIET-regime
+    * adjudicated medians. The mixed-regime medians files of rounds
+    * 8-36 were deleted (git history keeps them; SURVEY's round-18
+    * entry adjudicates the cut).
+    *
+    * CORE-COUNT REGIME (round-19). At sf0.1 the suite is
+    * fixed-overhead-bound, so readings at a lower core count sit
+    * systematically LOWER on many entries (q173_bpe_extend 1.44 s at
+    * 8c vs 2.4-3.4 s at 32c); round 18's 8-core medians entered the
+    * 32-core prev/best-ever chains and manufactured phantom
+    * "regressions" two rounds in a row. Every store therefore carries
+    * an `"_cpus"` key and every gate reads only files of its own
+    * core count. Files written before the tag are 32-core runs, except
+    * bench_medians_r41, the 8-core run, which carries the tag by hand.
+    *
+    * `baselines` builds all of this from the committed stores among
+    * `files` ((file name, content) pairs); any other file is ignored.
+    * Numbering spans every store of every core count, so a new file
+    * never collides with an existing round number.
+    */
+  def baselines(files: Seq[(String, String)], cpus: Int): Baselines = {
+    val Store = """bench_(medians|quiet)_r(\d+)\.json""".r
+    val stores = files.collect { case (n @ Store(kind, r), c) => (kind, r.toInt, n, c) }
+    val medians = stores
+      .collect { case ("medians", r, n, c) if fileCpus(c) == cpus => (r, n, c) }
+      .sortBy(_._1)
+    val rounds = medians.map { case (_, _, c) => parseMediansFile(c) }
+    Baselines(
+      prev = rounds.lastOption.getOrElse(Map.empty),
+      prevFile = medians.lastOption.map(_._2).getOrElse("none"),
+      best = bestEver(rounds),
+      quiet = quietStore(stores.collect {
+        case ("quiet", r, _, c) if fileCpus(c) == cpus => r -> c }),
+      nextRound = (stores.map(_._2) :+ 0).max + 1)
+  }
 
   /** BASELINE NEVER-RAISE RULE (round-11, regime-pure since round-18):
     * round 10's committed bench_medians_r14 carried q155=34.5 s /
@@ -262,7 +236,7 @@ object Bench {
     * median — an adjudicated quiet confirm decides WHETHER a raise
     * stands but its (systematically 2-3x lower) value never replaces
     * the sweep reading. The round-8..17 min(sweep, confirmed) fold is
-    * exactly the poisoning mechanism described at `regimeEpoch`.
+    * exactly the poisoning mechanism described at `baselines`.
     * Returns (merged baseline, rejected-raise entry names).
     */
   def baselineMerge(
@@ -325,12 +299,51 @@ object Bench {
     * the summary runs long (33 unresolved entries + a bad confirm
     * round could reach ~2.3 KB): drop the confirm_times map to a
     * count, then the unresolved list to a count, then the suspect
-    * ratio maps to counts — every dropped map still lives verbatim on
-    * the final_detail line. The first candidate under `limit` wins;
-    * candidates must be ordered most- to least-detailed.
+    * ratio maps to counts, then the rejected raises and the published
+    * regressions — every dropped map still lives verbatim on the
+    * final_detail line. worst_movers is capped at 8 entries when it is
+    * built, so every candidate keeps it (BENCH_r19 printed `{}` when
+    * 103 rejected raises pushed the line onto the last candidate). The
+    * first candidate under `limit` wins; candidates must be ordered
+    * most- to least-detailed.
     */
   def shrinkToLimit(candidates: Seq[String], limit: Int = 1700): String =
     candidates.find(_.length <= limit).getOrElse(candidates.last)
+
+  def medianJson(m: Seq[(String, Double)]): String =
+    m.map { case (k, v) => "\"" + k + "\":" + fmtMedian(v) }.mkString("{", ",", "}")
+  def ratioJson(m: Seq[(String, Double)]): String =
+    m.map { case (k, r) => "\"" + k + "\":" + fmtRatio(r) }.mkString("{", ",", "}")
+  def namesJson(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** Everything the compact last line reports. */
+  final case class FinalSummary(
+      total: Double, sfDir: String, nQueries: Int, mediansFile: String,
+      headline: Seq[(String, Double)], geomeanAll: Double, nCommonAll: Int,
+      worstMovers: Seq[(String, Double)],
+      regr: Seq[(String, Double)], regrVsBest: Seq[(String, Double)],
+      suspect: Seq[(String, Double)], suspectVsBest: Seq[(String, Double)],
+      confirmTimes: Seq[(String, Double)], confirmUnreliable: Boolean,
+      unresolved: Seq[String], confirmSkippedBudget: Boolean,
+      raiseRejected: Seq[String], sweepDegraded: Boolean, prev: String)
+
+  /** The compact last line, shrunk to `limit` (see shrinkToLimit). */
+  def compactFinalLine(s: FinalSummary, limit: Int = 1700): String = {
+    import s._
+    def line(rg: String, rgB: String, ct: String, un: String,
+        susp: String, suspB: String, rr: String) =
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","phase":"final","sf":"$sfDir","n_queries":$nQueries,"medians_file":"$mediansFile","queries":${medianJson(headline)},"geomean_vs_prev_all":${fmtRatio(geomeanAll)},"n_common_all":$nCommonAll,"worst_movers":${ratioJson(worstMovers)},"regressions_n":${regr.size},"regressions":$rg,"regressions_vs_best_n":${regrVsBest.size},"regressions_vs_best":$rgB,"suspect_n":${suspect.size},"suspect":$susp,"suspect_vs_best_n":${suspectVsBest.size},"suspect_vs_best":$suspB,"confirm_times_n":${confirmTimes.size},"confirm_times":$ct,"confirm_unreliable":$confirmUnreliable,"confirm_unresolved_n":${unresolved.size},"confirm_unresolved":$un,"confirm_skipped_budget":$confirmSkippedBudget,"baseline_raise_rejected_n":${raiseRejected.size},"baseline_raise_rejected":$rr,"sweep_degraded":$sweepDegraded,"prev":"$prev"}"""
+    val (rg, rgB) = (ratioJson(regr), ratioJson(regrVsBest))
+    val (susp, suspB) = (ratioJson(suspect), ratioJson(suspectVsBest))
+    val (ct, un, rr) =
+      (medianJson(confirmTimes), namesJson(unresolved), namesJson(raiseRejected))
+    shrinkToLimit(Seq(
+      line(rg, rgB, ct, un, susp, suspB, rr),
+      line(rg, rgB, "{}", un, susp, suspB, rr),
+      line(rg, rgB, "{}", "[]", susp, suspB, rr),
+      line(rg, rgB, "{}", "[]", "{}", "{}", rr),
+      line("{}", "{}", "{}", "[]", "{}", "{}", "[]")), limit)
+  }
 
   /** CONFIRM PRIORITIZATION + CAP (round-17): a loud sweep flags
     * dozens of entries and the confirm fork re-times EVERY one (x3
@@ -469,55 +482,12 @@ object Bench {
       else ts.sorted.apply(n / 2)
     }
 
-    // per-round baselines: committed bench_medians_r{N}.json files are
-    // authoritative; the BENCH_r{N}.json tail-scrape fills rounds that
-    // predate them (the driver keeps ~2 KB of stdout — twice enough to
-    // truncate the per-query map). NOTE the keys deliberately do NOT
-    // collapse: bench_medians_r{N+1} (written at the END of round N)
-    // and BENCH_r{N} carry the same sweep's data under different round
-    // numbers, so both enter bestEver — harmless, since bestEver takes
-    // the min and the fresh file values are never higher than the aged
-    // tail-scraped ones; `prev` picks the medians file (highest key).
-    def roundNo(fn: String): Int = "\\d+".r.findFirstIn(fn).get.toInt
-    val cwd = Option(new java.io.File(".").listFiles()).toSeq.flatten
-    val benchFiles = cwd.filter(_.getName.matches("BENCH_r\\d+\\.json"))
-      .sortBy(f => roundNo(f.getName))
-    val medianFiles = cwd.filter(_.getName.matches("bench_medians_r\\d+\\.json"))
-    def slurp(f: java.io.File) =
-      new String(java.nio.file.Files.readAllBytes(f.toPath))
-    val scraped = benchFiles
-      .map(f => roundNo(f.getName) -> parsePrevMedians(slurp(f))).toMap
-    // CORE-COUNT REGIME filter (round-19, see fileCpus scaladoc): only
-    // same-core-count medians files feed this run's prev/best gates —
-    // the 8-core scaling-probe run's files otherwise poison the
-    // 32-core baseline chain (and vice versa)
-    val fromFiles = medianFiles
-      .map(f => (roundNo(f.getName), slurp(f)))
-      .filter { case (r, c) => fileCpus(r, c) == cpus }
-      .map { case (r, c) => r -> parseMediansFile(c) }.toMap
-    val byRoundAll = (scraped ++ fromFiles).toSeq.sortBy(_._1) // file wins
-    // REGIME EPOCH (round-18, see regimeEpoch scaladoc): pre-epoch
-    // files mix sweep- and quiet-regime values and feed NO gate; the
-    // driver's BENCH_r{N} scrapes carry driver round numbers (< 37
-    // forever), so the scrape fallback is pre-epoch by construction —
-    // a missing post-epoch medians file falls back to the previous
-    // post-epoch one, never to a mixed-regime scrape
-    val byRound = epochRounds(byRoundAll)
-    val allRounds = byRound.map(_._2)
-    val prev = allRounds.lastOption.getOrElse(Map.empty)
-    // quiet-regime baselines (adjudicated fresh-JVM medians) — same
-    // core-count regime only, and never the legacy mixed-regime files
-    // (see legacyQuietMixed scaladoc)
-    val quietFiles = cwd.filter(_.getName.matches("bench_quiet_r\\d+\\.json"))
-    val quietBase = quietStore(
-      quietFiles
-        .map(f => (roundNo(f.getName), slurp(f)))
-        .filterNot { case (r, _) => legacyQuietMixed(r) }
-        .filter { case (_, c) => parseFileCpus(c).getOrElse(32) == cpus })
-    def fmt(rs: Seq[(String, Double)]) = rs
-      .map { case (k, r) => "\"" + k + "\":" + fmtRatio(r) }
-      .mkString("{", ",", "}")
-    val best = bestEver(allRounds)
+    // the committed same-core-count baseline stores (see `baselines`)
+    val Baselines(prev, prevName, best, quietBase, nextRound) = baselines(
+      Option(new java.io.File(".").listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("bench_"))
+        .map(f => f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath))),
+      cpus)
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     // one warm-up of the flagship to absorb JVM/codegen first-run cost
@@ -548,9 +518,7 @@ object Bench {
     }
     val results = names.map(n => n -> runStat(spark)(n, runsFor(n)))
     System.err.println(f"[bench] sweep done in $elapsedSec%.0f s (budget $budgetSec%.0f s)")
-    val qs = results
-      .map { case (k, v) => "\"" + k + "\":" + fmtMedian(v) }
-      .mkString("{", ",", "}")
+    val qs = medianJson(results)
     val total = results.map(_._2).filter(_ >= 0).sum
     val sweepRegr = regressions(prev, results)
     val sweepBest = regressions(best, results)
@@ -567,16 +535,12 @@ object Bench {
     // driver's ground-truth comparison was blind to 98% of the suite.
     // geomean_vs_prev_all covers every entry present in both this
     // sweep and the previous same-regime medians file (prev/now, >1 =
-    // faster); worst_movers is the bounded top-8 now/prev ratio map
-    // (2-decimal ratios — the scrape regex never mistakes them for
-    // 3-decimal medians).
+    // faster); worst_movers is the bounded top-8 now/prev ratio map.
     val commonRatios = results.flatMap { case (k, v) =>
       prev.get(k).filter(_ > 0).collect { case p if v > 0 => k -> (v / p) } }
     val geomeanAll = if (commonRatios.isEmpty) -1.0
       else math.exp(commonRatios.map(r => math.log(1.0 / r._2)).sum / commonRatios.size)
-    val worstMoversJson = commonRatios.sortBy(-_._2).take(8)
-      .map { case (k, r) => "\"" + k + "\":" + fmtRatio(r) }
-      .mkString("{", ",", "}")
+    val worstMovers = commonRatios.sortBy(-_._2).take(8)
     val flaggedAll = (sweepRegr.map(_._1) ++ sweepBest.map(_._1)).distinct
     // severity baseline: the best defensible value we hold for the
     // entry (min of prev-round and best-ever where present)
@@ -624,8 +588,7 @@ object Bench {
     // sweep-only never-raise merge — and then the confirm pass runs
     // and re-publishes both as the FINAL line / file. A killed confirm
     // now costs the confirms, not the round. The driver keeps the
-    // stdout TAIL, so when both lines survive the final one wins (and
-    // parsePrevMedians' toMap is last-match-wins for scraped rounds).
+    // stdout TAIL, so when both lines survive the final one wins.
     // see sweepFlagship/sweepIsDegraded scaladoc (round-14): a false
     // PUBLISH stays defused by the never-raise rule + per-entry
     // adjudication, so the asymmetric risk is losing good medians —
@@ -633,14 +596,9 @@ object Bench {
     val (sweepFlagName, sweepFlagBase) = sweepFlagship(prev, best)
     val sweepFlag = results.toMap.getOrElse(sweepFlagName, -1.0)
     val sweepDegraded = sweepIsDegraded(sweepFlagBase, sweepFlag)
-    // numbering spans ALL files (epoch- or regime-filtered or not) — a
-    // new file must never collide with an existing round number
-    val nextRound = (byRoundAll.map(_._1) ++
-      medianFiles.map(f => roundNo(f.getName)) ++
-      quietFiles.map(f => roundNo(f.getName)) :+ 0).max + 1
     val mayPublishMedians = sfDir.endsWith("sf0.1") && !sweepDegraded
     def writeMedians(baseline: Seq[(String, Double)]): Unit = {
-      // "_cpus" regime tag (round-19, see fileCpus): qNN-only parsers
+      // "_cpus" regime tag (round-19, see baselines): qNN-only parsers
       // skip it; regime-aware readers filter on it
       val body = (("  \"_cpus\": " + cpus) +: baseline
         .map { case (k, v) => "  \"" + k + "\": " + fmtMedian(v) })
@@ -649,12 +607,11 @@ object Bench {
         java.nio.file.Paths.get(f"bench_medians_r$nextRound%02d.json"),
         body.getBytes("UTF-8"))
     }
-    val prevName = benchFiles.lastOption.map(_.getName).getOrElse("none")
     def jsonLine(phase: String, regr: String, regrBest: String,
         confirmTimes: String, confirmUnreliable: Boolean,
         unresolvedJson: String, raiseRejectedJson: String,
         confirmSkippedBudget: Boolean): String =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","phase":"$phase","queries":$qs,"prev":"$prevName","regressions":$regr,"regressions_vs_best":$regrBest,"suspect":${fmt(sweepRegr)},"suspect_vs_best":${fmt(sweepBest)},"confirm_times":$confirmTimes,"confirm_unreliable":$confirmUnreliable,"confirm_unresolved":$unresolvedJson,"confirm_skipped_budget":$confirmSkippedBudget,"baseline_raise_rejected":$raiseRejectedJson,"sweep_degraded":$sweepDegraded,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","phase":"$phase","queries":$qs,"prev":"$prevName","regressions":$regr,"regressions_vs_best":$regrBest,"suspect":${ratioJson(sweepRegr)},"suspect_vs_best":${ratioJson(sweepBest)},"confirm_times":$confirmTimes,"confirm_unreliable":$confirmUnreliable,"confirm_unresolved":$unresolvedJson,"confirm_skipped_budget":$confirmSkippedBudget,"baseline_raise_rejected":$raiseRejectedJson,"sweep_degraded":$sweepDegraded,"sf":"$sfDir"}"""
     if (mayPublishMedians)
       writeMedians(baselineMerge(results, Map.empty, prev)._1)
     else if (sweepDegraded) System.err.println(
@@ -741,38 +698,21 @@ object Bench {
     // discount), and the raw sweep flag stays visible under "suspect"
     val regrSeq = confirmRegressions(prev ++ quietBase, flagged, confirmed)
     val regrBestSeq = confirmRegressions(best ++ quietBase, flagged, confirmed)
-    val regr = fmt(regrSeq)
-    val regrBest = fmt(regrBestSeq)
-    // an UNRELIABLE confirm pass prints NO times: parsePrevMedians
-    // scrapes every qNN:D.DDD pair last-match-wins and the driver's
-    // ~2 KB log tail keeps exactly the end of the line, so contended
-    // (2-13x inflated) confirm values printed in 3-decimal format
-    // would overwrite sweep medians in any round whose medians file
-    // goes missing — the very poisoning mechanism the gate exists to
-    // stop (round-9 advice, medium)
-    // round-11: only ADJUDICATED values print — a loud irreproducible
-    // reading never reaches the scrapable 3-decimal format at all
+    // an UNRELIABLE confirm pass prints NO times (round-9), and only
+    // ADJUDICATED values print (round-11): a contended (2-13x
+    // inflated) or loud irreproducible reading is never published
     val confirmTimes =
-      if (!confirmReliable) "{}"
-      else adjudicated.toSeq.sorted
-        .map { case (k, v) => "\"" + k + "\":" + fmtMedian(v) }
-        .mkString("{", ",", "}")
-    val unresolvedJson = unresolvedConfirms
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+      if (confirmReliable) adjudicated.toSeq.sorted else Nil
     // ---- FINAL PUBLISH ---------------------------------------------
-    // Re-persist this round's medians with the adjudicated confirms
-    // folded in: a flagged query stores min(sweep median, confirmed
-    // median) — BOTH are genuine measurements and the baseline should
-    // be best-known, so a contended fork can never RAISE an entry
-    // (the round-8 poisoning mechanism: confirmed-wins wrote 2-13x
-    // inflated values into bench_medians_r09). An unreliable confirm
-    // pass contributes nothing beyond the sweep-phase file already on
-    // disk. Only the driver's real bench config (sf0.1) may write —
-    // the sf0.001 mechanics probe must not poison baselines; and a
-    // degraded sweep (q04 >2x its previous-round median — the
-    // round-10 tell) publishes NO medians file at all: a missing
-    // baseline round falls back to the tail-scrape, which is strictly
-    // better than an inflated one.
+    // Re-persist this round's medians under the never-raise merge, now
+    // with the adjudicated confirms deciding which raises stand (see
+    // baselineMerge). An unreliable confirm pass contributes nothing
+    // beyond the sweep-phase file already on disk. Only the driver's
+    // real bench config (sf0.1) may write — the sf0.001 mechanics
+    // probe must not poison baselines; and a degraded sweep publishes
+    // NO medians file at all: a missing baseline round falls back to
+    // the previous same-core-count file, which is strictly better
+    // than an inflated one.
     val (mergedBaseline, raiseRejected) =
       baselineMerge(results, adjudicated, prev, quietBase)
     if (mayPublishMedians) {
@@ -782,7 +722,7 @@ object Bench {
       // persist adjudicated quiet-regime medians to their OWN store
       // (carrying the previous store forward): these values gate
       // future confirm adjudication but never touch the sweep-regime
-      // medians file — see the regimeEpoch scaladoc
+      // medians file — see the baselines scaladoc
       if (confirmReliable && adjudicated.nonEmpty) {
         val body = (("  \"_cpus\": " + cpus) +:
           (quietBase ++ adjudicated).toSeq.sorted
@@ -793,8 +733,6 @@ object Bench {
           body.getBytes("UTF-8"))
       }
     }
-    val raiseRejectedJson = raiseRejected
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
     // ---- GUARANTEED LAST LINE + EXIT 0 (round-15) -------------------
     // The r14 tail shows WARN/stderr lines printed AFTER the sweep
     // JSON (a StateStore maintenance thread raced spark.stop()), and
@@ -808,34 +746,19 @@ object Bench {
     try org.apache.logging.log4j.core.config.Configurator.setRootLevel(
       org.apache.logging.log4j.Level.OFF)
     catch { case _: Throwable => }
-    // full per-query detail on an EARLIER line (humans + the
-    // tail-scrape fallback when this line partially survives) ...
-    println(jsonLine("final_detail", regr, regrBest, confirmTimes,
-      confirmUnreliable = !confirmReliable, unresolvedJson,
-      raiseRejectedJson, confirmSkippedBudget = confirmBudgetHit))
-    // ... then the guaranteed-parseable compact LAST line (round-17):
-    // bounded headline queries + gate outcomes, degradable under 1700
-    // chars — see shrinkToLimit scaladoc for why the full map cannot
-    // be here. NOTE confirm_times keeps the 3-decimal median format
-    // (scrape-safe, adjudicated-only); ratios keep 2 decimals.
-    val headline = headlineQueries
-      .map(k => "\"" + k + "\":" + fmtMedian(resMap.getOrElse(k, -1.0)))
-      .mkString("{", ",", "}")
-    val mediansFile =
-      if (mayPublishMedians) f"bench_medians_r$nextRound%02d.json" else "none"
-    def compact(rg: String, rgB: String, ct: String, un: String,
-        susp: String, suspB: String, rr: String, wm: String) =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","phase":"final","sf":"$sfDir","n_queries":${results.size},"medians_file":"$mediansFile","queries":$headline,"geomean_vs_prev_all":${fmtRatio(geomeanAll)},"n_common_all":${commonRatios.size},"worst_movers":$wm,"regressions_n":${regrSeq.size},"regressions":$rg,"regressions_vs_best_n":${regrBestSeq.size},"regressions_vs_best":$rgB,"suspect_n":${sweepRegr.size},"suspect":$susp,"suspect_vs_best_n":${sweepBest.size},"suspect_vs_best":$suspB,"confirm_times_n":${if (confirmReliable) adjudicated.size else 0},"confirm_times":$ct,"confirm_unreliable":${!confirmReliable},"confirm_unresolved_n":${unresolvedConfirms.size},"confirm_unresolved":$un,"confirm_skipped_budget":$confirmBudgetHit,"baseline_raise_rejected_n":${raiseRejected.size},"baseline_raise_rejected":$rr,"sweep_degraded":$sweepDegraded,"prev":"$prevName"}"""
-    println(shrinkToLimit(Seq(
-      compact(regr, regrBest, confirmTimes, unresolvedJson,
-        fmt(sweepRegr), fmt(sweepBest), raiseRejectedJson, worstMoversJson),
-      compact(regr, regrBest, "{}", unresolvedJson,
-        fmt(sweepRegr), fmt(sweepBest), raiseRejectedJson, worstMoversJson),
-      compact(regr, regrBest, "{}", "[]",
-        fmt(sweepRegr), fmt(sweepBest), raiseRejectedJson, worstMoversJson),
-      compact(regr, regrBest, "{}", "[]", "{}", "{}", raiseRejectedJson,
-        worstMoversJson),
-      compact("{}", "{}", "{}", "[]", "{}", "{}", "[]", "{}"))))
+    // full per-query detail on an EARLIER line ...
+    println(jsonLine("final_detail", ratioJson(regrSeq), ratioJson(regrBestSeq),
+      medianJson(confirmTimes), confirmUnreliable = !confirmReliable,
+      namesJson(unresolvedConfirms), namesJson(raiseRejected),
+      confirmSkippedBudget = confirmBudgetHit))
+    // ... then the guaranteed-parseable compact LAST line (round-17)
+    println(compactFinalLine(FinalSummary(total, sfDir, results.size,
+      if (mayPublishMedians) f"bench_medians_r$nextRound%02d.json" else "none",
+      headlineQueries.map(k => k -> resMap.getOrElse(k, -1.0)),
+      geomeanAll, commonRatios.size, worstMovers, regrSeq, regrBestSeq,
+      sweepRegr, sweepBest, confirmTimes, !confirmReliable,
+      unresolvedConfirms, confirmBudgetHit, raiseRejected, sweepDegraded,
+      prevName)))
     System.out.flush()
     sys.exit(0)
   }

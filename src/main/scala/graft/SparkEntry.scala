@@ -8328,7 +8328,7 @@ object SparkEntry {
          WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""",
     // exact float-math oracles: Spark's DotProduct accumulates double
     // left-to-right, bit-identical to DuckDB list_sum/list_transform
-    // (validated pairwise over the fixture — tools/CosineProbe).
+    // (validated pairwise over the fixture against DuckDB).
     // q24 plants deterministic near-dup copies inside the query (the
     // fixture's organic max pairwise cosine is 0.51 — see
     // Dedup.embeddingNearDupPlanted) so the oracle verifies REAL rows;

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
-import org.apache.spark.util.LongAccumulator
 
 /** Source layer (SURVEY.md §2 O1-O3, O10).
   *
@@ -145,8 +144,8 @@ object Tables {
     * (`src/python/mapper.py:49-57`: whole-line try/except + counter).
     * `.gz` paths decompress transparently (O3). DROPMALFORMED drops
     * unparseable lines; the dropped count is (total file lines -
-    * surviving rows), observable via [[countingCsv]] when the caller
-    * needs the reference's `line_count` metric.
+    * surviving rows), observable via [[droppedLineCount]] when the
+    * caller needs the reference's `line_count` metric.
     */
   def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     csv(spark, Seq(path), schema)
@@ -160,36 +159,6 @@ object Tables {
       .schema(schema)
       .option("mode", "DROPMALFORMED")
       .csv(paths: _*)
-
-  /** Same, but also count raw input lines into `linesIn` the way every
-    * reference task counts lines (`src/python/mapper.py:37,48`). The
-    * accumulator is populated lazily when the returned frame executes.
-    *
-    * AT-LEAST-ONCE caveat: the count is incremented inside a
-    * transformation, so task retries / speculative execution /
-    * stage recomputation can overcount — unlike the reference's
-    * exactly-once per-object `line_count`. When the exact metric
-    * matters, use [[droppedLineCount]], which derives both counts
-    * from actions.
-    */
-  def countingCsv(
-      spark: SparkSession,
-      path: String,
-      schema: StructType,
-      linesIn: LongAccumulator
-  ): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val raw = spark.read.textFile(path)
-    val counted = raw.map { line => linesIn.add(1L); line }(raw.encoder)
-    spark.read
-      .schema(schema)
-      .option("mode", "DROPMALFORMED")
-      .csv(counted)
-      // DROPMALFORMED still emits all-null rows for lines whose field
-      // count mismatches in some corner cases; enforce non-null on the
-      // first column like the reference's split-index access would.
-      .filter(col(schema.fields.head.name).isNotNull)
-  }
 
   /** CSV read with an `observe()` row counter attached: the returned
     * Observation yields the exact surviving-row count ("rows_out")

@@ -46,14 +46,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(df.collect().length == 2)
   }
 
-  test("countingCsv counts every raw input line like the reference's line_count") {
-    val acc = spark.sparkContext.longAccumulator("linesIn")
-    val p = writeTemp("mix.csv", goodLines :+ "garbage line")
-    val df = Tables.countingCsv(spark, p, Tables.uservisitsSchema, acc)
-    assert(df.count() == 2)
-    assert(acc.value == 3)
-  }
-
   test("observedCsv reports exact surviving rows via observe()") {
     val p = writeTemp("obs.csv", goodLines ++ Seq("garbage", "a,b,c"))
     val (df, obs) = Tables.observedCsv(spark, p, Tables.uservisitsSchema)
