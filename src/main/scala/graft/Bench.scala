@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
@@ -398,6 +398,32 @@ object Bench {
     }
   }
 
+  /** Wall seconds to build `build` and write it to the `noop` sink.
+    *
+    * BETWEEN-MEASUREMENT HYGIENE (round-18): entries pin shared
+    * subtrees with eager localCheckpoint/persist, whose blocks
+    * outlive the query — nothing unpersists them once the frame
+    * goes out of scope until a driver GC lets ContextCleaner
+    * catch up, so a 403-entry sweep accumulates hundreds of dead
+    * cached RDDs (storage-memory pressure + GC churn = part of
+    * the measured session aging). Each run computes from parquet
+    * regardless (a fresh invocation builds fresh RDDs — nothing
+    * here ever REUSES a previous run's blocks, so this is the
+    * opposite of cross-run caching); dropping the dead blocks
+    * happens OUTSIDE the timed region, and in a finally so a
+    * FAILED entry's pinned blocks don't sit in storage during
+    * the next entry's timed region (round-18 advice).
+    */
+  def timeNoop(spark: SparkSession)(build: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    try {
+      build.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    } finally
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
+  }
+
   /** The bounded headline subset for the compact last line's
     * "queries" object: the reference's own benchmark queries (scan
     * 1a/1b, projection, aggregate 2a/2b, global sum — BASELINE.md's
@@ -442,34 +468,13 @@ object Bench {
         _, org.apache.logging.log4j.Level.ERROR))
     catch { case _: Throwable => }
 
-    def runOnce(s: SparkSession)(name: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(s, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
+    def runOnce(s: SparkSession)(name: String): Double =
+      try timeNoop(s)(SparkEntry.queries(name)(s, sfDir))
+      catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
-      } finally {
-        // BETWEEN-MEASUREMENT HYGIENE (round-18): entries pin shared
-        // subtrees with eager localCheckpoint/persist, whose blocks
-        // outlive the query — nothing unpersists them once the frame
-        // goes out of scope until a driver GC lets ContextCleaner
-        // catch up, so a 403-entry sweep accumulates hundreds of dead
-        // cached RDDs (storage-memory pressure + GC churn = part of
-        // the measured session aging). Each run computes from parquet
-        // regardless (a fresh invocation builds fresh RDDs — nothing
-        // here ever REUSES a previous run's blocks, so this is the
-        // opposite of cross-run caching); dropping the dead blocks
-        // happens OUTSIDE the timed region, and in a finally so a
-        // FAILED entry's pinned blocks don't sit in storage during
-        // the next entry's timed region (round-18 advice).
-        s.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
       }
-    }
 
     // n=1 -> the single reading; n=2 -> min (timing noise is strictly
     // additive, so the min of two is the honest quiet estimate and is

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -29,12 +29,25 @@ object CleanPipeline {
     */
   def cleanCorpus(
       spark: SparkSession, sfDir: String,
-      minTokens: Int = 20, jaccardThreshold: Double = 0.5): DataFrame = {
-    val lang = TextAnalysis.langId(spark, sfDir)
-      .select(col("doc_id"), col("lang_pred"))
-    val toks = TextAnalysis.tokenStats(spark, sfDir)
-      .select(col("doc_id"), col("n_ws_tokens"))
-    val gated = lang.join(toks, "doc_id")
+      minTokens: Int = 20, jaccardThreshold: Double = 0.5): DataFrame =
+    gatedSurvivors(spark, sfDir, minTokens, jaccardThreshold)
+
+  /** The survivor base q25 and q76 share: ONE `documents` scan selects
+    * `doc_id`, `lang_pred`, `n_ws_tokens` and the caller's row-local
+    * `extras`, then the lang and token gates, the exact-dedup
+    * semi-join and the near-dup anti-join. The gates are built from
+    * the column builders `TextAnalysis.langId` / `tokenStats` use, so
+    * every value is the operators' own; a join of those operators
+    * would scan and regex-pass the corpus once per component.
+    */
+  private def gatedSurvivors(
+      spark: SparkSession, sfDir: String,
+      minTokens: Int, jaccardThreshold: Double,
+      extras: Column*): DataFrame = {
+    val (pred, _) = TextAnalysis.langPredCols(col("text"))
+    val gated = Tables.load(spark, sfDir, "documents")
+      .select(Seq(col("doc_id"), pred.as("lang_pred"),
+        TextAnalysis.tokenCount(col("text")).as("n_ws_tokens")) ++ extras: _*)
       .filter(col("lang_pred") =!= "und" && col("n_ws_tokens") >= minTokens)
     val exactKeep = Dedup.exactSurvivors(spark, sfDir)
     val nearDrop = Dedup
@@ -43,7 +56,6 @@ object CleanPipeline {
     gated
       .join(exactKeep, Seq("doc_id"), "left_semi")
       .join(nearDrop, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("lang_pred"), col("n_ws_tokens"))
   }
 
   /** The q76 capstone: the WHOLE training-corpus pipeline in one
@@ -61,34 +73,15 @@ object CleanPipeline {
   def corpusManifest(
       spark: SparkSession, sfDir: String,
       maxDupFrac: Double = 0.5): DataFrame = {
-    // SINGLE-SCAN base (round-19, guide §1.2 "remove passes"): the
-    // lang gate, token gate, PII columns, and split assignment are
-    // all ROW-LOCAL over one text column, yet the join-of-operators
-    // form scanned documents once per component (each join side its
-    // own scan + regex pass). The shared COLUMN builders
-    // (TextAnalysis.langPredCols / plantedEmailText / emailCountCol /
-    // redactedFpCol, TrainingPrep.splitOfBucket) are the operators'
-    // own expressions, so every value is identical; only the
-    // aggregate-shaped components (exact dedup, near-dup pairs,
-    // repetition stats) remain joins. 4 corpus scans fold into 1.
-    val d = Tables.load(spark, sfDir, "documents")
-    val (pred, _) = TextAnalysis.langPredCols(col("text"))
+    // the PII columns and split assignment are row-local too, so they
+    // ride the shared base's one scan; only the aggregate-shaped
+    // repetition stats remain a join
     val planted = TextAnalysis.plantedEmailText(col("doc_id"), col("text"))
-    val base = d.select(col("doc_id"),
-        pred.as("lang_pred"),
-        TextAnalysis.tokenCount(col("text")).as("n_ws_tokens"),
+    gatedSurvivors(spark, sfDir, 20, 0.5,
         TextAnalysis.emailCountCol(planted).as("n_emails"),
         TextAnalysis.redactedFpCol(planted).as("redacted_fp"),
         TrainingPrep.splitOfBucket(TrainingPrep.hashBucket(
           col("doc_id"), "", TrainingPrep.splitBuckets)).as("split"))
-      .filter(col("lang_pred") =!= "und" && col("n_ws_tokens") >= 20)
-    val exactKeep = Dedup.exactSurvivors(spark, sfDir)
-    val nearDrop = Dedup
-      .minhashLshPairsVerified(spark, sfDir, threshold = 0.5)
-      .select(col("id_b").as("doc_id")).distinct()
-    base
-      .join(exactKeep, Seq("doc_id"), "left_semi")
-      .join(nearDrop, Seq("doc_id"), "left_anti")
       .join(TextAnalysis.repetitionStats(spark, sfDir)
         .select(col("doc_id"), col("dup_frac")), "doc_id")
       .filter(col("dup_frac") <= maxDupFrac)

@@ -828,9 +828,9 @@ object TextAnalysis {
       explode(split(normalizedText(col("text")), " ")).as("tok"))
     // tf feeds BOTH the df aggregate and the scoring join: persist it
     // so the corpus is tokenized and (doc, token)-shuffled once, not
-    // twice (PlanAudit showed the unpersisted plan re-scanning
-    // documents); the small top-k result is materialized eagerly and
-    // the cache released before returning.
+    // twice (the unpersisted physical plan re-scanned documents);
+    // the small top-k result is materialized eagerly and the cache
+    // released before returning.
     val tf = toks.groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("tf"))
       .persist()

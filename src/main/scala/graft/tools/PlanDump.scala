@@ -7,8 +7,8 @@ import java.nio.file.{Files, Paths}
   * <query>_<tag>.txt). Iterative trainers (BPE, IVF, ...) execute
   * their driver-side loop when the entry function is invoked; for
   * those the dumped plan is the FINAL returned frame (often a local
-  * relation) — the per-round plans are what the loop scaladocs and
-  * probes (BpePhaseProbe, StageProbe) document.
+  * relation) — the per-round plans are what the loop scaladocs
+  * document.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <tag> q01_scan_1a,q02_scan_1b
   */

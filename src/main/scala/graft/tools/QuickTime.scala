@@ -17,19 +17,10 @@ object QuickTime {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.GraftSession.local(cores = cpus, appName = "quicktime")
     spark.sparkContext.setLogLevel("ERROR")
-    def once(n: String): Double = {
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      // same between-measurement hygiene as Bench.runOnce (the quiet
-      // fork is the sweep's regime twin): drop dead checkpoint/persist
-      // blocks OUTSIDE the timed region so rep k never pays rep k-1's
-      // leaked storage
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      dt
-    }
+    // the sweep's own timing and hygiene (the quiet fork is the
+    // sweep's regime twin)
+    def once(n: String): Double =
+      graft.Bench.timeNoop(spark)(graft.SparkEntry.queries(n)(spark, sfDir))
     // QUIETNESS SELF-CHECK (round-9, hardened round-10): warm up and
     // median-time a flagship, reported on a non-query label. The
     // parent (Bench.forkQuickTime) compares it to that flagship's

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators._
 
 /** Empirical scaling probe for the sketch operators: build K× copies
   * of the sf0.1 documents/embeddings fixtures (Caesar-ciphered texts
@@ -9,14 +10,87 @@ import org.apache.spark.sql.functions._
   * near-dups of each other and pair counts stay realistic) and time
   * the production dedup/ANN paths at 1× vs K×. Near-linear wall growth is the pass criterion —
   * a quadratic operator shows up as ~K² immediately.
+  *
+  * Names are `SparkEntry.queries` entries, [[variants]] (which take
+  * precedence) or [[ServeOnly]].
+  *
+  * Usage: runMain graft.tools.ScalingProbe <K> <name,name,...>
   */
 object ScalingProbe {
+  type Build = (SparkSession, String) => DataFrame
+
+  /** The PQ serve-only probe, timed apart from the index build (main). */
+  val ServeOnly = "q156_pq_serve_only"
+
+  /** The calls that differ from their `SparkEntry.queries` entry on
+    * the K× fixture. `nDocs`, the 1× document count, is read only by
+    * the q371 re-keying.
+    */
+  def variants(nDocs: => Long): Map[String, Build] = Map(
+    // the banded-LSH candidate path itself, which no registry entry calls
+    "q24_embed_lsh" -> ((s: SparkSession, d: String) =>
+      Dedup.embeddingPairsLsh(s, d)),
+    // the documented scaling rule in action: bits sized to the
+    // K× corpus (2^12 buckets) instead of the fixture default
+    "q24_embed_lsh_12bit" -> ((s: SparkSession, d: String) =>
+      Dedup.embeddingPairsLsh(s, d, bitsPerTable = 12)),
+    // q155 probes at reduced rounds: the per-round cost is the
+    // probe target (pair count + replace over the corpus); N just
+    // multiplies it
+    "q155_bpe_train" -> ((s: SparkSession, d: String) =>
+      TextAnalysis.bpeTrain(s, d, rounds = 5)),
+    // q157 probes at the same reduced rounds as q155; its delta
+    // over q155 is the one-pass encode (scan → chained replaces)
+    "q157_bpe_encode" -> ((s: SparkSession, d: String) =>
+      TextAnalysis.bpeEncode(s, d, rounds = 5)),
+    // q158 at K× keeps 16 seeded centroids, so cells grow K× and
+    // the within-cell quadratic shows if the blocker were broken;
+    // production scales `clusters` with the corpus (n²/k rule)
+    "q158_semdedup_64cell" -> ((s: SparkSession, d: String) =>
+      Dedup.semDedup(s, d, clusters = 64)),
+    // the ANN-composed mining entries are cell-keyed IVF block
+    // products, the q158 law: per-anchor candidates ~
+    // probes·n/clusters, so a FIXED 16-cell codebook grows the block
+    // product with the corpus; production scales `clusters` with n
+    // (n²/k), probed here by the 64-cell variants
+    "q322_ann_hard_neg_64cell" -> ((s: SparkSession, d: String) =>
+      Similarity.annHardNegatives(s, d, clusters = 64)),
+    "q323_ann_bitext_64cell" -> ((s: SparkSession, d: String) =>
+      Similarity.annBitextMine(s, d, clusters = 64)),
+    // K-copy ids reach (K-1)*10^7 + 10^6 — past the default packed-
+    // key domain, which raises loudly; the probe passes the wider
+    // bound the guard asks for
+    "q321_pref_pairs" -> ((s: SparkSession, d: String) =>
+      Preference.preferencePairs(s, d, idBound = 10000000000L)),
+    "q353_length_bias" -> ((s: SparkSession, d: String) =>
+      Preference.lengthBiasAudit(s, d, idBound = 1000000000L)),
+    // the probe's copies occupy disjoint id ranges (c*10^7 + orig),
+    // which the operator's contiguity guard rejects BY DESIGN —
+    // re-key densely (copy c -> [c*nDocs, (c+1)*nDocs)) so the
+    // probe measures the draw/join/rank path, not the guard
+    "q371_negative_samples" -> ((s: SparkSession, d: String) =>
+      TrainingPrep.negativeSamplesOn(
+        s.read.parquet(s"$d/documents.parquet")
+          .select((expr("doc_id DIV 10000000") * lit(nDocs)
+            + col("doc_id") % lit(10000000L)).cast("long").as("doc_id"),
+            col("source")))))
+
+  /** Each requested name with its build, in request order; builds
+    * nothing. Fails listing every unknown name. [[ServeOnly]] is known
+    * but not returned.
+    */
+  def resolve(names: Seq[String], variants: Map[String, Build],
+      registry: Map[String, Build]): Seq[(String, Build)] = {
+    val unknown = names.filterNot(n =>
+      n == ServeOnly || variants.contains(n) || registry.contains(n))
+    require(unknown.isEmpty, s"unknown entries: ${unknown.mkString(", ")}")
+    names.filter(_ != ServeOnly).map(n => n -> variants.getOrElse(n, registry(n)))
+  }
+
   def main(args: Array[String]): Unit = {
-    val k = args.headOption.map(_.toInt).getOrElse(10)
-    // optional arg 2: comma-separated operator filter, so an expensive
-    // high-K run can target just the operators under adjudication
-    val only: Option[Set[String]] =
-      if (args.length > 1) Some(args(1).split(",").toSet) else None
+    require(args.length == 2, "usage: ScalingProbe <K> <name,name,...>")
+    val k = args(0).toInt
+    val names = args(1).split(",").toSeq
     val src = "/root/testdata/sf0.1"
     val big = "/tmp/graft-scale-probe"
     // honor the bench's core-count contract (round-19): the K-scaled
@@ -24,7 +98,11 @@ object ScalingProbe {
     // at plain sf0.1 the suite is fixed-overhead-bound and core
     // ratios read ~1 (the r18 scaling block's known blind spot)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.local(cores = cpus, appName = "graft-scale")
+    lazy val spark = graft.GraftSession.local(cores = cpus, appName = "graft-scale")
+    lazy val docs = spark.read.parquet(s"$src/documents.parquet")
+    lazy val nDocs = docs.count()
+    // resolves before the session starts or any fixture is written
+    val probes = resolve(names, variants(nDocs), graft.SparkEntry.queries)
     spark.sparkContext.setLogLevel("ERROR")
 
     // K× documents: copy c Caesar-ciphers the TEXT (bijective letter
@@ -50,8 +128,6 @@ object ScalingProbe {
     // partially defeat the cross-copy-disjoint contract on
     // numeric-heavy documents. Non-Latin scripts remain invariant
     // (fixture text is ASCII; noted limitation beside the c<26 caveat).
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-    val nDocs = docs.count()
     val alphaD = "abcdefghijklmnopqrstuvwxyz"
     val alphaDU = alphaD.toUpperCase
     val digits = "0123456789"
@@ -168,9 +244,7 @@ object ScalingProbe {
         .write.mode("overwrite").parquet(s"$big/$t.parquet")
 
     def time(name: String)(f: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
+      val s = graft.Bench.timeNoop(spark)(f)
       println(f"[scale] $name%-28s $s%8.2f s")
       s
     }
@@ -178,426 +252,9 @@ object ScalingProbe {
     println(s"[scale] corpus: ${nDocs} docs x1 vs x$k")
     // warm-up
     graft.operators.Dedup.exact(spark, src).write.format("noop").mode("overwrite").save()
-    val pairs = Seq[(String, String => DataFrame)](
-      "q20_dedup_exact" -> (d => graft.operators.Dedup.exact(spark, d)),
-      "q22_minhash_verified" -> (d => graft.operators.Dedup.minhashLshPairsVerified(spark, d)),
-      "q23_simhash" -> (d => graft.operators.Dedup.simhashPairs(spark, d)),
-      "q24_embed_lsh" -> (d => graft.operators.Dedup.embeddingPairsLsh(spark, d)),
-      // the documented scaling rule in action: bits sized to the
-      // K× corpus (2^12 buckets) instead of the fixture default
-      "q24_embed_lsh_12bit" -> (d =>
-        graft.operators.Dedup.embeddingPairsLsh(spark, d, bitsPerTable = 12)),
-      "q83_decontaminate" -> (d => graft.operators.Dedup.decontaminationPairs(spark, d)),
-      "q86_interval_join" -> (d => graft.operators.Relational.intervalJoin(spark, d)),
-      "q87_rolling_window" -> (d => graft.operators.Relational.rollingWindow(spark, d)),
-      "q88_table_diff" -> (d => graft.operators.Relational.tableDiff(spark, d)),
-      "q89_topk_agg" -> (d => graft.operators.MapReduceSurface.topKPerGroup(spark, d)),
-      "q100_line_dedup" -> (d => graft.operators.Dedup.lineDedup(spark, d)),
-      "q101_embed_pool" -> (d => graft.operators.TrainingPrep.meanPoolEmbeddings(spark, d)),
-      "q103_json_typed" -> (d => graft.operators.Relational.jsonTyped(spark, d)),
-      "q104_forward_fill" -> (d => graft.operators.Relational.forwardFill(spark, d)),
-      "q108_scd2_merge" -> (d => graft.operators.Relational.scd2Merge(spark, d)),
-      "q109_profile" -> (d => graft.operators.Relational.profileTable(spark, d)),
-      "q110_zorder" -> (d => graft.operators.ReferenceQueries.zorderLayout(spark, d)),
-      "q111_fuzzy_link" -> (d => graft.operators.Dedup.fuzzyLinkage(spark, d)),
-      "q112_funnel" -> (d => graft.operators.Relational.funnel(spark, d)),
-      "q113_cohort" -> (d => graft.operators.Relational.cohortRetention(spark, d)),
-      "q114_bm25" -> (d => graft.operators.TextAnalysis.bm25Search(spark, d)),
-      "q115_pit_join" -> (d => graft.operators.Relational.pointInTimeJoin(spark, d)),
-      "q116_trend" -> (d => graft.operators.TrainingPrep.trendPerUser(spark, d)),
-      "q117_cdc_replay" -> (d => graft.operators.Relational.cdcReplay(spark, d)),
-      "q118_weighted_sample" -> (d => graft.operators.TrainingPrep.weightedSample(spark, d)),
-      "q119_histogram" -> (d => graft.operators.Relational.histogram(spark, d)),
-      "q121_transitions" -> (d => graft.operators.Relational.transitionMatrix(spark, d)),
-      "q122_keyness" -> (d => graft.operators.TextAnalysis.keynessDrift(spark, d)),
-      "q123_interval_coalesce" -> (d => graft.operators.Relational.coalesceIntervals(spark, d)),
-      "q124_pagerank" -> (d => graft.operators.Graph.nationPageRank(spark, d)),
-      "q126_triangles" -> (d => graft.operators.Graph.nationTriangles(spark, d)),
-      "q127_ohlc" -> (d => graft.operators.Relational.ohlcBars(spark, d)),
-      "q128_dq_audit" -> (d => graft.operators.Relational.dqAudit(spark, d)),
-      "q129_ab_test" -> (d => graft.operators.Experiment.abTest(spark, d)),
-      "q130_attribution" -> (d => graft.operators.Experiment.attribution(spark, d)),
-      "q131_skyline" -> (d => graft.operators.Relational.skyline(spark, d)),
-      "q132_skew_report" -> (d => graft.operators.Relational.skewReport(spark, d)),
-      "q133_cooccurrence" -> (d => graft.operators.Experiment.coOccurrence(spark, d)),
-      "q134_cep_pattern" -> (d => graft.operators.Experiment.cepPattern(spark, d)),
-      "q135_bpe_pairs" -> (d => graft.operators.TextAnalysis.bpePairCandidates(spark, d)),
-      "q137_khop" -> (d => graft.operators.Graph.khopReachability(spark, d)),
-      "q138_variant" -> (d => graft.operators.Relational.variantPath(spark, d)),
-      "q139_mixture" -> (d => graft.operators.TrainingPrep.mixtureResample(spark, d)),
-      "q141_perplexity" -> (d => graft.operators.TextAnalysis.perplexityScore(spark, d)),
-      "q142_lateral" -> (d => graft.operators.Relational.lateralTopK(spark, d)),
-      "q144_hashed_feats" -> (d => graft.operators.TrainingPrep.hashedFeatures(spark, d)),
-      "q145_listagg" -> (d => graft.operators.Experiment.listaggPaths(spark, d)),
-      "q146_bucket_fp" -> (d => graft.operators.Relational.bucketFingerprints(spark, d)),
-      "q147_try_arith" -> (d => graft.operators.Relational.tryArithmetic(spark, d)),
-      "q148_geo_join" -> (d => graft.operators.Relational.geoJoin(spark, d)),
-      "q149_inv_index" -> (d => graft.operators.TextAnalysis.invertedIndex(spark, d)),
-      "q150_assoc" -> (d => graft.operators.Experiment.associationRules(spark, d)),
-      "q151_km" -> (d => graft.operators.Experiment.kmSurvival(spark, d)),
-      "q152_densify" -> (d => graft.operators.Relational.densifyDaily(spark, d)),
-      "q153_ann_pq" -> (d => graft.operators.Similarity.annPq(spark, d)),
-      // q155 probes at reduced rounds: the per-round cost is the
-      // probe target (pair count + replace over the corpus); N just
-      // multiplies it
-      "q155_bpe_train" -> (d => graft.operators.TextAnalysis
-        .bpeTrain(spark, d, rounds = 5)),
-      "q156_pq_persisted" -> (d => graft.operators.Similarity
-        .annPqPersistedServe(spark, d)),
-      // q157 probes at the same reduced rounds as q155; its delta
-      // over q155 is the one-pass encode (scan → chained replaces)
-      "q157_bpe_encode" -> (d => graft.operators.TextAnalysis
-        .bpeEncode(spark, d, rounds = 5)),
-      // q158 at K× keeps 16 seeded centroids, so cells grow K× and
-      // the within-cell quadratic shows if the blocker were broken;
-      // production scales `clusters` with the corpus (n²/k rule)
-      "q158_semdedup" -> (d => graft.operators.Dedup.semDedup(spark, d)),
-      "q158_semdedup_64cell" -> (d =>
-        graft.operators.Dedup.semDedup(spark, d, clusters = 64)),
-      // round-11 additions: the in-row HRW argmax (linear scan),
-      // the corpus-gram diversity aggregate, the d^2 covariance pass
-      // (one aggregate, iteration corpus-independent), the q141-based
-      // gate, contrastive mining (pair-bounded), quality-survivor CC,
-      // and the fingerprint-join scorecard
-      "q211_rendezvous" -> (d => graft.operators.TrainingPrep.rendezvousShards(spark, d)),
-      "q213_ngram_diversity" -> (d => graft.operators.TextAnalysis.ngramDiversity(spark, d)),
-      "q214_dominant_eigen" -> (d => graft.operators.Similarity.dominantEigen(spark, d)),
-      "q216_perplexity_gate" -> (d => graft.operators.TextAnalysis.perplexityGate(spark, d)),
-      "q220_contrastive" -> (d => graft.operators.Dedup.contrastivePairs(spark, d)),
-      "q222_quality_surv" -> (d => graft.operators.Dedup.qualitySurvivors(spark, d)),
-      "q223_scorecard" -> (d => graft.operators.CleanPipeline.sourceScorecard(spark, d)),
-      // round-13 additions: KMV (rank<=k window with group-limit
-      // pushdown over a distinct domain that grows Kx), bitmap build
-      // + intersections (words grow with the id space), KS (the
-      // ordered window runs over the bounded cents domain — ~flat),
-      // cross-source matrix (digest-grain counts), greedy encode
-      // (dictionary-weighted: unique words grow sublinearly in K),
-      // winsorize (per-type rank window grows Kx)
-      "q250_kmv" -> (d => graft.operators.Sketches.kmvSketch(spark, d)),
-      "q253_bitmap" -> (d => graft.operators.Sketches.bitmapIntersect(spark, d)),
-      "q258_ks_drift" -> (d => graft.operators.Experiment.ksDrift(spark, d)),
-      "q259_cross_source" -> (d => graft.operators.Dedup.crossSourceDupMatrix(spark, d)),
-      "q260_winsorize" -> (d => graft.operators.TrainingPrep.winsorize(spark, d)),
-      "q261_greedy_encode" -> (d => graft.operators.TextAnalysis.greedyEncode(spark, d)),
-      // round-13-session additions: histogram-refine medians (three
-      // bounded passes — ~linear), LPM join (part-grain ancestor
-      // explode + broadcast dim), FS linkage (two linear-cardinality
-      // block keys; ciphered names keep cross-copy candidates out),
-      // ULM trainer/encode (dictionary-weighted: rotated copies share
-      // the word dictionary, so unique-word cost is ~flat and only
-      // the corpus passes grow), Shapley (two user-grain exchanges +
-      // a bounded lattice), quantile align (per-source rank windows
-      // grow Kx), k-core (fact-scale edge build + 25-node loop)
-      "q279_hist_median" -> (d => graft.operators.Sketches.histogramMedian(spark, d)),
-      "q280_lpm_join" -> (d => graft.operators.Relational.longestPrefixMatch(spark, d)),
-      "q283_fs_linkage" -> (d => graft.operators.Dedup.fellegiSunter(spark, d)),
-      "q284_ulm_train" -> (d => graft.operators.TextAnalysis.ulmTrain(spark, d)),
-      "q286_shapley" -> (d => graft.operators.Experiment.shapleyAttribution(spark, d)),
-      "q287_quantile_align" -> (d => graft.operators.Experiment.quantileAlign(spark, d)),
-      "q289_weighted_median" -> (d => graft.operators.Sketches.weightedHistogramMedian(spark, d)),
-      "q290_kcore" -> (d => graft.operators.Graph.kCore(spark, d)),
-      // second continuation batch: item neighbors (bounded per-basket
-      // pair fan-out + noise floor), sweep-line concurrency (per-day
-      // windows over disjoint time copies), TWAP (reused (type, day)
-      // exchange), span corruption (doc-local), Markov attribution
-      // (user-grain pass + bounded matrix), RAG packing (top-100 cut
-      // before the cumsum), topic balancing (broadcast-argmax pass +
-      // cell-grain tail), length batching (two global rank windows)
-      "q291_item_neighbors" -> (d => graft.operators.Experiment.itemNeighbors(spark, d)),
-      "q292_concurrency" -> (d => graft.operators.Relational.concurrencyTimeline(spark, d)),
-      "q293_twap" -> (d => graft.operators.Relational.twap(spark, d)),
-      "q296_span_corruption" -> (d => graft.operators.TrainingPrep.spanCorruption(spark, d)),
-      "q300_markov" -> (d => graft.operators.Experiment.markovAttribution(spark, d)),
-      "q301_rag_context" -> (d => graft.operators.TextAnalysis.ragContext(spark, d)),
-      "q302_topic_balanced" -> (d => graft.operators.TrainingPrep.topicBalancedSample(spark, d)),
-      "q304_length_batches" -> (d => graft.operators.TrainingPrep.lengthBucketedBatches(spark, d)),
-      "q305_packed_windows" -> (d => graft.operators.TrainingPrep.packedWindows(spark, d)),
-      "q306_sliding_chunks" -> (d => graft.operators.TrainingPrep.slidingChunks(spark, d)),
-      "q307_repetition" -> (d => graft.operators.TextAnalysis.repetitionFilter(spark, d)),
-      "q308_domain_affinity" -> (d => graft.operators.TrainingPrep.domainAffinitySample(spark, d)),
-      "q309_pii_scrub" -> (d => graft.operators.CleanPipeline.piiScrubAudit(spark, d)),
-      "q310_epoch_shards" -> (d => graft.operators.TrainingPrep.epochShards(spark, d)),
-      "q311_vocab_growth" -> (d => graft.operators.TextAnalysis.vocabGrowth(spark, d)),
-      "q312_export_offsets" -> (d => graft.operators.TrainingPrep.exportOffsets(spark, d)),
-      "q313_contamination" -> (d => graft.operators.TrainingPrep.splitContamination(spark, d)),
-      "q314_interleaved" -> (d => graft.operators.TrainingPrep.interleavedManifest(spark, d)),
-      "q315_datasheet" -> (d => graft.operators.TrainingPrep.datasetDatasheet(spark, d)),
-      "q316_fim" -> (d => graft.operators.TrainingPrep.fimTransform(spark, d)),
-      "q317_data_echo" -> (d => graft.operators.TrainingPrep.dataEchoAudit(spark, d)),
-      "q318_sft_density" -> (d => graft.operators.TrainingPrep.sftLossDensity(spark, d)),
-      "q319_crawl_diff" -> (d => graft.operators.TrainingPrep.crawlDiff(spark, d)),
-      "q320_watermark" -> (d => graft.operators.TextAnalysis.watermarkDetect(spark, d)),
-      // K-copy ids reach (K-1)*10^7 + 10^6 — past the default packed-
-      // key domain, which now raises loudly (round-15 advice); the
-      // probe passes the wider bound the guard asks for
-      "q321_pref_pairs" -> (d => graft.operators.Preference
-        .preferencePairs(spark, d, idBound = 10000000000L)),
-      // round-15: the ANN-composed mining entries (verdict #3) — cell-
-      // keyed IVF block products, the q158 law: per-anchor candidates
-      // ~ probes·n/clusters, so a FIXED 16-cell codebook grows the
-      // block product with the corpus; production scales `clusters`
-      // with n (n²/k), probed here by the 64-cell variants exactly as
-      // q158_semdedup_64cell does
-      "q322_ann_hard_neg" -> (d => graft.operators.Similarity.annHardNegatives(spark, d)),
-      "q322_ann_hard_neg_64cell" -> (d =>
-        graft.operators.Similarity.annHardNegatives(spark, d, clusters = 64)),
-      "q323_ann_bitext" -> (d => graft.operators.Similarity.annBitextMine(spark, d)),
-      "q323_ann_bitext_64cell" -> (d =>
-        graft.operators.Similarity.annBitextMine(spark, d, clusters = 64)),
-      // round-15 extension batch: q324/q326-q328 are n-gram/digest
-      // census shapes (fact-scale explode -> bounded-domain reduce),
-      // q325/q331 ride the events axis, q329's brute side is the
-      // documented eval-only cost (queries grow with the corpus here,
-      // so the probe ratio overstates production, where the eval set
-      // is FIXED), q330 is two q322-style assignment passes
-      "q324_prefix_cache" -> (d => graft.operators.TextAnalysis.prefixCacheAudit(spark, d)),
-      "q325_pass_at_k" -> (d => graft.operators.Experiment.passAtK(spark, d)),
-      "q326_nucleus" -> (d => graft.operators.TextAnalysis.nucleusAudit(spark, d)),
-      "q327_curriculum" -> (d => graft.operators.TrainingPrep.curriculumStages(spark, d)),
-      "q328_spec_decode" -> (d => graft.operators.TextAnalysis.specDecodeAudit(spark, d)),
-      "q329_ann_recall" -> (d => graft.operators.Similarity.annRecallEval(spark, d)),
-      "q330_index_staleness" -> (d => graft.operators.Similarity.indexStaleness(spark, d)),
-      "q331_feature_drift" -> (d => graft.operators.Experiment.featureDrift(spark, d)),
-      "q332_lsh_banding_eval" -> (d => graft.operators.Dedup.lshBandingEval(spark, d)),
-      "q333_watermark_planner" -> (d =>
-        graft.streaming.EventStream.watermarkDelayPlanner(spark, d)),
-      "q334_bm25_eval" -> (d =>
-        graft.operators.TextAnalysis.bm25RetrievalEval(spark, d)),
-      "q335_packing_attention" -> (d =>
-        graft.operators.TrainingPrep.packingAttentionAudit(spark, d)),
-      // q336 rides the documents tokenizer axis (one cell aggregate,
-      // bounded allocator); q337-q339 ride the events axis — q337/q339
-      // collapse to the (user, type) grain in one exchange, q338's
-      // pool is rank-pruned to 256/arm so only the pruning scan grows
-      "q336_epoch_waterfill" -> (d =>
-        graft.operators.TrainingPrep.epochWaterfill(spark, d)),
-      "q337_ips_policy_eval" -> (d =>
-        graft.operators.Experiment.ipsPolicyEval(spark, d)),
-      "q338_best_of_n" -> (d => graft.operators.Experiment.bestOfN(spark, d)),
-      "q339_arena_leaderboard" -> (d =>
-        graft.operators.Experiment.arenaLeaderboard(spark, d)),
-      // q340/q343 collapse to the (user, type) grain in one exchange;
-      // q341 is the pair-free span census (digest exchanges only);
-      // q342's rank prune is budget-bounded; q344's explode is
-      // row-local with a keyed (doc, expert) window
-      "q340_rloo_advantage" -> (d =>
-        graft.operators.Experiment.rlooAdvantage(spark, d)),
-      "q341_dup_span_fraction" -> (d =>
-        graft.operators.Dedup.dupSpanFraction(spark, d)),
-      "q342_successive_halving" -> (d =>
-        graft.operators.Experiment.successiveHalving(spark, d)),
-      "q343_doubly_robust" -> (d =>
-        graft.operators.Experiment.doublyRobust(spark, d)),
-      "q344_moe_routing" -> (d =>
-        graft.operators.TrainingPrep.moeRoutingAudit(spark, d)),
-      // q345's twin truth is the q334 eval-bounded join; q346 rides
-      // the events value domain; q347 is row-local; q348 is two
-      // chunked passes + a keyed self-join on the documents axis
-      "q345_bleu_overlap" -> (d =>
-        graft.operators.TextAnalysis.bleuOverlapEval(spark, d)),
-      "q346_kruskal_wallis" -> (d =>
-        graft.operators.Experiment.kruskalWallis(spark, d)),
-      "q347_token_transitions" -> (d =>
-        graft.operators.TextAnalysis.tokenClassTransitions(spark, d)),
-      "q348_shuffle_runs" -> (d =>
-        graft.operators.TrainingPrep.shuffleRunsTest(spark, d)),
-      // q349 is user-keyed windows + bounded mode domains; q350 is
-      // the pair-free census with a persisted artifact; q351 is the
-      // q22 candidate path + CC on the (few) near-dup pairs
-      "q349_self_consistency" -> (d =>
-        graft.operators.Experiment.selfConsistency(spark, d)),
-      "q350_dup_span_incremental" -> (d =>
-        graft.operators.Dedup.dupSpanIncremental(spark, d)),
-      "q351_canonicalize_clusters" -> (d =>
-        graft.operators.Dedup.canonicalizeClusters(spark, d)),
-      // q352 is row-local regexp counting; q353 rides q321's bounded
-      // pair table; q354 is q312's chunked prefix sum + a 3-way
-      // row-local explode
-      "q352_instruction_scan" -> (d =>
-        graft.operators.TextAnalysis.instructionScan(spark, d)),
-      // the probe's K-copy ids exceed the default packed-key bound
-      // (by design — the q321 guard raises); widen it here only
-      "q353_length_bias" -> (d =>
-        graft.operators.Preference.lengthBiasAudit(spark, d,
-          idBound = 1000000000L)),
-      "q354_needle_manifest" -> (d =>
-        graft.operators.TrainingPrep.needleManifest(spark, d)),
-      // q355 collapses to the bounded cell x lang grid in one count;
-      // q356 to the user grain with WindowGroupLimit top-k prunes
-      "q355_t_closeness" -> (d =>
-        graft.operators.CleanPipeline.tClosenessAudit(spark, d)),
-      "q356_headset_drift" -> (d =>
-        graft.operators.Experiment.headSetDrift(spark, d)),
-      // q357 is one (source, digest) count + bounded heads; q358 one
-      // tokenizer aggregate; q359 rides q297's banded-LSH components
-      "q357_boilerplate_grams" -> (d =>
-        graft.operators.TextAnalysis.boilerplateHeadGrams(spark, d)),
-      "q358_truncation_loss" -> (d =>
-        graft.operators.TrainingPrep.truncationLoss(spark, d)),
-      "q359_effective_waterfill" -> (d =>
-        graft.operators.TrainingPrep.effectiveWaterfill(spark, d)),
-      // q360/q361 are row-local counting into bounded-domain
-      // aggregates; q362 is user-keyed windows (per-user state only);
-      // q363 is a shard-keyed fold with constant per-shard state
-      "q360_word_fertility" -> (d =>
-        graft.operators.TextAnalysis.wordFertility(spark, d)),
-      "q361_toxicity_gate" -> (d =>
-        graft.operators.CleanPipeline.toxicityGate(spark, d)),
-      "q362_sft_unroll_cost" -> (d =>
-        graft.operators.TrainingPrep.sftUnrollCost(spark, d)),
-      "q363_merkle_manifest" -> (d =>
-        graft.operators.TrainingPrep.merkleManifest(spark, d)),
-      // q364 is one bucket count + bounded-domain windows; q365's
-      // frontier shrinks geometrically (1/3, 1/9, … have parents);
-      // q366 is one count onto the task domain; q367 one shard-keyed
-      // aggregate with a broadcast opt-out dim
-      "q364_transport_plan" -> (d =>
-        graft.operators.TrainingPrep.lengthTransportPlan(spark, d)),
-      "q365_license_propagation" -> (d =>
-        graft.operators.Graph.licensePropagation(spark, d)),
-      "q366_wilson_gate" -> (d =>
-        graft.operators.Experiment.wilsonGate(spark, d)),
-      "q367_takedown_impact" -> (d =>
-        graft.operators.TrainingPrep.takedownImpact(spark, d)),
-      // q368 explodes x3 into one (doc,label) count + a 5-row finish;
-      // q369 is one (lang, word) count; q370 is user-keyed windows;
-      // q371 explodes x8 into an id-keyed join + anchor-keyed rank
-      "q368_krippendorff" -> (d =>
-        graft.operators.Experiment.krippendorffAlpha(spark, d)),
-      "q369_unseen_vocab" -> (d =>
-        graft.operators.TextAnalysis.unseenVocab(spark, d)),
-      "q370_early_stopping" -> (d =>
-        graft.operators.Experiment.earlyStoppingAudit(spark, d)),
-      // the probe's copies occupy disjoint id ranges (c*10^7 + orig),
-      // which the operator's contiguity guard rejects BY DESIGN —
-      // re-key densely (copy c -> [c*nDocs, (c+1)*nDocs)) so the
-      // probe measures the draw/join/rank path, not the guard
-      "q371_negative_samples" -> (d =>
-        graft.operators.TrainingPrep.negativeSamplesOn(
-          spark.read.parquet(s"$d/documents.parquet")
-            .select((expr("doc_id DIV 10000000") * lit(nDocs)
-              + col("doc_id") % lit(10000000L)).cast("long").as("doc_id"),
-              col("source")))),
-      // q372 is two linear scans into a 64-row channel domain; q373
-      // one (day,key) count + bounded grid; q374 one user-keyed agg
-      // + x200 explode onto the replicate domain; q375 one scored
-      // scan into the source domain
-      "q372_int8_quant" -> (d =>
-        graft.operators.Similarity.int8QuantAudit(spark, d)),
-      "q373_schema_drift" -> (d =>
-        graft.operators.Relational.schemaDrift(spark, d)),
-      "q374_permutation_test" -> (d =>
-        graft.operators.Experiment.permutationTest(spark, d)),
-      "q375_filter_curve" -> (d =>
-        graft.operators.CleanPipeline.filterOperatingCurve(spark, d)),
-      // q376 rides q21's capped posting lists + 5 row-local arms;
-      // q377 is q306's fan-out + two keyed aggs; q378 is span
-      // fan-out + a doc-keyed lag; q379 is the funnel frame + x200
-      // explode onto the (step, r) domain
-      "q376_banding_planner" -> (d =>
-        graft.operators.Dedup.lshBandingPlanner(spark, d)),
-      "q377_stride_efficiency" -> (d =>
-        graft.operators.TrainingPrep.strideEfficiency(spark, d)),
-      "q378_code_switching" -> (d =>
-        graft.operators.TextAnalysis.codeSwitchCensus(spark, d)),
-      "q379_funnel_significance" -> (d =>
-        graft.operators.Experiment.funnelSignificance(spark, d)),
-      // q380's greedy loop runs on the bounded query x pool frame
-      // (the corpus is touched once, by the pool builder); q381 is
-      // q114's hits + three WindowGroupLimit rank cuts; q382 one
-      // user-keyed lag + same-key agg; q383 one agg over q305's fold
-      "q380_mmr_topk" -> (d =>
-        graft.operators.Similarity.mmrTopK(spark, d)),
-      "q381_champion_lists" -> (d =>
-        graft.operators.TextAnalysis.championListEval(spark, d)),
-      "q382_bot_gate" -> (d =>
-        graft.operators.Experiment.botRegularityGate(spark, d)),
-      "q383_packing_policy" -> (d =>
-        graft.operators.TrainingPrep.packingPolicyCompare(spark, d)),
-      // q384 is q312's chunked prefix sums + row-local grid math;
-      // q385 rides q21's capped pair pass + tiny arm filters; q386
-      // one count onto the source domain; q387 one posexplode into
-      // a 64-row channel aggregate
-      "q384_systematic_sample" -> (d =>
-        graft.operators.TrainingPrep.systematicSample(spark, d)),
-      "q385_dedup_yield" -> (d =>
-        graft.operators.Dedup.dedupYieldCurve(spark, d)),
-      "q386_source_gini" -> (d =>
-        graft.operators.Relational.sourceConcentration(spark, d)),
-      "q387_anisotropy" -> (d =>
-        graft.operators.Similarity.anisotropyAudit(spark, d)),
-      // q388 is two replace-chain encodes + a lang reduce; q389 one
-      // (source, first-char)-keyed sort window with row-local lcp;
-      // q390 a doc-grain join onto 10 deciles; q391 a bounded grid
-      "q388_tokenizer_migration" -> (d =>
-        graft.operators.TextAnalysis.tokenizerMigrationDiff(spark, d)),
-      "q389_prefix_mass" -> (d =>
-        graft.operators.TextAnalysis.sharedPrefixMass(spark, d)),
-      "q390_quality_dup" -> (d =>
-        graft.operators.Experiment.qualityDupCalibration(spark, d)),
-      "q391_splitter_bias" -> (d =>
-        graft.operators.Experiment.splitterBias(spark, d)),
-      // q392 rides q44's banded CC; q393 is q257's per-epoch rank +
-      // a doc-keyed adjacent-epoch join
-      "q392_cluster_profile" -> (d =>
-        graft.operators.Dedup.clusterSizeProfile(spark, d)),
-      "q393_epoch_fixed_points" -> (d =>
-        graft.operators.TrainingPrep.epochFixedPoints(spark, d)),
-      // q394/q395 are (lang, gram/term) map-side-combined counts +
-      // domain reduces; q396 is |dims|+1 brute scoring passes (the
-      // fixture-scale eval; production serves truncated dims from
-      // their own ANN indexes, q31/q32's path)
-      // round-19 additions — the current most-expensive sweep entries
-      // not yet probed: the compiled CDC chunker (row-local, must be
-      // linear), the q76 capstone composition, the q141-family
-      // scorers, and the LSH-consumer tail
-      "q239_cdc_chunks" -> (d =>
-        graft.operators.Dedup.cdcChunkStats(spark, d)),
-      "q248_cdc_provenance" -> (d =>
-        graft.operators.Dedup.cdcProvenance(spark, d)),
-      "q76_corpus_manifest" -> (d =>
-        graft.operators.CleanPipeline.corpusManifest(spark, d)),
-      "q190_quality_verdict" -> (d =>
-        graft.operators.CleanPipeline.qualityVerdict(spark, d)),
-      "q95_map_struct" -> (d =>
-        graft.operators.Relational.mapStructFuncs(spark, d)),
-      "q247_scorer_agreement" -> (d =>
-        graft.operators.Experiment.scorerAgreement(spark, d)),
-      "q175_embedding_drift" -> (d =>
-        graft.operators.Similarity.embeddingDrift(spark, d)),
-      "q167_backoff_lm" -> (d =>
-        graft.operators.TextAnalysis.backoffLmScore(spark, d)),
-      "q215_mixture_reweight" -> (d =>
-        graft.operators.TextAnalysis.mixtureReweight(spark, d)),
-      "q182_char_entropy" -> (d =>
-        graft.operators.TextAnalysis.charEntropy(spark, d)),
-      "q394_kn_discounts" -> (d =>
-        graft.operators.TextAnalysis.knDiscounts(spark, d)),
-      "q395_burstiness" -> (d =>
-        graft.operators.TextAnalysis.burstinessCensus(spark, d)),
-      "q396_matryoshka_recall" -> (d =>
-        graft.operators.Similarity.matryoshkaRecall(spark, d)),
-      // q397 rides the q332 banded path (one shingle pass, candidate-
-      // bounded arms); q398 is a bounded pair set over one corpus
-      // scoring pass; q399 is a (type,user) combine + bounded domain
-      "q397_bbit_minwise" -> (d =>
-        graft.operators.Dedup.bbitMinwiseEval(spark, d)),
-      "q398_jl_distortion" -> (d =>
-        graft.operators.Similarity.jlDistortionAudit(spark, d)),
-      "q399_bh_fdr" -> (d =>
-        graft.operators.Experiment.bhFdr(spark, d)),
-      // q400 is pairwise row-local verdicts + a 10-bucket aggregate;
-      // q401 is m chunked-rank passes + a doc-keyed sum; q402 rides
-      // the q233 score-group decile split
-      "q400_judge_position_bias" -> (d =>
-        graft.operators.Experiment.judgePositionBias(spark, d)),
-      "q401_kendall_w" -> (d =>
-        graft.operators.Experiment.kendallW(spark, d)),
-      "q402_adaptive_ece" -> (d =>
-        graft.operators.Experiment.adaptiveEce(spark, d)))
-    val ratios = pairs.filter(p => only.forall(_.contains(p._1))).map { case (name, q) =>
-      val t1 = time(s"$name @1x")(q(src))
-      val tk = time(s"$name @${k}x")(q(big))
+    val ratios = probes.map { case (name, q) =>
+      val t1 = time(s"$name @1x")(q(spark, src))
+      val tk = time(s"$name @${k}x")(q(spark, big))
       val r = tk / t1
       println(f"[scale] $name%-28s ratio ${r}%6.2f (linear=$k, quadratic=${k * k})")
       name -> r
@@ -609,7 +266,7 @@ object ScalingProbe {
     // servePq runs on the clock — the ratio isolates the ADC scan
     // over a codes file grown Kx against a fixed 5-query batch.
     val serveOnly =
-      if (!only.forall(_.contains("q156_pq_serve_only"))) Seq.empty
+      if (!names.contains(ServeOnly)) Seq.empty
       else {
         def timedServe(d: String, label: String): Double = {
           val idx = s"/tmp/graft-scale-pq-$label"

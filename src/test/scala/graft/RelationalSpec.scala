@@ -1660,11 +1660,14 @@ class RelationalSpec extends AnyFunSuite {
     // plan rendering differs across Spark versions and AQE
     // re-optimization can insert sorts after toString (round-18
     // advice). collect recurses into AdaptiveSparkPlanExec's current
-    // physical plan via its children.
+    // physical plan via its children, and into each query stage's plan.
     def sortNodes(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.SortExec] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         sortNodes(a.executedPlan)
+      // a materialized query stage has no children: recurse into its plan
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        sortNodes(q.plan)
       case s: org.apache.spark.sql.execution.SortExec =>
         s +: s.children.flatMap(sortNodes)
       case other => other.children.flatMap(sortNodes) ++
