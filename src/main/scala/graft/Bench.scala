@@ -141,6 +141,14 @@ object Bench {
       .map(_.group(1).toInt)
   def fileCpus(content: String): Int = parseFileCpus(content).getOrElse(32)
 
+  /** A medians or quiet store: the `"_cpus"` tag (see `baselines`),
+    * then one `"name": median` line per entry, in the given order.
+    */
+  def storeJson(cpus: Int, entries: Seq[(String, Double)]): String =
+    (("  \"_cpus\": " + cpus) +: entries
+      .map { case (k, v) => "  \"" + k + "\": " + fmtMedian(v) })
+      .mkString("{\n", ",\n", "\n}")
+
   /** The quiet-regime store: latest adjudicated fresh-JVM median per
     * entry, later files overriding earlier ones (each write already
     * carries the previous store forward, so the fold is belt and
@@ -436,7 +444,7 @@ object Bench {
     val tStart = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - tStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.cores
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     // WALL-CLOCK BUDGET (round-14, tightened round-15): the driver
     // kills the bench at a hard timeout whose clock started at sbt
@@ -602,23 +610,17 @@ object Bench {
     val sweepFlag = results.toMap.getOrElse(sweepFlagName, -1.0)
     val sweepDegraded = sweepIsDegraded(sweepFlagBase, sweepFlag)
     val mayPublishMedians = sfDir.endsWith("sf0.1") && !sweepDegraded
-    def writeMedians(baseline: Seq[(String, Double)]): Unit = {
-      // "_cpus" regime tag (round-19, see baselines): qNN-only parsers
-      // skip it; regime-aware readers filter on it
-      val body = (("  \"_cpus\": " + cpus) +: baseline
-        .map { case (k, v) => "  \"" + k + "\": " + fmtMedian(v) })
-        .mkString("{\n", ",\n", "\n}")
+    def writeStore(kind: String, entries: Seq[(String, Double)]): Unit =
       java.nio.file.Files.write(
-        java.nio.file.Paths.get(f"bench_medians_r$nextRound%02d.json"),
-        body.getBytes("UTF-8"))
-    }
+        java.nio.file.Paths.get(f"bench_${kind}_r$nextRound%02d.json"),
+        storeJson(cpus, entries).getBytes("UTF-8"))
     def jsonLine(phase: String, regr: String, regrBest: String,
         confirmTimes: String, confirmUnreliable: Boolean,
         unresolvedJson: String, raiseRejectedJson: String,
         confirmSkippedBudget: Boolean): String =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","phase":"$phase","queries":$qs,"prev":"$prevName","regressions":$regr,"regressions_vs_best":$regrBest,"suspect":${ratioJson(sweepRegr)},"suspect_vs_best":${ratioJson(sweepBest)},"confirm_times":$confirmTimes,"confirm_unreliable":$confirmUnreliable,"confirm_unresolved":$unresolvedJson,"confirm_skipped_budget":$confirmSkippedBudget,"baseline_raise_rejected":$raiseRejectedJson,"sweep_degraded":$sweepDegraded,"sf":"$sfDir"}"""
     if (mayPublishMedians)
-      writeMedians(baselineMerge(results, Map.empty, prev)._1)
+      writeStore("medians", baselineMerge(results, Map.empty, prev)._1)
     else if (sweepDegraded) System.err.println(
       f"[bench] sweep degraded ($sweepFlagName sweep median $sweepFlag%.3f vs baseline $sweepFlagBase%.3f): medians file NOT published")
     println(jsonLine("sweep", "{}", "{}", "{}",
@@ -641,15 +643,18 @@ object Bench {
     // publish as one — the capped-out entries are an unconfirmed
     // backlog even though the survivors still fork below
     var confirmBudgetHit = budgetExceeded || confirmCapped
+    // a deadline-gated fork series; each fork dies at the budget mark
+    def confirmFork(ns: Seq[String]): (Map[String, Double], Boolean) =
+      forkQuickTime(ns, sfDir, q04Baseline,
+        baselines = best ++ prev,
+        remainingSecFn = () => remainingSec,
+        forkOnce = (ns2, sf) =>
+          forkQuickTimeOnce(ns2, sf, math.max(30.0, remainingSec)))
     val (remeasured: Map[String, Double], confirmReliable: Boolean) =
       if (flagged.isEmpty || budgetExceeded) (Map.empty[String, Double], true)
       else try {
-        spark.stop() // free the 32 cores + heap before forking
-        forkQuickTime(flagged, sfDir, q04Baseline,
-          baselines = best ++ prev, // fallback-flagship baselines
-          remainingSecFn = () => remainingSec,
-          forkOnce = (ns, sf) =>
-            forkQuickTimeOnce(ns, sf, math.max(30.0, remainingSec)))
+        spark.stop() // free the cores + heap before forking
+        confirmFork(flagged)
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] confirm pass failed: $e — publishing sweep results")
@@ -677,11 +682,7 @@ object Bench {
           if (remainingSec < 240.0) { confirmBudgetHit = true; Map.empty }
           else {
             Thread.sleep(60000L)
-            val (m, rel) = forkQuickTime(ns, sfDir, q04Baseline,
-              baselines = best ++ prev,
-              remainingSecFn = () => remainingSec,
-              forkOnce = (ns2, sf2) =>
-                forkQuickTimeOnce(ns2, sf2, math.max(30.0, remainingSec)))
+            val (m, rel) = confirmFork(ns)
             if (rel) m else Map.empty
           }
         })
@@ -721,22 +722,15 @@ object Bench {
     val (mergedBaseline, raiseRejected) =
       baselineMerge(results, adjudicated, prev, quietBase)
     if (mayPublishMedians) {
-      writeMedians(mergedBaseline)
+      writeStore("medians", mergedBaseline)
       if (raiseRejected.nonEmpty) System.err.println(
         s"[bench] baseline raises REJECTED (kept previous values, see never-raise rule): ${raiseRejected.mkString(",")}")
       // persist adjudicated quiet-regime medians to their OWN store
       // (carrying the previous store forward): these values gate
       // future confirm adjudication but never touch the sweep-regime
       // medians file — see the baselines scaladoc
-      if (confirmReliable && adjudicated.nonEmpty) {
-        val body = (("  \"_cpus\": " + cpus) +:
-          (quietBase ++ adjudicated).toSeq.sorted
-            .map { case (k, v) => "  \"" + k + "\": " + fmtMedian(v) })
-          .mkString("{\n", ",\n", "\n}")
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(f"bench_quiet_r$nextRound%02d.json"),
-          body.getBytes("UTF-8"))
-      }
+      if (confirmReliable && adjudicated.nonEmpty)
+        writeStore("quiet", (quietBase ++ adjudicated).toSeq.sorted)
     }
     // ---- GUARANTEED LAST LINE + EXIT 0 (round-15) -------------------
     // The r14 tail shows WARN/stderr lines printed AFTER the sweep
@@ -861,6 +855,21 @@ object Bench {
     (last, false)
   }
 
+  /** The command line of a fresh JVM running `mainClass` with `args`:
+    * this JVM's java binary, classpath and --add-opens/-X flags.
+    */
+  def childJvm(mainClass: String, args: Seq[String]): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val javaBin = java.nio.file.Paths
+      .get(System.getProperty("java.home"), "bin", "java").toString
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq
+      .filter(a => a.startsWith("--add-opens") || a.startsWith("--add-exports")
+        || a.startsWith("--enable-native-access") || a.startsWith("-X"))
+    Seq(javaBin) ++ jvmArgs ++
+      Seq("-cp", System.getProperty("java.class.path"), mainClass) ++ args
+  }
+
   /** Fork `graft.tools.QuickTime` in a FRESH JVM (same classpath,
     * same --add-opens/-X flags as this one) to median-time `names`
     * quietly, and parse its `[quick] <name> median=<t>` lines. Returns
@@ -879,17 +888,10 @@ object Bench {
   def forkQuickTimeOnce(
       names: Seq[String], sfDir: String, timeoutSec: Double): Map[String, Double] = {
     import scala.jdk.CollectionConverters._
-    val javaBin = java.nio.file.Paths
-      .get(System.getProperty("java.home"), "bin", "java").toString
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filter(a => a.startsWith("--add-opens") || a.startsWith("--add-exports")
-        || a.startsWith("--enable-native-access") || a.startsWith("-X"))
-    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(
-      "-cp", System.getProperty("java.class.path"),
-      "graft.tools.QuickTime", names.mkString(","))
     try {
-      val pb = new ProcessBuilder(cmd.asJava).redirectErrorStream(true)
+      val pb = new ProcessBuilder(
+        childJvm("graft.tools.QuickTime", Seq(names.mkString(","))).asJava)
+        .redirectErrorStream(true)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
       // the confirm fork needs fewer reps than a hand-run QuickTime:
       // 3 medians is what the sweep itself uses, and the fork's cost

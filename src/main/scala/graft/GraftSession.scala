@@ -15,10 +15,17 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Task threads of a local session (and the bench's store tag):
+    * `SPARK_GRAFT_CPUS` if set, else every core of this machine.
+    */
+  def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Local-mode session; on a real cluster only `master` changes —
     * every config below is sized relative to cores/data, not hardware.
     */
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession =
+  def local(cores: Int = GraftSession.cores, appName: String = "graft"): SparkSession =
     configure(
       SparkSession.builder().master(s"local[$cores]").appName(appName),
       shufflePartitions = cores

@@ -5,7 +5,7 @@ package graft
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8, "graft-smoke")
+    val spark = GraftSession.local(appName = "graft-smoke")
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

@@ -1727,10 +1727,7 @@ object SparkEntry {
     "q03_project_scalar" ->
       """SELECT c_custkey, substr(c_name, 1, 8) AS name_prefix,
          CAST(c_acctbal AS DOUBLE) AS acctbal FROM customer""",
-    "q04_agg_2a" ->
-      """SELECT substr(event_type, 1, 4) AS etype_prefix,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1""",
+    "q04_agg_2a" -> agg2aOracle,
     "q05_agg_multi" ->
       """SELECT l_returnflag, l_linestatus,
          CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
@@ -1739,60 +1736,38 @@ object SparkEntry {
          MAX(l_extendedprice) AS max_price,
          COUNT(*) AS n_rows
          FROM lineitem GROUP BY 1, 2""",
-    "q06_global_sum" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-         AS total_price, COUNT(*) AS n_rows FROM lineitem""",
+    "q06_global_sum" -> globalSumOracle,
     // q403 is the O8 reduction tree (depth-3 keyed-agg chain) over the
     // same money sum — one oracle, two topologies: the tree must be
     // row-identical to the one-shuffle q06 plan
-    "q403_tree_reduce" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-         AS total_price, COUNT(*) AS n_rows FROM lineitem""",
+    "q403_tree_reduce" -> globalSumOracle,
     "q07_distinct" ->
       "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
     "q08_topk" ->
       """SELECT o_orderkey, o_totalprice FROM orders
          ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""",
-    "q18_mapreduce_typed" ->
-      """SELECT substr(event_type, 1, 4) AS etype_prefix,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1""",
+    "q18_mapreduce_typed" -> agg2aOracle,
     // q19 reads the CSV/CSV.gz render of `events` (with injected bad
     // lines dropped); lossless round-trip makes the parquet-side
     // aggregate the exact oracle for the whole CSV source lifecycle.
-    "q19_csv_lifecycle" ->
-      """SELECT substr(event_type, 1, 4) AS etype_prefix,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1""",
+    "q19_csv_lifecycle" -> agg2aOracle,
     // q59 reads the JSON/JSON.gz render of `events` (injected bad
     // lines dropped); the lossless round-trip makes the parquet-side
     // aggregate the exact oracle — same device as q19.
-    "q59_json_lifecycle" ->
-      """SELECT substr(event_type, 1, 4) AS etype_prefix,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1""",
+    "q59_json_lifecycle" -> agg2aOracle,
     // q106 reads the XML render of `events` (native Spark 4 XML
     // datasource; injected malformed rows dropped) — the q19 device
     // on the fifth text encoding.
-    "q106_xml_lifecycle" ->
-      """SELECT substr(event_type, 1, 4) AS etype_prefix,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1""",
+    "q106_xml_lifecycle" -> agg2aOracle,
     // q63 reads the ORC render of `events` (lossless columnar
     // round-trip) — same device as q19/q59.
-    "q63_orc_lifecycle" ->
-      """SELECT substr(event_type, 1, 4) AS etype_prefix,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1""",
+    "q63_orc_lifecycle" -> agg2aOracle,
     // q82 reads the SequenceFile/SequenceFile+Snappy render of
     // `events` (injected bad records dropped); the lossless text
     // round-trip of (long, string, double) makes the parquet-side
     // aggregate the exact oracle — the q19 device on the reference's
     // advertised-but-unimplemented `sequence|sequence-snappy` layouts.
-    "q82_sequencefile" ->
-      """SELECT substr(event_type, 1, 4) AS etype_prefix,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1""",
+    "q82_sequencefile" -> agg2aOracle,
     // q85 reads events back through the shatter-then-compact cycle;
     // the rewrite is lossless so the parquet-side aggregate is exact.
     "q85_compaction" ->
@@ -1843,23 +1818,15 @@ object SparkEntry {
     // q60: exact probe-user counts hash-compared; the count-min-sketch
     // estimate is folded into approx_ok via the CMS guarantee band
     // [exact, exact + eps*N] (q39/q48 bound-fold device).
-    "q60_cms_frequency" ->
-      """SELECT event_type, user_id, COUNT(*) AS n_exact,
-         TRUE AS approx_ok
-         FROM events WHERE user_id < 10 GROUP BY 1, 2""",
+    "q60_cms_frequency" -> cmsProbeOracle,
     // q159: the streaming-maintained CMS must land exactly where the
     // batch sketch does — same probe contract, same exact-count
     // oracle as q60 (register adds commute, so the micro-batch split
     // cannot change the final matrix).
-    "q159_stream_cms" ->
-      """SELECT event_type, user_id, COUNT(*) AS n_exact,
-         TRUE AS approx_ok
-         FROM events WHERE user_id < 10 GROUP BY 1, 2""",
+    "q159_stream_cms" -> cmsProbeOracle,
     // q67: per-day HLL sketches merged across days (the daily rollup);
     // the merged estimate must land inside the q39 bound.
-    "q67_hll_daily_merge" ->
-      """SELECT event_type, COUNT(DISTINCT user_id) AS n_exact,
-         TRUE AS approx_ok FROM events GROUP BY 1""",
+    "q67_hll_daily_merge" -> hllExactOracle,
     "q09_join_broadcast" ->
       """SELECT c_mktsegment,
          CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
@@ -7827,48 +7794,12 @@ object SparkEntry {
                OR e.ts < CAST(h.valid_to AS TIMESTAMP))""",
     // q120: streaming CDC apply — same oracle as q117 (stream must
     // equal batch), reached through foreachBatch versioned upserts.
-    "q120_stream_cdc" ->
-      """WITH log AS (
-           SELECT user_id, ts, event_id,
-             CASE WHEN event_type = 'error' THEN 'D'
-                  WHEN event_type = 'signup' THEN 'I'
-                  ELSE 'U' END AS op,
-             CAST(value AS DECIMAL(18,2)) AS v
-           FROM events),
-         r AS (
-           SELECT *,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-               ORDER BY ts DESC, event_id DESC) AS rn,
-             COUNT(*) OVER (PARTITION BY user_id) AS n_changes
-           FROM log)
-         SELECT user_id, op AS last_op, ts AS last_ts,
-           CASE WHEN op = 'D' THEN NULL
-                ELSE CAST(v * 100 AS BIGINT) END AS last_value_cents,
-           op <> 'D' AS is_live, n_changes
-         FROM r WHERE rn = 1""",
+    "q120_stream_cdc" -> cdcReplayOracle,
     // q117: CDC replay — the oracle states last-writer-wins as
     // ROW_NUMBER()=1 over (ts, event_id) DESC; the Spark side must
     // reach the identical final state through its sort-free max_by
     // aggregate.
-    "q117_cdc_replay" ->
-      """WITH log AS (
-           SELECT user_id, ts, event_id,
-             CASE WHEN event_type = 'error' THEN 'D'
-                  WHEN event_type = 'signup' THEN 'I'
-                  ELSE 'U' END AS op,
-             CAST(value AS DECIMAL(18,2)) AS v
-           FROM events),
-         r AS (
-           SELECT *,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-               ORDER BY ts DESC, event_id DESC) AS rn,
-             COUNT(*) OVER (PARTITION BY user_id) AS n_changes
-           FROM log)
-         SELECT user_id, op AS last_op, ts AS last_ts,
-           CASE WHEN op = 'D' THEN NULL
-                ELSE CAST(v * 100 AS BIGINT) END AS last_value_cents,
-           op <> 'D' AS is_live, n_changes
-         FROM r WHERE rn = 1""",
+    "q117_cdc_replay" -> cdcReplayOracle,
     // q116: per-user OLS trend — integer sufficient statistics
     // (epoch days × DECIMAL-rounded cents), one final double
     // division; HUGEINT sums cast back to BIGINT for the compare.
@@ -8272,26 +8203,7 @@ object SparkEntry {
     "q20_dedup_exact" ->
       s"""SELECT MD5($normText) AS h, MIN(doc_id) AS keep_id,
          COUNT(*) AS n_copies FROM documents GROUP BY 1""",
-    "q21_ngram_jaccard" ->
-      s"""WITH words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT id_a, id_b, n_common,
-           CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jaccard
-         FROM common
-         JOIN sizes sa ON sa.doc_id = id_a
-         JOIN sizes sb ON sb.doc_id = id_b
-         WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5""",
+    "q21_ngram_jaccard" -> minhashPairsOracle,
     // q22 runs the production pipeline (LSH candidates + EXACT Jaccard
     // verification), so its oracle is the exhaustive-truth SQL: equal
     // whenever banded recall at the threshold is complete on the
@@ -8388,9 +8300,7 @@ object SparkEntry {
            COALESCE(d.kept_for, -1) AS kept_for,
            COALESCE(d.max_sim_micro, -1) AS max_sim_micro
          FROM assigned a LEFT JOIN dups d USING (vec_id)""",
-    "q39_cardinality" ->
-      """SELECT event_type, COUNT(DISTINCT user_id) AS n_exact,
-         TRUE AS approx_ok FROM events GROUP BY 1""",
+    "q39_cardinality" -> hllExactOracle,
     // q48: exact quantiles hash-compared; the approx_percentile sketch
     // is folded into approx_ok (the q39 bound-fold device) — a sketch
     // outside the exact-(p±0.01) band fails the hash compare.
@@ -11431,6 +11341,49 @@ object SparkEntry {
          }.mkString("\n         UNION ALL\n         ")}"""
   )
 
+  /** The 2a SQL of q04, shared by q18 and the q19/q59/q63/q82/q106 lifecycles. */
+  private val agg2aOracle: String =
+    """SELECT substr(event_type, 1, 4) AS etype_prefix,
+         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+         FROM events GROUP BY 1"""
+
+  /** q06's global money sum, shared by the q403 reduction tree. */
+  private val globalSumOracle: String =
+    """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+         AS total_price, COUNT(*) AS n_rows FROM lineitem"""
+
+  /** q60's exact probe-user counts, shared by the q159 streaming CMS. */
+  private val cmsProbeOracle: String =
+    """SELECT event_type, user_id, COUNT(*) AS n_exact,
+         TRUE AS approx_ok
+         FROM events WHERE user_id < 10 GROUP BY 1, 2"""
+
+  /** q39's exact distinct-user counts, shared by the q67 daily HLL merge. */
+  private val hllExactOracle: String =
+    """SELECT event_type, COUNT(DISTINCT user_id) AS n_exact,
+         TRUE AS approx_ok FROM events GROUP BY 1"""
+
+  /** q117's last-writer-wins CDC replay, shared by the q120 stream apply. */
+  private val cdcReplayOracle: String =
+    """WITH log AS (
+           SELECT user_id, ts, event_id,
+             CASE WHEN event_type = 'error' THEN 'D'
+                  WHEN event_type = 'signup' THEN 'I'
+                  ELSE 'U' END AS op,
+             CAST(value AS DECIMAL(18,2)) AS v
+           FROM events),
+         r AS (
+           SELECT *,
+             ROW_NUMBER() OVER (PARTITION BY user_id
+               ORDER BY ts DESC, event_id DESC) AS rn,
+             COUNT(*) OVER (PARTITION BY user_id) AS n_changes
+           FROM log)
+         SELECT user_id, op AS last_op, ts AS last_ts,
+           CASE WHEN op = 'D' THEN NULL
+                ELSE CAST(v * 100 AS BIGINT) END AS last_value_cents,
+           op <> 'D' AS is_live, n_changes
+         FROM r WHERE rn = 1"""
+
   /** q14's window top-per-key SQL — shared verbatim by q89 (bounded
     * TopK aggregate): the alternative plan is a row-identity contract,
     * and sharing the val makes the identity structural (an edit to
@@ -11880,8 +11833,8 @@ object SparkEntry {
     * the declared tie order, so pred = 'en' iff en-score == best and
     * best > 0), then the doubled-rank Mann-Whitney identity.
     */
-  /** q22 oracle body (exact-Jaccard verified pairs), shared with the
-    * q220 replay.
+  /** q22 oracle body (exact-Jaccard verified pairs), shared with q21
+    * (exhaustive shingle Jaccard) and the q220 replay.
     */
   private lazy val minhashPairsOracle: String =
     s"""WITH words AS (

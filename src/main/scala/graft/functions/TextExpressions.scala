@@ -152,21 +152,17 @@ object TextExpressions {
       val bytes = s.getBytes
       val len = bytes.length
       // char-start byte offsets: charStart(i) = byte offset of char i
-      // (0-based), charStart(nchars) = len — UTF-8 char = any byte
-      // that is not a continuation byte (0b10xxxxxx), matching
-      // UTF8String.numChars()/substring() code-point semantics
+      // (0-based), charStart(nchars) = len, stepping by the length the
+      // first byte declares — UTF8String.numChars()/substring()'s own
+      // stepping, so malformed UTF-8 splits into the same chars as in
+      // SQL; a sequence truncated by the end of the string stops at len
+      val charStart = new Array[Int](len + 1)
       var nchars = 0
       var b = 0
       while (b < len) {
-        if ((bytes(b) & 0xC0) != 0x80) nchars += 1
-        b += 1
-      }
-      val charStart = new Array[Int](nchars + 1)
-      var ci = 0
-      b = 0
-      while (b < len) {
-        if ((bytes(b) & 0xC0) != 0x80) { charStart(ci) = b; ci += 1 }
-        b += 1
+        charStart(nchars) = b
+        nchars += 1
+        b += UTF8String.numBytesForFirstByte(bytes(b))
       }
       charStart(nchars) = len
       // boundary positions (1-based char positions p in w..nchars):

@@ -19,8 +19,9 @@ import graft.sources.Tables
   *    `mapper.py:52-54`) and merges across the shuffle (the reduce
   *    rounds of `reducer.py:47-56`), collapsing the reference's
   *    multi-round S3 tree into one exchange;
-  *  - the reduction tree itself -> [[treeSum]] shows the literal
-  *    `treeAggregate` twin for when a driver-side scalar is wanted.
+  *  - the reduction tree itself -> [[treeReduceSum]] (q403) builds the
+  *    coordinator's literal merge rounds as a keyed-aggregate chain,
+  *    priced against q06's one-shuffle global sum.
   */
 object MapReduceSurface {
 
@@ -131,21 +132,6 @@ object MapReduceSurface {
         col("col._2").as("o_orderkey"),
         col("col._1").as("o_totalprice"),
         (col("pos") + 1).cast("int").as("rk"))
-  }
-
-  /** Literal reduction-tree twin (O8): `treeAggregate` with depth
-    * ⌈log_b(nPartitions)⌉ merges partials through executor-side
-    * rounds exactly like the coordinator's reducer rounds
-    * (`src/python/reducerCoordinator.py:153-159`) — but in-memory,
-    * no S3 round-trips. Only for driver-side scalars; keyed
-    * aggregation uses the shuffle path above.
-    */
-  def treeSum(spark: SparkSession, sfDir: String, fanIn: Int = 2): Double = {
-    val vals = Tables.load(spark, sfDir, "lineitem")
-      .select(col("l_extendedprice")).rdd.map(r => Math.round(r.getDouble(0) * 100.0))
-    val parts = math.max(vals.getNumPartitions, 2)
-    val depth = math.max(1, math.ceil(math.log(parts) / math.log(math.max(fanIn, 2))).toInt)
-    vals.treeAggregate(0L)(_ + _, _ + _, depth) / 100.0
   }
 
   /** The q403 driver entry: the O8 REDUCTION TREE as a DataFrame plan

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 import graft.sources.Tables
 
 /** The reference's own query surface (SURVEY.md §2 O4-O8), re-shaped
@@ -63,8 +63,14 @@ object ReferenceQueries {
     * `HashAggregateExec(partial)`.
     */
   def agg2a(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.load(spark, sfDir, "events")
-      .select(substring(col("event_type"), 1, 4).as("etype_prefix"), col("value"))
+    agg2aOf(Tables.load(spark, sfDir, "events"))
+
+  /** The 2a aggregate over any frame with `event_type` and `value`
+    * columns: the one body behind q04 and every source lifecycle that
+    * reads `events` back through another format (q19/q59/q63/q82/q106).
+    */
+  def agg2aOf(df: DataFrame): DataFrame =
+    df.select(substring(col("event_type"), 1, 4).as("etype_prefix"), col("value"))
       .groupBy(col("etype_prefix"))
       .agg(moneySum(col("value")).as("sum_value"))
 
@@ -86,7 +92,8 @@ object ReferenceQueries {
     * 107-189`) exists to merge partials down to a single `result`
     * object. In Spark that is a global aggregate: partial per
     * partition, single final merge — one round, no S3 round-trips.
-    * (An explicit `treeAggregate` twin lives in MapReduceSurface.)
+    * (The literal reduction tree over the same sum is q403,
+    * `MapReduceSurface.treeReduceSum`.)
     */
   def globalSum(spark: SparkSession, sfDir: String): DataFrame =
     Tables.load(spark, sfDir, "lineitem")
@@ -118,14 +125,43 @@ object ReferenceQueries {
     * `ts` travels as epoch micros (long) — CSV has no timestamp type,
     * and integer micros round-trip exactly.
     */
-  val eventsCsvSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts_us", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("props", org.apache.spark.sql.types.StringType)))
+  val eventsCsvSchema: StructType = new StructType()
+    .add("event_id", LongType).add("ts_us", LongType).add("user_id", LongType)
+    .add("event_type", StringType).add("value", DoubleType).add("props", StringType)
+
+  /** The JSON (q59) and XML (q106) record schema: the fields 2a reads. */
+  private val eventsTextSchema: StructType = new StructType()
+    .add("event_id", LongType).add("event_type", StringType).add("value", DoubleType)
+
+  /** A reader keeps a parseable record with a missing or short field as
+    * nulls; the reference's positional access (`data[3]`) raises on it
+    * and drops it — so every lifecycle requires each consumed field.
+    */
+  private val consumedFieldsPresent: Column =
+    col("event_id").isNotNull && col("event_type").isNotNull && col("value").isNotNull
+
+  /** The render-and-read skeleton of q19 (CSV), q59 (JSON) and q106
+    * (XML): `cols` of `events` are written with `write`, the even half
+    * plain and the odd half gzip; the injected malformed records
+    * (`badText`) land beside the plain parts; both directories are
+    * read back with `read` (explicit schema, DROPMALFORMED: the reader
+    * must swallow bad records like the reference swallows bad splits).
+    */
+  private def textLifecycle(
+      spark: SparkSession, sfDir: String, tag: String, cols: Seq[Column],
+      write: (DataFrameWriter[Row], String) => Unit,
+      badFile: String, badText: String,
+      read: Seq[String] => DataFrame): DataFrame =
+      Scratch.withScratch(spark, tag, sfDir) { dir =>
+    val ev = Tables.load(spark, sfDir, "events").select(cols: _*)
+    write(ev.filter(col("event_id") % 2 === 0).write.mode("overwrite"),
+      s"$dir/plain")
+    write(ev.filter(col("event_id") % 2 === 1).write.mode("overwrite")
+      .option("compression", "gzip"), s"$dir/gz")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$dir/plain/$badFile"), badText.getBytes("UTF-8"))
+    agg2aOf(read(Seq(s"$dir/plain", s"$dir/gz")).filter(consumedFieldsPresent))
+  }
 
   /** The reference's FULL source lifecycle under the hard oracle:
     * O1 (prefix enumeration: two directories of part files) → O2 (CSV
@@ -138,36 +174,18 @@ object ReferenceQueries {
     * table — any CSV-path infidelity breaks the hash match.
     */
   def csvLifecycle(spark: SparkSession, sfDir: String): DataFrame =
-      Scratch.withScratch(spark, "q19_csv", sfDir) { dir =>
-    val ev = Tables.load(spark, sfDir, "events")
-      .select(
-        col("event_id"), unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"), col("value"), col("props"))
-    ev.filter(col("event_id") % 2 === 0)
-      .write.mode("overwrite").csv(s"$dir/plain")
-    ev.filter(col("event_id") % 2 === 1)
-      .write.mode("overwrite").option("compression", "gzip").csv(s"$dir/gz")
-    // injected malformed lines: wrong arity, bad casts, raw garbage —
-    // all must be swallowed by DROPMALFORMED like the reference
-    // swallows bad splits
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/plain/zz_badlines.csv"),
-      ("garbage line with no commas\n" +
+    textLifecycle(spark, sfDir, "q19_csv",
+      Seq(col("event_id"), unix_micros(col("ts")).as("ts_us"), col("user_id"),
+        col("event_type"), col("value"), col("props")),
+      _.csv(_),
+      // wrong arity, bad casts, raw garbage; under CSV column pruning
+      // the short row "1,2" is padded with nulls, not dropped
+      "zz_badlines.csv",
+      "garbage line with no commas\n" +
         "1,2\n" +
         "9,9,9,click,NOT_A_DOUBLE,p\n" +
-        "NOT_A_LONG,0,0,view,1.0,p\n").getBytes("UTF-8"))
-    Tables.csv(spark, Seq(s"$dir/plain", s"$dir/gz"), eventsCsvSchema)
-      // DROPMALFORMED corner: under CSV column pruning a short row
-      // (fewer tokens than the schema) is padded with nulls, not
-      // dropped. The reference's positional access (`data[3]`) raises
-      // on such lines and drops them — mirror that by requiring every
-      // consumed field non-null.
-      .filter(col("event_id").isNotNull &&
-        col("event_type").isNotNull && col("value").isNotNull)
-      .select(substring(col("event_type"), 1, 4).as("etype_prefix"), col("value"))
-      .groupBy(col("etype_prefix"))
-      .agg(moneySum(col("value")).as("sum_value"))
-  }
+        "NOT_A_LONG,0,0,view,1.0,p\n",
+      Tables.csv(spark, _, eventsCsvSchema))
 
   /** The q245 driver entry: CORRUPT-PARQUET QUARANTINE LIFECYCLE —
     * the columnar-lake sibling of q19/q59's bad-RECORD tolerance: at
@@ -227,45 +245,21 @@ object ReferenceQueries {
   }
 
   /** JSON-lines source lifecycle (q59) — the third text encoding next
-    * to q19's CSV/CSV.gz: events rendered to `.json` and `.json.gz`
-    * part files, read back with an EXPLICIT schema (no
-    * runtime-inference job — at 100 TB schema inference is a second
-    * full scan) under DROPMALFORMED with injected garbage lines, then
-    * the q04 aggregate. The render is lossless (longs; doubles use
-    * shortest-round-trip text), so the parquet-side aggregate is the
-    * exact oracle for the whole JSON path.
+    * to q19's CSV/CSV.gz, read back with an EXPLICIT schema (at 100 TB
+    * schema inference is a second full scan). The render is lossless
+    * (longs; doubles use shortest-round-trip text), so the parquet-side
+    * aggregate is the exact oracle for the whole JSON path.
     */
   def jsonLifecycle(spark: SparkSession, sfDir: String): DataFrame =
-      Scratch.withScratch(spark, "q59_json", sfDir) { dir =>
-    import org.apache.spark.sql.types._
-    val ev = Tables.load(spark, sfDir, "events")
-      .select(col("event_id"), col("event_type"), col("value"))
-    ev.filter(col("event_id") % 2 === 0)
-      .write.mode("overwrite").json(s"$dir/plain")
-    ev.filter(col("event_id") % 2 === 1)
-      .write.mode("overwrite").option("compression", "gzip").json(s"$dir/gz")
-    // injected malformed lines: broken JSON, wrong types — all must be
-    // swallowed by DROPMALFORMED like the reference swallows bad splits
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/plain/zz_badlines.json"),
-      ("{not json at all\n" +
+    textLifecycle(spark, sfDir, "q59_json",
+      Seq(col("event_id"), col("event_type"), col("value")),
+      _.json(_),
+      "zz_badlines.json", // broken JSON, wrong types
+      "{not json at all\n" +
         """{"event_id": "NOT_A_LONG", "event_type": "view", "value": 1.0}""" + "\n" +
-        """{"event_id": 7, "event_type": "view", "value": "NOT_A_DOUBLE"}""" + "\n")
-        .getBytes("UTF-8"))
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    spark.read.schema(schema).option("mode", "DROPMALFORMED")
-      .json(s"$dir/plain", s"$dir/gz")
-      // records with parseable JSON but missing consumed fields are
-      // kept as nulls by the reader — drop them like q19 does
-      .filter(col("event_id").isNotNull &&
-        col("event_type").isNotNull && col("value").isNotNull)
-      .select(substring(col("event_type"), 1, 4).as("etype_prefix"), col("value"))
-      .groupBy(col("etype_prefix"))
-      .agg(moneySum(col("value")).as("sum_value"))
-  }
+        """{"event_id": 7, "event_type": "view", "value": "NOT_A_DOUBLE"}""" + "\n",
+      ps => spark.read.schema(eventsTextSchema).option("mode", "DROPMALFORMED")
+        .json(ps: _*))
 
   /** ORC source/sink lifecycle (q63) — the second COLUMNAR format next
     * to parquet: events written as ORC (schema travels in file
@@ -279,10 +273,7 @@ object ReferenceQueries {
     Tables.load(spark, sfDir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
       .write.mode("overwrite").orc(dir)
-    spark.read.orc(dir)
-      .select(substring(col("event_type"), 1, 4).as("etype_prefix"), col("value"))
-      .groupBy(col("etype_prefix"))
-      .agg(moneySum(col("value")).as("sum_value"))
+    agg2aOf(spark.read.orc(dir))
   }
 
   /** XML source/sink lifecycle (q106) — the fifth text encoding next
@@ -290,15 +281,11 @@ object ReferenceQueries {
     * Spark 4 ships the former spark-xml as a native datasource, so
     * XML feeds (the format enterprise event/feed dumps still arrive
     * in) round-trip without an external package. Events render as
-    * `<event>` rows (even half plain, odd half gzip), read back with
-    * an EXPLICIT schema + rowTag (schema inference over XML is a
-    * second full scan — same rule as q59's JSON) under DROPMALFORMED
-    * with injected malformed rows: broken tag soup, wrong types —
-    * both must be swallowed like the reference swallows bad splits.
-    * Unlike a bad cast (dropped row-local), unparseable tag soup
-    * desyncs the rowTag tokenizer for the rest of its chunk
-    * (ReferenceQueriesSpec pins this), so the render isolates
-    * injected garbage in its own file, never ahead of good rows.
+    * `<event>` rows, read back with the same rowTag; the injected rows
+    * carry broken tag soup and wrong types. Unlike a bad cast (dropped
+    * row-local), unparseable tag soup desyncs the rowTag tokenizer for
+    * the rest of its chunk (ReferenceQueriesSpec pins this), so the
+    * render isolates injected garbage in its own file.
     * long/double text round-trips losslessly, so the parquet events
     * table is the exact oracle.
     *
@@ -309,41 +296,20 @@ object ReferenceQueries {
     * files per directory.
     */
   def xmlLifecycle(spark: SparkSession, sfDir: String): DataFrame =
-      Scratch.withScratch(spark, "q106_xml", sfDir) { dir =>
-    import org.apache.spark.sql.types._
-    val ev = Tables.load(spark, sfDir, "events")
-      .select(col("event_id"), col("event_type"), col("value"))
-    ev.filter(col("event_id") % 2 === 0)
-      .write.mode("overwrite").option("rowTag", "event")
-      .format("xml").save(s"$dir/plain")
-    ev.filter(col("event_id") % 2 === 1)
-      .write.mode("overwrite").option("rowTag", "event")
-      .option("compression", "gzip")
-      .format("xml").save(s"$dir/gz")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/plain/zz_badrows.xml"),
-      ("<events>" +
+    textLifecycle(spark, sfDir, "q106_xml",
+      Seq(col("event_id"), col("event_type"), col("value")),
+      (w, path) => w.option("rowTag", "event").format("xml").save(path),
+      "zz_badrows.xml",
+      "<events>" +
         "<event><event_id>NOT_A_LONG</event_id>" +
         "<event_type>view</event_type><value>1.0</value></event>" +
         "<event><event_id>7</event_id><event_type>view</event_type>" +
         "<value>NOT_A_DOUBLE</value></event>" +
         "<event><broken tag soup</event>" +
-        "</events>").getBytes("UTF-8"))
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    spark.read.schema(schema)
-      .option("rowTag", "event").option("mode", "DROPMALFORMED")
-      .format("xml").load(s"$dir/plain", s"$dir/gz")
-      // parseable rows with missing consumed fields surface as nulls —
-      // drop them under the same policy as q19/q59
-      .filter(col("event_id").isNotNull &&
-        col("event_type").isNotNull && col("value").isNotNull)
-      .select(substring(col("event_type"), 1, 4).as("etype_prefix"), col("value"))
-      .groupBy(col("etype_prefix"))
-      .agg(moneySum(col("value")).as("sum_value"))
-  }
+        "</events>",
+      ps => spark.read.schema(eventsTextSchema)
+        .option("rowTag", "event").option("mode", "DROPMALFORMED")
+        .format("xml").load(ps: _*))
 
   /** SequenceFile source/sink lifecycle (q82) — the fourth input
     * encoding. The reference ADVERTISES the AMPLab benchmark's
@@ -381,7 +347,7 @@ object ReferenceQueries {
       ("9", "click,NOT_A_DOUBLE"),
       ("NOT_A_LONG", "view,1.0")), 1)
       .saveAsSequenceFile(s"$dir/bad")
-    (spark.sparkContext.sequenceFile[String, String](s"$dir/plain") union
+    val records = (spark.sparkContext.sequenceFile[String, String](s"$dir/plain") union
       spark.sparkContext.sequenceFile[String, String](s"$dir/snappy") union
       spark.sparkContext.sequenceFile[String, String](s"$dir/bad"))
       .toDF("k", "v")
@@ -396,11 +362,8 @@ object ReferenceQueries {
         col("parts").getItem(0).as("event_type"),
         expr("try_cast(parts[1] AS DOUBLE)").as("value"),
         size(col("parts")).as("arity"))
-      .filter(col("event_id").isNotNull && col("arity") === 2 &&
-        col("event_type").isNotNull && col("value").isNotNull)
-      .select(substring(col("event_type"), 1, 4).as("etype_prefix"), col("value"))
-      .groupBy(col("etype_prefix"))
-      .agg(moneySum(col("value")).as("sum_value"))
+      .filter(col("arity") === 2 && consumedFieldsPresent)
+    agg2aOf(records)
   }
 
   /** Small-file compaction lifecycle (q85): events deliberately
@@ -520,7 +483,6 @@ object ReferenceQueries {
     * can exercise it against hand-laid-out files.
     */
   def sortedReadBack(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     import org.apache.spark.sql.expressions.Window
     val rows = spark.read.schema(StructType(Seq(
         StructField("o_orderkey", LongType),
@@ -599,7 +561,6 @@ object ReferenceQueries {
     * empty frame instead of failing inference).
     */
   def prunedRead(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     spark.read.schema(StructType(Seq(
         StructField("event_id", LongType),
         StructField("user_id", LongType),

@@ -31,8 +31,8 @@ object IoProbe {
     val runs = if (args.length > 1) args(1).toInt else 5
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dir = "/tmp/graft-io-probe"
-    val cores = Runtime.getRuntime.availableProcessors
-    val spark = graft.GraftSession.local(cores = cores, appName = "graft-io")
+    val cores = graft.GraftSession.cores
+    val spark = graft.GraftSession.local(cores, appName = "graft-io")
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = spark.read.parquet(s"$src/lineitem.parquet")

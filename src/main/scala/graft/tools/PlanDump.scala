@@ -18,9 +18,8 @@ object PlanDump {
     val tag = args(1)
     val names = args(2).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     Files.createDirectories(outDir)
-    val spark = graft.GraftSession.local(cores = cpus, appName = "plandump")
+    val spark = graft.GraftSession.local(appName = "plandump")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val text =

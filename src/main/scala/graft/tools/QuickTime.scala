@@ -12,10 +12,8 @@ object QuickTime {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // honor the bench's core-count contract so quiet adjudications can
-    // run in BOTH core regimes (round-19: quiet stores are per-cpus)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.local(cores = cpus, appName = "quicktime")
+    // the bench's core count (quiet stores are per core count)
+    val spark = graft.GraftSession.local(appName = "quicktime")
     spark.sparkContext.setLogLevel("ERROR")
     // the sweep's own timing and hygiene (the quiet fork is the
     // sweep's regime twin)

@@ -93,12 +93,11 @@ object ScalingProbe {
     val names = args(1).split(",").toSeq
     val src = "/root/testdata/sf0.1"
     val big = "/tmp/graft-scale-probe"
-    // honor the bench's core-count contract (round-19): the K-scaled
+    // the bench's core count (GraftSession.cores): the K-scaled
     // fixture is the right place to measure 8-vs-32-core scaling —
     // at plain sf0.1 the suite is fixed-overhead-bound and core
     // ratios read ~1 (the r18 scaling block's known blind spot)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    lazy val spark = graft.GraftSession.local(cores = cpus, appName = "graft-scale")
+    lazy val spark = graft.GraftSession.local(appName = "graft-scale")
     lazy val docs = spark.read.parquet(s"$src/documents.parquet")
     lazy val nDocs = docs.count()
     // resolves before the session starts or any fixture is written

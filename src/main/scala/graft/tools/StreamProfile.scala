@@ -20,9 +20,7 @@ object StreamProfile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "32").toInt
     val provider = sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER", "hdfs")
-    val spark = GraftSession.local(
-      cores = Runtime.getRuntime.availableProcessors,
-      appName = "graft-stream-profile")
+    val spark = GraftSession.local(appName = "graft-stream-profile")
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     if (provider == "rocksdb")

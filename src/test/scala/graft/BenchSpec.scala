@@ -429,6 +429,16 @@ class BenchSpec extends AnyFunSuite {
       Map("q21_ngram_jaccard" -> 0.9), Map("q23_simhash" -> 0.3), 3))
   }
 
+  test("store writer: parseMediansFile and parseFileCpus read back what storeJson wrote") {
+    val entries = Seq("q04_agg_2a" -> 0.541, "q155_bpe_train" -> 6.22, "q01_scan_1a" -> 0.3)
+    val body = Bench.storeJson(4, entries)
+    assert(Bench.parseFileCpus(body) == Some(4))
+    assert(Bench.parseMediansFile(body) == entries.toMap)
+    // the form is the committed stores' own: tag line first, fixed decimals
+    assert(body == "{\n  \"_cpus\": 4,\n  \"q04_agg_2a\": 0.541,\n" +
+      "  \"q155_bpe_train\": 6.220,\n  \"q01_scan_1a\": 0.300\n}")
+  }
+
   test("core-count regime: _cpus tag parses, untagged is 32-core, r41 is 8-core") {
     // tagged files: the key is invisible to the qNN-only medians regex
     val tagged = "{\n  \"_cpus\": 8,\n  \"q01_scan_1a\": 0.145\n}"
@@ -569,15 +579,7 @@ class BenchSpec extends AnyFunSuite {
     // `sbt test` stays hermetic off this machine
     assume(new java.io.File("/root/testdata/sf0.001/lineitem.parquet").exists(),
       "sf0.001 fixture absent - bench self-check only runs on the driver box")
-    val javaBin = java.nio.file.Paths
-      .get(System.getProperty("java.home"), "bin", "java").toString
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filter(a => a.startsWith("--add-opens") || a.startsWith("--add-exports")
-        || a.startsWith("--enable-native-access") || a.startsWith("-X"))
-    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(
-      "-cp", System.getProperty("java.class.path"), "graft.Bench")
-    val pb = new ProcessBuilder(cmd.asJava)
+    val pb = new ProcessBuilder(Bench.childJvm("graft.Bench", Nil).asJava)
     // run in a scratch dir: the bench must not read this checkout's
     // medians history (slow confirm paths) nor write into it
     val scratch = java.nio.file.Files

@@ -255,6 +255,35 @@ class DedupSpec extends AnyFunSuite {
     val b = sqlChunks(docs).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted
     assert(a.toSeq == b.toSeq)
+    // malformed UTF-8, built as bytes: a lone continuation byte, an
+    // overlong pair, and a 3-byte lead truncated by the end of the
+    // string. Compared as hex bytes — decoding to a Java String folds
+    // every bad sequence into U+FFFD and would hide a misstep.
+    def hexOf(t: String) = t.getBytes("UTF-8").map("%02X".format(_)).mkString
+    val inputs = Seq(
+      11L -> ("80" + hexOf(noise(40))),
+      12L -> (hexOf(noise(20)) + "C0AF" + hexOf(noise(30))),
+      13L -> (hexOf(noise(30)) + "E282"))
+    val bad = inputs.toDF("doc_id", "h")
+      .select(col("doc_id"), expr("CAST(unhex(h) AS STRING)").as("text"))
+    def hexChunks(chunks: org.apache.spark.sql.DataFrame) = chunks
+      .select(col("doc_id"), col("pos"), hex(col("chunk").cast("binary")))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted.toSeq
+    val am = hexChunks(exprChunks(bad))
+    val bm = hexChunks(sqlChunks(bad))
+    assert(am.map(c => (c._1, c._2)) == bm.map(c => (c._1, c._2)))
+    // the chunks tile each input exactly, byte for byte
+    inputs.foreach { case (id, h) =>
+      assert(am.filter(_._1 == id).map(_._3).mkString == h, s"doc $id")
+    }
+    // Spark's substring copies the missing bytes of the truncated
+    // sequence from past the end of the string, so only the twin's
+    // last doc-13 chunk may carry bytes beyond the input
+    val last13 = (13L, am.filter(_._1 == 13L).map(_._2).max)
+    am.zip(bm).foreach { case (x, y) =>
+      if ((x._1, x._2) == last13) assert(y._3.startsWith(x._3), s"$x vs $y")
+      else assert(x == y)
+    }
     // and on the fixture corpus itself (boilerplate-injected q239 form)
     val fx = graft.sources.Tables.load(spark, SparkTestSession.sf, "documents")
       .select(col("doc_id"), col("text")).limit(200)

@@ -60,22 +60,30 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
-  test("CSV lifecycle (q19) equals the parquet-side 2a aggregate exactly") {
+  // bit-exact against the parquet-side 2a job: lossless renders + decimal
+  // sums; every injected bad record dropped, every gzip/snappy half decoded
+  private def assertEquals2a(name: String,
+      lifecycle: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
     import graft.operators.ReferenceQueries
-    val viaCsv = ReferenceQueries.csvLifecycle(spark, SparkTestSession.sf)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val viaParquet = ReferenceQueries.agg2a(spark, SparkTestSession.sf)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(viaCsv == viaParquet) // bit-exact: lossless render + decimal sums
+    def sums(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val viaParquet = sums(ReferenceQueries.agg2a(spark, SparkTestSession.sf))
+    assert(sums(lifecycle(spark, SparkTestSession.sf)) == viaParquet, name)
+  }
+
+  test("CSV lifecycle (q19) equals the parquet-side 2a aggregate exactly") {
+    assertEquals2a("q19_csv_lifecycle", graft.operators.ReferenceQueries.csvLifecycle)
   }
 
   test("SequenceFile lifecycle (q82) equals the parquet-side 2a aggregate exactly") {
+    assertEquals2a("q82_sequencefile", graft.operators.ReferenceQueries.sequenceFileLifecycle)
+  }
+
+  test("JSON, ORC and XML lifecycles (q59, q63, q106) equal the 2a aggregate exactly") {
     import graft.operators.ReferenceQueries
-    val viaSeq = ReferenceQueries.sequenceFileLifecycle(spark, SparkTestSession.sf)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val viaParquet = ReferenceQueries.agg2a(spark, SparkTestSession.sf)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(viaSeq == viaParquet) // bad records dropped; snappy half decoded
+    assertEquals2a("q59_json_lifecycle", ReferenceQueries.jsonLifecycle)
+    assertEquals2a("q63_orc_lifecycle", ReferenceQueries.orcLifecycle)
+    assertEquals2a("q106_xml_lifecycle", ReferenceQueries.xmlLifecycle)
   }
 
   test("dynamic partition overwrite rewrites only the targeted day's files") {
