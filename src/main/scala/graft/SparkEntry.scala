@@ -744,39 +744,17 @@ object SparkEntry {
     * whole statistic is exact BIGINT arithmetic end to end.
     */
   private def spectralBandsOracleSql: String = {
-    val cosVals = Multimodal.DftCos64.zipWithIndex
-      .map { case (c, n) => s"($n, $c)" }.mkString(", ")
-    val sinVals = Multimodal.DftSin64.zipWithIndex
-      .map { case (c, n) => s"($n, $c)" }.mkString(", ")
-    val bins = Multimodal.SpectralBins.map(k => s"($k)").mkString(", ")
-    s"""WITH costab(n, c) AS (VALUES $cosVals),
-         sintab(n, sv) AS (VALUES $sinVals),
-         bins(k) AS (VALUES $bins),
-         wav AS MATERIALIZED (
-           SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-             octet_length(encode(text)) // 2 AS ns
-           FROM documents
-           WHERE doc_id % 3 = 1 AND octet_length(encode(text)) >= 128),
+    s"""WITH ${dftCtes(Multimodal.SpectralBins)},
+         ${wavCte(128)},
          samples AS MATERIALIZED (
            SELECT media_id, s // 64 AS f, CAST(s % 64 AS BIGINT) AS n,
              CAST(CASE WHEN v >= 32768 THEN v - 65536 ELSE v END
                AS BIGINT) AS v
            FROM (
-             SELECT media_id, ns, CAST(s AS BIGINT) AS s,
-               ('0x' || substr(hx, CAST(4*s AS INT) + 1, 2))::INT +
-                 256 * ('0x' || substr(hx, CAST(4*s AS INT) + 3, 2))::INT
-                 AS v
-             FROM wav, UNNEST(range(ns)) t(s))
+             ${pcmDecodeSql()})
            WHERE s // 64 < ns // 64),
          fr AS (
-           SELECT media_id, f, k,
-             CAST(SUM(v * ct.c) AS BIGINT) AS re,
-             CAST(SUM(v * st.sv) AS BIGINT) AS im
-           FROM samples
-             CROSS JOIN bins
-             JOIN costab ct ON ct.n = (k * samples.n) % 64
-             JOIN sintab st ON st.n = (k * samples.n) % 64
-           GROUP BY 1, 2, 3),
+           $dftFrameSql),
          e AS (
            SELECT media_id, CAST(k AS BIGINT) AS bin,
              CAST(COUNT(*) AS BIGINT) AS n_frames,
@@ -800,15 +778,8 @@ object SparkEntry {
     * planted by the same doc_id % 15 == 10 union.
     */
   private def audioFingerprintOracleSql: String = {
-    val cosVals = Multimodal.DftCos64.zipWithIndex
-      .map { case (c, n) => s"($n, $c)" }.mkString(", ")
-    val sinVals = Multimodal.DftSin64.zipWithIndex
-      .map { case (c, n) => s"($n, $c)" }.mkString(", ")
-    val bins = (1 to Multimodal.FpBins).map(k => s"($k)").mkString(", ")
     val off = Multimodal.FpTwinOffset
-    s"""WITH costab(n, c) AS (VALUES $cosVals),
-         sintab(n, sv) AS (VALUES $sinVals),
-         bins(k) AS (VALUES $bins),
+    s"""WITH ${dftCtes(1 to Multimodal.FpBins)},
          docs2 AS (
            SELECT doc_id, text FROM documents
            UNION ALL
@@ -825,21 +796,10 @@ object SparkEntry {
              CAST(CASE WHEN v >= 32768 THEN v - 65536 ELSE v END
                AS BIGINT) AS v
            FROM (
-             SELECT media_id, CAST(s AS BIGINT) AS s,
-               ('0x' || substr(hx, CAST(4*s AS INT) + 1, 2))::INT +
-                 256 * ('0x' || substr(hx, CAST(4*s AS INT) + 3, 2))::INT
-                 AS v
-             FROM wav, UNNEST(range(ns)) t(s))
+             ${pcmDecodeSql("media_id")})
            WHERE s // 32 < 4),
          fr AS MATERIALIZED (
-           SELECT media_id, f, k,
-             CAST(SUM(v * ct.c) AS BIGINT) AS re,
-             CAST(SUM(v * st.sv) AS BIGINT) AS im
-           FROM samples
-             CROSS JOIN bins
-             JOIN costab ct ON ct.n = (k * samples.n) % 64
-             JOIN sintab st ON st.n = (k * samples.n) % 64
-           GROUP BY 1, 2, 3),
+           $dftFrameSql),
          e AS MATERIALIZED (
            SELECT media_id, f, k,
              (re // 32768) * (re // 32768) +
@@ -882,35 +842,492 @@ object SparkEntry {
   /** Normalized-text SQL twin of TextAnalysis.normalizedText. */
   private val normText = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
 
-  /** Generated DuckDB twin of Experiment.passAtK (q325): the same
-    * user-grain (n, c) census over events, then per k the IDENTICAL
-    * fixed factor chain 1 − Π_{i=0..k−1} (n−c−i)/(n−i) — each factor
-    * the same CASE-guarded double ratio, multiplied left-to-right in
-    * the same literal order, floored once to ppm. Exact-integer
-    * inputs + identical expression tree ⇒ bit-equal doubles in both
-    * engines (the q325 identical-tree device).
+  // Shared oracle fragments: CTE lists written WITHOUT the leading
+  // WITH, so each caller keeps its own WITH / WITH RECURSIVE keyword
+  // and appends its own tail. Declared as defs / lazy vals: a plain val
+  // above normText would interpolate null.
+
+  /** The exhaustive near-dup shingle prefix (Dedup's shingle stage):
+    * normText words over `from`, distinct 5-word shingles, per-doc
+    * shingle counts, and shared-shingle counts per doc pair ordered by
+    * `a.doc_id <order> b.doc_id`.
     */
-  /** Generated DuckDB twin of TextAnalysis.bm25RetrievalEval (q334):
-    * the q313 split + gram-overlap truth, q114's BM25 float tree
-    * verbatim per term (floored to micro BEFORE the per-(q,d) sum, so
-    * the score is an order-free integer), topK rank, per-k arms.
+  private def shingleCtes(from: String = "documents", order: String = "<"): String =
+    s"""words AS (
+           SELECT doc_id, string_split($normText, ' ') AS w FROM $from),
+         sh AS (
+           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
+           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
+           WHERE len(w) >= 5),
+         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
+         common AS (
+           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
+           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id $order b.doc_id
+           GROUP BY 1, 2)"""
+
+  /** Exact Jaccard of a `common` row against its two `sizes` rows. */
+  private val jaccardSql =
+    """CAST(n_common AS DOUBLE) /
+             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE)"""
+
+  /** The `common` pairs at Jaccard >= `floor`, projected to `cols`. */
+  private def jaccardPairs(cols: String, floor: String = "0.5"): String =
+    s"""SELECT $cols FROM common
+           JOIN sizes sa ON sa.doc_id = id_a
+           JOIN sizes sb ON sb.doc_id = id_b
+           WHERE $jaccardSql >= $floor"""
+
+  /** The near-dup components after shingleCtes (Dedup.connectedComponents'
+    * twin): pairs at Jaccard >= 0.5 as CTE `pairs`, undirected edges, the
+    * recursive transitive closure (the caller writes WITH RECURSIVE), and
+    * the min-label component of every doc in some pair.
     */
-  private def bm25RetrievalOracleSql(
-      ks: Seq[Int], minShared: Long, topK: Int): String = {
-    val arms = ks.map { k =>
-      s"""SELECT CAST($k AS BIGINT) AS k,
-           CAST(COUNT(*) AS BIGINT) AS n_queries,
-           CAST(SUM(CASE WHEN rk <= $k THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_hits,
-           CASE WHEN COUNT(*) > 0 THEN
-             CAST(SUM(CASE WHEN rk <= $k THEN 1 ELSE 0 END)
-               * 1000000 // COUNT(*) AS BIGINT) END AS recall_ppm,
-           CASE WHEN COUNT(*) > 0 THEN
-             CAST(SUM(CASE WHEN rk <= $k THEN 1000000 // rk ELSE 0 END)
-               // COUNT(*) AS BIGINT) END AS mrr_ppm
-         FROM relrank"""
-    }.mkString("\n         UNION ALL\n         ")
-    s"""WITH docs AS (
+  private def componentCtes(pairs: String = "pairs"): String =
+    s"""$pairs AS (
+           ${jaccardPairs("id_a, id_b")}),
+         edges AS (
+           SELECT id_a AS src, id_b AS dst FROM $pairs
+           UNION SELECT id_b, id_a FROM $pairs),
+         reach(id, r) AS (
+           SELECT src, src FROM edges
+           UNION
+           SELECT e.src, re.r FROM edges e JOIN reach re ON e.dst = re.id),
+         comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY 1)"""
+
+  /** Every document keyed by its component (singletons by their own id). */
+  private def keyedCte(extra: String = ""): String =
+    s"""keyed AS (
+           SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS comp$extra
+           FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)"""
+
+  /** q25/q76's survivor prefix, the twin of CleanPipeline.gatedSurvivors:
+    * q40's language, whitespace tokens, q20's exact-dedup keepers and
+    * the near-dup drop-b set of shingleCtes' pairs at Jaccard >= 0.5.
+    */
+  private lazy val survivorCtes: String =
+    s"""lang AS ($langIdOracle),
+         toks AS (
+           SELECT doc_id, CAST(CASE WHEN length(trim(text)) = 0 THEN 0
+             ELSE len(regexp_extract_all(trim(text), '\\S+')) END AS BIGINT) AS n_ws_tokens
+           FROM documents),
+         exact_keep AS (
+           SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY MD5($normText)),
+         ${shingleCtes()},
+         near_drop AS (
+           ${jaccardPairs("DISTINCT id_b")})"""
+
+  /** q305's first-fit-decreasing replay: per-doc token items (ntok + 1)
+    * in (ntok desc, doc_id asc) order, 256-item chunks, and the
+    * recursive `step` CTE carrying each chunk's window fills list and
+    * assignments (the caller writes WITH RECURSIVE). Shared by q305,
+    * q335 and q383.
+    */
+  private val ffdStepCtes: String =
+    """toks AS (
+           SELECT doc_id,
+             CAST(len(regexp_extract_all(text,
+               '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS ntok
+           FROM documents),
+         items AS (
+           SELECT doc_id, ntok, ntok + 1 AS item,
+             CAST(ROW_NUMBER() OVER (ORDER BY ntok DESC, doc_id ASC)
+               AS BIGINT) AS rk
+           FROM toks),
+         ch AS (
+           SELECT doc_id, ntok, item, (rk - 1) // 256 AS chunk,
+             CAST(ROW_NUMBER() OVER (PARTITION BY (rk - 1) // 256
+               ORDER BY rk ASC) AS BIGINT) AS pos
+           FROM items),
+         step AS (
+           SELECT chunk, CAST(0 AS BIGINT) AS pos,
+             CAST([] AS BIGINT[]) AS fills,
+             CAST([] AS STRUCT(doc_id BIGINT, win BIGINT, ntok BIGINT,
+               item BIGINT)[]) AS asg
+           FROM (SELECT DISTINCT chunk FROM ch) c
+           UNION ALL
+           SELECT s.chunk, s.pos + 1,
+             CASE WHEN p.p = 0 THEN list_append(s.fills, d.item)
+               ELSE list_concat(list_concat(
+                 list_slice(s.fills, 1, p.p - 1),
+                 [s.fills[p.p] + d.item]),
+                 list_slice(s.fills, p.p + 1, len(s.fills))) END,
+             list_append(s.asg, CASE WHEN p.p = 0
+               THEN {'doc_id': d.doc_id,
+                     'win': CAST(len(s.fills) + 1 AS BIGINT),
+                     'ntok': d.ntok, 'item': d.item}
+               ELSE {'doc_id': d.doc_id, 'win': p.p,
+                     'ntok': d.ntok, 'item': d.item} END)
+           FROM step s
+           JOIN ch d ON d.chunk = s.chunk AND d.pos = s.pos + 1,
+           LATERAL (SELECT CAST(COALESCE(list_position(
+              list_transform(s.fills, f -> f + d.item <= 4096), true), 0)
+              AS BIGINT) AS p) p)"""
+
+  /** The final `step` row per chunk, global window offsets, and the
+    * exploded (doc_id, win, ntok, item) assignments — q305's and q335's
+    * window tail over ffdStepCtes.
+    */
+  private val ffdAssignCtes: String =
+    """fin AS (
+           SELECT s.chunk, s.fills, s.asg FROM step s
+           JOIN (SELECT chunk, MAX(pos) AS mp FROM step GROUP BY 1) m
+             ON m.chunk = s.chunk AND m.mp = s.pos),
+         offs AS (
+           SELECT a.chunk, CAST(COALESCE(SUM(len(b.fills)), 0) AS BIGINT)
+             AS woff
+           FROM fin a LEFT JOIN fin b ON b.chunk < a.chunk
+           GROUP BY 1),
+         asg AS (
+           SELECT f.chunk, o.woff, UNNEST(f.asg, recursive := true)
+           FROM fin f JOIN offs o ON o.chunk = f.chunk)"""
+
+  /** Normalized vectors with their label (the bitext / hard-negative
+    * side), materialized: every q168/q169/q322/q323 join reads it.
+    */
+  private lazy val labeledVectorsCte: String =
+    s"""un AS MATERIALIZED (
+           SELECT u.vec_id, u.v, e.label
+           FROM ($normalizedVectors) u
+           JOIN embeddings e ON e.vec_id = u.vec_id)"""
+
+  /** The argmax IVF cell of every vector over a (vec_id, c_id, sim)
+    * CTE `sims`, ties to the lowest centroid id (q32's rule).
+    */
+  private def assignedCte(sims: String): String =
+    s"""assigned AS (
+           SELECT vec_id, c_id FROM (
+             SELECT vec_id, c_id,
+               ROW_NUMBER() OVER (PARTITION BY vec_id
+                 ORDER BY sim DESC, c_id ASC) AS rn
+             FROM $sims) WHERE rn = 1)"""
+
+  /** q168's margin mining over a (s_id, t_id, sim_micro) CTE `sims`:
+    * top-4 sums per side, one final division, forward-best rank at
+    * margin >= 105 — shared by the ANN-composed q323.
+    */
+  private val bitextMarginSql: String =
+    """tops AS (
+           SELECT s_id, CAST(SUM(sim_micro) AS BIGINT) AS sk FROM (
+             SELECT s_id, sim_micro, ROW_NUMBER() OVER (PARTITION BY s_id
+               ORDER BY sim_micro DESC, t_id ASC) AS rn FROM sims)
+           WHERE rn <= 4 GROUP BY 1),
+         topt AS (
+           SELECT t_id, CAST(SUM(sim_micro) AS BIGINT) AS tk FROM (
+             SELECT t_id, sim_micro, ROW_NUMBER() OVER (PARTITION BY t_id
+               ORDER BY sim_micro DESC, s_id ASC) AS rn FROM sims)
+           WHERE rn <= 4 GROUP BY 1),
+         sc AS (
+           SELECT s.s_id, s.t_id, s.sim_micro,
+             CAST(floor(CAST(800 * s.sim_micro AS DOUBLE) /
+               CAST(a.sk + b.tk AS DOUBLE)) AS BIGINT) AS margin_pct
+           FROM sims s JOIN tops a USING (s_id) JOIN topt b USING (t_id)
+           WHERE a.sk + b.tk > 0)
+         SELECT s_id, t_id, sim_micro, margin_pct FROM (
+           SELECT *, ROW_NUMBER() OVER (PARTITION BY s_id
+             ORDER BY margin_pct DESC, sim_micro DESC, t_id ASC) AS rn
+           FROM sc)
+         WHERE rn = 1 AND margin_pct >= 105"""
+
+  /** q32's IVF serve over a (vec_id, c_id, sim) CTE `sims` of every
+    * vector against the centroids: argmax cell assignment, the 4
+    * nearest cells probed for the first 5 queries, exact cosine top-10
+    * (the tail also of the trained-codebook replay, q163).
+    */
+  private def ivfServeSql(sims: String): String =
+    s"""${assignedCte(sims)},
+         qids AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 5),
+         qprobes AS (
+           SELECT vec_id AS q_id, c_id FROM (
+             SELECT vec_id, c_id,
+               ROW_NUMBER() OVER (PARTITION BY vec_id
+                 ORDER BY sim DESC, c_id ASC) AS rn
+             FROM $sims WHERE vec_id IN (SELECT vec_id FROM qids))
+           WHERE rn <= 4),
+         cand AS (
+           SELECT q_id, a.vec_id FROM qprobes p
+           JOIN assigned a ON a.c_id = p.c_id
+           WHERE a.vec_id != p.q_id),
+         $cosineTop10Sql"""
+
+  /** q153's product-quantization prefix: 8 subspaces of 8 dims, the
+    * first 16 vectors as per-subspace centroids, L2² floored to pico
+    * units, argmin codes, and the integer ADC of every vector against
+    * the first 5 queries. Shared by q153 (re-ranked) and the q156
+    * persisted serve.
+    */
+  private lazy val pqAdcCtes: String =
+    s"""u AS ($normalizedVectors),
+         subs AS (
+           SELECT vec_id, s, v[s*8+1 : s*8+8] AS sub
+           FROM u, LATERAL (SELECT UNNEST(range(0, 8)) AS s) t),
+         cents AS (
+           SELECT vec_id AS c_id, s, sub AS cv FROM subs
+           WHERE vec_id < 16),
+         cdist AS (
+           SELECT subs.vec_id, subs.s, c_id,
+             CAST(floor(1e12 * list_sum(list_transform(
+               list_zip(sub, cv),
+               p -> (p[1] - p[2]) * (p[1] - p[2])))) AS BIGINT) AS d
+           FROM subs JOIN cents ON cents.s = subs.s),
+         codes AS (
+           SELECT vec_id, s, c_id AS code FROM (
+             SELECT vec_id, s, c_id,
+               ROW_NUMBER() OVER (PARTITION BY vec_id, s
+                 ORDER BY d ASC, c_id ASC) AS rn
+             FROM cdist) WHERE rn = 1),
+         qids AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 5),
+         qdist AS (
+           SELECT vec_id AS q_id, s, c_id, d FROM cdist
+           WHERE vec_id IN (SELECT vec_id FROM qids)),
+         adc AS (
+           SELECT q.q_id, c.vec_id,
+             CAST(SUM(q.d) AS BIGINT) AS adc_pico
+           FROM codes c JOIN qdist q
+             ON q.s = c.s AND q.c_id = c.code
+           WHERE c.vec_id <> q.q_id
+           GROUP BY 1, 2)"""
+
+  /** Exact cosine of every (q_id, vec_id) in CTE `cand` over the
+    * normalized vectors `u`, top 10 per query by (cosine desc, vec_id).
+    */
+  private val cosineTop10Sql: String =
+    """scored AS (
+           SELECT cand.q_id, cand.vec_id,
+             list_sum(list_transform(list_zip(uq.v, uc.v), p -> p[1] * p[2])) AS cosine
+           FROM cand
+           JOIN u uq ON uq.vec_id = cand.q_id
+           JOIN u uc ON uc.vec_id = cand.vec_id)
+         SELECT q_id, vec_id, cosine, CAST(rk AS INTEGER) AS rk FROM (
+           SELECT q_id, vec_id, cosine,
+             ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id ASC) AS rk
+           FROM scored)
+         WHERE rk <= 10"""
+
+  /** The distinct 5-word shingle space as CTE `sh` (column `sh`) over
+    * normText words — the q189/q332 input and q341/q350's dup-span
+    * census.
+    */
+  private lazy val spanShingleCtes: String =
+    s"""words AS (
+           SELECT doc_id, string_split($normText, ' ') AS w
+           FROM documents),
+         sh AS (
+           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS sh
+           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
+           WHERE len(w) >= 5)"""
+
+  /** q332's banding replay over `sh`: one md5 per shingle, h1 + i*h2
+    * minima in 64 slots, md5 keys of 16 bands of 4, and the candidate
+    * pairs sharing a band key — shared by q397.
+    */
+  private val bandCandCtes: String =
+    """h AS (
+           SELECT doc_id,
+             ('0x' || substr(md5(sh), 1, 15))::BIGINT AS h1,
+             ('0x' || substr(md5(sh), 17, 14))::BIGINT AS h2
+           FROM sh),
+         slots AS MATERIALIZED (
+           SELECT doc_id, i, MIN(h1 + i * h2) AS v
+           FROM h, LATERAL (SELECT UNNEST(range(0, 64)) AS i) g
+           GROUP BY 1, 2),
+         bands AS (
+           SELECT doc_id, i // 4 AS band,
+             md5(string_agg(CAST(v AS VARCHAR), ':' ORDER BY i)) AS bh
+           FROM slots GROUP BY doc_id, i // 4),
+         cand AS MATERIALIZED (
+           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+           FROM bands a JOIN bands b
+             ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id)"""
+
+  /** q336's water-fill over CTE `caps` (source, lang, avail_tokens,
+    * cap_tokens): budget twice the `cells` supply, saturated prefix of
+    * the cap-ascending order, the rest split level — the whole tail
+    * SELECT, `extra` appended to its columns. Shared by q359.
+    */
+  private def waterfillSql(cells: String, extra: String = ""): String =
+    s"""tot AS (
+           SELECT CAST(2 * SUM(avail_tokens) AS BIGINT) AS b,
+                  CAST(COUNT(*) AS BIGINT) AS m FROM $cells),
+         ranked AS (
+           SELECT c.*, t.b, t.m,
+             CAST(ROW_NUMBER() OVER (ORDER BY cap_tokens ASC,
+               source ASC, lang ASC) AS BIGINT) AS rk,
+             CAST(SUM(cap_tokens) OVER (ORDER BY cap_tokens ASC,
+               source ASC, lang ASC) AS BIGINT) AS pref
+           FROM caps c, tot t),
+         lvl AS (
+           SELECT
+             COALESCE(CAST(SUM(CASE WHEN pref - cap_tokens
+               + cap_tokens * (m - rk + 1) <= b THEN 1 ELSE 0 END)
+               AS BIGINT), 0) AS k,
+             COALESCE(CAST(SUM(CASE WHEN pref - cap_tokens
+               + cap_tokens * (m - rk + 1) <= b THEN cap_tokens
+               ELSE 0 END) AS BIGINT), 0) AS prefk,
+             MAX(b) AS b2, MAX(m) AS m2
+           FROM ranked)
+         SELECT r.source, r.lang, r.avail_tokens, r.cap_tokens,
+           CAST(CASE WHEN r.rk <= l.k THEN r.cap_tokens
+             ELSE (l.b2 - l.prefk) // (l.m2 - l.k)
+               + CASE WHEN r.rk - l.k <= (l.b2 - l.prefk) % (l.m2 - l.k)
+                 THEN 1 ELSE 0 END END AS BIGINT) AS alloc_tokens,
+           r.rk <= l.k AS saturated,
+           CAST(CASE WHEN r.rk <= l.k THEN r.cap_tokens
+             ELSE (l.b2 - l.prefk) // (l.m2 - l.k)
+               + CASE WHEN r.rk - l.k <= (l.b2 - l.prefk) % (l.m2 - l.k)
+                 THEN 1 ELSE 0 END END * 1000000 // r.avail_tokens
+             AS BIGINT) AS epochs_ppm$extra
+         FROM ranked r, lvl l"""
+
+  /** q239's content-defined chunking: the q100 boilerplate-injected
+    * corpus `p0`, md5 window-hash boundaries, and per-doc (s, e]
+    * spans between consecutive boundaries — shared by q248.
+    */
+  private lazy val cdcSpanCtes: String =
+    s"""p0 AS (
+           SELECT doc_id, source,
+             CASE WHEN doc_id % 3 = 0
+               THEN '${Dedup.boilerplateHeader} ' ELSE '' END || text ||
+             CASE WHEN doc_id % 5 = 0
+               THEN ' ${Dedup.boilerplateFooter}' ELSE '' END AS text
+           FROM documents WHERE length(text) >= 1),
+         bnd AS (
+           SELECT doc_id, CAST(p AS BIGINT) AS p
+           FROM p0, UNNEST(range(${Dedup.CdcWindow},
+             length(text) + 1)) t(p)
+           WHERE ('0x' || substr(md5(substr(text,
+               CAST(p - ${Dedup.CdcWindow - 1} AS INT),
+               ${Dedup.CdcWindow})), 1, 4))::BIGINT
+             % ${Dedup.CdcBoundaryRate} = 0),
+         ends AS (
+           SELECT doc_id, p FROM bnd
+           UNION
+           SELECT doc_id, CAST(length(text) AS BIGINT) AS p FROM p0),
+         spans AS (
+           SELECT doc_id,
+             COALESCE(LAG(p) OVER (PARTITION BY doc_id ORDER BY p), 0)
+               AS s, p AS e
+           FROM ends)"""
+
+  /** q112's conversion chain: per user the first view (t1), the first
+    * click within 48 h after it (t2) and the first purchase within
+    * 48 h after that (t3) — shared by q379.
+    */
+  private val funnelCtes: String =
+    """l1 AS (
+           SELECT user_id,
+             MIN(CASE WHEN event_type = 'view' THEN ts END) AS t1
+           FROM events GROUP BY user_id),
+         l2 AS (
+           SELECT e.user_id,
+             MIN(CASE WHEN e.event_type = 'click' AND e.ts > l1.t1
+                  AND e.ts <= l1.t1 + INTERVAL 48 HOURS
+                  THEN e.ts END) AS t2
+           FROM events e JOIN l1 USING (user_id)
+           GROUP BY e.user_id, l1.t1),
+         l3 AS (
+           SELECT e.user_id,
+             MIN(CASE WHEN e.event_type = 'purchase' AND e.ts > l2.t2
+                  AND e.ts <= l2.t2 + INTERVAL 48 HOURS
+                  THEN e.ts END) AS t3
+           FROM events e JOIN l2 USING (user_id)
+           GROUP BY e.user_id, l2.t2)"""
+
+  /** q33's gap sessionization: a new session when the gap to the
+    * user's previous event is STRICTLY over 30 min (event_id breaks
+    * ts ties), numbered by a running sum as column `idx`. Shared by
+    * the q107 and q73 session oracles.
+    */
+  private def sessionCtes(idx: String = "session_idx"): String =
+    s"""flagged AS (
+           SELECT user_id, event_id, ts, value,
+             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+                    OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
+                  THEN 1 ELSE 0 END AS new_sess
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
+         numbered AS (
+           SELECT user_id, ts, value,
+             SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS $idx
+           FROM flagged)"""
+
+  /** q174's WAV device: documents with doc_id % 3 == 1 and at least
+    * `minBytes` UTF-8 bytes, hex-rendered, ns = byte pairs.
+    */
+  private def wavCte(minBytes: Int): String =
+    s"""wav AS MATERIALIZED (
+           SELECT doc_id AS media_id, hex(encode(text)) AS hx,
+             octet_length(encode(text)) // 2 AS ns
+           FROM documents
+           WHERE doc_id % 3 = 1 AND octet_length(encode(text)) >= $minBytes)"""
+
+  /** Every sample s of `wav` as the little-endian byte pair at hex
+    * offset 4s (unsigned; callers sign it), with columns `cols` first.
+    */
+  private def pcmDecodeSql(cols: String = "media_id, ns"): String =
+    s"""SELECT $cols, CAST(s AS BIGINT) AS s,
+               ('0x' || substr(hx, CAST(4*s AS INT) + 1, 2))::INT +
+                 256 * ('0x' || substr(hx, CAST(4*s AS INT) + 3, 2))::INT
+                 AS v
+             FROM wav, UNNEST(range(ns)) t(s)"""
+
+  /** q174's decode into 16 windows per clip with the absolute
+    * amplitude — shared by q255.
+    */
+  private lazy val pcmWindowCtes: String =
+    s"""${wavCte(2)},
+         samples AS (
+           SELECT media_id, CAST(s * 16 // ns AS INT) AS win,
+             abs(CASE WHEN v >= 32768 THEN v - 65536 ELSE v END) AS a
+           FROM (
+             ${pcmDecodeSql()}))"""
+
+  /** The 64-point 2^15 fixed-point twiddle tables interpolated
+    * VERBATIM from Multimodal.DftCos64/DftSin64, and the DFT bins `ks`.
+    */
+  private def dftCtes(ks: Seq[Int]): String = {
+    def values(xs: Seq[Long]) =
+      xs.zipWithIndex.map { case (c, n) => s"($n, $c)" }.mkString(", ")
+    s"""costab(n, c) AS (VALUES ${values(Multimodal.DftCos64)}),
+         sintab(n, sv) AS (VALUES ${values(Multimodal.DftSin64)}),
+         bins(k) AS (VALUES ${ks.map(k => s"($k)").mkString(", ")})"""
+  }
+
+  /** Per (media_id, frame f, bin k) integer DFT re/im of CTE `samples`
+    * (media_id, f, n, v) over dftCtes.
+    */
+  private val dftFrameSql: String =
+    """SELECT media_id, f, k,
+             CAST(SUM(v * ct.c) AS BIGINT) AS re,
+             CAST(SUM(v * st.sv) AS BIGINT) AS im
+           FROM samples
+             CROSS JOIN bins
+             JOIN costab ct ON ct.n = (k * samples.n) % 64
+             JOIN sintab st ON st.n = (k * samples.n) % 64
+           GROUP BY 1, 2, 3"""
+
+  /** The customer-nation → supplier-nation shipment multigraph as
+    * (a, b, w) rows, self-loops dropped unless `crossOnly` is false —
+    * the q124/q126/q199/q290 graph input.
+    */
+  private def nationEdgesSql(
+      a: String, b: String, crossOnly: Boolean = true): String =
+    s"""SELECT c.c_nationkey AS $a, s.s_nationkey AS $b,
+             CAST(COUNT(*) AS BIGINT) AS w
+           FROM orders o
+           JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+           JOIN customer c ON c.c_custkey = o.o_custkey
+           JOIN supplier s ON s.s_suppkey = l.l_suppkey
+           ${if (crossOnly) "WHERE c.c_nationkey <> s.s_nationkey" else ""}
+           GROUP BY 1, 2"""
+
+  /** q313's split-twin truth: normText words of docs with >= 5 words,
+    * md5 80/20 train/eval split, distinct 5-gram digests, and each eval
+    * doc's best train doc sharing >= `minShared` grams (CTE `truth`).
+    * Shared by q334 and q345.
+    */
+  private def splitTwinCtes(minShared: Long): String =
+    s"""docs AS (
            SELECT doc_id, string_split($normText, ' ') AS w,
              CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
                % 10 < 8 THEN 'train' ELSE 'eval' END AS split
@@ -930,7 +1347,152 @@ object SparkEntry {
            SELECT q_id, td AS rel FROM (
              SELECT q_id, td, shared, ROW_NUMBER() OVER (PARTITION BY q_id
                ORDER BY shared DESC, td ASC) AS rn FROM ov)
-           WHERE rn = 1 AND shared >= $minShared),
+           WHERE rn = 1 AND shared >= $minShared)"""
+
+  /** q126's nation edges folded to undirected (u < v) weights, with
+    * the total weight `tw` and edge count `ne` its heavy-edge filter
+    * (w * ne * 10 >= tw * 12) reads. Shared by the q290 k-core replay.
+    */
+  private def heavyEdgeCtes(materialized: Boolean): String = {
+    val m = if (materialized) " MATERIALIZED" else ""
+    s"""e0 AS$m (
+           ${nationEdgesSql("a", "b")}),
+         ed0 AS (SELECT LEAST(a, b) AS u, GREATEST(a, b) AS v,
+                   CAST(SUM(w) AS BIGINT) AS w
+                 FROM e0 GROUP BY 1, 2),
+         tot AS (SELECT CAST(SUM(w) AS BIGINT) AS tw,
+                   CAST(COUNT(*) AS BIGINT) AS ne FROM ed0)"""
+  }
+
+  /** q337's logged-policy census: cents per event, per (user, action)
+    * counts and reward sums, per-user counts and the total n. Shared
+    * by q343.
+    */
+  private val policyLogCtes: String =
+    """ev AS (
+           SELECT user_id, event_type,
+             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
+           FROM events),
+         ua AS (
+           SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n_ua,
+             CAST(SUM(cents) AS BIGINT) AS r_ua
+           FROM ev GROUP BY 1, 2),
+         u AS (SELECT user_id, CAST(SUM(n_ua) AS BIGINT) AS n_u
+           FROM ua GROUP BY 1),
+         n AS (SELECT CAST(SUM(n_u) AS BIGINT) AS n FROM u)"""
+
+  /** The scored docs `sc` grouped by score (count c, positives p) with
+    * the count strictly below each score (cum) — the doubled mid-rank
+    * input of rocAucOracle and q276.
+    */
+  private val scoreRankCtes: String =
+    """bysc AS (
+           SELECT score, CAST(COUNT(*) AS BIGINT) AS c,
+             CAST(SUM(CASE WHEN is_en THEN 1 ELSE 0 END) AS BIGINT) AS p
+           FROM sc GROUP BY 1),
+         rk AS (
+           SELECT score, c, p,
+             CAST(COALESCE(SUM(c) OVER (ORDER BY score ASC ROWS BETWEEN
+               UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
+           FROM bysc)"""
+
+  /** Per-doc character counts of the normText of `from`'s docs. */
+  private def charCountCtes(from: String): String =
+    s"""nt AS (
+           SELECT doc_id, $normText AS nt FROM $from),
+         cc AS (
+           SELECT doc_id, ch, COUNT(*) AS c FROM (
+             SELECT doc_id, substr(nt, CAST(i AS INT), 1) AS ch
+             FROM nt, LATERAL (
+               SELECT UNNEST(range(1, length(nt) + 1)) AS i) u
+             WHERE length(nt) >= 1) x
+           GROUP BY 1, 2)"""
+
+  /** Distinct (user, day, event type) units and the unit count — the
+    * q133/q150 basket input.
+    */
+  private val userDayCtes: String =
+    """ud AS (
+           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day, event_type
+           FROM events),
+         tot AS (
+           SELECT COUNT(*) AS n_units
+           FROM (SELECT DISTINCT user_id, day FROM ud))"""
+
+  /** q268's three synthetic raters per doc: rater r keeps the true lang
+    * unless an md5 draw (< r in 10) moves it to the cyclic next; with
+    * `skipRater3`, q368's md5-decided 20% of rater 3's labels are left
+    * out.
+    */
+  private def ratedCte(skipRater3: Boolean = false): String = {
+    val skip = if (!skipRater3) "" else """
+           WHERE NOT (r.r = 3 AND ('0x' || substr(md5('skip:' ||
+             CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 10 < 2)"""
+    s"""rated AS (
+           SELECT d.doc_id,
+             CASE WHEN ('0x' || substr(md5('rate:' ||
+                 CAST(d.doc_id AS VARCHAR) || ':' ||
+                 CAST(r.r AS VARCHAR)), 1, 15))::BIGINT % 10 < r.r
+               THEN CASE d.lang WHEN 'de' THEN 'en' WHEN 'en' THEN 'es'
+                 WHEN 'es' THEN 'fr' WHEN 'fr' THEN 'zh' ELSE 'de' END
+               ELSE d.lang END AS label
+           FROM documents d, (SELECT UNNEST([1,2,3]) AS r) r$skip)"""
+  }
+
+  /** Per (user, day, event type) spend in exact cents — the q269
+    * contest input, shared by the Bradley-Terry replay (q270).
+    */
+  private val spendCentsCte: String =
+    """cents AS (
+           SELECT user_id, CAST(ts AS DATE) AS d, event_type,
+             CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT))
+               AS BIGINT) AS cents
+           FROM events GROUP BY 1, 2, 3)"""
+
+  /** normText words of every doc with at least one word, and n — the
+    * q306/q377 chunking input.
+    */
+  private lazy val wordDocsCtes: String =
+    s"""words AS (
+           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
+         d AS (
+           SELECT doc_id, w, CAST(len(w) AS BIGINT) AS n FROM words
+           WHERE len(w) > 0 AND w[1] <> '')"""
+
+  /** Normalized vectors `u`, the first 16 as IVF centroids, and every
+    * (vector, centroid) cosine — q32's seeded codebook, shared by
+    * q158 and q302.
+    */
+  private lazy val centroidSimsCtes: String =
+    s"""u AS ($normalizedVectors),
+         cents AS (SELECT vec_id AS c_id, v AS cv FROM u WHERE vec_id < 16),
+         sims AS (
+           SELECT u.vec_id, c_id,
+             list_sum(list_transform(list_zip(u.v, cv), p -> p[1] * p[2])) AS sim
+           FROM u CROSS JOIN cents)"""
+
+  /** Generated DuckDB twin of TextAnalysis.bm25RetrievalEval (q334):
+    * splitTwinCtes (the q313 split + gram-overlap truth), q114's BM25
+    * float tree verbatim per term (floored to micro BEFORE the
+    * per-(q,d) sum, so the score is an order-free integer), topK
+    * rank, per-k arms.
+    */
+  private def bm25RetrievalOracleSql(
+      ks: Seq[Int], minShared: Long, topK: Int): String = {
+    val arms = ks.map { k =>
+      s"""SELECT CAST($k AS BIGINT) AS k,
+           CAST(COUNT(*) AS BIGINT) AS n_queries,
+           CAST(SUM(CASE WHEN rk <= $k THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_hits,
+           CASE WHEN COUNT(*) > 0 THEN
+             CAST(SUM(CASE WHEN rk <= $k THEN 1 ELSE 0 END)
+               * 1000000 // COUNT(*) AS BIGINT) END AS recall_ppm,
+           CASE WHEN COUNT(*) > 0 THEN
+             CAST(SUM(CASE WHEN rk <= $k THEN 1000000 // rk ELSE 0 END)
+               // COUNT(*) AS BIGINT) END AS mrr_ppm
+         FROM relrank"""
+    }.mkString("\n         UNION ALL\n         ")
+    s"""WITH ${splitTwinCtes(minShared)},
          train AS (SELECT doc_id, w, CAST(len(w) AS BIGINT) AS dl
            FROM docs WHERE split = 'train'),
          stats AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM train),
@@ -1039,10 +1601,7 @@ object SparkEntry {
            SELECT un.vec_id, c_id,
              list_sum(list_transform(list_zip(un.v, cv), z -> z[1]*z[2])) AS sim
            FROM un CROSS JOIN cents),
-         assigned AS (
-           SELECT vec_id, c_id FROM (
-             SELECT vec_id, c_id, ROW_NUMBER() OVER (PARTITION BY vec_id
-               ORDER BY sim DESC, c_id ASC) AS rn FROM csims) WHERE rn = 1),
+         ${assignedCte("csims")},
          qprobes AS (
            SELECT vec_id AS q_id, c_id FROM (
              SELECT vec_id, c_id, ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -1070,6 +1629,14 @@ object SparkEntry {
          FROM arms"""
   }
 
+  /** Generated DuckDB twin of Experiment.passAtK (q325): the same
+    * user-grain (n, c) census over events, then per k the IDENTICAL
+    * fixed factor chain 1 − Π_{i=0..k−1} (n−c−i)/(n−i) — each factor
+    * the same CASE-guarded double ratio, multiplied left-to-right in
+    * the same literal order, floored once to ppm. Exact-integer
+    * inputs + identical expression tree ⇒ bit-equal doubles in both
+    * engines (the q325 identical-tree device).
+    */
   private def passAtKOracleSql(ks: Seq[Int], centsThreshold: Long): String = {
     val arms = ks.map { k =>
       val prod = (0 until k).map(i =>
@@ -1088,18 +1655,6 @@ object SparkEntry {
          $arms"""
   }
 
-  /** Generated DuckDB replay of TextAnalysis.ulmTrain (q284): seed
-    * substring counts over the distinct-word dictionary, then per
-    * round a CHAINED-CTE Viterbi (one b-table per word position —
-    * the bounded-unroll encoding of the DP the Spark side runs as a
-    * row-local nested `aggregate` HOF; two independent encodings of
-    * the identical recurrence) followed by the usage re-count and
-    * cost re-estimation. Tie-break = ORDER BY (cost, n, path) with
-    * rk=1, the oracle twin of the Spark struct total order. maxLen
-    * caps the unroll: a dictionary word longer than maxLen would
-    * drop from the usage count and fail the gate loudly (fixture max
-    * is 8).
-    */
   /** Generated DuckDB replay of Experiment.markovAttribution (q300):
     * journey transitions in SQL, then `rounds` value-iteration CTEs
     * over a VARIANT-AWARE edge table — all removal variants advance
@@ -1170,27 +1725,14 @@ object SparkEntry {
           JOIN p$rounds r ON r.variant = c.c AND r.state = 'S'"""
   }
 
-  /** Generated DuckDB replay of Graph.kCore (q290): the q126 edge
-    * CTEs, then `rounds` h-index iterations — each a join + rank
+  /** Generated DuckDB replay of Graph.kCore (q290): q126's
+    * heavyEdgeCtes, then `rounds` h-index iterations — each a join + rank
     * window + max(least(rank, value)) fold, the exact recurrence the
     * Spark loop runs.
     */
   private def kCoreOracleSql(rounds: Int): String = {
     val edges =
-      """e0 AS MATERIALIZED (
-           SELECT c.c_nationkey AS a, s.s_nationkey AS b,
-             CAST(COUNT(*) AS BIGINT) AS w
-           FROM orders o
-           JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-           JOIN customer c ON c.c_custkey = o.o_custkey
-           JOIN supplier s ON s.s_suppkey = l.l_suppkey
-           WHERE c.c_nationkey <> s.s_nationkey
-           GROUP BY 1, 2),
-         ed0 AS (SELECT LEAST(a, b) AS u, GREATEST(a, b) AS v,
-                   CAST(SUM(w) AS BIGINT) AS w
-                 FROM e0 GROUP BY 1, 2),
-         tot AS (SELECT CAST(SUM(w) AS BIGINT) AS tw,
-                   CAST(COUNT(*) AS BIGINT) AS ne FROM ed0),
+      s"""${heavyEdgeCtes(materialized = true)},
          ed AS MATERIALIZED (
            SELECT u, v FROM ed0, tot WHERE w * ne * 10 >= tw * 12),
          adj AS MATERIALIZED (
@@ -1308,6 +1850,18 @@ object SparkEntry {
     Seq(wd, sub, v0) ++ perRound
   }
 
+  /** Generated DuckDB replay of TextAnalysis.ulmTrain (q284): seed
+    * substring counts over the distinct-word dictionary, then per
+    * round a CHAINED-CTE Viterbi (one b-table per word position —
+    * the bounded-unroll encoding of the DP the Spark side runs as a
+    * row-local nested `aggregate` HOF; two independent encodings of
+    * the identical recurrence) followed by the usage re-count and
+    * cost re-estimation. Tie-break = ORDER BY (cost, n, path) with
+    * rk=1, the oracle twin of the Spark struct total order. maxLen
+    * caps the unroll: a dictionary word longer than maxLen would
+    * drop from the usage count and fail the gate loudly (fixture max
+    * is 8).
+    */
   private def ulmTrainOracleSql(
       rounds: Int, multiK: Int, maxPiece: Int, maxLen: Int): String =
     ulmCtes(rounds, multiK, maxPiece, maxLen)
@@ -1340,6 +1894,38 @@ object SparkEntry {
           FROM dw JOIN enc USING (w) WHERE w <> '' GROUP BY 1"""
   }
 
+  /** One BPE argmax round over CTE `from`: the (count desc, left asc,
+    * right asc) most frequent adjacent symbol pair of its chr(1)-
+    * delimited streams, as CTE `name`.
+    */
+  private def bpeArgmaxCte(name: String, from: String): String =
+    s"""$name AS MATERIALIZED (
+         SELECT l, r, COUNT(*) AS n FROM (
+           SELECT syms[i] AS l, syms[i+1] AS r FROM
+             (SELECT string_split(trim(stream, chr(1)), chr(1)||chr(1))
+                AS syms FROM $from) t,
+             UNNEST(range(1, len(syms))) u(i))
+         GROUP BY 1, 2 ORDER BY n DESC, l ASC, r ASC LIMIT 1)"""
+
+  /** One BPE merge apply: CTE `from`'s streams with pair CTE `p`
+    * merged by the sentinel replace, as CTE `name`; `carry` is a
+    * column prefix kept alongside the stream (e.g. "doc_id, ").
+    */
+  private def bpeApplyCte(
+      name: String, from: String, p: String, carry: String = ""): String =
+    s"""$name AS MATERIALIZED (
+         SELECT ${carry}replace($from.stream,
+                        chr(1) || $p.l || chr(1) || chr(1) || $p.r || chr(1),
+                        chr(1) || $p.l || $p.r || chr(1)) AS stream
+         FROM $from, $p)"""
+
+  /** Every character of `text` wrapped in chr(1) sentinels (the q155
+    * s0 stream; a literal chr(1) in the text is dropped first).
+    */
+  private val bpeCharStream =
+    """regexp_replace(replace(text, chr(1), ''), '(?s)(.)',
+                                 chr(1) || '\1' || chr(1), 'g')"""
+
   /** Generated DuckDB replay of TextAnalysis.bpeTrain (q155): the
     * same N-round BPE loop as chained CTEs — s0 wraps every char in
     * chr(1) sentinels, then per round p_r computes the (count desc,
@@ -1353,24 +1939,12 @@ object SparkEntry {
     */
   private def bpeTrainOracleSql(rounds: Int): String = {
     val s0 =
-      """s0 AS MATERIALIZED (
-           SELECT regexp_replace(replace(text, chr(1), ''), '(?s)(.)',
-                                 chr(1) || '\1' || chr(1), 'g') AS stream
+      s"""s0 AS MATERIALIZED (
+           SELECT $bpeCharStream AS stream
            FROM documents WHERE length(text) >= 2)"""
     val perRound = (1 to rounds).flatMap { r =>
-      Seq(
-        s"""p$r AS MATERIALIZED (
-           SELECT l, r, COUNT(*) AS n FROM (
-             SELECT syms[i] AS l, syms[i+1] AS r FROM
-               (SELECT string_split(trim(stream, chr(1)), chr(1)||chr(1))
-                  AS syms FROM s${r - 1}) t,
-               UNNEST(range(1, len(syms))) u(i))
-           GROUP BY 1, 2 ORDER BY n DESC, l ASC, r ASC LIMIT 1)""",
-        s"""s$r AS MATERIALIZED (
-           SELECT replace(s${r - 1}.stream,
-                          chr(1) || p$r.l || chr(1) || chr(1) || p$r.r || chr(1),
-                          chr(1) || p$r.l || p$r.r || chr(1)) AS stream
-           FROM s${r - 1}, p$r)""")
+      Seq(bpeArgmaxCte(s"p$r", s"s${r - 1}"),
+        bpeApplyCte(s"s$r", s"s${r - 1}", s"p$r"))
     }
     val selects = (1 to rounds).map(r =>
       s"""SELECT $r AS merge_round, l AS left_sym, r AS right_sym,
@@ -1401,19 +1975,8 @@ object SparkEntry {
              SELECT unnest(string_split(trim(stream, chr(1)),
                                         chr(1)||chr(1))) AS s FROM s0))"""
     val perRound = (1 to maxRounds).flatMap { r =>
-      Seq(
-        s"""p$r AS MATERIALIZED (
-           SELECT l, r, COUNT(*) AS n FROM (
-             SELECT syms[i] AS l, syms[i+1] AS r FROM
-               (SELECT string_split(trim(stream, chr(1)), chr(1)||chr(1))
-                  AS syms FROM s${r - 1}) t,
-               UNNEST(range(1, len(syms))) u(i))
-           GROUP BY 1, 2 ORDER BY n DESC, l ASC, r ASC LIMIT 1)""",
-        s"""s$r AS MATERIALIZED (
-           SELECT replace(s${r - 1}.stream,
-                          chr(1) || p$r.l || chr(1) || chr(1) || p$r.r || chr(1),
-                          chr(1) || p$r.l || p$r.r || chr(1)) AS stream
-           FROM s${r - 1}, p$r)""")
+      Seq(bpeArgmaxCte(s"p$r", s"s${r - 1}"),
+        bpeApplyCte(s"s$r", s"s${r - 1}", s"p$r"))
     }
     val unions = (1 to maxRounds).map(r =>
       s"""SELECT $r AS merge_round, l AS left_sym, r AS right_sym,
@@ -1437,39 +2000,24 @@ object SparkEntry {
     */
   private def bpeExtendOracleSql(
       baseRounds: Int, extraRounds: Int): String = {
-    def argmax(name: String, from: String) =
-      s"""$name AS MATERIALIZED (
-         SELECT l, r, COUNT(*) AS n FROM (
-           SELECT syms[i] AS l, syms[i+1] AS r FROM
-             (SELECT string_split(trim(stream, chr(1)), chr(1)||chr(1))
-                AS syms FROM $from) t,
-             UNNEST(range(1, len(syms))) u(i))
-         GROUP BY 1, 2 ORDER BY n DESC, l ASC, r ASC LIMIT 1)"""
-    def apply(name: String, from: String, p: String) =
-      s"""$name AS MATERIALIZED (
-         SELECT replace($from.stream,
-                        chr(1) || $p.l || chr(1) || chr(1) || $p.r || chr(1),
-                        chr(1) || $p.l || $p.r || chr(1)) AS stream
-         FROM $from, $p)"""
     val ts0 =
-      """ts0 AS MATERIALIZED (
-           SELECT regexp_replace(replace(text, chr(1), ''), '(?s)(.)',
-                                 chr(1) || '\1' || chr(1), 'g') AS stream
+      s"""ts0 AS MATERIALIZED (
+           SELECT $bpeCharStream AS stream
            FROM documents WHERE doc_id % 2 = 0 AND length(text) >= 2)"""
     val train = (1 to baseRounds).flatMap { r =>
-      Seq(argmax(s"tp$r", s"ts${r - 1}"), apply(s"ts$r", s"ts${r - 1}", s"tp$r"))
+      Seq(bpeArgmaxCte(s"tp$r", s"ts${r - 1}"),
+        bpeApplyCte(s"ts$r", s"ts${r - 1}", s"tp$r"))
     }
     val fs0 =
-      """fs0 AS MATERIALIZED (
-           SELECT regexp_replace(replace(text, chr(1), ''), '(?s)(.)',
-                                 chr(1) || '\1' || chr(1), 'g') AS stream
+      s"""fs0 AS MATERIALIZED (
+           SELECT $bpeCharStream AS stream
            FROM documents WHERE length(text) >= 2)"""
     val applyChain = (1 to baseRounds).map { r =>
-      apply(s"fs$r", s"fs${r - 1}", s"tp$r")
+      bpeApplyCte(s"fs$r", s"fs${r - 1}", s"tp$r")
     }
     val ext = (1 to extraRounds).flatMap { e =>
       val prev = if (e == 1) s"fs$baseRounds" else s"es${e - 1}"
-      Seq(argmax(s"ep$e", prev), apply(s"es$e", prev, s"ep$e"))
+      Seq(bpeArgmaxCte(s"ep$e", prev), bpeApplyCte(s"es$e", prev, s"ep$e"))
     }
     val baseSel = (1 to baseRounds).map(r =>
       s"""SELECT 'base' AS phase, $r AS merge_round, l AS left_sym,
@@ -1492,24 +2040,12 @@ object SparkEntry {
     */
   private def bpeEncodeChainSql(rounds: Int): String = {
     val s0 =
-      """s0 AS MATERIALIZED (
-           SELECT doc_id, regexp_replace(replace(text, chr(1), ''), '(?s)(.)',
-                                 chr(1) || '\1' || chr(1), 'g') AS stream
+      s"""s0 AS MATERIALIZED (
+           SELECT doc_id, $bpeCharStream AS stream
            FROM documents WHERE length(text) >= 2)"""
     val perRound = (1 to rounds).flatMap { r =>
-      Seq(
-        s"""p$r AS MATERIALIZED (
-           SELECT l, r, COUNT(*) AS n FROM (
-             SELECT syms[i] AS l, syms[i+1] AS r FROM
-               (SELECT string_split(trim(stream, chr(1)), chr(1)||chr(1))
-                  AS syms FROM s${r - 1}) t,
-               UNNEST(range(1, len(syms))) u(i))
-           GROUP BY 1, 2 ORDER BY n DESC, l ASC, r ASC LIMIT 1)""",
-        s"""s$r AS MATERIALIZED (
-           SELECT doc_id, replace(s${r - 1}.stream,
-                          chr(1) || p$r.l || chr(1) || chr(1) || p$r.r || chr(1),
-                          chr(1) || p$r.l || p$r.r || chr(1)) AS stream
-           FROM s${r - 1}, p$r)""")
+      Seq(bpeArgmaxCte(s"p$r", s"s${r - 1}"),
+        bpeApplyCte(s"s$r", s"s${r - 1}", s"p$r", carry = "doc_id, "))
     }
     (Seq(s0) ++ perRound).mkString("WITH ", ",\n", "\n")
   }
@@ -1638,42 +2174,12 @@ object SparkEntry {
                FROM (SELECT c_id, list(mx ORDER BY pos) AS mean
                      FROM m$i GROUP BY 1))) nv ON nv.c_id = p.c_id)""")
     }
-    val serve = Seq(
+    val sF =
       s"""sF AS MATERIALIZED (
          SELECT u.vec_id, c_id,
            list_sum(list_transform(list_zip(u.v, cv), p -> p[1] * p[2])) AS sim
-         FROM u CROSS JOIN c$iters)""",
-      """assigned AS (
-         SELECT vec_id, c_id FROM (
-           SELECT vec_id, c_id,
-             ROW_NUMBER() OVER (PARTITION BY vec_id
-               ORDER BY sim DESC, c_id ASC) AS rn
-           FROM sF) WHERE rn = 1)""",
-      """qids AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 5)""",
-      """qprobes AS (
-         SELECT vec_id AS q_id, c_id FROM (
-           SELECT vec_id, c_id,
-             ROW_NUMBER() OVER (PARTITION BY vec_id
-               ORDER BY sim DESC, c_id ASC) AS rn
-           FROM sF WHERE vec_id IN (SELECT vec_id FROM qids))
-         WHERE rn <= 4)""",
-      """cand AS (
-         SELECT q_id, a.vec_id FROM qprobes p
-         JOIN assigned a ON a.c_id = p.c_id
-         WHERE a.vec_id != p.q_id)""",
-      """scored AS (
-         SELECT cand.q_id, cand.vec_id,
-           list_sum(list_transform(list_zip(uq.v, uc.v), p -> p[1] * p[2])) AS cosine
-         FROM cand
-         JOIN u uq ON uq.vec_id = cand.q_id
-         JOIN u uc ON uc.vec_id = cand.vec_id)""")
-    (head ++ perIter ++ serve).mkString("WITH ", ",\n", "\n") +
-      """SELECT q_id, vec_id, cosine, CAST(rk AS INTEGER) AS rk FROM (
-         SELECT q_id, vec_id, cosine,
-           ROW_NUMBER() OVER (PARTITION BY q_id
-             ORDER BY cosine DESC, vec_id ASC) AS rk
-         FROM scored)
-       WHERE rk <= 10"""
+         FROM u CROSS JOIN c$iters)"""
+    (head ++ perIter :+ sF).mkString("WITH ", ",\n", ",\n") + ivfServeSql("sF")
   }
 
   /** DuckDB replay of the persisted-PQ serve path (q156, and the
@@ -1682,36 +2188,7 @@ object SparkEntry {
     * (adc, vec_id).
     */
   private def pqPersistedServeOracle: String =
-    s"""WITH u AS ($normalizedVectors),
-         subs AS (
-           SELECT vec_id, s, v[s*8+1 : s*8+8] AS sub
-           FROM u, LATERAL (SELECT UNNEST(range(0, 8)) AS s) t),
-         cents AS (
-           SELECT vec_id AS c_id, s, sub AS cv FROM subs
-           WHERE vec_id < 16),
-         cdist AS (
-           SELECT subs.vec_id, subs.s, c_id,
-             CAST(floor(1e12 * list_sum(list_transform(
-               list_zip(sub, cv),
-               p -> (p[1] - p[2]) * (p[1] - p[2])))) AS BIGINT) AS d
-           FROM subs JOIN cents ON cents.s = subs.s),
-         codes AS (
-           SELECT vec_id, s, c_id AS code FROM (
-             SELECT vec_id, s, c_id,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                 ORDER BY d ASC, c_id ASC) AS rn
-             FROM cdist) WHERE rn = 1),
-         qids AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 5),
-         qdist AS (
-           SELECT vec_id AS q_id, s, c_id, d FROM cdist
-           WHERE vec_id IN (SELECT vec_id FROM qids)),
-         adc AS (
-           SELECT q.q_id, c.vec_id,
-             CAST(SUM(q.d) AS BIGINT) AS adc_pico
-           FROM codes c JOIN qdist q
-             ON q.s = c.s AND q.c_id = c.code
-           WHERE c.vec_id <> q.q_id
-           GROUP BY 1, 2)
+    s"""WITH $pqAdcCtes
          SELECT q_id, vec_id, adc_pico, CAST(rn AS INTEGER) AS rn FROM (
            SELECT q_id, vec_id, adc_pico,
              ROW_NUMBER() OVER (PARTITION BY q_id
@@ -2112,13 +2589,7 @@ object SparkEntry {
           LEFT JOIN outw o2 ON o2.src = e.src
           GROUP BY nodes.node, n.nn"""
       s"""WITH edges AS (
-           SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-             CAST(COUNT(*) AS BIGINT) AS w
-           FROM orders o
-           JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-           JOIN customer c ON c.c_custkey = o.o_custkey
-           JOIN supplier s ON s.s_suppkey = l.l_suppkey
-           GROUP BY 1, 2),
+           ${nationEdgesSql("src", "dst", crossOnly = false)}),
          outw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS ow
                   FROM edges GROUP BY 1),
          nodes AS (SELECT DISTINCT c_nationkey AS node FROM customer
@@ -2253,14 +2724,7 @@ object SparkEntry {
               GROUP BY e.src, p2.lbl) v
             WHERE rk = 1) pick ON pick.src = p.node"""
       s"""WITH edges AS (
-           SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-             CAST(COUNT(*) AS BIGINT) AS w
-           FROM orders o
-           JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-           JOIN customer c ON c.c_custkey = o.o_custkey
-           JOIN supplier s ON s.s_suppkey = l.l_suppkey
-           WHERE c.c_nationkey <> s.s_nationkey
-           GROUP BY 1, 2),
+           ${nationEdgesSql("src", "dst")}),
          und AS (
            SELECT src, dst, CAST(SUM(w) AS BIGINT) AS w FROM (
              SELECT src, dst, w FROM edges
@@ -2334,20 +2798,7 @@ object SparkEntry {
     // (w·ne·10 ≥ tw·12) so no float boundary can flip between
     // engines; each triangle (a<b<c) is enumerated exactly once.
     "q126_triangles" ->
-      """WITH e0 AS (
-           SELECT c.c_nationkey AS a, s.s_nationkey AS b,
-             CAST(COUNT(*) AS BIGINT) AS w
-           FROM orders o
-           JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-           JOIN customer c ON c.c_custkey = o.o_custkey
-           JOIN supplier s ON s.s_suppkey = l.l_suppkey
-           WHERE c.c_nationkey <> s.s_nationkey
-           GROUP BY 1, 2),
-         ed0 AS (SELECT LEAST(a, b) AS u, GREATEST(a, b) AS v,
-                   CAST(SUM(w) AS BIGINT) AS w
-                 FROM e0 GROUP BY 1, 2),
-         tot AS (SELECT CAST(SUM(w) AS BIGINT) AS tw,
-                   CAST(COUNT(*) AS BIGINT) AS ne FROM ed0),
+      s"""WITH ${heavyEdgeCtes(materialized = false)},
          ed AS (SELECT u, v FROM ed0, tot WHERE w * ne * 10 >= tw * 12),
          tri AS (
            SELECT e1.u AS a, e1.v AS b, e2.v AS c
@@ -2484,12 +2935,7 @@ object SparkEntry {
     // units self-joined on the unit key; support is one IEEE division
     // of exact counts.
     "q133_cooccurrence" ->
-      """WITH ud AS (
-           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day, event_type
-           FROM events),
-         tot AS (
-           SELECT COUNT(*) AS n_units
-           FROM (SELECT DISTINCT user_id, day FROM ud)),
+      s"""WITH $userDayCtes,
          pairs AS (
            SELECT a.event_type AS type_a, b.event_type AS type_b,
              COUNT(*) AS n_cooccur
@@ -2503,12 +2949,7 @@ object SparkEntry {
     // lift are pinned two-multiply/one-divide IEEE trees, identical
     // both engines.
     "q150_assoc_rules" ->
-      """WITH ud AS (
-           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day, event_type
-           FROM events),
-         tot AS (
-           SELECT COUNT(*) AS n_units
-           FROM (SELECT DISTINCT user_id, day FROM ud)),
+      s"""WITH $userDayCtes,
          marg AS (
            SELECT event_type, COUNT(*) AS n FROM ud GROUP BY 1),
          pairs AS (
@@ -2743,10 +3184,7 @@ object SparkEntry {
     // params must equal the Spark defaults (labels 0/1, k=4,
     // marginPct=105; 800 = 100*2*k).
     "q168_bitext_mine" ->
-      s"""WITH un AS MATERIALIZED (
-           SELECT u.vec_id, u.v, e.label
-           FROM ($normalizedVectors) u
-           JOIN embeddings e ON e.vec_id = u.vec_id),
+      s"""WITH $labeledVectorsCte,
          src AS (SELECT vec_id AS s_id, v AS sv FROM un WHERE label = 0),
          tgt AS (SELECT vec_id AS t_id, v AS tv FROM un WHERE label = 1),
          sims AS MATERIALIZED (
@@ -2754,36 +3192,13 @@ object SparkEntry {
              CAST(floor(1000000.0 * list_sum(list_transform(
                list_zip(sv, tv), p -> p[1]*p[2]))) AS BIGINT) AS sim_micro
            FROM src, tgt),
-         tops AS (
-           SELECT s_id, CAST(SUM(sim_micro) AS BIGINT) AS sk FROM (
-             SELECT s_id, sim_micro, ROW_NUMBER() OVER (PARTITION BY s_id
-               ORDER BY sim_micro DESC, t_id ASC) AS rn FROM sims)
-           WHERE rn <= 4 GROUP BY 1),
-         topt AS (
-           SELECT t_id, CAST(SUM(sim_micro) AS BIGINT) AS tk FROM (
-             SELECT t_id, sim_micro, ROW_NUMBER() OVER (PARTITION BY t_id
-               ORDER BY sim_micro DESC, s_id ASC) AS rn FROM sims)
-           WHERE rn <= 4 GROUP BY 1),
-         sc AS (
-           SELECT s.s_id, s.t_id, s.sim_micro,
-             CAST(floor(CAST(800 * s.sim_micro AS DOUBLE) /
-               CAST(a.sk + b.tk AS DOUBLE)) AS BIGINT) AS margin_pct
-           FROM sims s JOIN tops a USING (s_id) JOIN topt b USING (t_id)
-           WHERE a.sk + b.tk > 0)
-         SELECT s_id, t_id, sim_micro, margin_pct FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY s_id
-             ORDER BY margin_pct DESC, sim_micro DESC, t_id ASC) AS rn
-           FROM sc)
-         WHERE rn = 1 AND margin_pct >= 105""",
+         $bitextMarginSql""",
     // q169: hard-negative mining — cross-label self-join minus the
     // diagonal, micro-unit band [lo, hi), deterministic (sim desc,
     // id asc) rank capped at m; params must equal the Spark defaults
     // (m=5, lo=100000, hi=950000).
     "q169_hard_negatives" ->
-      s"""WITH un AS MATERIALIZED (
-           SELECT u.vec_id, u.v, e.label
-           FROM ($normalizedVectors) u
-           JOIN embeddings e ON e.vec_id = u.vec_id),
+      s"""WITH $labeledVectorsCte,
          sims AS (
            SELECT a.vec_id AS a_id, b.vec_id AS n_id,
              CAST(floor(1000000.0 * list_sum(list_transform(
@@ -2897,20 +3312,7 @@ object SparkEntry {
     // integer window sums, cross-multiply quiet flag. windows must
     // equal the Spark default (16).
     "q174_audio_energy" ->
-      """WITH wav AS MATERIALIZED (
-           SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-             octet_length(encode(text)) // 2 AS ns
-           FROM documents
-           WHERE doc_id % 3 = 1 AND octet_length(encode(text)) >= 2),
-         samples AS (
-           SELECT media_id, CAST(s * 16 // ns AS INT) AS win,
-             abs(CASE WHEN v >= 32768 THEN v - 65536 ELSE v END) AS a
-           FROM (
-             SELECT media_id, ns, CAST(s AS BIGINT) AS s,
-               ('0x' || substr(hx, CAST(4*s AS INT) + 1, 2))::INT +
-                 256 * ('0x' || substr(hx, CAST(4*s AS INT) + 3, 2))::INT
-                 AS v
-             FROM wav, UNNEST(range(ns)) t(s))),
+      s"""WITH $pcmWindowCtes,
          e AS (
            SELECT media_id, win, CAST(COUNT(*) AS BIGINT) AS n_samples,
              CAST(SUM(a) AS BIGINT) AS sum_abs
@@ -3093,34 +3495,11 @@ object SparkEntry {
                   CAST(sx AS HUGEINT) * sx) * 1000000)
              // (CAST(n AS HUGEINT) * n) AS BIGINT) AS var_micro
          FROM u""",
-    // q222: q44's recursive-CC prefix, survivor by (quality desc,
+    // q222: shingleCtes + componentCtes, survivor by (quality desc,
     // doc_id asc) window; quality = micro-floored stopword ratio.
     "q222_quality_survivors" ->
-      s"""WITH RECURSIVE words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT id_a, id_b FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, re.r FROM edges e JOIN reach re ON e.dst = re.id),
-         comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY 1),
+      s"""WITH RECURSIVE ${shingleCtes()},
+         ${componentCtes()},
          q AS (
            SELECT doc_id, CAST(FLOOR(1000000.0 *
              (CAST(len(regexp_extract_all(text,
@@ -3472,21 +3851,13 @@ object SparkEntry {
     // rounded sqrt + division in one fixed tree, micro-floored; −1
     // sentinel for silent clips.
     "q204_loudness_gain" ->
-      """WITH wav AS MATERIALIZED (
-           SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-             octet_length(encode(text)) // 2 AS ns
-           FROM documents
-           WHERE doc_id % 3 = 1 AND octet_length(encode(text)) >= 2),
+      s"""WITH ${wavCte(2)},
          samples AS (
            SELECT media_id,
              CAST(CASE WHEN v >= 32768 THEN v - 65536 ELSE v END
                AS BIGINT) AS sv
            FROM (
-             SELECT media_id, ns, CAST(s AS BIGINT) AS s,
-               ('0x' || substr(hx, CAST(4*s AS INT) + 1, 2))::INT +
-                 256 * ('0x' || substr(hx, CAST(4*s AS INT) + 3, 2))::INT
-                 AS v
-             FROM wav, UNNEST(range(ns)) t(s))),
+             ${pcmDecodeSql()})),
          st AS (
            SELECT media_id, CAST(COUNT(*) AS BIGINT) AS n_samples,
              CAST(SUM(sv * sv) AS BIGINT) AS ssq
@@ -3881,7 +4252,7 @@ object SparkEntry {
     // devices over the q75-planted text; reasons is a null-skipping
     // concat in a fixed gate order; every gate is integer.
     "q190_quality_verdict" ->
-      """WITH p AS (
+      ("""WITH p AS (
            SELECT doc_id,
              CASE WHEN doc_id % 7 = 0
                THEN text || ' contact: user' || CAST(doc_id AS VARCHAR)
@@ -3904,17 +4275,7 @@ object SparkEntry {
                SELECT UNNEST(range(1, len(w) - 3)) AS i) t
              WHERE len(w) >= 5) sh
            GROUP BY 1),
-         nt AS (
-           SELECT doc_id, regexp_replace(lower(trim(text)),
-             '\s+', ' ', 'g') AS nt
-           FROM p),
-         cc AS (
-           SELECT doc_id, ch, COUNT(*) AS c FROM (
-             SELECT doc_id, substr(nt, CAST(i AS INT), 1) AS ch
-             FROM nt, LATERAL (
-               SELECT UNNEST(range(1, length(nt) + 1)) AS i) u
-             WHERE length(nt) >= 1) x
-           GROUP BY 1, 2),
+         """ + charCountCtes("p") + """,
          ent AS (
            SELECT doc_id,
              (CAST(FLOOR(1000000.0 * ln(CAST(SUM(c) AS DOUBLE)))
@@ -3954,7 +4315,7 @@ object SparkEntry {
              CASE WHEN low_entropy THEN 'low_entropy' END,
              CASE WHEN n_pii > 0 THEN 'has_pii' END,
              CASE WHEN n_moji > 0 THEN 'mojibake' END) AS reasons
-         FROM m""",
+         FROM m"""),
     // q234: encoding-corruption gate — planting replayed in SQL
     // (chr() composition), mojibake via literal-alternation regex (no
     // char-class ranges, the portable dialect subset), replacement
@@ -4099,30 +4460,7 @@ object SparkEntry {
     // (the portable gear-CDC stand-in), LAG spans, digest-grain
     // per-source stats; boilerplate injected by the q100 device.
     "q239_cdc_chunks" ->
-      s"""WITH p0 AS (
-           SELECT doc_id, source,
-             CASE WHEN doc_id % 3 = 0
-               THEN '${Dedup.boilerplateHeader} ' ELSE '' END || text ||
-             CASE WHEN doc_id % 5 = 0
-               THEN ' ${Dedup.boilerplateFooter}' ELSE '' END AS text
-           FROM documents WHERE length(text) >= 1),
-         bnd AS (
-           SELECT doc_id, CAST(p AS BIGINT) AS p
-           FROM p0, UNNEST(range(${Dedup.CdcWindow},
-             length(text) + 1)) t(p)
-           WHERE ('0x' || substr(md5(substr(text,
-               CAST(p - ${Dedup.CdcWindow - 1} AS INT),
-               ${Dedup.CdcWindow})), 1, 4))::BIGINT
-             % ${Dedup.CdcBoundaryRate} = 0),
-         ends AS (
-           SELECT doc_id, p FROM bnd
-           UNION
-           SELECT doc_id, CAST(length(text) AS BIGINT) AS p FROM p0),
-         spans AS (
-           SELECT doc_id,
-             COALESCE(LAG(p) OVER (PARTITION BY doc_id ORDER BY p), 0)
-               AS s, p AS e
-           FROM ends),
+      s"""WITH $cdcSpanCtes,
          chunks AS (
            SELECT p0.source,
              substr(p0.text, CAST(s + 1 AS INT), CAST(e - s AS INT))
@@ -4142,7 +4480,7 @@ object SparkEntry {
              AS mean_chunk_len_micro
          FROM g""",
     // q240: directed shingle containment over the planted-container
-    // corpus — the q21 CTE with the union'd containers and a directed
+    // corpus — shingleCtes over the union'd containers with a directed
     // pair join; containment = n_common*1e6 // |contained|.
     "q240_containment" ->
       s"""WITH base AS (SELECT doc_id, text FROM documents),
@@ -4153,21 +4491,7 @@ object SparkEntry {
            WHERE a.doc_id % 25 = 0),
          docs2 AS (
            SELECT * FROM base UNION ALL SELECT * FROM cont),
-         words AS (
-           SELECT doc_id,
-             string_split(regexp_replace(lower(trim(text)),
-               '\\s+', ' ', 'g'), ' ') AS w
-           FROM docs2),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b
-             ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-           GROUP BY 1, 2)
+         ${shingleCtes(from = "docs2", order = "<>")}
          SELECT id_a AS contained_id, id_b AS container_id,
            CAST(n_common AS BIGINT) AS n_common,
            CAST((n_common * 1000000) // sa.n_sh AS BIGINT)
@@ -4370,17 +4694,7 @@ object SparkEntry {
              LEAST(CAST(FLOOR(CAST(score AS DOUBLE) / 100000.0)
                AS BIGINT), 9) AS bx
            FROM sc),
-         nt AS (
-           SELECT doc_id, regexp_replace(lower(trim(text)),
-             '\\s+', ' ', 'g') AS nt
-           FROM documents),
-         cc AS (
-           SELECT doc_id, ch, COUNT(*) AS c FROM (
-             SELECT doc_id, substr(nt, CAST(i AS INT), 1) AS ch
-             FROM nt, LATERAL (
-               SELECT UNNEST(range(1, length(nt) + 1)) AS i) u
-             WHERE length(nt) >= 1) x
-           GROUP BY 1, 2),
+         ${charCountCtes("documents")},
          ent AS (
            SELECT doc_id,
              CAST(SUM(c) AS BIGINT) AS n_chars,
@@ -4422,33 +4736,10 @@ object SparkEntry {
            FROM cells)
          SELECT n_docs, n_pairs, concordant, discordant, tied_x, tied_y
          FROM tot CROSS JOIN cd CROSS JOIN tx CROSS JOIN ty""",
-    // q248: shared-passage provenance — the q239 chunk CTEs, digests
+    // q248: shared-passage provenance — q239's cdcSpanCtes, digests
     // deduped per doc, pair join over shared chunks >= 16 chars.
     "q248_cdc_provenance" ->
-      s"""WITH p0 AS (
-           SELECT doc_id, source,
-             CASE WHEN doc_id % 3 = 0
-               THEN '${Dedup.boilerplateHeader} ' ELSE '' END || text ||
-             CASE WHEN doc_id % 5 = 0
-               THEN ' ${Dedup.boilerplateFooter}' ELSE '' END AS text
-           FROM documents WHERE length(text) >= 1),
-         bnd AS (
-           SELECT doc_id, CAST(p AS BIGINT) AS p
-           FROM p0, UNNEST(range(${Dedup.CdcWindow},
-             length(text) + 1)) t(p)
-           WHERE ('0x' || substr(md5(substr(text,
-               CAST(p - ${Dedup.CdcWindow - 1} AS INT),
-               ${Dedup.CdcWindow})), 1, 4))::BIGINT
-             % ${Dedup.CdcBoundaryRate} = 0),
-         ends AS (
-           SELECT doc_id, p FROM bnd
-           UNION
-           SELECT doc_id, CAST(length(text) AS BIGINT) AS p FROM p0),
-         spans AS (
-           SELECT doc_id,
-             COALESCE(LAG(p) OVER (PARTITION BY doc_id ORDER BY p), 0)
-               AS s, p AS e
-           FROM ends),
+      s"""WITH $cdcSpanCtes,
          ch AS (
            SELECT DISTINCT p0.doc_id,
              md5(substr(p0.text, CAST(s + 1 AS INT), CAST(e - s AS INT)))
@@ -4620,23 +4911,10 @@ object SparkEntry {
          FROM hourly JOIN base USING (event_type)
          WHERE hourly.n_events * base.n_hours * 2 >
            base.total_events * 3""",
-    // q255: activity segments — the q174 PCM decode CTEs, non-quiet
+    // q255: activity segments — q174's pcmWindowCtes, non-quiet
     // windows grouped into islands by win - ROW_NUMBER (q33 device).
     "q255_activity_segments" ->
-      """WITH wav AS MATERIALIZED (
-           SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-             octet_length(encode(text)) // 2 AS ns
-           FROM documents
-           WHERE doc_id % 3 = 1 AND octet_length(encode(text)) >= 2),
-         samples AS (
-           SELECT media_id, CAST(s * 16 // ns AS INT) AS win,
-             abs(CASE WHEN v >= 32768 THEN v - 65536 ELSE v END) AS a
-           FROM (
-             SELECT media_id, ns, CAST(s AS BIGINT) AS s,
-               ('0x' || substr(hx, CAST(4*s AS INT) + 1, 2))::INT +
-                 256 * ('0x' || substr(hx, CAST(4*s AS INT) + 3, 2))::INT
-                 AS v
-             FROM wav, UNNEST(range(ns)) t(s))),
+      s"""WITH $pcmWindowCtes,
          e AS (
            SELECT media_id, win, CAST(SUM(a) AS BIGINT) AS sum_abs
            FROM samples GROUP BY 1, 2),
@@ -4949,15 +5227,7 @@ object SparkEntry {
     // md5 noise decisions + cyclic-next corruption), then the exact
     // integer Fleiss arithmetic; HUGEINT where Spark uses DECIMAL(38).
     "q268_fleiss_kappa" ->
-      """WITH rated AS (
-           SELECT d.doc_id,
-             CASE WHEN ('0x' || substr(md5('rate:' ||
-                 CAST(d.doc_id AS VARCHAR) || ':' ||
-                 CAST(r.r AS VARCHAR)), 1, 15))::BIGINT % 10 < r.r
-               THEN CASE d.lang WHEN 'de' THEN 'en' WHEN 'en' THEN 'es'
-                 WHEN 'es' THEN 'fr' WHEN 'fr' THEN 'zh' ELSE 'de' END
-               ELSE d.lang END AS label
-           FROM documents d, (SELECT UNNEST([1,2,3]) AS r) r),
+      s"""WITH ${ratedCte()},
          nic AS (SELECT doc_id, label, CAST(COUNT(*) AS BIGINT) AS c
                  FROM rated GROUP BY 1, 2),
          cat AS (SELECT label, SUM(c*c) AS sum_sq, SUM(c) AS s_c
@@ -4980,11 +5250,7 @@ object SparkEntry {
     // cents aggregate, total-order rank, Borda points, pairwise wins,
     // Copeland over the full type² spine.
     "q269_preference_scores" ->
-      """WITH cents AS (
-           SELECT user_id, CAST(ts AS DATE) AS d, event_type,
-             CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT))
-               AS BIGINT) AS cents
-           FROM events GROUP BY 1, 2, 3),
+      s"""WITH $spendCentsCte,
          ranked AS (
            SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY user_id, d
                ORDER BY cents DESC, event_type ASC) AS BIGINT) AS rk,
@@ -5154,15 +5420,7 @@ object SparkEntry {
     // division — no sqrt, no float accumulation.
     "q276_mann_whitney" ->
       s"""WITH sc AS ($scoredDocsSql),
-         bysc AS (
-           SELECT score, CAST(COUNT(*) AS BIGINT) AS c,
-             CAST(SUM(CASE WHEN is_en THEN 1 ELSE 0 END) AS BIGINT) AS p
-           FROM sc GROUP BY 1),
-         rk AS (
-           SELECT score, c, p,
-             CAST(COALESCE(SUM(c) OVER (ORDER BY score ASC ROWS BETWEEN
-               UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
-           FROM bysc),
+         $scoreRankCtes,
          agg AS (
            SELECT CAST(SUM(p) AS BIGINT) AS n_pos,
              CAST(SUM(c) - SUM(p) AS BIGINT) AS n_neg,
@@ -5838,75 +6096,23 @@ object SparkEntry {
            md5(COALESCE(string_agg(tp, ' ' ORDER BY pos)
              FILTER (WHERE tp IS NOT NULL), '')) AS target_fp
          FROM p GROUP BY 1""",
-    // q297: the q44 exhaustive-Jaccard CC prefix, then cluster sizes
+    // q297: shingleCtes + componentCtes + keyedCte, then cluster sizes
     // and the 1/size micro weight.
     "q297_soft_dedup_weights" ->
-      s"""WITH RECURSIVE words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT id_a, id_b FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, re.r FROM edges e JOIN reach re ON e.dst = re.id),
-         comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY 1),
-         keyed AS (
-           SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS comp
-           FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
+      s"""WITH RECURSIVE ${shingleCtes()},
+         ${componentCtes()},
+         ${keyedCte()},
          sz AS (SELECT comp, CAST(COUNT(*) AS BIGINT) AS cluster_size
            FROM keyed GROUP BY 1)
          SELECT k.doc_id, k.comp AS cluster_rep, sz.cluster_size,
            CAST(1000000 // sz.cluster_size AS BIGINT) AS weight_micro
          FROM keyed k JOIN sz USING (comp)""",
-    // q298: the same CC prefix, then majority-language strata and
+    // q298: componentCtes + keyedCte, then majority-language strata and
     // the round-robin deal replayed with rank windows.
     "q298_stratified_folds" ->
-      s"""WITH RECURSIVE words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT id_a, id_b FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, re.r FROM edges e JOIN reach re ON e.dst = re.id),
-         comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY 1),
-         keyed AS (
-           SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS comp, d.lang
-           FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
+      s"""WITH RECURSIVE ${shingleCtes()},
+         ${componentCtes()},
+         ${keyedCte(", d.lang")},
          lc AS (SELECT comp, lang, CAST(COUNT(*) AS BIGINT) AS c
            FROM keyed GROUP BY 1, 2),
          stratum AS (
@@ -5989,17 +6195,10 @@ object SparkEntry {
            md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY rk ASC))
              AS ctx_digest
          FROM packed WHERE cum <= 256 GROUP BY 1""",
-    // q302: q32's assignment CTEs, sqrt-flattened Hamilton quotas,
+    // q302: q32's centroidSimsCtes, sqrt-flattened Hamilton quotas,
     // salted per-cell exact-k — the whole manifest replayed.
     "q302_topic_balanced" ->
-      s"""WITH u AS ($normalizedVectors),
-         cents AS (SELECT vec_id AS c_id, v AS cv FROM u
-           WHERE vec_id < 16),
-         sims AS (
-           SELECT u.vec_id, c_id,
-             list_sum(list_transform(list_zip(u.v, cv),
-               p -> p[1] * p[2])) AS sim
-           FROM u CROSS JOIN cents),
+      s"""WITH $centroidSimsCtes,
          assigned AS (
            SELECT vec_id, c_id FROM (
              SELECT vec_id, c_id,
@@ -6038,38 +6237,13 @@ object SparkEntry {
            CAST(COALESCE(agg.n_sampled, 0) AS BIGINT) AS n_sampled,
            COALESCE(agg.sample_digest, md5('')) AS sample_digest
          FROM q LEFT JOIN agg USING (c_id)""",
-    // q303: the CC prefix, the cluster-consecutive salted order, the
-    // round-robin deal — batch-grain manifest with collision counts.
+    // q303: componentCtes + keyedCte, the cluster-consecutive salted
+    // order, the round-robin deal — batch-grain manifest with collision
+    // counts.
     "q303_contrastive_batches" ->
-      s"""WITH RECURSIVE words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT id_a, id_b FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, re.r FROM edges e JOIN reach re ON e.dst = re.id),
-         comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY 1),
-         keyed AS (
-           SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS comp
-           FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
+      s"""WITH RECURSIVE ${shingleCtes()},
+         ${componentCtes()},
+         ${keyedCte()},
          nb AS (SELECT CAST((COUNT(*) + 7) // 8 AS BIGINT) AS nb
            FROM keyed),
          ranked AS (
@@ -6126,57 +6300,8 @@ object SparkEntry {
     // chunk rank here is the naive global window — the oracle-side
     // stand-in for the chunked rank (same rationale as q202's oracle).
     "q305_packed_windows" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id,
-             CAST(len(regexp_extract_all(text,
-               '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS ntok
-           FROM documents),
-         items AS (
-           SELECT doc_id, ntok, ntok + 1 AS item,
-             CAST(ROW_NUMBER() OVER (ORDER BY ntok DESC, doc_id ASC)
-               AS BIGINT) AS rk
-           FROM toks),
-         ch AS (
-           SELECT doc_id, ntok, item, (rk - 1) // 256 AS chunk,
-             CAST(ROW_NUMBER() OVER (PARTITION BY (rk - 1) // 256
-               ORDER BY rk ASC) AS BIGINT) AS pos
-           FROM items),
-         step AS (
-           SELECT chunk, CAST(0 AS BIGINT) AS pos,
-             CAST([] AS BIGINT[]) AS fills,
-             CAST([] AS STRUCT(doc_id BIGINT, win BIGINT, ntok BIGINT,
-               item BIGINT)[]) AS asg
-           FROM (SELECT DISTINCT chunk FROM ch) c
-           UNION ALL
-           SELECT s.chunk, s.pos + 1,
-             CASE WHEN p.p = 0 THEN list_append(s.fills, d.item)
-               ELSE list_concat(list_concat(
-                 list_slice(s.fills, 1, p.p - 1),
-                 [s.fills[p.p] + d.item]),
-                 list_slice(s.fills, p.p + 1, len(s.fills))) END,
-             list_append(s.asg, CASE WHEN p.p = 0
-               THEN {'doc_id': d.doc_id,
-                     'win': CAST(len(s.fills) + 1 AS BIGINT),
-                     'ntok': d.ntok, 'item': d.item}
-               ELSE {'doc_id': d.doc_id, 'win': p.p,
-                     'ntok': d.ntok, 'item': d.item} END)
-           FROM step s
-           JOIN ch d ON d.chunk = s.chunk AND d.pos = s.pos + 1,
-           LATERAL (SELECT CAST(COALESCE(list_position(
-              list_transform(s.fills, f -> f + d.item <= 4096), true), 0)
-              AS BIGINT) AS p) p),
-         fin AS (
-           SELECT s.chunk, s.fills, s.asg FROM step s
-           JOIN (SELECT chunk, MAX(pos) AS mp FROM step GROUP BY 1) m
-             ON m.chunk = s.chunk AND m.mp = s.pos),
-         offs AS (
-           SELECT a.chunk, CAST(COALESCE(SUM(len(b.fills)), 0) AS BIGINT)
-             AS woff
-           FROM fin a LEFT JOIN fin b ON b.chunk < a.chunk
-           GROUP BY 1),
-         asg AS (
-           SELECT f.chunk, o.woff, UNNEST(f.asg, recursive := true)
-           FROM fin f JOIN offs o ON o.chunk = f.chunk)
+      s"""WITH RECURSIVE $ffdStepCtes,
+         $ffdAssignCtes
          SELECT CAST(woff + win AS BIGINT) AS window_id,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(ntok) AS BIGINT) AS payload_tokens,
@@ -6185,60 +6310,12 @@ object SparkEntry {
            md5(string_agg(CAST(doc_id AS VARCHAR), ','
              ORDER BY doc_id ASC)) AS win_digest
          FROM asg GROUP BY 1""",
-    // q335: the q305 recursive first-fit replay with the attention
-    // pair-arithmetic tail (triangular counts, trailing ppm DIV).
+    // q335: ffdStepCtes + ffdAssignCtes (the q305 recursive first-fit
+    // replay) with the attention pair-arithmetic tail (triangular
+    // counts, trailing ppm DIV).
     "q335_packing_attention" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id,
-             CAST(len(regexp_extract_all(text,
-               '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS ntok
-           FROM documents),
-         items AS (
-           SELECT doc_id, ntok, ntok + 1 AS item,
-             CAST(ROW_NUMBER() OVER (ORDER BY ntok DESC, doc_id ASC)
-               AS BIGINT) AS rk
-           FROM toks),
-         ch AS (
-           SELECT doc_id, ntok, item, (rk - 1) // 256 AS chunk,
-             CAST(ROW_NUMBER() OVER (PARTITION BY (rk - 1) // 256
-               ORDER BY rk ASC) AS BIGINT) AS pos
-           FROM items),
-         step AS (
-           SELECT chunk, CAST(0 AS BIGINT) AS pos,
-             CAST([] AS BIGINT[]) AS fills,
-             CAST([] AS STRUCT(doc_id BIGINT, win BIGINT, ntok BIGINT,
-               item BIGINT)[]) AS asg
-           FROM (SELECT DISTINCT chunk FROM ch) c
-           UNION ALL
-           SELECT s.chunk, s.pos + 1,
-             CASE WHEN p.p = 0 THEN list_append(s.fills, d.item)
-               ELSE list_concat(list_concat(
-                 list_slice(s.fills, 1, p.p - 1),
-                 [s.fills[p.p] + d.item]),
-                 list_slice(s.fills, p.p + 1, len(s.fills))) END,
-             list_append(s.asg, CASE WHEN p.p = 0
-               THEN {'doc_id': d.doc_id,
-                     'win': CAST(len(s.fills) + 1 AS BIGINT),
-                     'ntok': d.ntok, 'item': d.item}
-               ELSE {'doc_id': d.doc_id, 'win': p.p,
-                     'ntok': d.ntok, 'item': d.item} END)
-           FROM step s
-           JOIN ch d ON d.chunk = s.chunk AND d.pos = s.pos + 1,
-           LATERAL (SELECT CAST(COALESCE(list_position(
-              list_transform(s.fills, f -> f + d.item <= 4096), true), 0)
-              AS BIGINT) AS p) p),
-         fin AS (
-           SELECT s.chunk, s.fills, s.asg FROM step s
-           JOIN (SELECT chunk, MAX(pos) AS mp FROM step GROUP BY 1) m
-             ON m.chunk = s.chunk AND m.mp = s.pos),
-         offs AS (
-           SELECT a.chunk, CAST(COALESCE(SUM(len(b.fills)), 0) AS BIGINT)
-             AS woff
-           FROM fin a LEFT JOIN fin b ON b.chunk < a.chunk
-           GROUP BY 1),
-         asg AS (
-           SELECT f.chunk, o.woff, UNNEST(f.asg, recursive := true)
-           FROM fin f JOIN offs o ON o.chunk = f.chunk),
+      s"""WITH RECURSIVE $ffdStepCtes,
+         $ffdAssignCtes,
          g AS (
            SELECT CAST(woff + win AS BIGINT) AS window_id,
              CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -6257,11 +6334,7 @@ object SparkEntry {
     // q306: closed-form overlap-stride chunking — pure per-row
     // arithmetic + array slices, replayed verbatim.
     "q306_sliding_chunks" ->
-      s"""WITH words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         d AS (
-           SELECT doc_id, w, CAST(len(w) AS BIGINT) AS n FROM words
-           WHERE len(w) > 0 AND w[1] <> ''),
+      s"""WITH $wordDocsCtes,
          k AS (
            SELECT doc_id, w, n,
              GREATEST(1, (n - 16 + 47) // 48) AS k FROM d),
@@ -6763,21 +6836,13 @@ object SparkEntry {
     // over them. A green hash certifies the composed 100 TB plan, not
     // just its pieces.
     "q322_ann_hard_negatives" ->
-      s"""WITH un AS MATERIALIZED (
-           SELECT u.vec_id, u.v, e.label
-           FROM ($normalizedVectors) u
-           JOIN embeddings e ON e.vec_id = u.vec_id),
+      s"""WITH $labeledVectorsCte,
          cents AS (SELECT vec_id AS c_id, v AS cv FROM un WHERE vec_id < 16),
          sims AS MATERIALIZED (
            SELECT un.vec_id, c_id,
              list_sum(list_transform(list_zip(un.v, cv), p -> p[1]*p[2])) AS sim
            FROM un CROSS JOIN cents),
-         assigned AS (
-           SELECT vec_id, c_id FROM (
-             SELECT vec_id, c_id,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                 ORDER BY sim DESC, c_id ASC) AS rn
-             FROM sims) WHERE rn = 1),
+         ${assignedCte("sims")},
          aprobes AS (
            SELECT vec_id AS a_id, c_id FROM (
              SELECT vec_id, c_id,
@@ -6808,21 +6873,13 @@ object SparkEntry {
     // arithmetic (top-4 sums per side OVER THE CANDIDATE SET, one
     // final division, forward-best rank, >= 105) replays verbatim.
     "q323_ann_bitext_mine" ->
-      s"""WITH un AS MATERIALIZED (
-           SELECT u.vec_id, u.v, e.label
-           FROM ($normalizedVectors) u
-           JOIN embeddings e ON e.vec_id = u.vec_id),
+      s"""WITH $labeledVectorsCte,
          cents AS (SELECT vec_id AS c_id, v AS cv FROM un WHERE vec_id < 16),
          csims AS MATERIALIZED (
            SELECT un.vec_id, un.label, c_id,
              list_sum(list_transform(list_zip(un.v, cv), p -> p[1]*p[2])) AS sim
            FROM un CROSS JOIN cents),
-         assigned AS (
-           SELECT vec_id, c_id FROM (
-             SELECT vec_id, c_id,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                 ORDER BY sim DESC, c_id ASC) AS rn
-             FROM csims) WHERE rn = 1),
+         ${assignedCte("csims")},
          tgt AS (
            SELECT a.c_id, a.vec_id AS t_id FROM assigned a
            JOIN un ON un.vec_id = a.vec_id WHERE un.label = 1),
@@ -6839,27 +6896,7 @@ object SparkEntry {
            FROM sprobes p JOIN tgt t ON t.c_id = p.c_id
            JOIN un us ON us.vec_id = p.s_id
            JOIN un ut ON ut.vec_id = t.t_id),
-         tops AS (
-           SELECT s_id, CAST(SUM(sim_micro) AS BIGINT) AS sk FROM (
-             SELECT s_id, sim_micro, ROW_NUMBER() OVER (PARTITION BY s_id
-               ORDER BY sim_micro DESC, t_id ASC) AS rn FROM sims)
-           WHERE rn <= 4 GROUP BY 1),
-         topt AS (
-           SELECT t_id, CAST(SUM(sim_micro) AS BIGINT) AS tk FROM (
-             SELECT t_id, sim_micro, ROW_NUMBER() OVER (PARTITION BY t_id
-               ORDER BY sim_micro DESC, s_id ASC) AS rn FROM sims)
-           WHERE rn <= 4 GROUP BY 1),
-         sc AS (
-           SELECT s.s_id, s.t_id, s.sim_micro,
-             CAST(floor(CAST(800 * s.sim_micro AS DOUBLE) /
-               CAST(a.sk + b.tk AS DOUBLE)) AS BIGINT) AS margin_pct
-           FROM sims s JOIN tops a USING (s_id) JOIN topt b USING (t_id)
-           WHERE a.sk + b.tk > 0)
-         SELECT s_id, t_id, sim_micro, margin_pct FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY s_id
-             ORDER BY margin_pct DESC, sim_micro DESC, t_id ASC) AS rn
-           FROM sc)
-         WHERE rn = 1 AND margin_pct >= 105""",
+         $bitextMarginSql""",
     // q324: prefix-cache hit rates by depth — md5 of each doc's first
     // d*16 normalized chars (full blocks only), per-depth distinct
     // census, hit_ppm = (n_docs - n_distinct)*1e6 DIV n_docs.
@@ -7088,13 +7125,7 @@ object SparkEntry {
     // mins, md5 band keys) against the q189 exhaustive 5-gram truth;
     // per-stage counted recall/precision with zero-guards.
     "q332_lsh_banding_eval" ->
-      s"""WITH words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w
-           FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS sh
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
+      s"""WITH $spanShingleCtes,
          sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
            FROM sh GROUP BY 1),
          common AS (
@@ -7107,23 +7138,7 @@ object SparkEntry {
            JOIN sizes sa ON sa.doc_id = id_a
            JOIN sizes sb ON sb.doc_id = id_b
            WHERE 5 * n_common >= 3 * (sa.n + sb.n - n_common)),
-         h AS (
-           SELECT doc_id,
-             ('0x' || substr(md5(sh), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(sh), 17, 14))::BIGINT AS h2
-           FROM sh),
-         slots AS MATERIALIZED (
-           SELECT doc_id, i, MIN(h1 + i * h2) AS v
-           FROM h, LATERAL (SELECT UNNEST(range(0, 64)) AS i) g
-           GROUP BY 1, 2),
-         bands AS (
-           SELECT doc_id, i // 4 AS band,
-             md5(string_agg(CAST(v AS VARCHAR), ':' ORDER BY i)) AS bh
-           FROM slots GROUP BY doc_id, i // 4),
-         cand AS MATERIALIZED (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
+         $bandCandCtes,
          msig AS (SELECT doc_id, list(v ORDER BY i) AS sig
            FROM slots GROUP BY 1),
          est AS MATERIALIZED (
@@ -7154,36 +7169,14 @@ object SparkEntry {
              THEN CAST(hit_est * 1000000 // n_est AS BIGINT) END
              AS precision_est_ppm
          FROM c""",
-    // q397: b-bit minwise eval — q332's md5 signature/banding replay,
+    // q397: b-bit minwise eval — q332's bandCandCtes replay,
     // exact Jaccard on candidates, then one estimator arm per b from
     // the SAME bbitGrid constant the Spark default uses.
     "q397_bbit_minwise" ->
-      s"""WITH words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w
-           FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS sh
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
+      s"""WITH $spanShingleCtes,
          sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
            FROM sh GROUP BY 1),
-         h AS (
-           SELECT doc_id,
-             ('0x' || substr(md5(sh), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(sh), 17, 14))::BIGINT AS h2
-           FROM sh),
-         slots AS MATERIALIZED (
-           SELECT doc_id, i, MIN(h1 + i * h2) AS v
-           FROM h, LATERAL (SELECT UNNEST(range(0, 64)) AS i) g
-           GROUP BY 1, 2),
-         bands AS (
-           SELECT doc_id, i // 4 AS band,
-             md5(string_agg(CAST(v AS VARCHAR), ':' ORDER BY i)) AS bh
-           FROM slots GROUP BY doc_id, i // 4),
-         cand AS MATERIALIZED (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
+         $bandCandCtes,
          common AS (
            SELECT c.id_a, c.id_b, CAST(COUNT(*) AS BIGINT) AS n_common
            FROM cand c
@@ -7435,12 +7428,7 @@ object SparkEntry {
     // integer threshold (5·∩ ≥ 3·∪) — equality IS the completeness
     // theorem under test.
     "q189_prefix_filter_join" ->
-      s"""WITH words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS sh
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
+      s"""WITH $spanShingleCtes,
          sizes AS (
            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
            FROM sh GROUP BY 1),
@@ -7845,24 +7833,7 @@ object SparkEntry {
     // one-shuffle running-min formulation (equivalent because running
     // mins are non-increasing — see Relational.funnel scaladoc).
     "q112_funnel" ->
-      """WITH l1 AS (
-           SELECT user_id,
-             MIN(CASE WHEN event_type = 'view' THEN ts END) AS t1
-           FROM events GROUP BY user_id),
-         l2 AS (
-           SELECT e.user_id,
-             MIN(CASE WHEN e.event_type = 'click' AND e.ts > l1.t1
-                  AND e.ts <= l1.t1 + INTERVAL 48 HOURS
-                  THEN e.ts END) AS t2
-           FROM events e JOIN l1 USING (user_id)
-           GROUP BY e.user_id, l1.t1),
-         l3 AS (
-           SELECT e.user_id,
-             MIN(CASE WHEN e.event_type = 'purchase' AND e.ts > l2.t2
-                  AND e.ts <= l2.t2 + INTERVAL 48 HOURS
-                  THEN e.ts END) AS t3
-           FROM events e JOIN l2 USING (user_id)
-           GROUP BY e.user_id, l2.t2)
+      s"""WITH $funnelCtes
          SELECT l1.user_id, l1.t1, l2.t2, l3.t3,
            CAST(CASE WHEN l1.t1 IS NULL THEN 0 WHEN l2.t2 IS NULL THEN 1
                 WHEN l3.t3 IS NULL THEN 2 ELSE 3 END AS BIGINT) AS steps
@@ -7989,18 +7960,7 @@ object SparkEntry {
            list_sort(v, 'DESC')[3] AS top3
          FROM u""",
     "q33_sessionize" ->
-      """WITH flagged AS (
-           SELECT user_id, event_id, ts, value,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                    OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS new_sess
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
-         numbered AS (
-           SELECT user_id, ts, value,
-             SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-           FROM flagged)
+      s"""WITH ${sessionCtes()}
          SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
            COUNT(*) AS n_events,
            MIN(ts) AS t_start, MAX(ts) AS t_end,
@@ -8271,18 +8231,8 @@ object SparkEntry {
     // the min/max aggregates (all integer → no HUGEINT, no float
     // accumulation in the compare path).
     "q158_semdedup" ->
-      s"""WITH u AS ($normalizedVectors),
-         cents AS (SELECT vec_id AS c_id, v AS cv FROM u WHERE vec_id < 16),
-         sims AS (
-           SELECT u.vec_id, c_id,
-             list_sum(list_transform(list_zip(u.v, cv), p -> p[1] * p[2])) AS sim
-           FROM u CROSS JOIN cents),
-         assigned AS (
-           SELECT vec_id, c_id FROM (
-             SELECT vec_id, c_id,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                 ORDER BY sim DESC, c_id ASC) AS rn
-             FROM sims) WHERE rn = 1),
+      s"""WITH $centroidSimsCtes,
+         ${assignedCte("sims")},
          withv AS (
            SELECT a.vec_id, a.c_id, u.v FROM assigned a JOIN u USING (vec_id)),
          pairs AS (
@@ -8316,66 +8266,18 @@ object SparkEntry {
     // LSH-verified pairs + iterative min-label propagation — equal
     // whenever banded recall is complete (the q22 precedent).
     "q44_neardup_clusters" ->
-      s"""WITH RECURSIVE words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT id_a, id_b FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, re.r FROM edges e JOIN reach re ON e.dst = re.id),
-         comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY 1)
+      s"""WITH RECURSIVE ${shingleCtes()},
+         ${componentCtes()}
          SELECT doc_id FROM documents
          WHERE doc_id NOT IN (SELECT id FROM comp WHERE comp <> id)""",
-    // q162: q44's recursive-CC prefix (exhaustive Jaccard pairs are
+    // q162: componentCtes + keyedCte (exhaustive Jaccard pairs are
     // the truth the banded path must reproduce — the q22 precedent),
     // then the q68 hash-bucket rule keyed on the cluster
     // representative; singletons coalesce to their own id.
     "q162_leakage_split" ->
-      s"""WITH RECURSIVE words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT id_a, id_b FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, re.r FROM edges e JOIN reach re ON e.dst = re.id),
-         comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY 1),
-         keyed AS (
-           SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS comp
-           FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)
+      s"""WITH RECURSIVE ${shingleCtes()},
+         ${componentCtes()},
+         ${keyedCte()}
          SELECT doc_id, comp,
            ('0x' || substr(md5(CAST(comp AS VARCHAR)), 1, 15))::BIGINT % 10
              AS bucket,
@@ -8510,66 +8412,21 @@ object SparkEntry {
     // 32 sign bits, 8 tables x 4 bits, candidate join, exact cosine,
     // top-k — replays in SQL with bit-identical floats.
     "q31_ann_lsh" -> annLshOracle,
-    // q25 composes the oracles of its stages: lang gate (q40's SQL),
-    // token gate (q42's), exact-dedup survivors (q20's), near-dup
-    // drop-b set (q21/q22's exhaustive pairs at the same threshold).
+    // q25 composes the oracles of its stages through survivorCtes:
+    // lang gate (q40's SQL), token gate (q42's), exact-dedup survivors
+    // (q20's), near-dup drop-b set (shingleCtes' pairs at the same
+    // threshold).
     "q25_clean_corpus" ->
-      s"""WITH lang AS ($langIdOracle),
-         toks AS (
-           SELECT doc_id, CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(regexp_extract_all(trim(text), '\\S+')) END AS BIGINT) AS n_ws_tokens
-           FROM documents),
-         exact_keep AS (
-           SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY MD5($normText)),
-         words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         near_drop AS (
-           SELECT DISTINCT id_b FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5)
+      s"""WITH $survivorCtes
          SELECT l.doc_id, l.lang_pred, t.n_ws_tokens
          FROM lang l JOIN toks t ON l.doc_id = t.doc_id
          WHERE l.lang_pred <> 'und' AND t.n_ws_tokens >= 20
            AND l.doc_id IN (SELECT doc_id FROM exact_keep)
            AND l.doc_id NOT IN (SELECT id_b FROM near_drop)""",
-    // q76: the end-to-end manifest — q25's clean CTEs + the q74
+    // q76: the end-to-end manifest — q25's survivorCtes + the q74
     // repetition gate + q75 redaction + q68 split, joined on doc_id.
     "q76_corpus_manifest" ->
-      s"""WITH lang AS ($langIdOracle),
-         toks AS (
-           SELECT doc_id, CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(regexp_extract_all(trim(text), '\\S+')) END AS BIGINT) AS n_ws_tokens
-           FROM documents),
-         exact_keep AS (
-           SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY MD5($normText)),
-         words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         near_drop AS (
-           SELECT DISTINCT id_b FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
+      s"""WITH $survivorCtes,
          sh_all AS (
            SELECT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
            FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
@@ -8612,97 +8469,23 @@ object SparkEntry {
     // nearest cells, exact cosine top-k — float math bit-identical by
     // the q24/q30 precedent.
     "q32_ann_ivf" ->
-      s"""WITH u AS ($normalizedVectors),
-         cents AS (SELECT vec_id AS c_id, v AS cv FROM u WHERE vec_id < 16),
-         sims AS (
-           SELECT u.vec_id, c_id,
-             list_sum(list_transform(list_zip(u.v, cv), p -> p[1] * p[2])) AS sim
-           FROM u CROSS JOIN cents),
-         assigned AS (
-           SELECT vec_id, c_id FROM (
-             SELECT vec_id, c_id,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                 ORDER BY sim DESC, c_id ASC) AS rn
-             FROM sims) WHERE rn = 1),
-         qids AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 5),
-         qprobes AS (
-           SELECT vec_id AS q_id, c_id FROM (
-             SELECT vec_id, c_id,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                 ORDER BY sim DESC, c_id ASC) AS rn
-             FROM sims WHERE vec_id IN (SELECT vec_id FROM qids))
-           WHERE rn <= 4),
-         cand AS (
-           SELECT q_id, a.vec_id FROM qprobes p
-           JOIN assigned a ON a.c_id = p.c_id
-           WHERE a.vec_id != p.q_id),
-         scored AS (
-           SELECT cand.q_id, cand.vec_id,
-             list_sum(list_transform(list_zip(uq.v, uc.v), p -> p[1] * p[2])) AS cosine
-           FROM cand
-           JOIN u uq ON uq.vec_id = cand.q_id
-           JOIN u uc ON uc.vec_id = cand.vec_id)
-         SELECT q_id, vec_id, cosine, CAST(rk AS INTEGER) AS rk FROM (
-           SELECT q_id, vec_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id ASC) AS rk
-           FROM scored)
-         WHERE rk <= 10""",
+      s"""WITH $centroidSimsCtes,
+         ${ivfServeSql("sims")}""",
     // q153: PQ — the oracle replays the whole pipeline: subspace
     // split via list slicing, per-subspace L2² floored to integer
     // PICO-units BEFORE argmin and before the 8-term ADC sum (both
     // then order-free), candidate shortlist by (adc, vec_id), exact
     // cosine re-rank. Every window has a total order.
     "q153_ann_pq" ->
-      s"""WITH u AS ($normalizedVectors),
-         subs AS (
-           SELECT vec_id, s, v[s*8+1 : s*8+8] AS sub
-           FROM u, LATERAL (SELECT UNNEST(range(0, 8)) AS s) t),
-         cents AS (
-           SELECT vec_id AS c_id, s, sub AS cv FROM subs
-           WHERE vec_id < 16),
-         cdist AS (
-           SELECT subs.vec_id, subs.s, c_id,
-             CAST(floor(1e12 * list_sum(list_transform(
-               list_zip(sub, cv),
-               p -> (p[1] - p[2]) * (p[1] - p[2])))) AS BIGINT) AS d
-           FROM subs JOIN cents ON cents.s = subs.s),
-         codes AS (
-           SELECT vec_id, s, c_id AS code FROM (
-             SELECT vec_id, s, c_id,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                 ORDER BY d ASC, c_id ASC) AS rn
-             FROM cdist) WHERE rn = 1),
-         qids AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 5),
-         qdist AS (
-           SELECT vec_id AS q_id, s, c_id, d FROM cdist
-           WHERE vec_id IN (SELECT vec_id FROM qids)),
-         adc AS (
-           SELECT q.q_id, c.vec_id,
-             CAST(SUM(q.d) AS BIGINT) AS adc_pico
-           FROM codes c JOIN qdist q
-             ON q.s = c.s AND q.c_id = c.code
-           WHERE c.vec_id <> q.q_id
-           GROUP BY 1, 2),
+      s"""WITH $pqAdcCtes,
          cand AS (
            SELECT q_id, vec_id FROM (
              SELECT q_id, vec_id,
                ROW_NUMBER() OVER (PARTITION BY q_id
                  ORDER BY adc_pico ASC, vec_id ASC) AS rn
              FROM adc) WHERE rn <= 40),
-         scored AS (
-           SELECT cand.q_id, cand.vec_id,
-             list_sum(list_transform(list_zip(uq.v, uc.v),
-               p -> p[1] * p[2])) AS cosine
-           FROM cand
-           JOIN u uq ON uq.vec_id = cand.q_id
-           JOIN u uc ON uc.vec_id = cand.vec_id)
-         SELECT q_id, vec_id, cosine, CAST(rk AS INTEGER) AS rk FROM (
-           SELECT q_id, vec_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-               ORDER BY cosine DESC, vec_id ASC) AS rk
-           FROM scored)
-         WHERE rk <= 10""",
-    // q156: persisted-PQ serving — the q153 oracle's prefix through
+         $cosineTop10Sql""",
+    // q156: persisted-PQ serving — q153's pqAdcCtes through
     // the ADC aggregate (no re-rank; the parquet roundtrip on the
     // Spark side is exact, so the same CTE chain predicts the served
     // batch). SUM cast to BIGINT per the HUGEINT lint rule.
@@ -9119,7 +8902,7 @@ object SparkEntry {
     // level arithmetic is all BIGINT: rem DIV u each, remainder
     // tokens one each to the lowest unsaturated ranks.
     "q336_epoch_waterfill" ->
-      """WITH dom AS (
+      ("""WITH dom AS (
            SELECT source, lang,
              CAST(SUM(len(regexp_extract_all(text,
                '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT)
@@ -9128,54 +8911,13 @@ object SparkEntry {
          caps AS (
            SELECT source, lang, avail_tokens,
              CAST(4 * avail_tokens AS BIGINT) AS cap_tokens FROM dom),
-         tot AS (
-           SELECT CAST(2 * SUM(avail_tokens) AS BIGINT) AS b,
-                  CAST(COUNT(*) AS BIGINT) AS m FROM dom),
-         ranked AS (
-           SELECT c.*, t.b, t.m,
-             CAST(ROW_NUMBER() OVER (ORDER BY cap_tokens ASC,
-               source ASC, lang ASC) AS BIGINT) AS rk,
-             CAST(SUM(cap_tokens) OVER (ORDER BY cap_tokens ASC,
-               source ASC, lang ASC) AS BIGINT) AS pref
-           FROM caps c, tot t),
-         lvl AS (
-           SELECT
-             COALESCE(CAST(SUM(CASE WHEN pref - cap_tokens
-               + cap_tokens * (m - rk + 1) <= b THEN 1 ELSE 0 END)
-               AS BIGINT), 0) AS k,
-             COALESCE(CAST(SUM(CASE WHEN pref - cap_tokens
-               + cap_tokens * (m - rk + 1) <= b THEN cap_tokens
-               ELSE 0 END) AS BIGINT), 0) AS prefk,
-             MAX(b) AS b2, MAX(m) AS m2
-           FROM ranked)
-         SELECT r.source, r.lang, r.avail_tokens, r.cap_tokens,
-           CAST(CASE WHEN r.rk <= l.k THEN r.cap_tokens
-             ELSE (l.b2 - l.prefk) // (l.m2 - l.k)
-               + CASE WHEN r.rk - l.k <= (l.b2 - l.prefk) % (l.m2 - l.k)
-                 THEN 1 ELSE 0 END END AS BIGINT) AS alloc_tokens,
-           r.rk <= l.k AS saturated,
-           CAST(CASE WHEN r.rk <= l.k THEN r.cap_tokens
-             ELSE (l.b2 - l.prefk) // (l.m2 - l.k)
-               + CASE WHEN r.rk - l.k <= (l.b2 - l.prefk) % (l.m2 - l.k)
-                 THEN 1 ELSE 0 END END * 1000000 // r.avail_tokens
-             AS BIGINT) AS epochs_ppm
-         FROM ranked r, lvl l""",
+         """ + waterfillSql("dom")),
     // q337: IPS/SNIPS with empirical behavior propensities — the IPS
     // weight is the exact rational n_x/n_{x,a}, carried as ONE
     // milli-scaled truncating DIV per (user, action) cell, so both
     // engines truncate identically.
     "q337_ips_policy_eval" ->
-      """WITH ev AS (
-           SELECT user_id, event_type,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
-           FROM events),
-         ua AS (
-           SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n_ua,
-             CAST(SUM(cents) AS BIGINT) AS r_ua
-           FROM ev GROUP BY 1, 2),
-         u AS (SELECT user_id, CAST(SUM(n_ua) AS BIGINT) AS n_u
-           FROM ua GROUP BY 1),
-         n AS (SELECT CAST(SUM(n_u) AS BIGINT) AS n FROM u),
+      s"""WITH $policyLogCtes,
          w AS (
            SELECT ua.event_type, ua.n_ua, ua.r_ua,
              u.n_u * 1000 // ua.n_ua AS w_e3
@@ -9291,17 +9033,11 @@ object SparkEntry {
              AS rloo_adv_milli,
            CAST(n + 1 - rk * 2 AS BIGINT) AS centered_rank_x2
          FROM r""",
-    // q341: cross-doc duplicated-span fraction — the q332 shingle
-    // space (5-word grams, per-doc distinct); a shingle is duplicated
+    // q341: cross-doc duplicated-span fraction — spanShingleCtes
+    // (5-word grams, per-doc distinct); a shingle is duplicated
     // iff its census spans >= 2 docs.
     "q341_dup_span_fraction" ->
-      s"""WITH words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w
-           FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS sh
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
+      s"""WITH $spanShingleCtes,
          census AS (
            SELECT sh, CAST(COUNT(*) AS BIGINT) AS n_docs
            FROM sh GROUP BY 1)
@@ -9361,21 +9097,11 @@ object SparkEntry {
            in_r1, in_r2,
            in_r2 AND rk2 * 2 <= k2 + 1 AS champion
          FROM r4""",
-    // q343: doubly-robust off-policy value — q337's weights, a coarse
+    // q343: doubly-robust off-policy value — q337's policyLogCtes, a coarse
     // per-action model, signed residual mass in HUGEINT, one trailing
     // signed DIV by n*1000.
     "q343_doubly_robust" ->
-      """WITH ev AS (
-           SELECT user_id, event_type,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
-           FROM events),
-         ua AS (
-           SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n_ua,
-             CAST(SUM(cents) AS BIGINT) AS r_ua
-           FROM ev GROUP BY 1, 2),
-         u AS (SELECT user_id, CAST(SUM(n_ua) AS BIGINT) AS n_u
-           FROM ua GROUP BY 1),
-         n AS (SELECT CAST(SUM(n_u) AS BIGINT) AS n FROM u),
+      s"""WITH $policyLogCtes,
          model AS (
            SELECT event_type,
              CAST(SUM(r_ua) * 1000 // SUM(n_ua) AS BIGINT) AS rhat_milli
@@ -9432,27 +9158,7 @@ object SparkEntry {
     // denominators len - n + 1, no geometric mean (no libm on either
     // side).
     "q345_bleu_overlap" ->
-      s"""WITH docs AS (
-           SELECT doc_id, string_split($normText, ' ') AS w,
-             CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-               % 10 < 8 THEN 'train' ELSE 'eval' END AS split
-           FROM documents
-           WHERE len(string_split($normText, ' ')) >= 5),
-         grams AS (
-           SELECT DISTINCT doc_id, split,
-             substr(md5(array_to_string(w[i:i+4], ' ')), 1, 16) AS g
-           FROM docs, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t),
-         ov AS (
-           SELECT e.doc_id AS q_id, t.doc_id AS td,
-             CAST(COUNT(*) AS BIGINT) AS shared
-           FROM grams e JOIN grams t
-             ON e.g = t.g AND e.split = 'eval' AND t.split = 'train'
-           GROUP BY 1, 2),
-         truth AS MATERIALIZED (
-           SELECT q_id, td AS rel FROM (
-             SELECT q_id, td, shared, ROW_NUMBER() OVER (PARTITION BY q_id
-               ORDER BY shared DESC, td ASC) AS rn FROM ov)
-           WHERE rn = 1 AND shared >= 5),
+      s"""WITH ${splitTwinCtes(5)},
          lens AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS len FROM docs),
          n1 AS (
            SELECT doc_id, substr(md5(w[i]), 1, 16) AS g,
@@ -9660,13 +9366,7 @@ object SparkEntry {
     // censuses from the raw corpus; hash equality proves the parquet
     // artifact round-trip loses nothing.
     "q350_dup_span_incremental" ->
-      s"""WITH words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w
-           FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS sh
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
+      s"""WITH $spanShingleCtes,
          hist AS (
            SELECT sh, CAST(COUNT(*) AS BIGINT) AS n_hist
            FROM sh WHERE doc_id % 5 <> 0 GROUP BY 1),
@@ -9687,35 +9387,12 @@ object SparkEntry {
          LEFT JOIN hist h ON h.sh = b.sh
          JOIN bc c ON c.sh = b.sh
          GROUP BY 1""",
-    // q351: canonicalization over q44's recursive-CTE components —
+    // q351: canonicalization over componentCtes' components —
     // longest member wins (n_chars desc, doc_id asc via rank window,
     // not struct-argmax).
     "q351_canonicalize_clusters" ->
-      s"""WITH RECURSIVE words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT id_a, id_b FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, re.r FROM edges e JOIN reach re ON e.dst = re.id),
-         comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY 1),
+      s"""WITH RECURSIVE ${shingleCtes()},
+         ${componentCtes()},
          member AS (
            SELECT d.doc_id, CAST(d.n_chars AS BIGINT) AS n_chars,
              CAST(COALESCE(c.comp, d.doc_id) AS BIGINT) AS cluster
@@ -9948,39 +9625,13 @@ object SparkEntry {
            over_2048, lost_2048,
            CAST(lost_2048 * 1000000 // tokens_total AS BIGINT)
          FROM base""",
-    // q359: the q336 water-fill over q297's soft-dedup-effective
+    // q359: q336's waterfillSql over q297's soft-dedup-effective
     // token supply (per-doc ntok*w DIV 1e6, per-term truncation);
     // same saturated-prefix law, raw_tokens joined for the haircut.
     "q359_effective_waterfill" ->
-      s"""WITH RECURSIVE words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         prs AS (
-           SELECT id_a, id_b FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM prs
-           UNION SELECT id_b, id_a FROM prs),
-         reach(id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, re.r FROM edges e JOIN reach re ON e.dst = re.id),
-         comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY 1),
-         keyed AS (
-           SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS comp
-           FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
+      s"""WITH RECURSIVE ${shingleCtes()},
+         ${componentCtes("prs")},
+         ${keyedCte()},
          sz AS (SELECT comp, CAST(COUNT(*) AS BIGINT) AS cluster_size
            FROM keyed GROUP BY 1),
          wts AS (
@@ -9999,39 +9650,7 @@ object SparkEntry {
          caps AS (
            SELECT source, lang, raw_tokens, avail_tokens,
              CAST(4 * avail_tokens AS BIGINT) AS cap_tokens FROM cells),
-         tot AS (
-           SELECT CAST(2 * SUM(avail_tokens) AS BIGINT) AS b,
-                  CAST(COUNT(*) AS BIGINT) AS m FROM cells),
-         ranked AS (
-           SELECT c.*, t.b, t.m,
-             CAST(ROW_NUMBER() OVER (ORDER BY cap_tokens ASC,
-               source ASC, lang ASC) AS BIGINT) AS rk,
-             CAST(SUM(cap_tokens) OVER (ORDER BY cap_tokens ASC,
-               source ASC, lang ASC) AS BIGINT) AS pref
-           FROM caps c, tot t),
-         lvl AS (
-           SELECT
-             COALESCE(CAST(SUM(CASE WHEN pref - cap_tokens
-               + cap_tokens * (m - rk + 1) <= b THEN 1 ELSE 0 END)
-               AS BIGINT), 0) AS k,
-             COALESCE(CAST(SUM(CASE WHEN pref - cap_tokens
-               + cap_tokens * (m - rk + 1) <= b THEN cap_tokens
-               ELSE 0 END) AS BIGINT), 0) AS prefk,
-             MAX(b) AS b2, MAX(m) AS m2
-           FROM ranked)
-         SELECT r.source, r.lang, r.avail_tokens, r.cap_tokens,
-           CAST(CASE WHEN r.rk <= l.k THEN r.cap_tokens
-             ELSE (l.b2 - l.prefk) // (l.m2 - l.k)
-               + CASE WHEN r.rk - l.k <= (l.b2 - l.prefk) % (l.m2 - l.k)
-                 THEN 1 ELSE 0 END END AS BIGINT) AS alloc_tokens,
-           r.rk <= l.k AS saturated,
-           CAST(CASE WHEN r.rk <= l.k THEN r.cap_tokens
-             ELSE (l.b2 - l.prefk) // (l.m2 - l.k)
-               + CASE WHEN r.rk - l.k <= (l.b2 - l.prefk) % (l.m2 - l.k)
-                 THEN 1 ELSE 0 END END * 1000000 // r.avail_tokens
-             AS BIGINT) AS epochs_ppm,
-           r.raw_tokens
-         FROM ranked r, lvl l""",
+         ${waterfillSql("cells", ", r.raw_tokens")}""",
     // q360: word fertility — corpus-grain integer ppm over the
     // (lang, source) cell's token/word/char sums.
     "q360_word_fertility" ->
@@ -10253,17 +9872,7 @@ object SparkEntry {
     // an md5-decided 20% skip for rater 3; exact-integer ratio with
     // the per-unit term scaled by 2 (m_u in {2,3}).
     "q368_krippendorff" ->
-      """WITH rated AS (
-           SELECT d.doc_id,
-             CASE WHEN ('0x' || substr(md5('rate:' ||
-                 CAST(d.doc_id AS VARCHAR) || ':' ||
-                 CAST(r.r AS VARCHAR)), 1, 15))::BIGINT % 10 < r.r
-               THEN CASE d.lang WHEN 'de' THEN 'en' WHEN 'en' THEN 'es'
-                 WHEN 'es' THEN 'fr' WHEN 'fr' THEN 'zh' ELSE 'de' END
-               ELSE d.lang END AS label
-           FROM documents d, (SELECT UNNEST([1,2,3]) AS r) r
-           WHERE NOT (r.r = 3 AND ('0x' || substr(md5('skip:' ||
-             CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 10 < 2)),
+      s"""WITH ${ratedCte(skipRater3 = true)},
          nic AS (SELECT doc_id, label, CAST(COUNT(*) AS BIGINT) AS c
                  FROM rated GROUP BY 1, 2),
          per_unit AS (
@@ -10517,30 +10126,13 @@ object SparkEntry {
                 AS kept_mean_score_micro
             FROM g"""
          }.mkString("\n         UNION ALL\n         ")}""",
-    // q376: banding planner — q21's exact-Jaccard pair CTE feeds the
+    // q376: banding planner — shingleCtes' exact-Jaccard pairs feed the
     // S-curve square-chain expression GENERATED by the same function
     // the Spark plan uses (Dedup.sCurvePSql).
     "q376_banding_planner" ->
-      s"""WITH words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
+      s"""WITH ${shingleCtes()},
          prs AS (
-           SELECT CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jaccard
-           FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5)
+           ${jaccardPairs(s"$jaccardSql AS jaccard")})
          ${Seq((1, 64), (2, 32), (4, 16), (8, 8), (16, 4)).map {
            case (r, b) =>
              s"""SELECT CAST($r AS BIGINT) AS rows_per_band,
@@ -10557,11 +10149,7 @@ object SparkEntry {
     // q377: stride efficiency — q306's chunk CTE collapsed to doc
     // grain, re-keyed onto sources; waste = encoded - raw tokens.
     "q377_stride_efficiency" ->
-      s"""WITH words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         d AS (
-           SELECT doc_id, w, CAST(len(w) AS BIGINT) AS n FROM words
-           WHERE len(w) > 0 AND w[1] <> ''),
+      s"""WITH $wordDocsCtes,
          k AS (
            SELECT doc_id, n, GREATEST(1,
              (n - ${TrainingPrep.chunkWin - TrainingPrep.chunkStride}
@@ -10640,27 +10228,10 @@ object SparkEntry {
            COUNT(DISTINCT CASE WHEN span_lang <> 'und' THEN span_lang END)
              >= 2 AS mixed
          FROM lagged GROUP BY 1""",
-    // q379: funnel significance under Holm — q112's funnel CTEs, the
+    // q379: funnel significance under Holm — q112's funnelCtes, the
     // q374 randomization device per step, cross-multiplied Holm.
     "q379_funnel_significance" ->
-      """WITH l1 AS (
-           SELECT user_id,
-             MIN(CASE WHEN event_type = 'view' THEN ts END) AS t1
-           FROM events GROUP BY user_id),
-         l2 AS (
-           SELECT e.user_id,
-             MIN(CASE WHEN e.event_type = 'click' AND e.ts > l1.t1
-                  AND e.ts <= l1.t1 + INTERVAL 48 HOURS
-                  THEN e.ts END) AS t2
-           FROM events e JOIN l1 USING (user_id)
-           GROUP BY e.user_id, l1.t1),
-         l3 AS (
-           SELECT e.user_id,
-             MIN(CASE WHEN e.event_type = 'purchase' AND e.ts > l2.t2
-                  AND e.ts <= l2.t2 + INTERVAL 48 HOURS
-                  THEN e.ts END) AS t3
-           FROM events e JOIN l2 USING (user_id)
-           GROUP BY e.user_id, l2.t2),
+      s"""WITH $funnelCtes,
          fl AS (
            SELECT l1.user_id,
              CASE WHEN l1.t1 IS NULL THEN 0 WHEN l2.t2 IS NULL THEN 1
@@ -10842,48 +10413,10 @@ object SparkEntry {
            (CAST(n_gaps AS HUGEINT) * q - CAST(s AS HUGEINT) * s)
              * 1000000 // (CAST(s AS HUGEINT) * s) < 40000 AS bot
          FROM a""",
-    // q383: packing policy — the q305 recursive first-fit replay
-    // (q335's precedent) with the lower-bound comparison tail.
+    // q383: packing policy — ffdStepCtes (the q305 recursive
+    // first-fit replay) with the lower-bound comparison tail.
     "q383_packing_policy" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id,
-             CAST(len(regexp_extract_all(text,
-               '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS ntok
-           FROM documents),
-         items AS (
-           SELECT doc_id, ntok, ntok + 1 AS item,
-             CAST(ROW_NUMBER() OVER (ORDER BY ntok DESC, doc_id ASC)
-               AS BIGINT) AS rk
-           FROM toks),
-         ch AS (
-           SELECT doc_id, ntok, item, (rk - 1) // 256 AS chunk,
-             CAST(ROW_NUMBER() OVER (PARTITION BY (rk - 1) // 256
-               ORDER BY rk ASC) AS BIGINT) AS pos
-           FROM items),
-         step AS (
-           SELECT chunk, CAST(0 AS BIGINT) AS pos,
-             CAST([] AS BIGINT[]) AS fills,
-             CAST([] AS STRUCT(doc_id BIGINT, win BIGINT, ntok BIGINT,
-               item BIGINT)[]) AS asg
-           FROM (SELECT DISTINCT chunk FROM ch) c
-           UNION ALL
-           SELECT s.chunk, s.pos + 1,
-             CASE WHEN p.p = 0 THEN list_append(s.fills, d.item)
-               ELSE list_concat(list_concat(
-                 list_slice(s.fills, 1, p.p - 1),
-                 [s.fills[p.p] + d.item]),
-                 list_slice(s.fills, p.p + 1, len(s.fills))) END,
-             list_append(s.asg, CASE WHEN p.p = 0
-               THEN {'doc_id': d.doc_id,
-                     'win': CAST(len(s.fills) + 1 AS BIGINT),
-                     'ntok': d.ntok, 'item': d.item}
-               ELSE {'doc_id': d.doc_id, 'win': p.p,
-                     'ntok': d.ntok, 'item': d.item} END)
-           FROM step s
-           JOIN ch d ON d.chunk = s.chunk AND d.pos = s.pos + 1,
-           LATERAL (SELECT CAST(COALESCE(list_position(
-              list_transform(s.fills, f -> f + d.item <= 4096), true), 0)
-              AS BIGINT) AS p) p),
+      s"""WITH RECURSIVE $ffdStepCtes,
          fin AS (
            SELECT s.chunk, s.fills FROM step s
            JOIN (SELECT chunk, MAX(pos) AS mp FROM step GROUP BY 1) m
@@ -10930,31 +10463,13 @@ object SparkEntry {
            doc_id, start_offset, n_bytes, CAST(n_hits AS BIGINT) AS n_hits
          FROM h, LATERAL (SELECT UNNEST(range(j0, j0 + n_hits)) AS j) t
          WHERE n_hits >= 1""",
-    // q385: dedup yield curve — the q21 pair CTE at the loosest
+    // q385: dedup yield curve — shingleCtes' pairs at the loosest
     // threshold, one arm per tightening threshold.
     "q385_dedup_yield" ->
-      s"""WITH words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
+      s"""WITH ${shingleCtes()},
          prs AS (
-           SELECT id_a, id_b,
-             CAST(n_common AS DOUBLE) /
-               CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jaccard
-           FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE)
-             >= ${Dedup.yieldThresholdsPpm.head} / 1000000.0),
+           ${jaccardPairs(s"id_a, id_b, $jaccardSql AS jaccard",
+             s"${Dedup.yieldThresholdsPpm.head} / 1000000.0")}),
          toks AS (
            SELECT doc_id, CAST(len(regexp_extract_all(text,
              '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS ntok
@@ -11083,27 +10598,12 @@ object SparkEntry {
            CAST(SUM(lcp) * 1000000 // SUM(len_s) AS BIGINT) AS shared_ppm
          FROM lcps GROUP BY 1""",
     // q390: quality-vs-dup calibration — q212's scored docs against
-    // q21's verified pair membership, fixed-width deciles.
+    // shingleCtes' verified pair membership, fixed-width deciles.
     "q390_quality_dup" ->
       s"""WITH sc AS ($scoredDocsSql),
-         words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
+         ${shingleCtes()},
          prs AS (
-           SELECT id_a, id_b FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
+           ${jaccardPairs("id_a, id_b")}),
          dup AS (
            SELECT DISTINCT doc_id FROM (
              SELECT id_a AS doc_id FROM prs
@@ -11158,39 +10658,13 @@ object SparkEntry {
          SELECT c.split, c.source, c.o, c.r_tot, c.c_tot,
            c.contrib_micro, g.chi2_micro, g.dof
          FROM contrib c, gl g""",
-    // q392: cluster-size profile — the q44 recursive-CC prefix
+    // q392: cluster-size profile — componentCtes + keyedCte
     // (exact pairs; equal to the banded path whenever recall is
     // complete, the q22/q297 convention) + the size histogram.
     "q392_cluster_profile" ->
-      s"""WITH RECURSIVE words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle
-             AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         prs AS (
-           SELECT id_a, id_b FROM common
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM prs
-           UNION SELECT id_b, id_a FROM prs),
-         reach(id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, re.r FROM edges e JOIN reach re ON e.dst = re.id),
-         comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY 1),
-         keyed AS (
-           SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS comp
-           FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
+      s"""WITH RECURSIVE ${shingleCtes()},
+         ${componentCtes("prs")},
+         ${keyedCte()},
          sz AS (SELECT comp, CAST(COUNT(*) AS BIGINT) AS size
            FROM keyed GROUP BY 1),
          prof AS (
@@ -11403,18 +10877,7 @@ object SparkEntry {
     * last-event + gap ≤ max-event-time − watermark delay).
     */
   private val sessionSegmentsOracle: String =
-    """WITH flagged AS (
-         SELECT user_id, event_id, ts, value,
-           CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                  OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                THEN 1 ELSE 0 END AS new_sess
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
-       numbered AS (
-         SELECT user_id, ts, value,
-           SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-         FROM flagged),
+    s"""WITH ${sessionCtes()},
        sess AS (
          SELECT user_id, session_idx,
            MIN(epoch_us(ts)) AS t_start_us, MAX(epoch_us(ts)) AS t_end_us,
@@ -11436,19 +10899,7 @@ object SparkEntry {
     * tiebreak so tied timestamps order deterministically.
     */
   private val sessionWindowOracle: String =
-    """WITH flagged AS (
-         SELECT user_id, event_id, ts, value,
-           CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                  OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                THEN 1 ELSE 0 END AS new_sess
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
-       numbered AS (
-         SELECT user_id, ts, value,
-           SUM(new_sess) OVER (PARTITION BY user_id
-             ORDER BY ts ASC, event_id ASC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s_idx
-         FROM flagged)
+    s"""WITH ${sessionCtes("s_idx")}
        SELECT user_id, MIN(ts) AS t_start,
          MAX(ts) + INTERVAL 30 MINUTES AS t_end,
          COUNT(*) AS n_events,
@@ -11476,34 +10927,6 @@ object SparkEntry {
        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        GROUP BY 1"""
 
-  /** Exhaustive near-dup SQL restricted to pairs touching the new
-    * batch — shared verbatim by q45 (in-session) and q46 (persisted
-    * signatures): the two operators differ only in plan, never in
-    * contract.
-    */
-  private lazy val incrementalDedupOracle: String =
-    s"""WITH words AS (
-         SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-       sh AS (
-         SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-         FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-         WHERE len(w) >= 5),
-       sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-       common AS (
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-         FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         GROUP BY 1, 2)
-       SELECT id_a, id_b, n_common,
-         CAST(n_common AS DOUBLE) /
-           CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jaccard
-       FROM common
-       JOIN sizes sa ON sa.doc_id = id_a
-       JOIN sizes sb ON sb.doc_id = id_b
-       WHERE CAST(n_common AS DOUBLE) /
-           CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5
-         AND (id_a % 5 = 0 OR id_b % 5 = 0)"""
-
-  /** SQL twin of TextAnalysis.quality — shared by q41 and q69. */
   /** Generated q196 oracle: the same repeated-squaring multiply
     * chains as Dedup.lshPlanner — NO pow(), no floors; every literal
     * double-cast so DuckDB never routes through DECIMAL arithmetic.
@@ -11554,6 +10977,7 @@ object SparkEntry {
        FROM p"""
   }
 
+  /** SQL twin of TextAnalysis.quality — shared by q41 and q69. */
   private val qualityOracle: String =
     """SELECT doc_id,
        CAST(length(text) AS BIGINT) AS n_chars,
@@ -11767,11 +11191,7 @@ object SparkEntry {
     */
   private def bradleyTerryOracleSql(iters: Int): String = {
     val base =
-      """cents AS (
-           SELECT user_id, CAST(ts AS DATE) AS d, event_type,
-             CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT))
-               AS BIGINT) AS cents
-           FROM events GROUP BY 1, 2, 3),
+      s"""$spendCentsCte,
          ranked AS (
            SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY user_id, d
                ORDER BY cents DESC, event_type ASC) AS BIGINT) AS rk
@@ -11828,34 +11248,21 @@ object SparkEntry {
          JOIN pi$iters p ON p.t = ty.t"""
   }
 
-  /** SQL twin of Experiment.rocAuc: the q41 stopword/token twins for
-    * the score, the q40 marker argmax for the label (en is FIRST in
-    * the declared tie order, so pred = 'en' iff en-score == best and
-    * best > 0), then the doubled-rank Mann-Whitney identity.
-    */
   /** q22 oracle body (exact-Jaccard verified pairs), shared with q21
     * (exhaustive shingle Jaccard) and the q220 replay.
     */
   private lazy val minhashPairsOracle: String =
-    s"""WITH words AS (
-           SELECT doc_id, string_split($normText, ' ') AS w FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS shingle
-           FROM words, LATERAL (SELECT UNNEST(range(1, len(w) - 3)) AS i) t
-           WHERE len(w) >= 5),
-         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-         common AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-           FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT id_a, id_b, n_common,
-           CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jaccard
-         FROM common
-         JOIN sizes sa ON sa.doc_id = id_a
-         JOIN sizes sb ON sb.doc_id = id_b
-         WHERE CAST(n_common AS DOUBLE) /
-             CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.5"""
+    s"""WITH ${shingleCtes()}
+         ${jaccardPairs(s"id_a, id_b, n_common, $jaccardSql AS jaccard")}"""
+
+  /** Exhaustive near-dup SQL restricted to pairs touching the new
+    * batch — shared verbatim by q45 (in-session) and q46 (persisted
+    * signatures): the two operators differ only in plan, never in
+    * contract.
+    */
+  private lazy val incrementalDedupOracle: String =
+    s"""$minhashPairsOracle
+         AND (id_a % 5 = 0 OR id_b % 5 = 0)"""
 
   /** q30/q31 oracle bodies, shared with the q228 recall audit. */
   private lazy val annBruteOracle: String =
@@ -11893,21 +11300,8 @@ object SparkEntry {
            JOIN chunks q ON c.c = q.c AND c.ck = q.ck
            WHERE q.vec_id IN (SELECT vec_id FROM qids)
              AND c.vec_id != q.vec_id),
-         scored AS (
-           SELECT cand.q_id, cand.vec_id,
-             list_sum(list_transform(list_zip(uq.v, uc.v), p -> p[1] * p[2])) AS cosine
-           FROM cand
-           JOIN u uq ON uq.vec_id = cand.q_id
-           JOIN u uc ON uc.vec_id = cand.vec_id)
-         SELECT q_id, vec_id, cosine, CAST(rk AS INTEGER) AS rk FROM (
-           SELECT q_id, vec_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id ASC) AS rk
-           FROM scored)
-         WHERE rk <= 10"""
+         $cosineTop10Sql"""
 
-  /** Shared (doc_id, score, is_en) SQL body — the q212/q218 scored
-    * frame (Experiment.rocAucScored's twin).
-    */
   /** SQL twin of TextAnalysis.bm25Search (q114); also the stage-1
     * base of q246.
     */
@@ -11977,6 +11371,9 @@ object SparkEntry {
          FROM m"""
   }
 
+  /** Shared (doc_id, score, is_en) SQL body — the q212/q218 scored
+    * frame (Experiment.rocAucScored's twin).
+    */
   private def scoredDocsSql: String = {
     val scores = TextAnalysis.langMarkers.map { case (lang, ws) =>
       lang -> s"len(regexp_extract_all(text, '\\b(${ws.mkString("|")})\\b'))"
@@ -11993,18 +11390,15 @@ object SparkEntry {
          FROM documents"""
   }
 
+  /** SQL twin of Experiment.rocAuc: the q41 stopword/token twins for
+    * the score, the q40 marker argmax for the label (en is FIRST in
+    * the declared tie order, so pred = 'en' iff en-score == best and
+    * best > 0), then the doubled-rank Mann-Whitney identity.
+    */
   private def rocAucOracle: String = {
     s"""WITH sc AS (
          $scoredDocsSql),
-       bysc AS (
-         SELECT score, CAST(COUNT(*) AS BIGINT) AS c,
-           CAST(SUM(CASE WHEN is_en THEN 1 ELSE 0 END) AS BIGINT) AS p
-         FROM sc GROUP BY 1),
-       rk AS (
-         SELECT score, c, p,
-           CAST(COALESCE(SUM(c) OVER (ORDER BY score ASC ROWS BETWEEN
-             UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
-         FROM bysc),
+       $scoreRankCtes,
        agg AS (
          SELECT CAST(SUM(p) AS BIGINT) AS n_pos,
            CAST(SUM(c) - SUM(p) AS BIGINT) AS n_neg,

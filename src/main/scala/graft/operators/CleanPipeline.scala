@@ -120,7 +120,7 @@ object CleanPipeline {
     qualityVerdictOn(graft.sources.Tables.load(spark, sfDir, "documents"))
 
   def qualityVerdictOn(docs: DataFrame): DataFrame = {
-    import TextAnalysis.{normalizedText, emailPattern, stopwordPattern}
+    import TextAnalysis.{normWords, emailPattern, stopwordPattern}
     val planted = docs.select(col("doc_id"),
       concat(
         when(col("doc_id") % 7 === 0,
@@ -130,7 +130,7 @@ object CleanPipeline {
         when(col("doc_id") % 11 === 0, lit(" caf\u00c3\u00a9"))
           .otherwise(lit(""))).as("text"))
     val words = planted
-      .select(col("doc_id"), split(normalizedText(col("text")), " ").as("w"))
+      .select(col("doc_id"), normWords(col("text")).as("w"))
       .where(size(col("w")) >= 5)
     val rep = words
       .select(col("doc_id"), explode(transform(
@@ -509,7 +509,7 @@ object CleanPipeline {
     }.reduce(_ + _)
     val perDoc = docs
       .select(col("source"),
-        split(TextAnalysis.normalizedText(col("text")), " ").as("w"))
+        TextAnalysis.normWords(col("text")).as("w"))
       .select(col("source"), size(col("w")).cast("long").as("n_words"),
         hits.as("n_hits"), score.as("score"))
       .where(col("n_words") >= 1L)

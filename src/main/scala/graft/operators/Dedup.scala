@@ -21,7 +21,7 @@ import graft.sources.Tables
   */
 object Dedup {
 
-  import TextAnalysis.normalizedText
+  import TextAnalysis.{normWords, normalizedText}
 
   /** Exact dedup: group identical (normalized) texts, keep the lowest
     * doc_id as the survivor. One shuffle on the digest — never on the
@@ -47,7 +47,7 @@ object Dedup {
     * malformed lines).
     */
   def shingles(docs: DataFrame, n: Int, distinctPerDoc: Boolean = true): DataFrame = {
-    val words = split(normalizedText(col("text")), " ")
+    val words = normWords(col("text"))
     val exploded = docs
       .filter(size(words) >= n)
       .select(
@@ -887,7 +887,7 @@ object Dedup {
   def simhash(docs: DataFrame): DataFrame = {
     val toks = docs.select(
       col("doc_id"),
-      explode(split(normalizedText(col("text")), " ")).as("tok"))
+      explode(normWords(col("text"))).as("tok"))
       .withColumn("th",
         conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long"))
     val bitSums = (0 until simhashBits).map { b =>
@@ -1088,7 +1088,6 @@ object Dedup {
     * internally.
     */
   val BloomBits = 1 << 16
-  val BloomWords: Int = BloomBits / 32 // 2048
 
   /** The q237 driver entry: BLOOM-PREFILTERED DECONTAMINATION — the
     * scale form of q83's eval-overlap hygiene: instead of
@@ -1116,10 +1115,9 @@ object Dedup {
     */
   def bloomDecontaminate(
       spark: SparkSession, sfDir: String, n: Int = 3): DataFrame = {
-    import graft.operators.TextAnalysis.normalizedText
     val docs = Tables.load(spark, sfDir, "documents")
     def grams(df: DataFrame): DataFrame = {
-      val w = split(normalizedText(col("text")), " ")
+      val w = normWords(col("text"))
       df.select(col("doc_id"), w.as("w"))
         .where(size(col("w")) >= n)
         .select(explode(transform(
@@ -1898,7 +1896,7 @@ object Dedup {
   // OPTIMIZATION_r18.md (shingle-family entries).
   private def docShingleSets(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"),
-      split(TextAnalysis.normalizedText(col("text")), " ").as("w"))
+      TextAnalysis.normWords(col("text")).as("w"))
     .where(size(col("w")) >= 5)
     .select(col("doc_id"), col("w"),
       explode(sequence(lit(1), size(col("w")) - 4)).as("i"))

@@ -233,6 +233,11 @@ object TextAnalysis {
   def normalizedText(text: Column): Column =
     regexp_replace(lower(trim(text)), "\\s+", " ")
 
+  /** The words of normalizedText(text), split on single spaces — the
+    * twin of the oracles' `string_split(normText, ' ')`.
+    */
+  def normWords(text: Column): Column = split(normalizedText(text), " ")
+
   def fingerprint(spark: SparkSession, sfDir: String): DataFrame =
     Tables.load(spark, sfDir, "documents")
       .select(
@@ -265,7 +270,7 @@ object TextAnalysis {
     val termArr = array(terms.map(lit): _*)
     val perDoc = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
-        split(normalizedText(col("text")), " ").as("tks"))
+        normWords(col("text")).as("tks"))
       .withColumn("dl", size(col("tks")).cast("long"))
     val stats = perDoc.agg(
       count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
@@ -474,7 +479,7 @@ object TextAnalysis {
   private[graft] def greedyEncodedWords(
       docs: DataFrame, vocabSize: Int): (Array[String], DataFrame) = {
     val words = docs
-      .select(explode(split(normalizedText(col("text")), " ")).as("w"))
+      .select(explode(normWords(col("text"))).as("w"))
       .where(length(col("w")) >= 1)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .localCheckpoint(true) // feeds gram counting AND the encode
@@ -564,7 +569,7 @@ object TextAnalysis {
     */
   private def ulmWords(spark: SparkSession, sfDir: String): DataFrame =
     Tables.load(spark, sfDir, "documents")
-      .select(explode(split(normalizedText(col("text")), " ")).as("w"))
+      .select(explode(normWords(col("text"))).as("w"))
       .where(length(col("w")) >= 1)
       .groupBy(col("w")).agg(count(lit(1)).cast("long").as("c"))
 
@@ -673,7 +678,7 @@ object TextAnalysis {
           expr(ulmViterbiExpr(maxPiece, "bn")).as("n_pieces"))
       Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"),
-          explode(split(normalizedText(col("text")), " ")).as("w"))
+          explode(normWords(col("text"))).as("w"))
         .where(length(col("w")) >= 1)
         .join(broadcast(encoded), "w")
         .groupBy(col("doc_id"))
@@ -795,7 +800,7 @@ object TextAnalysis {
     val counts = Tables.load(spark, sfDir, "documents")
       .select(
         (expr("cast(substring(source, 4) as int)") < 10).as("in_a"),
-        explode(split(normalizedText(col("text")), " ")).as("tok"))
+        explode(normWords(col("text"))).as("tok"))
       .groupBy(col("tok"))
       .agg(
         sum(when(col("in_a"), 1L).otherwise(0L)).as("a"),
@@ -825,7 +830,7 @@ object TextAnalysis {
   def tfidfTerms(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
     val toks = docs.select(col("doc_id"),
-      explode(split(normalizedText(col("text")), " ")).as("tok"))
+      explode(normWords(col("text"))).as("tok"))
     // tf feeds BOTH the df aggregate and the scoring join: persist it
     // so the corpus is tokenized and (doc, token)-shuffled once, not
     // twice (the unpersisted physical plan re-scanned documents);
@@ -1815,7 +1820,7 @@ object TextAnalysis {
       spark: SparkSession, sfDir: String, cap: Int = 50): DataFrame =
     Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
-        explode(split(normalizedText(col("text")), " ")).as("tok"))
+        explode(normWords(col("text"))).as("tok"))
       .distinct()
       .groupBy(col("tok"))
       .agg(count(lit(1)).as("df"),
@@ -1942,7 +1947,7 @@ object TextAnalysis {
   def backoffLmScore(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("lang"),
-        split(normalizedText(col("text")), " ").as("toks"))
+        normWords(col("text")).as("toks"))
       .where(size(col("toks")) >= 3)
     val en = docs.where(col("lang") === "en")
     // position-explode + top-level codegen'd slice/array_join (the
@@ -2029,7 +2034,7 @@ object TextAnalysis {
   def zipfAudit(
       spark: SparkSession, sfDir: String, topR: Int = 100): DataFrame = {
     val counts = Tables.load(spark, sfDir, "documents")
-      .select(explode(split(normalizedText(col("text")), " ")).as("tok"))
+      .select(explode(normWords(col("text"))).as("tok"))
       .where(col("tok") =!= "")
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val w = Window.orderBy(col("c").desc, col("tok").asc)
@@ -2102,7 +2107,7 @@ object TextAnalysis {
   def pmiCollocationsOn(
       docs: DataFrame, minCount: Int, topK: Int): DataFrame = {
     val toks = docs
-      .select(split(normalizedText(col("text")), " ").as("w"))
+      .select(normWords(col("text")).as("w"))
     val uni = toks
       .select(explode(col("w")).as("tok"))
       .where(col("tok") =!= "")
@@ -2237,7 +2242,7 @@ object TextAnalysis {
   def sourceKlOn(docs: DataFrame): DataFrame = {
     val sc = docs
       .select(col("source"),
-        explode(split(normalizedText(col("text")), " ")).as("tok"))
+        explode(normWords(col("text"))).as("tok"))
       .where(col("tok") =!= "")
       .groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).as("c_sw"))
@@ -2301,7 +2306,7 @@ object TextAnalysis {
   def heapsOn(docs: DataFrame, batchSize: Int): DataFrame = {
     val toks = docs
       .select(floor(col("doc_id") / lit(batchSize)).cast("long").as("b"),
-        explode(split(normalizedText(col("text")), " ")).as("tok"))
+        explode(normWords(col("text"))).as("tok"))
       .where(col("tok") =!= "")
     val perBatch = toks.groupBy(col("b")).agg(count(lit(1)).as("t"))
     val newVocab = toks.groupBy(col("tok")).agg(min(col("b")).as("fb"))
@@ -2372,7 +2377,7 @@ object TextAnalysis {
     */
   def ngramDiversity(spark: SparkSession, sfDir: String): DataFrame = {
     val words = Tables.load(spark, sfDir, "documents")
-      .select(split(normalizedText(col("text")), " ").as("w"))
+      .select(normWords(col("text")).as("w"))
     val grams = (1 to 3).map { n =>
       words.where(size(col("w")) >= n)
         .select(lit(n).cast("long").as("n"),
@@ -2529,7 +2534,7 @@ object TextAnalysis {
   def watermarkDetect(spark: SparkSession, sfDir: String,
       flagPpm: Long = 900000L): DataFrame = {
     val vocab: Seq[String] = Tables.load(spark, sfDir, "documents")
-      .select(explode(split(normalizedText(col("text")), " ")).as("v"))
+      .select(explode(normWords(col("text"))).as("v"))
       .where(col("v") =!= "")
       .distinct().collect().map(_.getString(0)).sorted.toSeq
     val vLit = typedlit(vocab)
@@ -2538,7 +2543,7 @@ object TextAnalysis {
       s"CAST(conv(substring(md5(concat($prev, ':', $w)), 1, 15), 16, 10) AS BIGINT) % 2 = 0"
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
-        split(normalizedText(col("text")), " ").as("w"))
+        normWords(col("text")).as("w"))
       .withColumn("n", size(col("w")).cast("long"))
       .where(col("n") >= 2)
       .withColumn("planted", col("doc_id") % 41 === 0)
@@ -2592,7 +2597,7 @@ object TextAnalysis {
     */
   def vocabGrowth(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id"), split(normalizedText(col("text")), " ").as("w"))
+      .select(col("doc_id"), normWords(col("text")).as("w"))
       .withColumn("n", size(col("w")).cast("long"))
       .where(col("n") >= 2)
     // pin: ranked is read by the count action, the bigram explode,
@@ -2751,7 +2756,7 @@ object TextAnalysis {
       spark: SparkSession, sfDir: String, pNum: Int = 9,
       pDen: Int = 10): DataFrame = {
     val words = Tables.load(spark, sfDir, "documents")
-      .select(split(normalizedText(col("text")), " ").as("w"))
+      .select(normWords(col("text")).as("w"))
     val bigrams = words
       .where(size(col("w")) >= 2)
       .select(explode(expr(
@@ -2811,7 +2816,7 @@ object TextAnalysis {
   def specDecodeAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("source"),
-        split(normalizedText(col("text")), " ").as("w"))
+        normWords(col("text")).as("w"))
     val bigrams = docs.where(size(col("w")) >= 2)
       .select(explode(expr(
         "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS prev, w[i] AS nxt))"))
@@ -2889,7 +2894,7 @@ object TextAnalysis {
     import graft.operators.TrainingPrep.{hashBucket, splitBuckets, trainBuckets}
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
-        split(normalizedText(col("text")), " ").as("w"))
+        normWords(col("text")).as("w"))
       .where(size(col("w")) >= 5)
       .withColumn("split",
         when(hashBucket(col("doc_id"), "", splitBuckets) < trainBuckets,
@@ -2991,7 +2996,7 @@ object TextAnalysis {
     import graft.operators.TrainingPrep.{hashBucket, splitBuckets, trainBuckets}
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
-        split(normalizedText(col("text")), " ").as("w"))
+        normWords(col("text")).as("w"))
       .where(size(col("w")) >= 5)
       .withColumn("split",
         when(hashBucket(col("doc_id"), "", splitBuckets) < trainBuckets,
@@ -3169,7 +3174,7 @@ object TextAnalysis {
     */
   def boilerplateHeadGramsOn(docs: DataFrame, k: Int = 10): DataFrame = {
     val counts = docs
-      .select(col("source"), split(normalizedText(col("text")), " ").as("w"))
+      .select(col("source"), normWords(col("text")).as("w"))
       .where(size(col("w")) >= 5)
       .select(col("source"), explode(expr(
         """transform(sequence(1, size(w) - 4),
@@ -3238,7 +3243,7 @@ object TextAnalysis {
     docs
       .select(col("lang"), col("source"),
         bpeTokenCount(col("text")).as("ntok"),
-        size(split(normalizedText(col("text")), " ")).cast("long")
+        size(normWords(col("text"))).cast("long")
           .as("nwords"),
         length(col("text")).cast("long").as("nchars"))
       .where(col("ntok") >= 1L && col("nwords") >= 1L)
@@ -3277,7 +3282,7 @@ object TextAnalysis {
   def unseenVocabOn(docs: DataFrame): DataFrame =
     docs
       .select(col("lang"),
-        explode(split(normalizedText(col("text")), " ")).as("w"))
+        explode(normWords(col("text"))).as("w"))
       .where(length(col("w")) >= 1)
       .groupBy(col("lang"), col("w"))
       .agg(count(lit(1)).cast("long").as("c"))
@@ -3317,7 +3322,7 @@ object TextAnalysis {
   def knDiscountsOn(docs: DataFrame): DataFrame =
     docs
       .select(col("lang"),
-        split(normalizedText(col("text")), " ").as("w"))
+        normWords(col("text")).as("w"))
       .where(size(col("w")) >= 2)
       .select(col("lang"), explode(expr(
         """transform(sequence(1, size(w) - 1),
@@ -3371,7 +3376,7 @@ object TextAnalysis {
   def burstinessCensusOn(docs: DataFrame): DataFrame = {
     val incid = docs
       .select(col("lang"), col("doc_id"),
-        explode(split(normalizedText(col("text")), " ")).as("w"))
+        explode(normWords(col("text"))).as("w"))
       .where(length(col("w")) >= 1)
       .groupBy(col("lang"), col("w"), col("doc_id"))
       .agg(count(lit(1)).cast("long").as("c"))
@@ -3534,7 +3539,7 @@ object TextAnalysis {
     }
     val spans = docs
       .select(col("doc_id"),
-        split(normalizedText(col("text")), " ").as("w"))
+        normWords(col("text")).as("w"))
       .withColumn("n", size(col("w")).cast("long"))
       .where(col("n") >= 1L && element_at(col("w"), 1) =!= "")
       .withColumn("i",

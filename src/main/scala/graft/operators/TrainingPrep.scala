@@ -208,7 +208,7 @@ object TrainingPrep {
   def hashedFeaturesOn(docs: DataFrame, buckets: Int = 1024): DataFrame =
     docs
       .select(col("doc_id"),
-        explode(split(TextAnalysis.normalizedText(col("text")), " "))
+        explode(TextAnalysis.normWords(col("text")))
           .as("tok"))
       .withColumn("h",
         conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long"))
@@ -563,8 +563,7 @@ object TrainingPrep {
   def negSamplingTable(
       spark: SparkSession, sfDir: String, k: Int = 64): DataFrame = {
     val counts = Tables.load(spark, sfDir, "documents")
-      .select(explode(split(
-        TextAnalysis.normalizedText(col("text")), " ")).as("tok"))
+      .select(explode(TextAnalysis.normWords(col("text"))).as("tok"))
       .where(col("tok") =!= "")
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val cd = col("c").cast("double")
@@ -1298,8 +1297,7 @@ object TrainingPrep {
       take: Int = 100): DataFrame = {
     val words = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("lang"),
-        explode(split(
-          graft.operators.TextAnalysis.normalizedText(col("text")), " "))
+        explode(TextAnalysis.normWords(col("text")))
           .as("tok"))
       .where(col("tok") =!= "")
     val dict = words.groupBy(col("tok"))
@@ -1660,7 +1658,7 @@ object TrainingPrep {
         col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long")
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
-        split(graft.operators.TextAnalysis.normalizedText(col("text")), " ")
+        TextAnalysis.normWords(col("text"))
           .as("w"))
       .withColumn("n", size(col("w")).cast("long"))
       .where(col("n") >= 4L)
@@ -1716,7 +1714,7 @@ object TrainingPrep {
       n: Int = 5, flagPpm: Long = 500000L): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
-        split(graft.operators.TextAnalysis.normalizedText(col("text")), " ")
+        TextAnalysis.normWords(col("text"))
           .as("w"))
       .withColumn("nw", size(col("w")).cast("long"))
       .where(col("nw") >= n)
@@ -1807,7 +1805,7 @@ object TrainingPrep {
     val ov = win - stride
     val words = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
-        split(graft.operators.TextAnalysis.normalizedText(col("text")), " ")
+        TextAnalysis.normWords(col("text"))
           .as("w"))
       .withColumn("n", size(col("w")).cast("long"))
       .where(col("n") > 0 && element_at(col("w"), 1) =!= "")
@@ -1906,8 +1904,7 @@ object TrainingPrep {
   def spanCorruption(
       spark: SparkSession, sfDir: String, pct: Int = 15): DataFrame = {
     val toks = Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id"), posexplode(split(
-        graft.operators.TextAnalysis.normalizedText(col("text")), " "))
+      .select(col("doc_id"), posexplode(TextAnalysis.normWords(col("text")))
         .as(Seq("pos", "tok")))
       .where(length(col("tok")) >= 1)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos").asc)

@@ -10,6 +10,14 @@ class BenchSpec extends AnyFunSuite {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet,
       s"mismatch: ${SparkEntry.queries.keySet diff SparkEntry.oracleSql.keySet} " +
         s"/ ${SparkEntry.oracleSql.keySet diff SparkEntry.queries.keySet}")
+    // oracles interpolate shared CTE fragments: one left in a plain
+    // string shows as `$name` / `${...}`, and a plain val read before
+    // its initializer ran shows as the word null
+    val marked = SparkEntry.oracleSql.collect {
+      case (k, v) if """\$[A-Za-z_{]|\bnull\b""".r.findFirstIn(v).isDefined => k
+    }
+    assert(marked.isEmpty,
+      s"uninterpolated or out-of-order fragment in: ${marked.toSeq.sorted}")
   }
 
   test("best-ever baseline is the per-query minimum over all rounds") {
