@@ -39,9 +39,6 @@ object GraftSession {
     // One shuffle partition per core locally; on a 1000-executor
     // cluster this would be ~2-3x total cores. AQE coalesces down.
     .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    // engine extension: rewrite HOF dot-product patterns to the
-    // codegen'd DotProduct expression (graft.plans.RewriteDotProduct)
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     // Skew-join splitting: the 100 TB posture for hot keys (the

@@ -35,7 +35,7 @@ object SparkEntry {
     "q07_distinct" -> (ReferenceQueries.distinctKeys _),
     "q08_topk" -> (ReferenceQueries.topK _),
     "q18_mapreduce_typed" -> (MapReduceSurface.agg2aTyped _),
-    "q89_topk_agg" -> ((s: SparkSession, d: String) => MapReduceSurface.topKPerGroup(s, d)),
+    "q89_topk_agg" -> (MapReduceSurface.topKPerGroup _),
     "q403_tree_reduce" -> ((s: SparkSession, d: String) => MapReduceSurface.treeReduceSum(s, d)),
     "q19_csv_lifecycle" -> (ReferenceQueries.csvLifecycle _),
     "q59_json_lifecycle" -> (ReferenceQueries.jsonLifecycle _),
@@ -70,10 +70,10 @@ object SparkEntry {
     "q108_scd2_merge" -> ((s: SparkSession, d: String) => Relational.scd2Merge(s, d)),
     "q115_pit_join" -> (Relational.pointInTimeJoin _),
     "q117_cdc_replay" -> (Relational.cdcReplay _),
-    "q119_histogram" -> ((s: SparkSession, d: String) => Relational.histogram(s, d)),
+    "q119_histogram" -> (Relational.histogram _),
     "q121_transitions" -> (Relational.transitionMatrix _),
     "q123_interval_coalesce" -> (Relational.coalesceIntervals _),
-    "q124_pagerank" -> ((s: SparkSession, d: String) => Graph.nationPageRank(s, d)),
+    "q124_pagerank" -> (Graph.nationPageRank _),
     "q126_triangles" -> (Graph.nationTriangles _),
     "q127_ohlc" -> (Relational.ohlcBars _),
     "q128_dq_audit" -> (Relational.dqAudit _),
@@ -86,22 +86,17 @@ object SparkEntry {
     "q135_bpe_pairs" -> ((s: SparkSession, d: String) =>
       TextAnalysis.bpePairCandidates(s, d)),
     "q136_sql_frontdoor" -> (Relational.sqlFrontdoor _),
-    "q137_khop_reachability" -> ((s: SparkSession, d: String) =>
-      Graph.khopReachability(s, d)),
+    "q137_khop_reachability" -> (Graph.khopReachability _),
     "q138_variant_path" -> (Relational.variantPath _),
-    "q139_mixture_resample" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.mixtureResample(s, d)),
+    "q139_mixture_resample" -> (TrainingPrep.mixtureResample _),
     "q141_perplexity" -> (TextAnalysis.perplexityScore _),
     "q142_lateral_topk" -> (Relational.lateralTopK _),
-    "q144_hashed_features" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.hashedFeatures(s, d)),
+    "q144_hashed_features" -> (TrainingPrep.hashedFeatures _),
     "q145_listagg_paths" -> (Experiment.listaggPaths _),
-    "q146_bucket_fingerprints" -> ((s: SparkSession, d: String) =>
-      Relational.bucketFingerprints(s, d)),
+    "q146_bucket_fingerprints" -> (Relational.bucketFingerprints _),
     "q147_try_arithmetic" -> (Relational.tryArithmetic _),
     "q148_geo_join" -> (Relational.geoJoin _),
-    "q149_inverted_index" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.invertedIndex(s, d)),
+    "q149_inverted_index" -> (TextAnalysis.invertedIndex _),
     "q150_assoc_rules" -> (Experiment.associationRules _),
     "q151_km_survival" -> (Experiment.kmSurvival _),
     "q152_densify_daily" -> (Relational.densifyDaily _),
@@ -109,494 +104,276 @@ object SparkEntry {
     "q154_equidepth_bins" -> (Relational.equidepthBins _),
     "q155_bpe_train" -> ((s: SparkSession, d: String) =>
       TextAnalysis.bpeTrain(s, d)),
-    "q156_pq_persisted" -> ((s: SparkSession, d: String) =>
-      Similarity.annPqPersistedServe(s, d)),
+    "q156_pq_persisted" -> (Similarity.annPqPersistedServe _),
     "q157_bpe_encode" -> ((s: SparkSession, d: String) =>
       TextAnalysis.bpeEncode(s, d)),
-    "q160_pq_serve_stream" -> ((s: SparkSession, d: String) =>
-      Similarity.annPqServeStream(s, d)),
-    "q161_pq_incremental" -> ((s: SparkSession, d: String) =>
-      Similarity.annPqIncrementalServe(s, d)),
-    "q162_leakage_split" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.leakageFreeSplit(s, d)),
-    "q163_ivf_trained" -> ((s: SparkSession, d: String) =>
-      Similarity.annIvfTrained(s, d)),
-    "q164_bpe_bytes" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.bpeTrainBytes(s, d)),
+    "q160_pq_serve_stream" -> (Similarity.annPqServeStream _),
+    "q161_pq_incremental" -> (Similarity.annPqIncrementalServe _),
+    "q162_leakage_split" -> (TrainingPrep.leakageFreeSplit _),
+    "q163_ivf_trained" -> (Similarity.annIvfTrained _),
+    "q164_bpe_bytes" -> (TextAnalysis.bpeTrainBytes _),
     "q165_substr_spans" -> ((s: SparkSession, d: String) =>
       Dedup.substringSpanDedup(s, d)),
     "q166_chunking" -> ((s: SparkSession, d: String) =>
       TrainingPrep.chunkDocuments(s, d)),
-    "q167_backoff_lm" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.backoffLmScore(s, d)),
-    "q168_bitext_mine" -> ((s: SparkSession, d: String) =>
-      Similarity.bitextMine(s, d)),
-    "q169_hard_negatives" -> ((s: SparkSession, d: String) =>
-      Similarity.hardNegatives(s, d)),
-    "q170_zipf_audit" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.zipfAudit(s, d)),
-    "q171_novelty_gate" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.noveltyGate(s, d)),
-    "q172_image_phash" -> ((s: SparkSession, d: String) =>
-      Multimodal.imageNearDups(s, d)),
+    "q167_backoff_lm" -> (TextAnalysis.backoffLmScore _),
+    "q168_bitext_mine" -> (Similarity.bitextMine _),
+    "q169_hard_negatives" -> (Similarity.hardNegatives _),
+    "q170_zipf_audit" -> (TextAnalysis.zipfAudit _),
+    "q171_novelty_gate" -> (graft.streaming.EventStream.noveltyGate _),
+    "q172_image_phash" -> (Multimodal.imageNearDups _),
     "q173_bpe_extend" -> ((s: SparkSession, d: String) =>
       TextAnalysis.bpeExtend(s, d)),
-    "q174_audio_energy" -> ((s: SparkSession, d: String) =>
-      Multimodal.audioEnergy(s, d)),
-    "q175_embedding_drift" -> ((s: SparkSession, d: String) =>
-      Similarity.embeddingDrift(s, d)),
-    "q176_hll_overlap" -> ((s: SparkSession, d: String) =>
-      Sketches.hllOverlap(s, d)),
-    "q177_sla_audit" -> ((s: SparkSession, d: String) =>
-      Relational.slaAudit(s, d)),
-    "q178_score_docs" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.scoreDocs(s, d)),
-    "q179_score_stream" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.scoreServeStream(s, d)),
-    "q180_decayed_engagement" -> ((s: SparkSession, d: String) =>
-      Relational.decayedEngagement(s, d)),
-    "q181_pmi_collocations" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.pmiCollocations(s, d)),
-    "q182_char_entropy" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.charEntropy(s, d)),
+    "q174_audio_energy" -> (Multimodal.audioEnergy _),
+    "q175_embedding_drift" -> (Similarity.embeddingDrift _),
+    "q176_hll_overlap" -> (Sketches.hllOverlap _),
+    "q177_sla_audit" -> (Relational.slaAudit _),
+    "q178_score_docs" -> (TrainingPrep.scoreDocs _),
+    "q179_score_stream" -> (graft.streaming.EventStream.scoreServeStream _),
+    "q180_decayed_engagement" -> (Relational.decayedEngagement _),
+    "q181_pmi_collocations" -> (TextAnalysis.pmiCollocations _),
+    "q182_char_entropy" -> (TextAnalysis.charEntropy _),
     "q183_mrl_recall" -> ((s: SparkSession, d: String) =>
       Similarity.mrlRecallAudit(s, d)),
-    "q184_source_kl" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.sourceKlDivergence(s, d)),
-    "q185_heaps_audit" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.heapsAudit(s, d)),
-    "q186_mad_anomaly" -> ((s: SparkSession, d: String) =>
-      Relational.madDailyAnomaly(s, d)),
-    "q187_stream_mad_gate" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.madGateStream(s, d)),
+    "q184_source_kl" -> (TextAnalysis.sourceKlDivergence _),
+    "q185_heaps_audit" -> (TextAnalysis.heapsAudit _),
+    "q186_mad_anomaly" -> (Relational.madDailyAnomaly _),
+    "q187_stream_mad_gate" -> (graft.streaming.EventStream.madGateStream _),
     "q188_neg_sampling" -> ((s: SparkSession, d: String) =>
       TrainingPrep.negSamplingTable(s, d)),
-    "q189_prefix_filter_join" -> ((s: SparkSession, d: String) =>
-      Dedup.prefixFilterJoin(s, d)),
-    "q190_quality_verdict" -> ((s: SparkSession, d: String) =>
-      CleanPipeline.qualityVerdict(s, d)),
-    "q191_chi_square" -> ((s: SparkSession, d: String) =>
-      Relational.chiSquareAudit(s, d)),
-    "q192_interarrival" -> ((s: SparkSession, d: String) =>
-      Relational.interArrivalProfile(s, d)),
-    "q193_wilson_ctr" -> ((s: SparkSession, d: String) =>
-      Relational.wilsonCtr(s, d)),
-    "q194_conversion_latency" -> ((s: SparkSession, d: String) =>
-      Relational.conversionLatency(s, d)),
-    "q195_stickiness" -> ((s: SparkSession, d: String) =>
-      Relational.stickiness(s, d)),
-    "q196_lsh_planner" -> ((s: SparkSession, d: String) =>
-      Dedup.lshPlanner(s, d)),
+    "q189_prefix_filter_join" -> (Dedup.prefixFilterJoin _),
+    "q190_quality_verdict" -> (CleanPipeline.qualityVerdict _),
+    "q191_chi_square" -> (Relational.chiSquareAudit _),
+    "q192_interarrival" -> (Relational.interArrivalProfile _),
+    "q193_wilson_ctr" -> (Relational.wilsonCtr _),
+    "q194_conversion_latency" -> (Relational.conversionLatency _),
+    "q195_stickiness" -> (Relational.stickiness _),
+    "q196_lsh_planner" -> (Dedup.lshPlanner _),
     "q197_binary_lake" -> (Multimodal.binaryLake _),
     "q198_cuped" -> (Experiment.cupedAbTest _),
-    "q199_label_prop" -> ((s: SparkSession, d: String) =>
-      Graph.labelPropagation(s, d)),
+    "q199_label_prop" -> (Graph.labelPropagation _),
     "q200_watermark_planner" -> ((s: SparkSession, d: String) =>
       Relational.watermarkPlanner(s, d)),
-    "q201_kanon_audit" -> ((s: SparkSession, d: String) =>
-      CleanPipeline.kAnonymityAudit(s, d)),
-    "q202_dense_rank" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.denseRankAssign(s, d)),
-    "q203_separability" -> ((s: SparkSession, d: String) =>
-      Similarity.classSeparability(s, d)),
-    "q204_loudness_gain" -> ((s: SparkSession, d: String) =>
-      Multimodal.loudnessGain(s, d)),
-    "q205_bootstrap_ci" -> ((s: SparkSession, d: String) =>
-      Relational.bootstrapCi(s, d)),
-    "q206_theil_sen" -> ((s: SparkSession, d: String) =>
-      Relational.theilSenTrend(s, d)),
-    "q207_langid_confusion" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.langIdConfusion(s, d)),
-    "q208_churn_labels" -> ((s: SparkSession, d: String) =>
-      Experiment.churnLabels(s, d)),
-    "q209_holt_forecast" -> ((s: SparkSession, d: String) =>
-      Relational.holtForecast(s, d)),
-    "q210_spectral_bands" -> ((s: SparkSession, d: String) =>
-      Multimodal.spectralBands(s, d)),
+    "q201_kanon_audit" -> (CleanPipeline.kAnonymityAudit _),
+    "q202_dense_rank" -> (TrainingPrep.denseRankAssign _),
+    "q203_separability" -> (Similarity.classSeparability _),
+    "q204_loudness_gain" -> (Multimodal.loudnessGain _),
+    "q205_bootstrap_ci" -> (Relational.bootstrapCi _),
+    "q206_theil_sen" -> (Relational.theilSenTrend _),
+    "q207_langid_confusion" -> (TextAnalysis.langIdConfusion _),
+    "q208_churn_labels" -> (Experiment.churnLabels _),
+    "q209_holt_forecast" -> (Relational.holtForecast _),
+    "q210_spectral_bands" -> (Multimodal.spectralBands _),
     "q211_rendezvous_shards" -> ((s: SparkSession, d: String) =>
       TrainingPrep.rendezvousShards(s, d)),
-    "q212_roc_auc" -> ((s: SparkSession, d: String) =>
-      Experiment.rocAuc(s, d)),
-    "q213_ngram_diversity" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.ngramDiversity(s, d)),
-    "q214_dominant_eigen" -> ((s: SparkSession, d: String) =>
-      Similarity.dominantEigen(s, d)),
-    "q215_mixture_reweight" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.mixtureReweight(s, d)),
-    "q216_perplexity_gate" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.perplexityGate(s, d)),
+    "q212_roc_auc" -> (Experiment.rocAuc _),
+    "q213_ngram_diversity" -> (TextAnalysis.ngramDiversity _),
+    "q214_dominant_eigen" -> (Similarity.dominantEigen _),
+    "q215_mixture_reweight" -> (TextAnalysis.mixtureReweight _),
+    "q216_perplexity_gate" -> (TextAnalysis.perplexityGate _),
     "q217_group_sample" -> ((s: SparkSession, d: String) =>
       TrainingPrep.groupSample(s, d)),
-    "q218_calibration_bins" -> ((s: SparkSession, d: String) =>
-      Experiment.calibrationBins(s, d)),
-    "q219_cusum_changepoint" -> ((s: SparkSession, d: String) =>
-      Relational.cusumChangepoint(s, d)),
+    "q218_calibration_bins" -> (Experiment.calibrationBins _),
+    "q219_cusum_changepoint" -> (Relational.cusumChangepoint _),
     "q220_contrastive_pairs" -> ((s: SparkSession, d: String) =>
       Dedup.contrastivePairs(s, d)),
-    "q221_mergeable_moments" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.mergeableMoments(s, d)),
-    "q222_quality_survivors" -> ((s: SparkSession, d: String) =>
-      Dedup.qualitySurvivors(s, d)),
-    "q223_source_scorecard" -> ((s: SparkSession, d: String) =>
-      CleanPipeline.sourceScorecard(s, d)),
-    "q224_benford_audit" -> ((s: SparkSession, d: String) =>
-      Experiment.benfordAudit(s, d)),
-    "q225_langid_kappa" -> ((s: SparkSession, d: String) =>
-      Experiment.langIdKappa(s, d)),
-    "q226_padding_waste" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.paddingWasteAudit(s, d)),
-    "q227_chunk_manifest" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.chunkManifest(s, d)),
-    "q228_ann_recall_audit" -> ((s: SparkSession, d: String) =>
-      Similarity.annRecallAudit(s, d)),
-    "q229_numeral_dedup" -> ((s: SparkSession, d: String) =>
-      Dedup.numeralNormalizedDedup(s, d)),
-    "q230_budget_apportion" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.budgetApportion(s, d)),
-    "q231_decayed_activity" -> ((s: SparkSession, d: String) =>
-      Experiment.decayedActivity(s, d)),
-    "q232_markov_stationary" -> ((s: SparkSession, d: String) =>
-      Experiment.markovStationary(s, d)),
-    "q233_gains_table" -> ((s: SparkSession, d: String) =>
-      Experiment.gainsTable(s, d)),
-    "q234_encoding_gate" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.encodingAudit(s, d)),
-    "q235_audio_fp_match" -> ((s: SparkSession, d: String) =>
-      Multimodal.audioFingerprintMatch(s, d)),
-    "q236_hll_sketch" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.hllDistinctSketch(s, d)),
-    "q237_bloom_decontaminate" -> ((s: SparkSession, d: String) =>
-      Dedup.bloomDecontaminate(s, d)),
-    "q238_tokenizer_fertility" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.tokenizerFertility(s, d)),
-    "q239_cdc_chunks" -> ((s: SparkSession, d: String) =>
-      Dedup.cdcChunkStats(s, d)),
-    "q240_containment" -> ((s: SparkSession, d: String) =>
-      Dedup.containmentPairs(s, d)),
-    "q241_dp_release" -> ((s: SparkSession, d: String) =>
-      CleanPipeline.dpGeometricRelease(s, d)),
-    "q242_luhn_pii" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.luhnPii(s, d)),
-    "q243_join_discovery" -> ((s: SparkSession, d: String) =>
-      Relational.joinDiscovery(s, d)),
-    "q244_scene_cuts" -> ((s: SparkSession, d: String) =>
-      Multimodal.sceneCuts(s, d)),
-    "q245_parquet_quarantine" -> ((s: SparkSession, d: String) =>
-      ReferenceQueries.parquetQuarantine(s, d)),
-    "q246_two_stage_rerank" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.twoStageRerank(s, d)),
-    "q247_scorer_agreement" -> ((s: SparkSession, d: String) =>
-      Experiment.scorerAgreement(s, d)),
-    "q248_cdc_provenance" -> ((s: SparkSession, d: String) =>
-      Dedup.cdcProvenance(s, d)),
+    "q221_mergeable_moments" -> (TrainingPrep.mergeableMoments _),
+    "q222_quality_survivors" -> (Dedup.qualitySurvivors _),
+    "q223_source_scorecard" -> (CleanPipeline.sourceScorecard _),
+    "q224_benford_audit" -> (Experiment.benfordAudit _),
+    "q225_langid_kappa" -> (Experiment.langIdKappa _),
+    "q226_padding_waste" -> (TrainingPrep.paddingWasteAudit _),
+    "q227_chunk_manifest" -> (TrainingPrep.chunkManifest _),
+    "q228_ann_recall_audit" -> (Similarity.annRecallAudit _),
+    "q229_numeral_dedup" -> (Dedup.numeralNormalizedDedup _),
+    "q230_budget_apportion" -> (TrainingPrep.budgetApportion _),
+    "q231_decayed_activity" -> (Experiment.decayedActivity _),
+    "q232_markov_stationary" -> (Experiment.markovStationary _),
+    "q233_gains_table" -> (Experiment.gainsTable _),
+    "q234_encoding_gate" -> (TextAnalysis.encodingAudit _),
+    "q235_audio_fp_match" -> (Multimodal.audioFingerprintMatch _),
+    "q236_hll_sketch" -> (TrainingPrep.hllDistinctSketch _),
+    "q237_bloom_decontaminate" -> (Dedup.bloomDecontaminate _),
+    "q238_tokenizer_fertility" -> (TextAnalysis.tokenizerFertility _),
+    "q239_cdc_chunks" -> (Dedup.cdcChunkStats _),
+    "q240_containment" -> (Dedup.containmentPairs _),
+    "q241_dp_release" -> (CleanPipeline.dpGeometricRelease _),
+    "q242_luhn_pii" -> (TextAnalysis.luhnPii _),
+    "q243_join_discovery" -> (Relational.joinDiscovery _),
+    "q244_scene_cuts" -> (Multimodal.sceneCuts _),
+    "q245_parquet_quarantine" -> (ReferenceQueries.parquetQuarantine _),
+    "q246_two_stage_rerank" -> (TextAnalysis.twoStageRerank _),
+    "q247_scorer_agreement" -> (Experiment.scorerAgreement _),
+    "q248_cdc_provenance" -> (Dedup.cdcProvenance _),
     "q249_stream_hll" ->
       (graft.streaming.EventStream.hllStreamToBatch _),
-    "q250_kmv_sketch" -> ((s: SparkSession, d: String) =>
-      Sketches.kmvSketch(s, d)),
-    "q251_corr_matrix" -> ((s: SparkSession, d: String) =>
-      Experiment.correlationMatrix(s, d)),
-    "q252_rrf_fusion" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.rrfFusion(s, d)),
-    "q253_bitmap_intersect" -> ((s: SparkSession, d: String) =>
-      Sketches.bitmapIntersect(s, d)),
+    "q250_kmv_sketch" -> (Sketches.kmvSketch _),
+    "q251_corr_matrix" -> (Experiment.correlationMatrix _),
+    "q252_rrf_fusion" -> (TextAnalysis.rrfFusion _),
+    "q253_bitmap_intersect" -> (Sketches.bitmapIntersect _),
     "q254_stream_alerts" ->
       (graft.streaming.EventStream.streamAlerts _),
-    "q255_activity_segments" -> ((s: SparkSession, d: String) =>
-      Multimodal.activitySegments(s, d)),
-    "q256_patch_grid" -> ((s: SparkSession, d: String) =>
-      Multimodal.patchGrid(s, d)),
-    "q257_epoch_order" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.epochOrder(s, d)),
-    "q258_ks_drift" -> ((s: SparkSession, d: String) =>
-      Experiment.ksDrift(s, d)),
-    "q259_cross_source_dups" -> ((s: SparkSession, d: String) =>
-      Dedup.crossSourceDupMatrix(s, d)),
-    "q260_winsorize" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.winsorize(s, d)),
-    "q261_greedy_encode" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.greedyEncode(s, d)),
-    "q262_coordinated_sample" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.coordinatedSample(s, d)),
+    "q255_activity_segments" -> (Multimodal.activitySegments _),
+    "q256_patch_grid" -> (Multimodal.patchGrid _),
+    "q257_epoch_order" -> (TrainingPrep.epochOrder _),
+    "q258_ks_drift" -> (Experiment.ksDrift _),
+    "q259_cross_source_dups" -> (Dedup.crossSourceDupMatrix _),
+    "q260_winsorize" -> (TrainingPrep.winsorize _),
+    "q261_greedy_encode" -> (TextAnalysis.greedyEncode _),
+    "q262_coordinated_sample" -> (TrainingPrep.coordinatedSample _),
     "q263_incremental_mv" ->
       (graft.streaming.EventStream.incrementalMvToBatch _),
-    "q264_pseudonymized_join" -> ((s: SparkSession, d: String) =>
-      CleanPipeline.pseudonymizedJoin(s, d)),
+    "q264_pseudonymized_join" -> (CleanPipeline.pseudonymizedJoin _),
     "q265_stream_late_data" ->
       (graft.streaming.EventStream.lateDataToBatch _),
-    "q266_sentence_dedup" -> ((s: SparkSession, d: String) =>
-      Dedup.sentenceDedup(s, d)),
-    "q267_heavy_hitters" -> ((s: SparkSession, d: String) =>
-      Sketches.heavyHittersExact(s, d)),
-    "q268_fleiss_kappa" -> ((s: SparkSession, d: String) =>
-      Experiment.fleissKappa(s, d)),
-    "q269_preference_scores" -> ((s: SparkSession, d: String) =>
-      Preference.preferenceScores(s, d)),
+    "q266_sentence_dedup" -> (Dedup.sentenceDedup _),
+    "q267_heavy_hitters" -> (Sketches.heavyHittersExact _),
+    "q268_fleiss_kappa" -> (Experiment.fleissKappa _),
+    "q269_preference_scores" -> (Preference.preferenceScores _),
     "q270_bradley_terry" -> ((s: SparkSession, d: String) =>
       Preference.bradleyTerry(s, d)),
-    "q271_ndcg_audit" -> ((s: SparkSession, d: String) =>
-      Similarity.ndcgAudit(s, d)),
-    "q272_prefix_rollup" -> ((s: SparkSession, d: String) =>
-      Relational.prefixRollup(s, d)),
-    "q273_conformal" -> ((s: SparkSession, d: String) =>
-      Experiment.conformalCalibration(s, d)),
-    "q274_chi_square" -> ((s: SparkSession, d: String) =>
-      Experiment.chiSquareIndependence(s, d)),
-    "q275_avg_precision" -> ((s: SparkSession, d: String) =>
-      Experiment.averagePrecision(s, d)),
-    "q276_mann_whitney" -> ((s: SparkSession, d: String) =>
-      Experiment.mannWhitney(s, d)),
-    "q277_mad_outliers" -> ((s: SparkSession, d: String) =>
-      Experiment.madOutliers(s, d)),
-    "q278_isotonic" -> ((s: SparkSession, d: String) =>
-      Experiment.isotonicCalibration(s, d)),
-    "q279_histogram_median" -> ((s: SparkSession, d: String) =>
-      Sketches.histogramMedian(s, d)),
-    "q280_lpm_join" -> ((s: SparkSession, d: String) =>
-      Relational.longestPrefixMatch(s, d)),
-    "q281_division" -> ((s: SparkSession, d: String) =>
-      Relational.relationalDivision(s, d)),
-    "q282_secret_scan" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.secretScan(s, d)),
-    "q283_fs_linkage" -> ((s: SparkSession, d: String) =>
-      Dedup.fellegiSunter(s, d)),
-    "q284_ulm_train" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.ulmTrain(s, d)),
-    "q285_ulm_encode" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.ulmEncode(s, d)),
-    "q286_shapley_attribution" -> ((s: SparkSession, d: String) =>
-      Experiment.shapleyAttribution(s, d)),
-    "q287_quantile_align" -> ((s: SparkSession, d: String) =>
-      Experiment.quantileAlign(s, d)),
-    "q288_qte" -> ((s: SparkSession, d: String) =>
-      Experiment.quantileTreatmentEffects(s, d)),
-    "q289_weighted_median" -> ((s: SparkSession, d: String) =>
-      Sketches.weightedHistogramMedian(s, d)),
-    "q290_kcore" -> ((s: SparkSession, d: String) =>
-      Graph.kCore(s, d)),
-    "q291_item_neighbors" -> ((s: SparkSession, d: String) =>
-      Experiment.itemNeighbors(s, d)),
-    "q292_concurrency" -> ((s: SparkSession, d: String) =>
-      Relational.concurrencyTimeline(s, d)),
-    "q293_twap" -> ((s: SparkSession, d: String) =>
-      Relational.twap(s, d)),
-    "q294_bitemporal" -> ((s: SparkSession, d: String) =>
-      Relational.bitemporalAsOf(s, d)),
-    "q295_forecast_backtest" -> ((s: SparkSession, d: String) =>
-      Relational.forecastBacktest(s, d)),
-    "q296_span_corruption" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.spanCorruption(s, d)),
-    "q297_soft_dedup_weights" -> ((s: SparkSession, d: String) =>
-      Dedup.softDedupWeights(s, d)),
-    "q298_stratified_folds" -> ((s: SparkSession, d: String) =>
-      Dedup.stratifiedGroupKFold(s, d)),
-    "q299_binary_quant" -> ((s: SparkSession, d: String) =>
-      Similarity.binaryQuantAudit(s, d)),
-    "q300_markov_attribution" -> ((s: SparkSession, d: String) =>
-      Experiment.markovAttribution(s, d)),
-    "q301_rag_context" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.ragContext(s, d)),
-    "q302_topic_balanced" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.topicBalancedSample(s, d)),
-    "q303_contrastive_batches" -> ((s: SparkSession, d: String) =>
-      Dedup.contrastiveBatches(s, d)),
-    "q304_length_batches" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.lengthBucketedBatches(s, d)),
-    "q305_packed_windows" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.packedWindows(s, d)),
-    "q306_sliding_chunks" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.slidingChunks(s, d)),
-    "q307_repetition_filter" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.repetitionFilter(s, d)),
-    "q308_domain_affinity" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.domainAffinitySample(s, d)),
-    "q309_pii_scrub" -> ((s: SparkSession, d: String) =>
-      CleanPipeline.piiScrubAudit(s, d)),
-    "q310_epoch_shards" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.epochShards(s, d)),
-    "q311_vocab_growth" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.vocabGrowth(s, d)),
-    "q312_export_offsets" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.exportOffsets(s, d)),
-    "q313_split_contamination" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.splitContamination(s, d)),
-    "q314_interleaved_manifest" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.interleavedManifest(s, d)),
-    "q315_dataset_datasheet" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.datasetDatasheet(s, d)),
-    "q316_fim_transform" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.fimTransform(s, d)),
-    "q317_data_echo" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.dataEchoAudit(s, d)),
-    "q318_sft_loss_density" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.sftLossDensity(s, d)),
-    "q319_crawl_diff" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.crawlDiff(s, d)),
-    "q320_watermark_detect" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.watermarkDetect(s, d)),
+    "q271_ndcg_audit" -> (Similarity.ndcgAudit _),
+    "q272_prefix_rollup" -> (Relational.prefixRollup _),
+    "q273_conformal" -> (Experiment.conformalCalibration _),
+    "q274_chi_square" -> (Experiment.chiSquareIndependence _),
+    "q275_avg_precision" -> (Experiment.averagePrecision _),
+    "q276_mann_whitney" -> (Experiment.mannWhitney _),
+    "q277_mad_outliers" -> (Experiment.madOutliers _),
+    "q278_isotonic" -> (Experiment.isotonicCalibration _),
+    "q279_histogram_median" -> (Sketches.histogramMedian _),
+    "q280_lpm_join" -> (Relational.longestPrefixMatch _),
+    "q281_division" -> (Relational.relationalDivision _),
+    "q282_secret_scan" -> (TextAnalysis.secretScan _),
+    "q283_fs_linkage" -> (Dedup.fellegiSunter _),
+    "q284_ulm_train" -> (TextAnalysis.ulmTrain _),
+    "q285_ulm_encode" -> (TextAnalysis.ulmEncode _),
+    "q286_shapley_attribution" -> (Experiment.shapleyAttribution _),
+    "q287_quantile_align" -> (Experiment.quantileAlign _),
+    "q288_qte" -> (Experiment.quantileTreatmentEffects _),
+    "q289_weighted_median" -> (Sketches.weightedHistogramMedian _),
+    "q290_kcore" -> (Graph.kCore _),
+    "q291_item_neighbors" -> (Experiment.itemNeighbors _),
+    "q292_concurrency" -> (Relational.concurrencyTimeline _),
+    "q293_twap" -> (Relational.twap _),
+    "q294_bitemporal" -> (Relational.bitemporalAsOf _),
+    "q295_forecast_backtest" -> (Relational.forecastBacktest _),
+    "q296_span_corruption" -> (TrainingPrep.spanCorruption _),
+    "q297_soft_dedup_weights" -> (Dedup.softDedupWeights _),
+    "q298_stratified_folds" -> (Dedup.stratifiedGroupKFold _),
+    "q299_binary_quant" -> (Similarity.binaryQuantAudit _),
+    "q300_markov_attribution" -> (Experiment.markovAttribution _),
+    "q301_rag_context" -> (TextAnalysis.ragContext _),
+    "q302_topic_balanced" -> (TrainingPrep.topicBalancedSample _),
+    "q303_contrastive_batches" -> (Dedup.contrastiveBatches _),
+    "q304_length_batches" -> (TrainingPrep.lengthBucketedBatches _),
+    "q305_packed_windows" -> (TrainingPrep.packedWindows _),
+    "q306_sliding_chunks" -> (TrainingPrep.slidingChunks _),
+    "q307_repetition_filter" -> (TextAnalysis.repetitionFilter _),
+    "q308_domain_affinity" -> (TrainingPrep.domainAffinitySample _),
+    "q309_pii_scrub" -> (CleanPipeline.piiScrubAudit _),
+    "q310_epoch_shards" -> (TrainingPrep.epochShards _),
+    "q311_vocab_growth" -> (TextAnalysis.vocabGrowth _),
+    "q312_export_offsets" -> (TrainingPrep.exportOffsets _),
+    "q313_split_contamination" -> (TrainingPrep.splitContamination _),
+    "q314_interleaved_manifest" -> (TrainingPrep.interleavedManifest _),
+    "q315_dataset_datasheet" -> (TrainingPrep.datasetDatasheet _),
+    "q316_fim_transform" -> (TrainingPrep.fimTransform _),
+    "q317_data_echo" -> (TrainingPrep.dataEchoAudit _),
+    "q318_sft_loss_density" -> (TrainingPrep.sftLossDensity _),
+    "q319_crawl_diff" -> (TrainingPrep.crawlDiff _),
+    "q320_watermark_detect" -> (TextAnalysis.watermarkDetect _),
     "q321_preference_pairs" -> ((s: SparkSession, d: String) =>
       Preference.preferencePairs(s, d)),
     "q322_ann_hard_negatives" -> ((s: SparkSession, d: String) =>
       Similarity.annHardNegatives(s, d)),
     "q323_ann_bitext_mine" -> ((s: SparkSession, d: String) =>
       Similarity.annBitextMine(s, d)),
-    "q324_prefix_cache" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.prefixCacheAudit(s, d)),
+    "q324_prefix_cache" -> (TextAnalysis.prefixCacheAudit _),
     "q325_pass_at_k" -> ((s: SparkSession, d: String) =>
       Experiment.passAtK(s, d)),
-    "q326_nucleus_audit" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.nucleusAudit(s, d)),
-    "q327_curriculum" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.curriculumStages(s, d)),
-    "q328_spec_decode" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.specDecodeAudit(s, d)),
-    "q329_ann_recall" -> ((s: SparkSession, d: String) =>
-      Similarity.annRecallEval(s, d)),
-    "q330_index_staleness" -> ((s: SparkSession, d: String) =>
-      Similarity.indexStaleness(s, d)),
-    "q331_feature_drift" -> ((s: SparkSession, d: String) =>
-      Experiment.featureDrift(s, d)),
-    "q332_lsh_banding_eval" -> ((s: SparkSession, d: String) =>
-      Dedup.lshBandingEval(s, d)),
-    "q333_watermark_planner" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.watermarkDelayPlanner(s, d)),
-    "q334_bm25_retrieval_eval" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.bm25RetrievalEval(s, d)),
-    "q335_packing_attention" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.packingAttentionAudit(s, d)),
-    "q336_epoch_waterfill" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.epochWaterfill(s, d)),
-    "q337_ips_policy_eval" -> ((s: SparkSession, d: String) =>
-      Experiment.ipsPolicyEval(s, d)),
-    "q338_best_of_n" -> ((s: SparkSession, d: String) =>
-      Experiment.bestOfN(s, d)),
-    "q339_arena_leaderboard" -> ((s: SparkSession, d: String) =>
-      Experiment.arenaLeaderboard(s, d)),
-    "q340_rloo_advantage" -> ((s: SparkSession, d: String) =>
-      Experiment.rlooAdvantage(s, d)),
-    "q341_dup_span_fraction" -> ((s: SparkSession, d: String) =>
-      Dedup.dupSpanFraction(s, d)),
-    "q342_successive_halving" -> ((s: SparkSession, d: String) =>
-      Experiment.successiveHalving(s, d)),
-    "q343_doubly_robust" -> ((s: SparkSession, d: String) =>
-      Experiment.doublyRobust(s, d)),
-    "q344_moe_routing" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.moeRoutingAudit(s, d)),
-    "q345_bleu_overlap" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.bleuOverlapEval(s, d)),
-    "q346_kruskal_wallis" -> ((s: SparkSession, d: String) =>
-      Experiment.kruskalWallis(s, d)),
-    "q347_token_transitions" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.tokenClassTransitions(s, d)),
-    "q348_shuffle_runs" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.shuffleRunsTest(s, d)),
-    "q349_self_consistency" -> ((s: SparkSession, d: String) =>
-      Experiment.selfConsistency(s, d)),
+    "q326_nucleus_audit" -> (TextAnalysis.nucleusAudit _),
+    "q327_curriculum" -> (TrainingPrep.curriculumStages _),
+    "q328_spec_decode" -> (TextAnalysis.specDecodeAudit _),
+    "q329_ann_recall" -> (Similarity.annRecallEval _),
+    "q330_index_staleness" -> (Similarity.indexStaleness _),
+    "q331_feature_drift" -> (Experiment.featureDrift _),
+    "q332_lsh_banding_eval" -> (Dedup.lshBandingEval _),
+    "q333_watermark_planner" ->
+      (graft.streaming.EventStream.watermarkDelayPlanner _),
+    "q334_bm25_retrieval_eval" -> (TextAnalysis.bm25RetrievalEval _),
+    "q335_packing_attention" -> (TrainingPrep.packingAttentionAudit _),
+    "q336_epoch_waterfill" -> (TrainingPrep.epochWaterfill _),
+    "q337_ips_policy_eval" -> (Experiment.ipsPolicyEval _),
+    "q338_best_of_n" -> (Experiment.bestOfN _),
+    "q339_arena_leaderboard" -> (Experiment.arenaLeaderboard _),
+    "q340_rloo_advantage" -> (Experiment.rlooAdvantage _),
+    "q341_dup_span_fraction" -> (Dedup.dupSpanFraction _),
+    "q342_successive_halving" -> (Experiment.successiveHalving _),
+    "q343_doubly_robust" -> (Experiment.doublyRobust _),
+    "q344_moe_routing" -> (TrainingPrep.moeRoutingAudit _),
+    "q345_bleu_overlap" -> (TextAnalysis.bleuOverlapEval _),
+    "q346_kruskal_wallis" -> (Experiment.kruskalWallis _),
+    "q347_token_transitions" -> (TextAnalysis.tokenClassTransitions _),
+    "q348_shuffle_runs" -> (TrainingPrep.shuffleRunsTest _),
+    "q349_self_consistency" -> (Experiment.selfConsistency _),
     "q350_dup_span_incremental" -> ((s: SparkSession, d: String) =>
       Dedup.dupSpanIncremental(s, d)),
-    "q351_canonicalize_clusters" -> ((s: SparkSession, d: String) =>
-      Dedup.canonicalizeClusters(s, d)),
-    "q352_instruction_scan" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.instructionScan(s, d)),
+    "q351_canonicalize_clusters" -> (Dedup.canonicalizeClusters _),
+    "q352_instruction_scan" -> (TextAnalysis.instructionScan _),
     "q353_length_bias" -> ((s: SparkSession, d: String) =>
       Preference.lengthBiasAudit(s, d)),
-    "q354_needle_manifest" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.needleManifest(s, d)),
-    "q355_t_closeness" -> ((s: SparkSession, d: String) =>
-      CleanPipeline.tClosenessAudit(s, d)),
-    "q356_headset_drift" -> ((s: SparkSession, d: String) =>
-      Experiment.headSetDrift(s, d)),
-    "q357_boilerplate_grams" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.boilerplateHeadGrams(s, d)),
+    "q354_needle_manifest" -> (TrainingPrep.needleManifest _),
+    "q355_t_closeness" -> (CleanPipeline.tClosenessAudit _),
+    "q356_headset_drift" -> (Experiment.headSetDrift _),
+    "q357_boilerplate_grams" -> (TextAnalysis.boilerplateHeadGrams _),
     "q358_truncation_loss" -> ((s: SparkSession, d: String) =>
       TrainingPrep.truncationLoss(s, d)),
-    "q359_effective_waterfill" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.effectiveWaterfill(s, d)),
-    "q360_word_fertility" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.wordFertility(s, d)),
-    "q361_toxicity_gate" -> ((s: SparkSession, d: String) =>
-      CleanPipeline.toxicityGate(s, d)),
-    "q362_sft_unroll_cost" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.sftUnrollCost(s, d)),
-    "q363_merkle_manifest" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.merkleManifest(s, d)),
-    "q364_transport_plan" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.lengthTransportPlan(s, d)),
-    "q365_license_propagation" -> ((s: SparkSession, d: String) =>
-      Graph.licensePropagation(s, d)),
-    "q366_wilson_gate" -> ((s: SparkSession, d: String) =>
-      Experiment.wilsonGate(s, d)),
-    "q367_takedown_impact" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.takedownImpact(s, d)),
-    "q368_krippendorff" -> ((s: SparkSession, d: String) =>
-      Experiment.krippendorffAlpha(s, d)),
-    "q369_unseen_vocab" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.unseenVocab(s, d)),
-    "q370_early_stopping" -> ((s: SparkSession, d: String) =>
-      Experiment.earlyStoppingAudit(s, d)),
-    "q371_negative_samples" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.negativeSamples(s, d)),
-    "q372_int8_quant" -> ((s: SparkSession, d: String) =>
-      Similarity.int8QuantAudit(s, d)),
-    "q373_schema_drift" -> ((s: SparkSession, d: String) =>
-      Relational.schemaDrift(s, d)),
-    "q374_permutation_test" -> ((s: SparkSession, d: String) =>
-      Experiment.permutationTest(s, d)),
-    "q375_filter_curve" -> ((s: SparkSession, d: String) =>
-      CleanPipeline.filterOperatingCurve(s, d)),
+    "q359_effective_waterfill" -> (TrainingPrep.effectiveWaterfill _),
+    "q360_word_fertility" -> (TextAnalysis.wordFertility _),
+    "q361_toxicity_gate" -> (CleanPipeline.toxicityGate _),
+    "q362_sft_unroll_cost" -> (TrainingPrep.sftUnrollCost _),
+    "q363_merkle_manifest" -> (TrainingPrep.merkleManifest _),
+    "q364_transport_plan" -> (TrainingPrep.lengthTransportPlan _),
+    "q365_license_propagation" -> (Graph.licensePropagation _),
+    "q366_wilson_gate" -> (Experiment.wilsonGate _),
+    "q367_takedown_impact" -> (TrainingPrep.takedownImpact _),
+    "q368_krippendorff" -> (Experiment.krippendorffAlpha _),
+    "q369_unseen_vocab" -> (TextAnalysis.unseenVocab _),
+    "q370_early_stopping" -> (Experiment.earlyStoppingAudit _),
+    "q371_negative_samples" -> (TrainingPrep.negativeSamples _),
+    "q372_int8_quant" -> (Similarity.int8QuantAudit _),
+    "q373_schema_drift" -> (Relational.schemaDrift _),
+    "q374_permutation_test" -> (Experiment.permutationTest _),
+    "q375_filter_curve" -> (CleanPipeline.filterOperatingCurve _),
     "q376_banding_planner" -> ((s: SparkSession, d: String) =>
       Dedup.lshBandingPlanner(s, d)),
-    "q377_stride_efficiency" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.strideEfficiency(s, d)),
-    "q378_code_switching" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.codeSwitchCensus(s, d)),
-    "q379_funnel_significance" -> ((s: SparkSession, d: String) =>
-      Experiment.funnelSignificance(s, d)),
-    "q380_mmr_topk" -> ((s: SparkSession, d: String) =>
-      Similarity.mmrTopK(s, d)),
-    "q381_champion_lists" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.championListEval(s, d)),
-    "q382_bot_gate" -> ((s: SparkSession, d: String) =>
-      Experiment.botRegularityGate(s, d)),
-    "q383_packing_policy" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.packingPolicyCompare(s, d)),
-    "q384_systematic_sample" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.systematicSample(s, d)),
-    "q385_dedup_yield" -> ((s: SparkSession, d: String) =>
-      Dedup.dedupYieldCurve(s, d)),
-    "q386_source_gini" -> ((s: SparkSession, d: String) =>
-      Relational.sourceConcentration(s, d)),
-    "q387_anisotropy" -> ((s: SparkSession, d: String) =>
-      Similarity.anisotropyAudit(s, d)),
-    "q388_tokenizer_migration" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.tokenizerMigrationDiff(s, d)),
-    "q389_prefix_mass" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.sharedPrefixMass(s, d)),
-    "q390_quality_dup" -> ((s: SparkSession, d: String) =>
-      Experiment.qualityDupCalibration(s, d)),
-    "q391_splitter_bias" -> ((s: SparkSession, d: String) =>
-      Experiment.splitterBias(s, d)),
-    "q392_cluster_profile" -> ((s: SparkSession, d: String) =>
-      Dedup.clusterSizeProfile(s, d)),
-    "q393_epoch_fixed_points" -> ((s: SparkSession, d: String) =>
-      TrainingPrep.epochFixedPoints(s, d)),
-    "q394_kn_discounts" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.knDiscounts(s, d)),
-    "q395_burstiness" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.burstinessCensus(s, d)),
+    "q377_stride_efficiency" -> (TrainingPrep.strideEfficiency _),
+    "q378_code_switching" -> (TextAnalysis.codeSwitchCensus _),
+    "q379_funnel_significance" -> (Experiment.funnelSignificance _),
+    "q380_mmr_topk" -> (Similarity.mmrTopK _),
+    "q381_champion_lists" -> (TextAnalysis.championListEval _),
+    "q382_bot_gate" -> (Experiment.botRegularityGate _),
+    "q383_packing_policy" -> (TrainingPrep.packingPolicyCompare _),
+    "q384_systematic_sample" -> (TrainingPrep.systematicSample _),
+    "q385_dedup_yield" -> (Dedup.dedupYieldCurve _),
+    "q386_source_gini" -> (Relational.sourceConcentration _),
+    "q387_anisotropy" -> (Similarity.anisotropyAudit _),
+    "q388_tokenizer_migration" -> (TextAnalysis.tokenizerMigrationDiff _),
+    "q389_prefix_mass" -> (TextAnalysis.sharedPrefixMass _),
+    "q390_quality_dup" -> (Experiment.qualityDupCalibration _),
+    "q391_splitter_bias" -> (Experiment.splitterBias _),
+    "q392_cluster_profile" -> (Dedup.clusterSizeProfile _),
+    "q393_epoch_fixed_points" -> (TrainingPrep.epochFixedPoints _),
+    "q394_kn_discounts" -> (TextAnalysis.knDiscounts _),
+    "q395_burstiness" -> (TextAnalysis.burstinessCensus _),
     "q396_matryoshka_recall" -> ((s: SparkSession, d: String) =>
       Similarity.matryoshkaRecall(s, d)),
-    "q397_bbit_minwise" -> ((s: SparkSession, d: String) =>
-      Dedup.bbitMinwiseEval(s, d)),
-    "q398_jl_distortion" -> ((s: SparkSession, d: String) =>
-      Similarity.jlDistortionAudit(s, d)),
-    "q399_bh_fdr" -> ((s: SparkSession, d: String) =>
-      Experiment.bhFdr(s, d)),
-    "q400_judge_position_bias" -> ((s: SparkSession, d: String) =>
-      Experiment.judgePositionBias(s, d)),
-    "q401_kendall_w" -> ((s: SparkSession, d: String) =>
-      Experiment.kendallW(s, d)),
-    "q402_adaptive_ece" -> ((s: SparkSession, d: String) =>
-      Experiment.adaptiveEce(s, d)),
+    "q397_bbit_minwise" -> (Dedup.bbitMinwiseEval _),
+    "q398_jl_distortion" -> (Similarity.jlDistortionAudit _),
+    "q399_bh_fdr" -> (Experiment.bhFdr _),
+    "q400_judge_position_bias" -> (Experiment.judgePositionBias _),
+    "q401_kendall_w" -> (Experiment.kendallW _),
+    "q402_adaptive_ece" -> (Experiment.adaptiveEce _),
     "q109_profile" -> (Relational.profileTable _),
     "q112_funnel" -> (Relational.funnel _),
     "q113_cohort" -> (Relational.cohortRetention _),
@@ -611,7 +388,7 @@ object SparkEntry {
     "q36_string_funcs" -> (Relational.stringFuncs _),
     "q37_tpch_q3" -> (Relational.tpchQ3 _),
     "q38_pivot" -> (Relational.pivotAgg _),
-    "q49_salted_join" -> ((s: SparkSession, d: String) => Relational.saltedJoinAgg(s, d)),
+    "q49_salted_join" -> (Relational.saltedJoinAgg _),
     "q53_bucketed_join" -> (Relational.bucketedJoinAgg _),
     "q54_window_funcs" -> (Relational.windowFuncs _),
     "q55_grouping_sets" -> (Relational.groupingSetsAgg _),
@@ -628,13 +405,13 @@ object SparkEntry {
     "q21_ngram_jaccard" -> ((s: SparkSession, d: String) => Dedup.ngramJaccardPairs(s, d)),
     "q22_minhash_lsh" -> ((s: SparkSession, d: String) => Dedup.minhashLshPairsVerified(s, d)),
     "q23_simhash" -> ((s: SparkSession, d: String) => Dedup.simhashPairs(s, d)),
-    "q24_embed_neardup" -> ((s: SparkSession, d: String) => Dedup.embeddingNearDupPlanted(s, d)),
+    "q24_embed_neardup" -> (Dedup.embeddingNearDupPlanted _),
     "q158_semdedup" -> ((s: SparkSession, d: String) => Dedup.semDedup(s, d)),
     "q25_clean_corpus" -> ((s: SparkSession, d: String) => CleanPipeline.cleanCorpus(s, d)),
-    "q76_corpus_manifest" -> ((s: SparkSession, d: String) => CleanPipeline.corpusManifest(s, d)),
-    "q44_neardup_clusters" -> ((s: SparkSession, d: String) => Dedup.nearDupSurvivors(s, d)),
+    "q76_corpus_manifest" -> (CleanPipeline.corpusManifest _),
+    "q44_neardup_clusters" -> (Dedup.nearDupSurvivors _),
     "q83_decontaminate" -> ((s: SparkSession, d: String) => Dedup.decontaminationPairs(s, d)),
-    "q100_line_dedup" -> ((s: SparkSession, d: String) => Dedup.lineDedup(s, d)),
+    "q100_line_dedup" -> (Dedup.lineDedup _),
     "q111_fuzzy_link" -> (Dedup.fuzzyLinkage _),
     "q45_incremental_dedup" -> ((s: SparkSession, d: String) => Dedup.minhashIncrementalVerified(s, d)),
     "q46_incremental_persisted" -> ((s: SparkSession, d: String) => Dedup.minhashIncrementalPersisted(s, d)),
@@ -658,7 +435,7 @@ object SparkEntry {
     // --- sketches ---
     "q39_cardinality" -> (Sketches.cardinality _),
     "q48_quantile_sketch" -> (Sketches.quantiles _),
-    "q58_bloom_semi_join" -> ((s: SparkSession, d: String) => Sketches.bloomSemiJoin(s, d)),
+    "q58_bloom_semi_join" -> (Sketches.bloomSemiJoin _),
     "q60_cms_frequency" -> (Sketches.cmsFrequency _),
     "q67_hll_daily_merge" -> (Sketches.hllMergeDaily _),
     // --- similarity search ---
@@ -670,21 +447,21 @@ object SparkEntry {
     "q41_quality" -> (TextAnalysis.quality _),
     "q42_token_stats" -> (TextAnalysis.tokenStats _),
     "q43_fingerprint" -> (TextAnalysis.fingerprint _),
-    "q61_tfidf_terms" -> ((s: SparkSession, d: String) => TextAnalysis.tfidfTerms(s, d)),
-    "q114_bm25" -> ((s: SparkSession, d: String) => TextAnalysis.bm25Search(s, d)),
+    "q61_tfidf_terms" -> (TextAnalysis.tfidfTerms _),
+    "q114_bm25" -> (TextAnalysis.bm25Search _),
     "q122_keyness" -> (TextAnalysis.keynessDrift _),
-    "q74_repetition" -> ((s: SparkSession, d: String) => TextAnalysis.repetitionStats(s, d)),
+    "q74_repetition" -> (TextAnalysis.repetitionStats _),
     "q75_redact_pii" -> (TextAnalysis.redactPii _),
     // --- training-set preparation ---
     "q68_train_split" -> (TrainingPrep.splitAssign _),
-    "q84_stratified_sample" -> ((s: SparkSession, d: String) => TrainingPrep.stratifiedSample(s, d)),
+    "q84_stratified_sample" -> (TrainingPrep.stratifiedSample _),
     "q69_quality_bins" -> (TrainingPrep.qualityBins _),
     "q70_shard_pack" -> ((s: SparkSession, d: String) => TrainingPrep.shardPack(s, d)),
     "q91_seq_blocks" -> ((s: SparkSession, d: String) => TrainingPrep.sequenceBlocks(s, d)),
     "q101_embed_pool" -> (TrainingPrep.meanPoolEmbeddings _),
     "q71_embed_quantize" -> (TrainingPrep.quantizeEmbeddings _),
     "q116_trend" -> (TrainingPrep.trendPerUser _),
-    "q118_weighted_sample" -> ((s: SparkSession, d: String) => TrainingPrep.weightedSample(s, d)),
+    "q118_weighted_sample" -> (TrainingPrep.weightedSample _),
     // --- multimodal plumbing ---
     "q50_multimodal_meta" -> (Multimodal.mediaMeta _),
     "q51_frame_sample" -> ((s: SparkSession, d: String) => Multimodal.frameSample(s, d)),
@@ -3043,15 +2820,17 @@ object SparkEntry {
     // character-based in both engines (q96's Unicode pin).
     // q155: the full BPE merge loop — generated N-round CTE replay
     // (see bpeTrainOracleSql); rounds must equal the Spark default.
-    "q155_bpe_train" -> bpeTrainOracleSql(20),
+    "q155_bpe_train" -> bpeTrainOracleSql(TextAnalysis.bpeRounds),
     // q164: byte-level BPE with the vocab-size stop — the CTE chain
     // runs the maxRounds ceiling, the tail select applies the stop
     // from the in-SQL base-vocab count (params must equal the Spark
     // defaults: vocabTarget=33, maxRounds=12).
-    "q164_bpe_bytes" -> bpeTrainBytesOracleSql(33, 12),
+    "q164_bpe_bytes" -> bpeTrainBytesOracleSql(
+      TextAnalysis.bpeBytesVocabTarget, TextAnalysis.bpeBytesMaxRounds),
     // q173: incremental vocab extension — generated train/apply/
     // continue chain (params must equal the Spark defaults 10, 5).
-    "q173_bpe_extend" -> bpeExtendOracleSql(10, 5),
+    "q173_bpe_extend" -> bpeExtendOracleSql(
+      TextAnalysis.bpeExtendBaseRounds, TextAnalysis.bpeExtendExtraRounds),
     // q165: exact substring-span dedup — the four-stage replay
     // (rolling md5 grams, corpus-wide dup filter, gaps-and-islands
     // span merge, per-doc audit); spanLen/minCount must equal the
@@ -3406,10 +3185,12 @@ object SparkEntry {
     // q214: dominant eigenvector — generated 40-round power-iteration
     // CTE chain over HUGEINT, truncating renormalization; C replayed
     // as the same outer-product aggregate.
-    "q214_dominant_eigen" -> dominantEigenOracleSql(40),
+    "q214_dominant_eigen" ->
+      dominantEigenOracleSql(Similarity.dominantEigenIters),
     // q215: MWU domain reweighting — generated rounds over the domain
     // table; HUGEINT // replays the driver loop's Long truncation.
-    "q215_mixture_reweight" -> mixtureReweightOracleSql(10),
+    "q215_mixture_reweight" -> mixtureReweightOracleSql(
+      TextAnalysis.mixtureReweightRounds),
     // q216: CCNet tercile gate over q141 scores — integer rank
     // arithmetic only.
     "q216_perplexity_gate" -> perplexityGateOracle,
@@ -3677,7 +3458,8 @@ object SparkEntry {
          FROM t GROUP BY 1""",
     // q232: stationary distribution — generated 30-round chain over
     // the bounded state domain, per-term truncating division.
-    "q232_markov_stationary" -> markovStationaryOracleSql(30),
+    "q232_markov_stationary" -> markovStationaryOracleSql(
+      Experiment.markovStationaryIters),
     // q233: gains/lift deciles over the q212 scored frame — rank
     // arithmetic deciles, truncating-DIV capture and lift.
     "q233_gains_table" ->
@@ -5286,7 +5068,8 @@ object SparkEntry {
          FROM borda b JOIN cope c USING (event_type)""",
     // q270: generated MATERIALIZED-CTE replay of the 15 MM rounds
     // (the q232 iterative-oracle device) over the same win matrix.
-    "q270_bradley_terry" -> bradleyTerryOracleSql(15),
+    "q270_bradley_terry" ->
+      bradleyTerryOracleSql(Preference.bradleyTerryIters),
     // q271: annBrute's oracle-exact ranking joined to labels, then
     // the SAME precomputed integer gain table — no engine ever
     // evaluates a log.
@@ -5723,12 +5506,14 @@ object SparkEntry {
          FROM scored WHERE score_micro >= 1000000""",
     // q284: ULM hard-EM trainer — generated chained-CTE replay
     // (per-position Viterbi unroll vs the engine's nested HOF DP).
-    "q284_ulm_train" -> ulmTrainOracleSql(
-      rounds = 2, multiK = 48, maxPiece = 4, maxLen = 12),
+    "q284_ulm_train" -> ulmTrainOracleSql(rounds = TextAnalysis.ulmRounds,
+      multiK = TextAnalysis.ulmMultiK, maxPiece = TextAnalysis.ulmMaxPiece,
+      maxLen = 12),
     // q285: encode lifecycle under the q284 artifact — one more
     // generated Viterbi chain + per-doc fertility aggregate.
-    "q285_ulm_encode" -> ulmEncodeOracleSql(
-      rounds = 2, multiK = 48, maxPiece = 4, maxLen = 12),
+    "q285_ulm_encode" -> ulmEncodeOracleSql(rounds = TextAnalysis.ulmRounds,
+      multiK = TextAnalysis.ulmMultiK, maxPiece = TextAnalysis.ulmMaxPiece,
+      maxLen = 12),
     // q286: Shapley over the data-derived channel lattice, built in
     // SQL from bit masks; v(S) in micros, credit as the exact
     // integer numerator beside n! — no signed division anywhere.
@@ -5885,7 +5670,7 @@ object SparkEntry {
              AS median_cents
          FROM p, cand""",
     // q290: k-core by iterated h-index — generated per-round CTEs.
-    "q290_kcore" -> kCoreOracleSql(rounds = 8),
+    "q290_kcore" -> kCoreOracleSql(Graph.kCoreRounds),
     // q291: cosine-squared in HUGEINT (the DECIMAL(38) twin), same
     // rank window and noise floor.
     "q291_item_neighbors" ->
@@ -5980,10 +5765,11 @@ object SparkEntry {
                  ROW_NUMBER() OVER (PARTITION BY c_custkey
                    ORDER BY valid_from DESC, tx_from DESC) AS rk
                FROM reg
-               WHERE valid_from <= DATE '1996-12-31'
+               WHERE valid_from <= DATE '${Relational.bitemporalValidAt}'
                  AND tx_from <= DATE '$tx') t
              WHERE rk = 1)"""
-      s"""${scd2HistSql("1995-01-01", "1996-06-01")},
+      s"""${scd2HistSql(
+           Relational.bitemporalEpoch, Relational.bitemporalAsOfDate)},
          reg AS (
            SELECT c_custkey, valid_from,
              valid_from + CAST(c_custkey % 3 AS INT) AS tx_from,
@@ -5993,8 +5779,8 @@ object SparkEntry {
            SELECT c_custkey, valid_from, valid_from + 10,
              c_mktsegment || '*'
            FROM scd2_hist WHERE c_custkey % 7 = 0),
-         ${believed("1996-06-01", "b1")},
-         ${believed("1999-01-01", "b2")}
+         ${believed(Relational.bitemporalTxEarly, "b1")},
+         ${believed(Relational.bitemporalTxLate, "b2")}
          SELECT b2.c_custkey, b1.seg AS seg_t1, b2.seg AS seg_t2,
            (b1.seg IS NOT NULL AND b1.seg <> b2.seg) AS view_changed
          FROM b2 LEFT JOIN b1 USING (c_custkey)"""
@@ -6168,7 +5954,8 @@ object SparkEntry {
          FROM agg a LEFT JOIN ov USING (q_id)""",
     // q300: Markov removal-effect attribution — 40 generated
     // value-iteration rounds over a variant-aware edge table.
-    "q300_markov_attribution" -> markovAttributionOracleSql(rounds = 40),
+    "q300_markov_attribution" -> markovAttributionOracleSql(
+      Experiment.markovAttributionRounds),
     // q301: the q114 scores, top-100 candidate cut, then the
     // prefix-packing running sum; digest in rank order.
     "q301_rag_context" ->
@@ -6920,7 +6707,8 @@ object SparkEntry {
     // q325: pass@k in the product form, the factor chain generated
     // with the same literal indices and multiplication order as the
     // Spark side (identical-tree doubles over exact integers).
-    "q325_pass_at_k" -> passAtKOracleSql(Seq(1, 5, 10), 5000L),
+    "q325_pass_at_k" -> passAtKOracleSql(
+      Experiment.passAtKs, Experiment.passAtCentsThreshold),
     // q326: nucleus truncation — bigram counts, (c desc, nxt asc)
     // running sums per context, first rank with 10*cum >= 9*total.
     "q326_nucleus_audit" ->
@@ -7036,7 +6824,9 @@ object SparkEntry {
          GROUP BY source""",
     // q329: generated replay — q322's IVF serve for the ANN shortlist,
     // eval-set cross join for the brute truth, per-k counted recall.
-    "q329_ann_recall" -> annRecallOracleSql(Seq(1, 5, 10), 37L, 16, 4),
+    "q329_ann_recall" -> annRecallOracleSql(Similarity.annRecallKs,
+      Similarity.annRecallSampleMod, Similarity.ivfClusters,
+      Similarity.ivfProbes),
     // q330: frozen-codebook staleness — BOTH assignments replay the
     // q32 argmax (original and 7-rotated re-encoding for labels >= 5),
     // self-similarity floors per pair, integer cell means.
@@ -7652,10 +7442,12 @@ object SparkEntry {
     // q157: apply the q155-trained merges corpus-wide — the oracle
     // replays the training chain (doc_id carried) and reads the final
     // round's streams as the encoding.
-    "q157_bpe_encode" -> bpeEncodeOracleSql(20, 8),
+    "q157_bpe_encode" ->
+      bpeEncodeOracleSql(TextAnalysis.bpeRounds, TextAnalysis.bpeEncodeHeadN),
     // q238: fertility — the q157 chain aggregated to the lang domain;
     // rounds must equal the Spark default.
-    "q238_tokenizer_fertility" -> tokenizerFertilityOracleSql(20),
+    "q238_tokenizer_fertility" ->
+      tokenizerFertilityOracleSql(TextAnalysis.bpeRounds),
     "q135_bpe_pairs" ->
       """WITH pairs AS (
            SELECT substr(text, CAST(i AS INT), 2) AS pair
@@ -8501,7 +8293,7 @@ object SparkEntry {
     // q163: trained-IVF — generated Lloyd's-loop CTE replay with the
     // pico-exact mean (see ivfTrainedOracleSql); iters must equal the
     // Spark default.
-    "q163_ivf_trained" -> ivfTrainedOracleSql(3),
+    "q163_ivf_trained" -> ivfTrainedOracleSql(Similarity.ivfTrainIters),
     "q40_lang_id" -> langIdOracle,
     // q61: rank rows 1..k per doc by the exact IDF ratio — ln-free so
     // the score is one bit-portable double division; row_number under

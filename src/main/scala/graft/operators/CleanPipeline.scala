@@ -70,9 +70,7 @@ object CleanPipeline {
     * digest shuffle, banded LSH, zero-shuffle redaction/split, and
     * doc_id-keyed joins to assemble the manifest.
     */
-  def corpusManifest(
-      spark: SparkSession, sfDir: String,
-      maxDupFrac: Double = 0.5): DataFrame = {
+  def corpusManifest(spark: SparkSession, sfDir: String): DataFrame = {
     // the PII columns and split assignment are row-local too, so they
     // ride the shared base's one scan; only the aggregate-shaped
     // repetition stats remain a join
@@ -84,7 +82,7 @@ object CleanPipeline {
           col("doc_id"), "", TrainingPrep.splitBuckets)).as("split"))
       .join(TextAnalysis.repetitionStats(spark, sfDir)
         .select(col("doc_id"), col("dup_frac")), "doc_id")
-      .filter(col("dup_frac") <= maxDupFrac)
+      .filter(col("dup_frac") <= 0.5)
       .select(col("doc_id"), col("lang_pred"), col("n_ws_tokens"),
         col("dup_frac"), col("n_emails"), col("redacted_fp"), col("split"))
   }
@@ -224,6 +222,9 @@ object CleanPipeline {
         lit(DpEpsilonMicro).as("epsilon_micro"))
   }
 
+  private val kAnonK = 5L
+  private val kAnonL = 2L
+
   /** The q201 driver entry: K-ANONYMITY / L-DIVERSITY AUDIT — the
     * release gate a dataset passes before leaving the lake: treating
     * (source, length decile) as the quasi-identifier and language as
@@ -244,9 +245,7 @@ object CleanPipeline {
     * distinct-language counts ride the same exchange (two-level
     * aggregate); output is class-domain-bounded.
     */
-  def kAnonymityAudit(
-      spark: SparkSession, sfDir: String,
-      k: Int = 5, l: Int = 2): DataFrame = {
+  def kAnonymityAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = graft.sources.Tables.load(spark, sfDir, "documents")
       .select(col("source"),
         least(floor(col("n_chars") / lit(64)).cast("long"), lit(9L))
@@ -259,9 +258,9 @@ object CleanPipeline {
       .agg(sum(col("c")).cast("long").as("n"),
         count(lit(1)).cast("long").as("n_langs"))
       .select(col("source"), col("len_bucket"), col("n"), col("n_langs"),
-        (col("n") >= k.toLong).as("k_ok"),
-        (col("n_langs") >= l.toLong).as("l_ok"),
-        (col("n") < k.toLong || col("n_langs") < l.toLong)
+        (col("n") >= kAnonK).as("k_ok"),
+        (col("n_langs") >= kAnonL).as("l_ok"),
+        (col("n") < kAnonK || col("n_langs") < kAnonL)
           .as("suppress"))
   }
 
@@ -402,9 +401,7 @@ object CleanPipeline {
     * bounded cross join so absent languages still contribute their
     * |0 − cum·n_cell| mass — forgetting them understates EMD).
     */
-  def tClosenessAudit(
-      spark: SparkSession, sfDir: String,
-      flagPpm: Long = 200000L): DataFrame = {
+  def tClosenessAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("source"),
         least(floor(col("n_chars") / lit(64)).cast("long"), lit(9L))
@@ -439,7 +436,7 @@ object CleanPipeline {
             AS DECIMAL(38, 0))) * 1000000
             DIV (MAX(n_cell) * MAX(n) * (MAX(v) - 1)) AS BIGINT)""")
           .as("t_ppm"))
-      .withColumn("t_ok", col("t_ppm") <= flagPpm)
+      .withColumn("t_ok", col("t_ppm") <= 200000L)
   }
 
   /** Severity-weighted toxicity lexicon for [[toxicityGate]] —
@@ -477,8 +474,8 @@ object CleanPipeline {
     * lexicon safety filter every pretraining ingest runs beside the
     * PII scrub (q75/q309) and the injection scan (q352): per-doc
     * weighted hit score (Σ severity·count over [[toxicLexicon]]) in
-    * ppm of the doc's words, a doc flag at `docPpm`, then the
-    * SOURCE-grain quarantine decision at `srcPpm` flagged-doc share
+    * ppm of the doc's words, a doc flag at `toxicDocPpm`, then the
+    * SOURCE-grain quarantine decision at `toxicSrcPpm` flagged-doc share
     * — source-level quarantine (drop/review the whole feed) is the
     * operational action, per-doc deletion alone leaves the feed
     * resupplying toxic text next crawl. Counting is whole-word
@@ -492,15 +489,11 @@ object CleanPipeline {
     * scoring is row-local; the only exchange is the single
     * map-side-combined aggregate onto the bounded source domain.
     */
-  def toxicityGate(
-      spark: SparkSession, sfDir: String,
-      docPpm: Long = toxicDocPpm, srcPpm: Long = toxicSrcPpm): DataFrame =
-    toxicityGateOn(Tables.load(spark, sfDir, "documents"), docPpm, srcPpm)
+  def toxicityGate(spark: SparkSession, sfDir: String): DataFrame =
+    toxicityGateOn(Tables.load(spark, sfDir, "documents"))
 
   /** The q361 core over any `(doc_id, source, text)` frame. */
-  def toxicityGateOn(
-      docs: DataFrame, docPpm: Long = toxicDocPpm,
-      srcPpm: Long = toxicSrcPpm): DataFrame = {
+  def toxicityGateOn(docs: DataFrame): DataFrame = {
     val hits = toxicLexicon.map { case (t, _) =>
       expr(s"CAST(size(filter(w, x -> x = '$t')) AS BIGINT)")
     }.reduce(_ + _)
@@ -514,7 +507,7 @@ object CleanPipeline {
         hits.as("n_hits"), score.as("score"))
       .where(col("n_words") >= 1L)
       .withColumn("score_ppm", expr("score * 1000000 DIV n_words"))
-      .withColumn("flagged", col("score_ppm") > docPpm)
+      .withColumn("flagged", col("score_ppm") > toxicDocPpm)
     perDoc.groupBy(col("source"))
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(when(col("flagged"), 1L).otherwise(0L)).cast("long")
@@ -522,7 +515,7 @@ object CleanPipeline {
         sum(col("n_hits")).cast("long").as("total_hits"),
         sum(col("score")).cast("long").as("total_score"))
       .withColumn("flagged_ppm", expr("n_flagged * 1000000 DIV n_docs"))
-      .withColumn("quarantine", col("flagged_ppm") > srcPpm)
+      .withColumn("quarantine", col("flagged_ppm") > toxicSrcPpm)
   }
 
   /** The q375 driver entry: FILTER OPERATING CURVE — the tuning
@@ -550,17 +543,13 @@ object CleanPipeline {
   val filterCurveThresholds: Seq[Long] =
     Seq(0L, 100000L, 200000L, 300000L)
 
-  def filterOperatingCurve(
-      spark: SparkSession, sfDir: String,
-      thresholds: Seq[Long] = filterCurveThresholds): DataFrame = {
-    require(thresholds.nonEmpty && thresholds == thresholds.sorted,
-      "thresholds are an ascending ppm grid")
+  def filterOperatingCurve(spark: SparkSession, sfDir: String): DataFrame = {
     val scored = Experiment.rocAucScored(spark, sfDir)
       .select(col("doc_id"), col("score"))
     val aggs = Seq(
       count(lit(1)).cast("long").as("n_docs"),
       sum(col("ntok")).cast("long").as("tokens_total")) ++
-      thresholds.flatMap { t =>
+      filterCurveThresholds.flatMap { t =>
         Seq(
           sum(when(col("score") >= t, 1L).otherwise(0L)).cast("long")
             .as(s"kept_$t"),
@@ -575,7 +564,7 @@ object CleanPipeline {
       .join(scored, Seq("doc_id"))
       .groupBy(col("source"))
       .agg(aggs.head, aggs.tail: _*)
-    thresholds.map { t =>
+    filterCurveThresholds.map { t =>
       base.select(col("source"), lit(t).as("threshold_micro"),
         col("n_docs"), col("tokens_total"),
         col(s"kept_$t").as("kept_docs"),

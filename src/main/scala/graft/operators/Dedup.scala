@@ -46,7 +46,7 @@ object Dedup {
     * words produce no shingles (dropped, like the reference drops
     * malformed lines).
     */
-  def shingles(docs: DataFrame, n: Int, distinctPerDoc: Boolean = true): DataFrame = {
+  def shingles(docs: DataFrame, n: Int): DataFrame = {
     val words = normWords(col("text"))
     val exploded = docs
       .filter(size(words) >= n)
@@ -56,9 +56,7 @@ object Dedup {
           transform(
             sequence(lit(0), size(words) - n),
             i => array_join(slice(words, i + 1, lit(n)), " "))).as("shingle"))
-    // distinct costs a shuffle; skip it when the consumer is
-    // idempotent under duplicates (min-agg, collect_set)
-    if (distinctPerDoc) exploded.distinct() else exploded
+    exploded.distinct()
   }
 
   /** (doc_id, sh) 64-bit shingle hashes via the custom single-pass
@@ -241,13 +239,9 @@ object Dedup {
   val yieldThresholdsPpm: Seq[Long] =
     Seq(300000L, 400000L, 500000L, 600000L, 700000L, 800000L, 900000L)
 
-  def dedupYieldCurve(
-      spark: SparkSession, sfDir: String,
-      thresholdsPpm: Seq[Long] = yieldThresholdsPpm): DataFrame = {
-    require(thresholdsPpm.nonEmpty && thresholdsPpm == thresholdsPpm.sorted,
-      "thresholds are an ascending ppm grid")
+  def dedupYieldCurve(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = ngramJaccardPairs(spark, sfDir,
-      threshold = thresholdsPpm.head / 1000000.0)
+      threshold = yieldThresholdsPpm.head / 1000000.0)
     val toks = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         TextAnalysis.bpeTokenCount(col("text")).as("ntok"))
@@ -263,7 +257,7 @@ object Dedup {
       .groupBy(col("id_b").as("doc_id")).agg(max(col("jaccard")).as("max_j"))
       .join(toks, Seq("doc_id"))
       .localCheckpoint(true)
-    thresholdsPpm.map { t =>
+    yieldThresholdsPpm.map { t =>
       val stats = pairs.where(col("jaccard") >= t / 1000000.0)
         .agg(count(lit(1)).cast("long").as("n_pairs"))
       val mass = droppedMass.where(col("max_j") >= t / 1000000.0)
@@ -298,10 +292,7 @@ object Dedup {
     */
   val ContainOffset = 7000000000L
 
-  def containmentPairs(
-      spark: SparkSession, sfDir: String,
-      n: Int = 5, thresholdMicro: Long = 800000L,
-      maxPostingLen: Int = defaultMaxPostingLen): DataFrame = {
+  def containmentPairs(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val containers = docs.where(col("doc_id") % 25 === 0).as("a")
@@ -309,10 +300,10 @@ object Dedup {
       .select((col("a.doc_id") + ContainOffset).as("doc_id"),
         concat(col("a.text"), lit(" "), col("b.text")).as("text"))
     val planted = docs.unionByName(containers)
-    val index = shingleHashes(planted, n)
+    val index = shingleHashes(planted, 5)
       .groupBy(col("sh"))
       .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= maxPostingLen)
+      .filter(size(col("ids")) <= defaultMaxPostingLen)
       .persist()
     try {
       val sizes = index
@@ -332,7 +323,7 @@ object Dedup {
           col("id_b").as("container_id"), col("n_common"),
           expr("CAST((n_common * 1000000) DIV n_a AS BIGINT)")
             .as("containment_micro"))
-        .filter(col("containment_micro") >= thresholdMicro)
+        .filter(col("containment_micro") >= 800000L)
         .localCheckpoint(true)
     } finally index.unpersist()
   }
@@ -656,15 +647,19 @@ object Dedup {
       .distinct()
 
   def minhashIncrementalPairs(
-      newDocs: DataFrame, existingSig: DataFrame,
-      n: Int = 5, threshold: Double = 0.5): DataFrame = {
-    val newSig = minhashSignatures(newDocs, n).persist()
+      newDocs: DataFrame, existingSig: DataFrame): DataFrame = {
+    val newSig = minhashSignatures(newDocs, 5).persist()
     try {
       val allSig = existingSig.unionByName(newSig)
-      estVerify(incrementalCandidates(newSig, allSig), allSig, threshold)
+      estVerify(incrementalCandidates(newSig, allSig), allSig, 0.5)
         .localCheckpoint(true)
     } finally newSig.unpersist()
   }
+
+  /** `doc_id % newBatchModulus == 0` is the day's NEW batch of the
+    * incremental dedup entries (q45, q46, q350); the rest is history.
+    */
+  private val newBatchModulus = 5
 
   /** The q45 driver entry: incremental (daily-ingest-shaped) near-dup
     * under the hard oracle. The `documents` table is split
@@ -685,8 +680,8 @@ object Dedup {
     */
   def minhashIncrementalVerified(
       spark: SparkSession, sfDir: String,
-      n: Int = 5, threshold: Double = 0.5, newModulus: Int = 5): DataFrame = {
-    val sh = shingleHashes(Tables.load(spark, sfDir, "documents"), n)
+      newModulus: Int = newBatchModulus): DataFrame = {
+    val sh = shingleHashes(Tables.load(spark, sfDir, "documents"), 5)
       .persist() // feeds signatures AND verification sets; released below
     try {
       val mins = (0 until numHashes).map(i =>
@@ -696,7 +691,7 @@ object Dedup {
       val cand = incrementalCandidates(newSig, sig)
       val sets = sh.groupBy(col("doc_id"))
         .agg(collect_set(col("sh")).as("shs"))
-      verifyExactJaccard(cand, sets, threshold).localCheckpoint(true)
+      verifyExactJaccard(cand, sets, 0.5).localCheckpoint(true)
     } finally sh.unpersist()
   }
 
@@ -710,18 +705,17 @@ object Dedup {
     incrementalCandidates(newSig, histSig.unionByName(newSig))
 
   /** Write MinHash signatures for the history half of `documents`
-    * (doc_id % newModulus != 0) to `sigPath` via the mergeable
+    * (doc_id % newBatchModulus != 0) to `sigPath` via the mergeable
     * [[MinHashAgg]] sketch — 64 longs per doc, bit-equal to the
     * 64-column SQL path (DedupSpec), partial-day sketches merge
     * associatively. The "yesterday" step of the persisted-signature
     * daily-ingest pipeline.
     */
   def persistHistorySignatures(
-      spark: SparkSession, sfDir: String, sigPath: String,
-      n: Int = 5, newModulus: Int = 5): Unit = {
+      spark: SparkSession, sfDir: String, sigPath: String): Unit = {
     import spark.implicits._
     val docs = Tables.load(spark, sfDir, "documents")
-    shingleHashes(docs.filter(col("doc_id") % newModulus =!= 0), n)
+    shingleHashes(docs.filter(col("doc_id") % newBatchModulus =!= 0), 5)
       .as[(Long, Long)]
       .groupByKey(_._1)
       .agg(new MinHashAgg().toColumn.name("sig"))
@@ -737,17 +731,15 @@ object Dedup {
       col("doc_id") +:
         (0 until numHashes).map(i => col("sig")(i).as(s"mh_$i")): _*)
 
-  /** MinHash signatures of the NEW batch only (doc_id % newModulus
+  /** MinHash signatures of the NEW batch only (doc_id % newBatchModulus
     * == 0). This frame's plan scans `documents` exactly once —
     * DedupSpec asserts that — and [[persistedCandidates]] materializes
     * it eagerly so banding's two uses of it never re-scan.
     */
-  def newBatchSignatures(
-      spark: SparkSession, sfDir: String,
-      n: Int = 5, newModulus: Int = 5): DataFrame = {
+  def newBatchSignatures(spark: SparkSession, sfDir: String): DataFrame = {
     val newSh = shingleHashes(
       Tables.load(spark, sfDir, "documents")
-        .filter(col("doc_id") % newModulus === 0), n)
+        .filter(col("doc_id") % newBatchModulus === 0), 5)
     val mins = (0 until numHashes).map(i =>
       min(xxhash64(lit(i), col("sh"))).as(s"mh_$i"))
     newSh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
@@ -764,11 +756,10 @@ object Dedup {
     * `sigPath`.
     */
   def persistedCandidates(
-      spark: SparkSession, sfDir: String, sigPath: String,
-      n: Int = 5, newModulus: Int = 5): DataFrame = {
+      spark: SparkSession, sfDir: String, sigPath: String): DataFrame = {
     val histSig = readSignatures(spark, sigPath)
     val newSig =
-      newBatchSignatures(spark, sfDir, n, newModulus).localCheckpoint(true)
+      newBatchSignatures(spark, sfDir).localCheckpoint(true)
     bandAgainstHistory(histSig, newSig)
   }
 
@@ -797,13 +788,12 @@ object Dedup {
     */
   def minhashIncrementalPersisted(
       spark: SparkSession, sfDir: String,
-      n: Int = 5, threshold: Double = 0.5, newModulus: Int = 5,
       sigPath: Option[String] = None): DataFrame = {
     val path = sigPath.getOrElse(Scratch.dir(spark, "q46_sig", sfDir))
     try {
-      persistHistorySignatures(spark, sfDir, path, n, newModulus)
+      persistHistorySignatures(spark, sfDir, path)
       val docs = Tables.load(spark, sfDir, "documents")
-      val cand = persistedCandidates(spark, sfDir, path, n, newModulus)
+      val cand = persistedCandidates(spark, sfDir, path)
         .persist() // feeds the id fetch AND the verification join
       try {
         val candIds = cand
@@ -811,10 +801,10 @@ object Dedup {
           .distinct()
         // candidate docs' shingle sets — the only place history text is
         // read, and only for docs that appear in a candidate pair
-        val sets = shingleHashes(docs.join(candIds, "doc_id"), n)
+        val sets = shingleHashes(docs.join(candIds, "doc_id"), 5)
           .groupBy(col("doc_id"))
           .agg(collect_set(col("sh")).as("shs"))
-        verifyExactJaccard(cand, sets, threshold).localCheckpoint(true)
+        verifyExactJaccard(cand, sets, 0.5).localCheckpoint(true)
       } finally cand.unpersist()
     } finally if (sigPath.isEmpty)
       // default (session-temp) signatures are scratch: remove the
@@ -1009,7 +999,7 @@ object Dedup {
     * this passage come from" audits and license-contamination
     * triage). CDC chunk digests post into the q21 capped inverted
     * index; pairs count shared distinct chunks. Chunks under
-    * `minChunkLen` chars are excluded — sentinel-scale fragments
+    * 16 chars are excluded — sentinel-scale fragments
     * (the inter-boundary slivers every doc produces) would pair
     * everything; a >= 16-char shared chunk is a shared PASSAGE.
     *
@@ -1017,10 +1007,7 @@ object Dedup {
     * into the posting index; fan-out is bounded per posting list by
     * the q21 cap; text never enters an exchange.
     */
-  def cdcProvenance(
-      spark: SparkSession, sfDir: String,
-      minChunkLen: Int = 16,
-      maxPostingLen: Int = defaultMaxPostingLen): DataFrame = {
+  def cdcProvenance(spark: SparkSession, sfDir: String): DataFrame = {
     val chunks = cdcChunks(Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("source"),
         concat(
@@ -1029,12 +1016,12 @@ object Dedup {
           col("text"),
           when(col("doc_id") % 5 === 0, lit(" " + boilerplateFooter))
             .otherwise(lit(""))).as("text")))
-      .where(length(col("chunk")) >= minChunkLen)
+      .where(length(col("chunk")) >= 16)
       .select(col("doc_id"), md5(col("chunk")).as("dg"))
       .distinct()
     val index = chunks.groupBy(col("dg"))
       .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= maxPostingLen)
+      .filter(size(col("ids")) <= defaultMaxPostingLen)
     index
       .filter(size(col("ids")) > 1)
       .select(explode(col("ids")).as("id_a"), col("ids"))
@@ -1078,22 +1065,13 @@ object Dedup {
       .agg(countDistinct(col("sh")).as("n_common"))
   }
 
-  /** Bloom geometry (q237): m = 2^16 bits packed 32 per BIGINT word
-    * (2048 words, a 16 KB broadcast; 32-bit packing keeps every shift
-    * <= 31 — DuckDB's checked BIGINT arithmetic refuses 1 << 63 where
-    * Spark wraps silently, the q221 divergence class), k = 2 probe
-    * positions taken from disjoint md5 nibbles of the gram TEXT — the
-    * md5 device (q23/q31) keeps every bit position SQL-derivable,
-    * unlike the FNV shingle hash the q21/q83 join path uses
-    * internally.
-    */
-  val BloomBits = 1 << 16
+  private val bloomGramN = 3
 
   /** The q237 driver entry: BLOOM-PREFILTERED DECONTAMINATION — the
     * scale form of q83's eval-overlap hygiene: instead of
     * broadcasting the full eval n-gram set against the corpus, the
-    * eval grams fold into a 2^16-bit Bloom filter (bit_or over 1024
-    * words — an 8 KB artifact no matter how large the suite grows),
+    * eval grams fold into a 2^16-bit Bloom filter (bit_or over 2048
+    * words — a 16 KB artifact no matter how large the suite grows),
     * the corpus gram stream probes it as a narrow broadcast-join
     * expression (both probe bits set -> candidate), and only
     * candidates meet the exact eval-set join. Output is the FUNNEL
@@ -1109,20 +1087,26 @@ object Dedup {
     * q83 exact join remains the verification tail on the candidate
     * slice alone).
     *
-    * All-integer and exactly replayed in SQL: positions are hex
-    * nibbles 1-4 and 5-8 of md5(gram), the filter is 1024 bit_or'd
-    * BIGINT words, membership is shift-and-mask.
+    * All-integer and exactly replayed in SQL. Bloom geometry: m =
+    * 2^16 bits packed 32 per BIGINT word (2048 bit_or'd words, a
+    * 16 KB broadcast; 32-bit packing keeps every shift <= 31 —
+    * DuckDB's checked BIGINT arithmetic refuses 1 << 63 where Spark
+    * wraps silently, the q221 divergence class), k = 2 probe
+    * positions from hex nibbles 1-4 and 5-8 of md5(gram) — the md5
+    * device (q23/q31) keeps every bit position SQL-derivable, unlike
+    * the FNV shingle hash the q21/q83 join path uses internally.
+    * Membership is shift-and-mask.
     */
-  def bloomDecontaminate(
-      spark: SparkSession, sfDir: String, n: Int = 3): DataFrame = {
+  def bloomDecontaminate(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
     def grams(df: DataFrame): DataFrame = {
       val w = normWords(col("text"))
       df.select(col("doc_id"), w.as("w"))
-        .where(size(col("w")) >= n)
+        .where(size(col("w")) >= bloomGramN)
         .select(explode(transform(
-          sequence(lit(1), size(col("w")) - (n - 1)),
-          i => array_join(slice(col("w"), i, lit(n)), " "))).as("g"))
+          sequence(lit(1), size(col("w")) - (bloomGramN - 1)),
+          i => array_join(slice(col("w"), i, lit(bloomGramN)), " ")))
+          .as("g"))
     }
     def pos1(g: Column) = conv(substring(md5(g), 1, 4), 16, 10).cast("long")
     def pos2(g: Column) = conv(substring(md5(g), 5, 4), 16, 10).cast("long")
@@ -1170,10 +1154,12 @@ object Dedup {
   val boilerplateHeader = "subscribe to our newsletter for updates"
   val boilerplateFooter = "all rights reserved contact us"
 
+  private val lineChunkWords = 10
+
   /** Line-level corpus dedup (q100) — the CCNet/RefinedWeb
     * boilerplate-removal step: split every document into lines, count
     * each line's occurrences across the WHOLE corpus, drop lines
-    * appearing more than [[maxCount]] times (nav bars, cookie
+    * appearing more than 5 times (nav bars, cookie
     * banners, copyright footers repeat across a site; prose doesn't),
     * and reassemble the surviving lines in original order. Documents
     * whose every line is boilerplate survive with empty text — they
@@ -1181,7 +1167,7 @@ object Dedup {
     * silently dropped rows.
     *
     * The fixture's documents are single-line, so "lines" are
-    * synthesized as consecutive [[chunkWords]]-word windows plus the
+    * synthesized as consecutive `lineChunkWords`-word windows plus the
     * injected [[boilerplateHeader]]/[[boilerplateFooter]]; the
     * production operator is the same plan over `split(text, '\n')`.
     *
@@ -1189,14 +1175,12 @@ object Dedup {
     * md5 digest with map-side partial aggregation — line TEXT never
     * enters that exchange. Text shuffles exactly twice, both
     * irreducible: once keyed by digest to meet its count (at high
-    * [[maxCount]] the over-threshold digest set is small enough to
+    * 5 the over-threshold digest set is small enough to
     * broadcast as an anti-join instead, eliminating this one), and
     * once keyed by doc_id to reassemble. Per-doc state is bounded by
     * document size, so no key can skew the reassembly exchange.
     */
-  def lineDedup(
-      spark: SparkSession, sfDir: String,
-      chunkWords: Int = 10, maxCount: Int = 5): DataFrame = {
+  def lineDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
     val w = split(col("text"), " ")
     // position-explode + top-level slice/array_join (the round-18
@@ -1206,10 +1190,10 @@ object Dedup {
     val chunks = docs.select(col("doc_id"), w.as("w"))
       .select(col("doc_id"), col("w"),
         posexplode(sequence(lit(0),
-          ceil(size(col("w")) / lit(chunkWords.toDouble)).cast("int") - 1)))
+          ceil(size(col("w")) / lit(lineChunkWords.toDouble)).cast("int") - 1)))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
-        array_join(slice(col("w"), col("col") * chunkWords + 1,
-          lit(chunkWords)), " ").as("line"))
+        array_join(slice(col("w"), col("col") * lineChunkWords + 1,
+          lit(lineChunkWords)), " ").as("line"))
     val header = docs.filter(col("doc_id") % 3 === 0)
       .select(col("doc_id"), lit(0L).as("pos"),
         lit(boilerplateHeader).as("line"))
@@ -1221,7 +1205,7 @@ object Dedup {
     val counts = lines.groupBy(md5(col("line")).as("h"))
       .agg(count(lit(1)).as("c"))
     val kept = lines.join(counts, md5(col("line")) === col("h"))
-      .filter(col("c") <= maxCount)
+      .filter(col("c") <= 5)
     val totals = lines.groupBy("doc_id").agg(count(lit(1)).as("n_lines"))
     val reassembled = kept.groupBy("doc_id").agg(
       array_join(
@@ -1263,8 +1247,7 @@ object Dedup {
     * loss. DedupSpec asserts both modes yield identical labels.
     */
   def connectedComponents(
-      pairs: DataFrame, maxIter: Int = 20,
-      reliable: Boolean = false): DataFrame = {
+      pairs: DataFrame, reliable: Boolean = false): DataFrame = {
     def materialize(df: DataFrame): DataFrame =
       if (!reliable) df.localCheckpoint(true)
       else {
@@ -1281,7 +1264,7 @@ object Dedup {
         .withColumn("comp", col("id")))
     var converged = false
     var i = 0
-    while (!converged && i < maxIter) {
+    while (!converged && i < 20) {
       val nbrMin = edges
         .join(labels.select(col("id").as("src"), col("comp").as("src_comp")), "src")
         .groupBy(col("dst").as("id"))
@@ -1310,9 +1293,8 @@ object Dedup {
     * near-dup cluster survives). The transitive upgrade of
     * CleanPipeline's cheap drop-b policy.
     */
-  def nearDupSurvivors(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame = {
-    val pairs = minhashLshPairsVerified(spark, sfDir, threshold = threshold)
+  def nearDupSurvivors(spark: SparkSession, sfDir: String): DataFrame = {
+    val pairs = minhashLshPairsVerified(spark, sfDir)
     val docs = Tables.load(spark, sfDir, "documents").select(col("doc_id"))
     val comps = connectedComponents(pairs)
     docs.join(comps.filter(col("id") =!= col("comp"))
@@ -1339,9 +1321,8 @@ object Dedup {
     * Scale shape: q22's candidate path + one comp-keyed size
     * aggregate + one comp-keyed join-back; weights are row-local.
     */
-  def softDedupWeights(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame = {
-    val withComp = docClusters(spark, sfDir, threshold)
+  def softDedupWeights(spark: SparkSession, sfDir: String): DataFrame = {
+    val withComp = docClusters(spark, sfDir)
     val sizes = withComp.groupBy(col("comp"))
       .agg(count(lit(1)).cast("long").as("cluster_size"))
     withComp.join(sizes, "comp")
@@ -1363,9 +1344,9 @@ object Dedup {
     * Verify all drop dead blocks between entries). Accepted for the
     * 2-3x consumer reuse documented below.
     */
-  private[graft] def docClusters(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame = {
-    val pairs = minhashLshPairsVerified(spark, sfDir, threshold = threshold)
+  private[graft] def docClusters(
+      spark: SparkSession, sfDir: String): DataFrame = {
+    val pairs = minhashLshPairsVerified(spark, sfDir)
     val comps = connectedComponents(pairs)
       .select(col("id").as("doc_id"), col("comp"))
     Tables.load(spark, sfDir, "documents").select(col("doc_id"))
@@ -1397,8 +1378,7 @@ object Dedup {
     * (stratum-keyed rank over CLUSTERS, not docs) + one comp-keyed
     * join-back.
     */
-  def stratifiedGroupKFold(spark: SparkSession, sfDir: String,
-      k: Int = 5): DataFrame = {
+  def stratifiedGroupKFold(spark: SparkSession, sfDir: String): DataFrame = {
     val withComp = docClusters(spark, sfDir)
       .join(Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("lang")), "doc_id")
@@ -1416,11 +1396,13 @@ object Dedup {
         Window.partitionBy(col("stratum"))
           .orderBy(col("sz").desc, col("comp").asc)).cast("long"))
       .select(col("comp"), col("stratum"),
-        ((col("crk") - 1L) % k).cast("long").as("fold"))
+        ((col("crk") - 1L) % 5).cast("long").as("fold"))
     withComp.join(folds, "comp")
       .select(col("doc_id"), col("comp").as("cluster_rep"),
         col("stratum"), col("fold"))
   }
+
+  private val contrastiveBatchSize = 8
 
   /** The q303 driver entry: CLUSTER-DISJOINT CONTRASTIVE BATCH
     * MANIFEST — the batch-construction rule contrastive training
@@ -1444,12 +1426,11 @@ object Dedup {
     * round-13 verdict replaced the partition-less global window
     * here); the manifest is batch-grain.
     */
-  def contrastiveBatches(spark: SparkSession, sfDir: String,
-      batchSize: Int = 8): DataFrame = {
+  def contrastiveBatches(spark: SparkSession, sfDir: String): DataFrame = {
     val withComp = docClusters(spark, sfDir)
     // max(1, ...) keeps the modulus sound on an empty corpus
-    val nb = math.max(1L,
-      (withComp.count() + batchSize - 1) / batchSize).toInt
+    val nb = math.max(1L, (withComp.count() + contrastiveBatchSize - 1) /
+      contrastiveBatchSize).toInt
     val clusterSalt = md5(concat(lit("cb:"), col("comp").cast("string")))
     val ranked = Relational.chunkedRowNumber(withComp,
       bucket = substring(clusterSalt, 1, 2),
@@ -1513,32 +1494,30 @@ object Dedup {
     * (table, chunk) — O(n) bucket rows, quadratic only within a
     * bucket (n/2^bits expected; AQE skew-join splits hot buckets) —
     * then candidates are verified with the exact cosine. The corpus
-    * shuffles its (vec_id, table, chunk) triples — `numTables` small
+    * shuffles its (vec_id, table, chunk) triples — `embedLshTables` small
     * rows per vector, never the vector itself; vectors are joined back
     * only for the (few) candidate ids.
     */
   def embeddingPairsLsh(
       spark: SparkSession, sfDir: String, threshold: Double = 0.95,
-      numTables: Int = embedLshTables,
       bitsPerTable: Int = embedLshBitsPerTable): DataFrame =
     normalizedPairsLsh(
       Tables.load(spark, sfDir, "embeddings")
         .select(col("vec_id"),
           graft.functions.Vectors.l2normalize(col("embedding")).as("u")),
-      threshold, numTables, bitsPerTable)
+      threshold, bitsPerTable)
 
   /** [[embeddingPairsLsh]] generalized to any pre-normalized
     * `(vec_id, u: array<double>)` corpus frame — the planted-copy q24
     * entry and tests feed augmented corpora through the same plan.
     */
   def normalizedPairsLsh(
-      e: DataFrame, threshold: Double,
-      numTables: Int, bitsPerTable: Int): DataFrame = {
+      e: DataFrame, threshold: Double, bitsPerTable: Int): DataFrame = {
     import graft.functions.VectorExpressions.lsh_bucket
     require(bitsPerTable <= 64, "a table code is one Long")
     val chunks = e.select(
       col("vec_id"),
-      explode(array((0 until numTables).map { t =>
+      explode(array((0 until embedLshTables).map { t =>
         struct(lit(t).as("tbl"),
           lsh_bucket(col("u"), bitsPerTable, t * bitsPerTable).as("ck"))
       }: _*)).as("blk"))
@@ -1581,10 +1560,7 @@ object Dedup {
     * 1 - ~6e-7 per pair — the oracle compares REAL rows (50 pairs at
     * sf0.01), closing the round-2 vacuous-PASS gap.
     */
-  def embeddingNearDupPlanted(
-      spark: SparkSession, sfDir: String, threshold: Double = 0.95,
-      numTables: Int = embedLshTables,
-      bitsPerTable: Int = embedLshBitsPerTable): DataFrame = {
+  def embeddingNearDupPlanted(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"),
         graft.functions.Vectors.l2normalize(col("embedding")).as("u"))
@@ -1593,7 +1569,7 @@ object Dedup {
     val planted = e.filter(col("vec_id") % plantEvery === 0)
       .select((col("vec_id") + plantIdOffset).as("vec_id"),
         graft.functions.Vectors.l2normalize(nudged).as("u"))
-    normalizedPairsLsh(e.unionByName(planted), threshold, numTables, bitsPerTable)
+    normalizedPairsLsh(e.unionByName(planted), 0.95, embedLshBitsPerTable)
   }
 
   /** The q158 driver entry: SemDeDup (Abbas et al. 2023) — semantic
@@ -1997,10 +1973,8 @@ object Dedup {
     * banded recall being complete at the fixture scale, which
     * DedupSpec pins (candidate recall == exhaustive pairs).
     */
-  def qualitySurvivors(
-      spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame = {
-    val pairs = minhashLshPairsVerified(spark, sfDir, threshold = threshold)
+  def qualitySurvivors(spark: SparkSession, sfDir: String): DataFrame = {
+    val pairs = minhashLshPairsVerified(spark, sfDir)
     val comps = connectedComponents(pairs)
     val q = TextAnalysis.quality(spark, sfDir)
       .select(col("doc_id"),
@@ -2334,11 +2308,7 @@ object Dedup {
     * verification and the |grid| estimator arms touch candidate
     * pairs only, one projection each over one joined pair frame.
     */
-  def bbitMinwiseEval(
-      spark: SparkSession, sfDir: String,
-      bitsGrid: Seq[Int] = bbitGrid): DataFrame = {
-    require(bitsGrid.nonEmpty && bitsGrid == bitsGrid.sorted &&
-      bitsGrid.forall(b => b >= 1 && b <= 32), "ascending bit grid")
+  def bbitMinwiseEval(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
     val sets = docShingleSets(docs).localCheckpoint(true)
     val sigs = bandingSigsFromSets(sets)
@@ -2378,7 +2348,7 @@ object Dedup {
       .withColumn("m_full",
         slotMatches(col("sig_a"), col("sig_b"))(_ === _))
       .localCheckpoint(true) // read once per grid arm
-    bitsGrid.map { b =>
+    bbitGrid.map { b =>
       val pow = 1L << b
       paired
         .withColumn("m_b",
@@ -2445,7 +2415,7 @@ object Dedup {
     * daily-ingest form, the q46 persisted-artifact discipline applied
     * to the span census: "yesterday" materializes the HISTORY span
     * census (16-byte digest → doc count) as a parquet artifact;
-    * "today" shingles ONLY the new batch (doc_id % `newModulus` = 0,
+    * "today" shingles ONLY the new batch (doc_id % `newBatchModulus` = 0,
     * the q46 split) and joins it against the read-back artifact —
     * history TEXT is never re-read, which is the entire economics of
     * a daily pass over a 100 TB corpus (the census artifact is ~16
@@ -2466,7 +2436,7 @@ object Dedup {
     * side scans only the batch and joins two digest-keyed frames.
     */
   def dupSpanIncremental(
-      spark: SparkSession, sfDir: String, newModulus: Int = 5,
+      spark: SparkSession, sfDir: String,
       censusPath: Option[String] = None): DataFrame = {
     val path = censusPath.getOrElse(Scratch.dir(spark, "q350_census", sfDir))
     try {
@@ -2475,13 +2445,13 @@ object Dedup {
       // artifact stores (hash, count), ~16 B/span either way
       def digested(side: DataFrame) = shingleHashes(side, 5).distinct()
       // 1. "yesterday": persist the history span census
-      digested(docs.filter(col("doc_id") % newModulus =!= 0))
+      digested(docs.filter(col("doc_id") % newBatchModulus =!= 0))
         .groupBy(col("sh"))
         .agg(count(lit(1)).cast("long").as("n_hist"))
         .write.mode("overwrite").parquet(path)
       // 2. "today": census read back; only the new batch is shingled
       val census = spark.read.parquet(path)
-      val newSh = digested(docs.filter(col("doc_id") % newModulus === 0))
+      val newSh = digested(docs.filter(col("doc_id") % newBatchModulus === 0))
         .localCheckpoint(true) // feeds the batch census AND the verdict
       val batchCensus = newSh.groupBy(col("sh"))
         .agg(count(lit(1)).cast("long").as("n_batch"))
@@ -2523,10 +2493,8 @@ object Dedup {
     * join-back; singletons never enter the CC loop (coalesce to
     * their own id).
     */
-  def canonicalizeClusters(
-      spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame = {
-    val pairs = minhashLshPairsVerified(spark, sfDir, threshold = threshold)
+  def canonicalizeClusters(spark: SparkSession, sfDir: String): DataFrame = {
+    val pairs = minhashLshPairsVerified(spark, sfDir)
     val comps = connectedComponents(pairs)
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))

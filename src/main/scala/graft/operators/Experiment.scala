@@ -364,6 +364,8 @@ object Experiment {
         col("theta_micro"))
   }
 
+  private val churnHorizonDays = 14
+
   /** The q208 driver entry: CHURN LABEL GENERATION — the label table
     * a churn model trains on, built censoring-aware: a user is
     * churned when their recency (days from last activity to the
@@ -377,8 +379,7 @@ object Experiment {
     * All integer/date arithmetic; one map-side-combined per-user
     * aggregate plus a 1-row anchor broadcast.
     */
-  def churnLabels(
-      spark: SparkSession, sfDir: String, horizonDays: Int = 14): DataFrame = {
+  def churnLabels(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.load(spark, sfDir, "events")
       .select(col("user_id"), to_date(col("ts")).as("day"))
     val anchor = ev.agg(max(col("day")).as("obs_end"))
@@ -391,10 +392,10 @@ object Experiment {
         col("n_active_days"),
         datediff(col("obs_end"), col("last_day")).cast("long")
           .as("recency_days"),
-        (datediff(col("obs_end"), col("first_day")) >= horizonDays)
+        (datediff(col("obs_end"), col("first_day")) >= churnHorizonDays)
           .as("observable"),
-        (datediff(col("obs_end"), col("first_day")) >= horizonDays &&
-          datediff(col("obs_end"), col("last_day")) > horizonDays)
+        (datediff(col("obs_end"), col("first_day")) >= churnHorizonDays &&
+          datediff(col("obs_end"), col("last_day")) > churnHorizonDays)
           .as("churned"))
   }
 
@@ -682,6 +683,8 @@ object Experiment {
         col("decayed_cents").cast("long").as("decayed_cents"))
   }
 
+  private[graft] val markovStationaryIters = 30
+
   /** The q232 driver entry: MARKOV STATIONARY DISTRIBUTION of the
     * user-journey chain — where q121 reports one-step transition
     * probabilities, the stationary vector answers "where do journeys
@@ -698,8 +701,7 @@ object Experiment {
     * fact-scale stage (q121's); iteration cost is O(types²·T),
     * corpus-independent.
     */
-  def markovStationary(
-      spark: SparkSession, sfDir: String, iters: Int = 30): DataFrame = {
+  def markovStationary(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val order = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").asc, col("event_id").asc)
@@ -717,7 +719,7 @@ object Experiment {
     counts.foreach { case (f, t, n) => nMat(idx(f))(idx(t)) = n }
     val rowsum = nMat.map(_.sum)
     var pi = Array.fill(k)(BigInt(1000000))
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to markovStationaryIters) {
       val raw = Array.tabulate(k)(j =>
         (0 until k).map(i =>
           if (rowsum(i) == 0) BigInt(0)
@@ -888,6 +890,9 @@ object Experiment {
           .as("lift_micro"))
   }
 
+  private val ksSegA = "purchase"
+  private val ksSegB = "click"
+
   /** The q258 driver entry: TWO-SAMPLE KOLMOGOROV–SMIRNOV DRIFT TEST
     * — the distribution-free drift check ML-ops runs between two
     * segments of a metric (here purchase vs click transaction values
@@ -908,16 +913,14 @@ object Experiment {
     * Products are DECIMAL(38,0)/HUGEINT (the q221 rule — cum·n·10⁶
     * passes 2⁶³ beyond ~10⁶ rows per segment).
     */
-  def ksDrift(
-      spark: SparkSession, sfDir: String,
-      segA: String = "purchase", segB: String = "click"): DataFrame = {
+  def ksDrift(spark: SparkSession, sfDir: String): DataFrame = {
     val cents = expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
     val ev = Tables.load(spark, sfDir, "events")
-      .where(col("event_type").isin(segA, segB))
+      .where(col("event_type").isin(ksSegA, ksSegB))
       .select(col("event_type").as("seg"), cents.as("v"))
     val counts = ev.groupBy(col("v"))
-      .agg(sum(when(col("seg") === segA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("seg") === segB, 1L).otherwise(0L)).as("c2"))
+      .agg(sum(when(col("seg") === ksSegA, 1L).otherwise(0L)).as("c1"),
+        sum(when(col("seg") === ksSegB, 1L).otherwise(0L)).as("c2"))
     val w = Window.orderBy(col("v").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val walked = counts
@@ -1133,8 +1136,7 @@ object Experiment {
     * window over the calibration half (the q202 bucketed device is
     * the 100 TB path); the audit is a broadcast 1-row join + count.
     */
-  def conformalCalibration(
-      spark: SparkSession, sfDir: String, alphaPct: Int = 10): DataFrame = {
+  def conformalCalibration(spark: SparkSession, sfDir: String): DataFrame = {
     // pinned: consumed by the chunked rank (two reads), the count,
     // and the eval side (q291 shared-subtree rule)
     val scored = rocAucScored(spark, sfDir)
@@ -1154,7 +1156,7 @@ object Experiment {
       .crossJoin(broadcast(nCal))
       .withColumn("k_rank",
         // ceil((n+1)(1-alpha)) for positive ints: (a + 99) DIV 100
-        expr(s"CAST(((n_cal + 1) * ${100 - alphaPct} + 99) DIV 100 AS BIGINT)"))
+        expr("CAST(((n_cal + 1) * 90 + 99) DIV 100 AS BIGINT)"))
       .filter(col("rk") === col("k_rank"))
       .select(col("n_cal"), col("k_rank"), col("nonconf").as("qhat"))
     scored.filter(!col("is_cal"))
@@ -1368,6 +1370,8 @@ object Experiment {
         expr("CAST(fit_key DIV 1000000 AS BIGINT)").as("fit_micro"))
   }
 
+  private[graft] val markovAttributionRounds = 40
+
   /** The q300 driver entry: MARKOV REMOVAL-EFFECT ATTRIBUTION — the
     * third leg of the attribution trilogy (q130 last-touch heuristic,
     * q286 Shapley over exposure SETS): the Anderl et al. 2014
@@ -1395,8 +1399,7 @@ object Experiment {
     * collects driver-side (q232/q270 rule); iteration cost is
     * corpus-independent.
     */
-  def markovAttribution(spark: SparkSession, sfDir: String,
-      rounds: Int = 40): DataFrame = {
+  def markovAttribution(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.load(spark, sfDir, "events")
     val firstP = ev.filter(col("event_type") === "purchase")
@@ -1441,7 +1444,7 @@ object Experiment {
       var p: Map[String, Long] =
         (nonAbs.map(_ -> 0L) :+ ("CONV" -> 1000000L) :+
           ("NULL" -> 0L)).toMap ++ removed.map(_ -> 0L)
-      for (_ <- 1 to rounds) {
+      for (_ <- 1 to markovAttributionRounds) {
         p = p ++ nonAbs.map { a =>
           // empty input leaves S with no out-edges: p stays 0
           val o = outN.getOrElse(a, 1L)
@@ -1478,8 +1481,7 @@ object Experiment {
     * normalization join; top-k is a rank-≤-k window per item
     * (InferWindowGroupLimit bounds shuffled rows at k per key).
     */
-  def itemNeighbors(spark: SparkSession, sfDir: String,
-      topK: Int = 5, minCo: Int = 2): DataFrame = {
+  def itemNeighbors(spark: SparkSession, sfDir: String): DataFrame = {
     val b = Tables.load(spark, sfDir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("i"))
       .distinct()
@@ -1491,7 +1493,7 @@ object Experiment {
         col("a.i") < col("bb.i"))
       .groupBy(col("a.i").as("x"), col("bb.i").as("y"))
       .agg(count(lit(1)).cast("long").as("cij"))
-      .filter(col("cij") >= minCo)
+      .filter(col("cij") >= 2)
       .localCheckpoint(true)
     val sym = pairs.select(col("x").as("item"), col("y").as("nb"),
         col("cij"))
@@ -1505,7 +1507,7 @@ object Experiment {
            DIV (CAST(c_item AS DECIMAL(38,0)) * c_nb) AS BIGINT)"""))
       .withColumn("rk", row_number().over(Window.partitionBy(col("item"))
         .orderBy(col("sim2_ppt").desc, col("nb").asc)).cast("long"))
-      .filter(col("rk") <= topK)
+      .filter(col("rk") <= 5)
       .select(col("item"), col("rk"), col("nb"), col("cij"),
         col("c_item"), col("c_nb"), col("sim2_ppt"))
   }
@@ -1587,8 +1589,7 @@ object Experiment {
     * replaces them) and one rank-keyed equi-join against the
     * reference spine; n_ref rides in as a broadcast 1-row frame.
     */
-  def quantileAlign(spark: SparkSession, sfDir: String,
-      refSource: String = "src0"): DataFrame = {
+  def quantileAlign(spark: SparkSession, sfDir: String): DataFrame = {
     // pinned: consumed by the per-source ranks, the ref-slice chunked
     // rank (which reads its input twice), and the totals — without
     // the pin the scoring subtree re-evaluates per consumer (q291
@@ -1611,7 +1612,7 @@ object Experiment {
     // chunked device instead of a partition-less window (q303/q304
     // hazard class; the per-source ranks above are already keyed)
     val ref = Relational.chunkedRowNumber(
-      s.filter(col("source") === refSource && col("is_en")),
+      s.filter(col("source") === "src0" && col("is_en")),
       bucket = Relational.rangeBucket(col("score"), 1024L),
       order = Seq(col("score").asc, col("doc_id").asc), out = "ref_rk")
       .select(col("ref_rk"), col("score").as("aligned_score"))
@@ -1737,6 +1738,9 @@ object Experiment {
         expr("CAST(n_outliers * 1000000 DIV n AS BIGINT)")
           .as("outlier_ppm"))
   }
+  private[graft] val passAtKs = Seq(1, 5, 10)
+  private[graft] val passAtCentsThreshold = 5000L
+
   /** The q325 driver entry: PASS@K ESTIMATOR — the unbiased
     * best-of-n evaluation statistic of Chen et al. 2021 (Codex,
     * eq. 1): a task with n sampled attempts of which c are correct
@@ -1758,8 +1762,8 @@ object Experiment {
     */
   def passAtK(
       spark: SparkSession, sfDir: String,
-      ks: Seq[Int] = Seq(1, 5, 10),
-      centsThreshold: Long = 5000L): DataFrame = {
+      ks: Seq[Int] = passAtKs,
+      centsThreshold: Long = passAtCentsThreshold): DataFrame = {
     val per = Tables.load(spark, sfDir, "events")
       .select(col("user_id"),
         floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
@@ -1786,12 +1790,12 @@ object Experiment {
     * PSI's logarithms would put a libm transcendental on both sides
     * of the engine boundary): the event stream splits at its time
     * midpoint into an EARLY (training-era) and LATE (serving-era)
-    * half, each event_type's value distribution lands in `bins`
+    * half, each event_type's value distribution lands in 10
     * fixed-width cent buckets over the global [min, max], and drift
     * per type is the total-variation distance between the two halves'
     * bucket shares: TVD_ppm = Σ_b |p_b − q_b| / 2 over ppm shares
     * (one truncating DIV per share, the per-term order-free
-    * discipline). `flagged` fires past `flagPpm` — the retrain/alert
+    * discipline). `flagged` fires past 50000 ppm — the retrain/alert
     * threshold.
     *
     * Scale shape: one tiny global bounds aggregate broadcast back,
@@ -1799,9 +1803,7 @@ object Experiment {
     * sums — the only fact-scale exchange; everything downstream lives
     * on the bounded (type × bins) domain. No windows at all.
     */
-  def featureDrift(
-      spark: SparkSession, sfDir: String,
-      bins: Int = 10, flagPpm: Long = 50000L): DataFrame = {
+  def featureDrift(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.load(spark, sfDir, "events")
       .select(col("event_type"), unix_micros(col("ts")).as("tm"),
         floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
@@ -1811,7 +1813,7 @@ object Experiment {
     val binned = ev.crossJoin(broadcast(bounds))
       .select(col("event_type"),
         (col("tm") * 2 <= col("tmin") + col("tmax")).as("early"),
-        expr(s"(cents - cmin) * $bins DIV (cmax - cmin + 1)").as("bin"))
+        expr("(cents - cmin) * 10 DIV (cmax - cmin + 1)").as("bin"))
     val cells = binned.groupBy(col("event_type"), col("bin"))
       .agg(sum(when(col("early"), 1L).otherwise(0L)).cast("long").as("ce"),
         sum(when(!col("early"), 1L).otherwise(0L)).cast("long").as("cl"))
@@ -1827,7 +1829,7 @@ object Experiment {
       .groupBy(col("event_type"), col("n_early"), col("n_late"))
       .agg(expr("CAST(SUM(gap) DIV 2 AS BIGINT)").as("tvd_ppm"),
         max(col("gap")).cast("long").as("max_gap_ppm"))
-      .withColumn("flagged", col("tvd_ppm") > flagPpm)
+      .withColumn("flagged", col("tvd_ppm") > 50000L)
   }
 
   /** The q337 driver entry: OFF-POLICY EVALUATION by inverse
@@ -1888,7 +1890,7 @@ object Experiment {
     * the empirical distribution of a FIXED pool of N logged samples
     * per arm, E[max of n iid draws] = Σⱼ r₍ⱼ₎·(jⁿ − (j−1)ⁿ)/Nⁿ over
     * the sorted pool — exact BIGINT combinatorics when n and N are
-    * bounded (N = `poolSize` = 256, n ∈ `ns` ⊆ {1,2,4}: the largest
+    * bounded (N = 256, n ∈ {1,2,4}: the largest
     * term is r·4·256³ ≈ 7·10¹³, far inside int64). The pool is the
     * FIRST N events per arm in event_id order (arrival order, not
     * value order — a value-ranked pool would bias the curve), and
@@ -1901,10 +1903,7 @@ object Experiment {
     * the sort at the scan, the q250 device); the second rank window
     * and the per-n sums then live on the bounded (arm × N) grain.
     */
-  def bestOfN(
-      spark: SparkSession, sfDir: String,
-      poolSize: Int = 256, ns: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
-    require(ns.forall(n => n >= 1 && n <= 4), "n > 4 overflows int64")
+  def bestOfN(spark: SparkSession, sfDir: String): DataFrame = {
     val wArr = Window.partitionBy(col("event_type"))
       .orderBy(col("event_id").asc)
     val wVal = Window.partitionBy(col("event_type"))
@@ -1913,14 +1912,14 @@ object Experiment {
       .select(col("event_id"), col("event_type"),
         floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
       .withColumn("srk", row_number().over(wArr).cast("long"))
-      .where(col("srk") <= poolSize)
+      .where(col("srk") <= 256)
       .withColumn("j", row_number().over(wVal).cast("long"))
     // denominators use the ACTUAL pool count per arm (an arm with
-    // fewer than poolSize logged events has a smaller empirical pool)
+    // fewer than 256 logged events has a smaller empirical pool)
     val mean = pool.groupBy(col("event_type"))
       .agg(expr("CAST(SUM(cents) DIV COUNT(*) AS BIGINT)")
         .as("mean_cents"))
-    val bon = ns.map { k =>
+    val bon = Seq(1, 2, 4).map { k =>
       val pow = (j: String) => Seq.fill(k)(j).mkString(" * ")
       pool.groupBy(col("event_type"))
         .agg(expr(s"""CAST(SUM(cents * (${pow("j")} - ${pow("(j - 1)")}))
@@ -2049,6 +2048,8 @@ object Experiment {
           .as("centered_rank_x2"))
   }
 
+  private val halvingB0 = 128
+
   /** The q342 driver entry: SUCCESSIVE HALVING — the fixed-budget
     * best-arm race (Karnin 2013; the inner loop of Hyperband) a
     * hyperparameter sweep or prompt-variant bake-off runs instead of
@@ -2075,21 +2076,21 @@ object Experiment {
     * then the halving recursion entirely on K rows (bounded-domain
     * windows, the documented exception).
     */
-  def successiveHalving(
-      spark: SparkSession, sfDir: String, b0: Int = 128): DataFrame = {
+  def successiveHalving(spark: SparkSession, sfDir: String): DataFrame = {
     val wArr = Window.partitionBy(col("event_type"))
       .orderBy(col("event_id").asc)
     val arms = Tables.load(spark, sfDir, "events")
       .select(col("event_id"), col("event_type"),
         floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
       .withColumn("srk", row_number().over(wArr).cast("long"))
-      .where(col("srk") <= b0 * 4)
+      .where(col("srk") <= halvingB0 * 4)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("n_raced"),
-        sum(when(col("srk") <= b0, col("cents"))).cast("long").as("s0"),
-        sum(when(col("srk") <= b0, 1L)).cast("long").as("c0"),
-        sum(when(col("srk") <= b0 * 2, col("cents"))).cast("long").as("s1"),
-        sum(when(col("srk") <= b0 * 2, 1L)).cast("long").as("c1"),
+        sum(when(col("srk") <= halvingB0, col("cents"))).cast("long").as("s0"),
+        sum(when(col("srk") <= halvingB0, 1L)).cast("long").as("c0"),
+        sum(when(col("srk") <= halvingB0 * 2, col("cents"))).cast("long")
+          .as("s1"),
+        sum(when(col("srk") <= halvingB0 * 2, 1L)).cast("long").as("c1"),
         sum(col("cents")).cast("long").as("s2"),
         count(lit(1)).cast("long").as("c2"))
       .select(col("event_type"), col("n_raced"),
@@ -2232,6 +2233,8 @@ object Experiment {
         col("h_milli"), col("h_tie_milli"))
   }
 
+  private val consistencyKs = Seq(1, 3, 5)
+
   /** The q349 driver entry: SELF-CONSISTENCY CURVE — the
     * majority-vote convergence statistic of Wang 2022 ("Self-
     * Consistency Improves Chain of Thought"): sample k answers, take
@@ -2257,18 +2260,16 @@ object Experiment {
     * windows on the bounded per-user type domain, and a final
     * k-arm reduce on the user grain.
     */
-  def selfConsistency(
-      spark: SparkSession, sfDir: String,
-      ks: Seq[Int] = Seq(1, 3, 5)): DataFrame = {
-    val kMax = ks.max
+  def selfConsistency(spark: SparkSession, sfDir: String): DataFrame = {
+    val kMax = consistencyKs.max
     val wArr = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").asc, col("event_id").asc)
     val ev = Tables.load(spark, sfDir, "events")
       .select(col("user_id"), col("event_id"), col("ts"),
         col("event_type"))
       .withColumn("srk", row_number().over(wArr).cast("long"))
-    val kCols = ks.map(k => sum(when(col("srk") <= k, 1L).otherwise(0L))
-      .cast("long").as(s"c_$k"))
+    val kCols = consistencyKs.map(k =>
+      sum(when(col("srk") <= k, 1L).otherwise(0L)).cast("long").as(s"c_$k"))
     val counts = ev.groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).cast("long").as("c_all"), kCols: _*)
       .withColumn("n_user",
@@ -2284,7 +2285,7 @@ object Experiment {
         .select(col("user_id"), col("event_type").as(out))
     }
     val base = mode("c_all", "mode_all")
-    ks.map { k =>
+    consistencyKs.map { k =>
       base.join(mode(s"c_$k", s"mode_$k"), "user_id")
         .agg(count(lit(1)).cast("long").as("n_users"),
           sum(when(col(s"mode_$k") === col("mode_all"), 1L)
@@ -2293,6 +2294,8 @@ object Experiment {
           expr("n_agree * 1000000 DIV n_users").as("agree_ppm"))
     }.reduce(_ unionByName _)
   }
+
+  private val headSetK = 10
 
   /** The q356 driver entry: HEAD-SET DRIFT — the "did the head of the
     * distribution change?" monitor complementing q331's
@@ -2314,8 +2317,7 @@ object Experiment {
     * q338/q342 siblings); the full-outer join and globals live on
     * ≤ 2k rows.
     */
-  def headSetDrift(
-      spark: SparkSession, sfDir: String, k: Int = 10): DataFrame = {
+  def headSetDrift(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.load(spark, sfDir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("tm"))
     val bounds = ev.agg(min(col("tm")).as("tmin"), max(col("tm")).as("tmax"))
@@ -2329,21 +2331,22 @@ object Experiment {
     def topK(c: String, rk: String) = counts
       .withColumn(rk, row_number().over(
         Window.orderBy(col(c).desc, col("user_id").asc)).cast("long"))
-      .where(col(rk) <= k)
+      .where(col(rk) <= headSetK)
       .select(col("user_id"), col(rk))
     val joined = topK("ce", "rank_early")
       .join(topK("cl", "rank_late"), Seq("user_id"), "full_outer")
       .select(col("user_id"),
-        coalesce(col("rank_early"), lit(k + 1L)).as("rank_early"),
-        coalesce(col("rank_late"), lit(k + 1L)).as("rank_late"))
+        coalesce(col("rank_early"), lit(headSetK + 1L)).as("rank_early"),
+        coalesce(col("rank_late"), lit(headSetK + 1L)).as("rank_late"))
       .withColumn("displacement",
         abs(col("rank_early") - col("rank_late")).cast("long"))
     val glob = joined.agg(
-      sum(when(col("rank_early") <= k && col("rank_late") <= k, 1L)
-        .otherwise(0L)).cast("long").as("n_both"),
+      sum(when(col("rank_early") <= headSetK &&
+        col("rank_late") <= headSetK, 1L).otherwise(0L)).cast("long")
+        .as("n_both"),
       sum(col("displacement")).cast("long").as("footrule"))
       .withColumn("jaccard_ppm",
-        expr(s"n_both * 1000000 DIV (${2 * k} - n_both)"))
+        expr(s"n_both * 1000000 DIV (${2 * headSetK} - n_both)"))
     joined.crossJoin(broadcast(glob))
   }
 
@@ -2370,7 +2373,7 @@ object Experiment {
     * 1, small n). Wilson (1927) score bounds fix both. Per task
     * (event_type; pass = value > 50): n, passes, exact rate ppm,
     * Wilson lower/upper micro bounds at 95%, and the gate flag —
-    * the lower bound clears `barPpm` (default one-in-three, the bar
+    * the lower bound clears 333333 ppm (one-in-three, the bar
     * that discriminates on the fixture's synthetic judge; a real
     * eval passes its own SLA): "significantly above the bar", not
     * "point estimate above the bar", is the whole point.
@@ -2381,9 +2384,7 @@ object Experiment {
     * Scale shape: one map-side-combined count onto the bounded task
     * domain; everything after is per-row arithmetic on that domain.
     */
-  def wilsonGate(
-      spark: SparkSession, sfDir: String,
-      barPpm: Long = 333333L): DataFrame =
+  def wilsonGate(spark: SparkSession, sfDir: String): DataFrame =
     Tables.load(spark, sfDir, "events")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("n"),
@@ -2392,7 +2393,7 @@ object Experiment {
       .withColumn("rate_ppm", expr("k * 1000000 DIV n"))
       .withColumn("wilson_lo_ppm", expr(wilsonSql("lo")))
       .withColumn("wilson_hi_ppm", expr(wilsonSql("hi")))
-      .withColumn("gate", col("wilson_lo_ppm") > barPpm)
+      .withColumn("gate", col("wilson_lo_ppm") > 333333L)
 
   /** The q368 driver entry: KRIPPENDORFF'S ALPHA (nominal) — the
     * agreement statistic an annotation pipeline needs once raters
@@ -2504,16 +2505,14 @@ object Experiment {
     * running last-improvement max) and one aggregate on the same
     * key — a single exchange, per-run state bounded by run length.
     */
-  def earlyStoppingAudit(
-      spark: SparkSession, sfDir: String, patience: Int = 5): DataFrame =
-    earlyStoppingAuditOn(Tables.load(spark, sfDir, "events"), patience)
+  def earlyStoppingAudit(spark: SparkSession, sfDir: String): DataFrame =
+    earlyStoppingAuditOn(Tables.load(spark, sfDir, "events"))
 
   /** The q370 core over any events-shaped frame `(user_id, ts,
     * event_id, value)` — split out so the spec can pin a hand-built
     * curve with a known patience firing point.
     */
-  def earlyStoppingAuditOn(
-      events: DataFrame, patience: Int = 5): DataFrame = {
+  def earlyStoppingAuditOn(events: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").asc, col("event_id").asc)
     val prior = w.rowsBetween(Window.unboundedPreceding, -1)
@@ -2528,7 +2527,7 @@ object Experiment {
       .withColumn("last_imp",
         max(when(col("improving"), col("step"))).over(run))
       .withColumn("fire",
-        when(col("step") - col("last_imp") >= patience.toLong, col("step")))
+        when(col("step") - col("last_imp") >= 5L, col("step")))
       .withColumn("run_min",
         min(col("cents")).over(Window.partitionBy(col("user_id"))))
       .groupBy(col("user_id"))
@@ -2543,6 +2542,8 @@ object Experiment {
       .drop("stop_step_raw")
       .withColumn("steps_saved", col("n_steps") - col("stop_step"))
   }
+
+  private val permutationReplicates = 200
 
   /** The q374 driver entry: PAIRED PERMUTATION TEST (sign-flip) —
     * the assumption-free significance test for paired eval metrics
@@ -2563,8 +2564,7 @@ object Experiment {
     * ×R explode lands on the bounded replicate domain (R rows out),
     * one 1-row finish — map-side combine carries everything.
     */
-  def permutationTest(
-      spark: SparkSession, sfDir: String, replicates: Int = 200): DataFrame = {
+  def permutationTest(spark: SparkSession, sfDir: String): DataFrame = {
     val diffs = Tables.load(spark, sfDir, "events")
       .where(col("event_type").isin("click", "view"))
       .groupBy(col("user_id"))
@@ -2584,7 +2584,7 @@ object Experiment {
       count(lit(1)).cast("long").as("n_pairs"))
     val reps = diffs
       .select(col("user_id"), col("d"),
-        explode(array((1 to replicates).map(lit): _*)).as("r"))
+        explode(array((1 to permutationReplicates).map(lit): _*)).as("r"))
       .withColumn("s",
         when(conv(substring(md5(concat(lit("flip:"),
           col("user_id").cast("string"), lit(":"), col("r").cast("string"))),
@@ -2596,9 +2596,9 @@ object Experiment {
         max(col("t_obs")).cast("long").as("t_obs_cents"),
         sum(when(abs(col("t_r")) >= abs(col("t_obs")), 1L).otherwise(0L))
           .cast("long").as("n_extreme"))
-      .withColumn("n_replicates", lit(replicates.toLong))
+      .withColumn("n_replicates", lit(permutationReplicates.toLong))
       .withColumn("p_micro",
-        expr(s"(n_extreme + 1) * 1000000 DIV ${replicates + 1}"))
+        expr(s"(n_extreme + 1) * 1000000 DIV ${permutationReplicates + 1}"))
       // degenerate corpus (no user holds both arms): the global agg
       // over the empty reps×obs frame would emit one all-NULL row
       // while the oracle's GROUP-BY form emits zero — align on zero
@@ -2630,10 +2630,7 @@ object Experiment {
     * combined), the ×R explode lands on the bounded type×replicate
     * domain, the step-up is a window over m ≤ |event types| rows.
     */
-  def bhFdr(
-      spark: SparkSession, sfDir: String,
-      replicates: Int = bhReplicates,
-      alphaMicro: Long = bhAlphaMicro): DataFrame = {
+  def bhFdr(spark: SparkSession, sfDir: String): DataFrame = {
     val perUser = Tables.load(spark, sfDir, "events")
       .groupBy(col("event_type"), col("user_id"))
       .agg(expr("CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT)")
@@ -2647,7 +2644,7 @@ object Experiment {
         count(lit(1)).cast("long").as("n_users"))
     val reps = perUser
       .select(col("event_type"), col("user_id"), col("s"), col("cents"),
-        explode(array((1 to replicates).map(lit): _*)).as("r"))
+        explode(array((1 to bhReplicates).map(lit): _*)).as("r"))
       .withColumn("f",
         when(conv(substring(md5(concat(lit("bh:"), col("event_type"),
           lit(":"), col("user_id").cast("string"), lit(":"),
@@ -2662,13 +2659,13 @@ object Experiment {
         sum(when(abs(col("t_r")) >= abs(col("t_obs")), 1L).otherwise(0L))
           .cast("long").as("n_extreme"))
       .withColumn("p_micro",
-        expr(s"(n_extreme + 1) * 1000000 DIV ${replicates + 1}"))
+        expr(s"(n_extreme + 1) * 1000000 DIV ${bhReplicates + 1}"))
     val m = p.agg(count(lit(1)).cast("long").as("m"))
     val wRank = Window.orderBy(col("p_micro").asc, col("event_type").asc)
     val ranked = p.crossJoin(broadcast(m))
       .withColumn("rank", row_number().over(wRank).cast("long"))
       .withColumn("bh_ok",
-        col("p_micro") * col("m") <= col("rank") * lit(alphaMicro))
+        col("p_micro") * col("m") <= col("rank") * lit(bhAlphaMicro))
     val kStar = ranked
       .agg(coalesce(max(when(col("bh_ok"), col("rank"))), lit(0L))
         .as("k_star"))
@@ -2708,12 +2705,9 @@ object Experiment {
     * Scale shape: one scored pass, one id-adjacency self-join, then
     * row-local verdicts and a bounded 10-bucket aggregate.
     */
-  def judgePositionBias(
-      spark: SparkSession, sfDir: String,
-      biasMicro: Long = pjBiasMicro,
-      noiseAmp: Long = pjNoiseAmp): DataFrame =
+  def judgePositionBias(spark: SparkSession, sfDir: String): DataFrame =
     judgePositionBiasOn(rocAucScored(spark, sfDir)
-      .select(col("doc_id"), col("score")), biasMicro, noiseAmp)
+      .select(col("doc_id"), col("score")), pjBiasMicro, pjNoiseAmp)
 
   /** The q400 core over any `(doc_id, score)` frame. */
   def judgePositionBiasOn(
@@ -2789,11 +2783,9 @@ object Experiment {
     * (j−1)·n — m× the corpus rows, never a partition-less window
     * (the q303/q304 hazard).
     */
-  def kendallW(
-      spark: SparkSession, sfDir: String,
-      judges: Int = kwJudges, noiseAmp: Long = kwNoiseAmp): DataFrame =
+  def kendallW(spark: SparkSession, sfDir: String): DataFrame =
     kendallWOn(rocAucScored(spark, sfDir)
-      .select(col("doc_id"), col("score")), judges, noiseAmp)
+      .select(col("doc_id"), col("score")), kwJudges, kwNoiseAmp)
 
   /** The q401 core over any `(doc_id, score)` frame. */
   def kendallWOn(
@@ -2873,29 +2865,24 @@ object Experiment {
     * far too REGULAR for a human (squared coefficient of variation
     * CV² = Var/mean² near zero), while organic traffic is bursty
     * (CV² ≈ 1 for Poisson-ish arrivals — exactly what the fixture
-    * reads). Per user with ≥ `minGaps` gaps: gap count, mean gap,
+    * reads). Per user with ≥ 5 gaps: gap count, mean gap,
     * and CV² in exact ppm via the division-free identity
     * CV²·10⁶ = (n·Σg² − (Σg)²)·10⁶ / (Σg)² — numerator nonnegative
     * by Cauchy–Schwarz, products in DECIMAL(38)/HUGEINT (q221
     * rule), ONE trailing truncating division; `bot` fires below
-    * `cv2Ppm`. The fixture is organically bot-free (spec-pinned);
+    * 40000 ppm. The fixture is organically bot-free (spec-pinned);
     * the spec plants a metronome client through the same core.
     *
     * Scale shape: one user-keyed lag window + one aggregate on the
     * same key — a single exchange (q87's posture).
     */
-  def botRegularityGate(
-      spark: SparkSession, sfDir: String,
-      minGaps: Int = 5, cv2Ppm: Long = 40000L): DataFrame =
-    botRegularityGateOn(Tables.load(spark, sfDir, "events"),
-      minGaps, cv2Ppm)
+  def botRegularityGate(spark: SparkSession, sfDir: String): DataFrame =
+    botRegularityGateOn(Tables.load(spark, sfDir, "events"))
 
   /** The q382 core over any events-shaped frame `(user_id, ts,
     * event_id)`.
     */
-  def botRegularityGateOn(
-      events: DataFrame, minGaps: Int = 5,
-      cv2Ppm: Long = 40000L): DataFrame = {
+  def botRegularityGateOn(events: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("us").asc, col("event_id").asc)
     events
@@ -2908,7 +2895,7 @@ object Experiment {
       .agg(count(lit(1)).cast("long").as("n_gaps"),
         sum(col("gap")).cast("long").as("s"),
         sum(col("gap").cast("decimal(38,0)") * col("gap")).as("q"))
-      .where(col("n_gaps") >= minGaps.toLong)
+      .where(col("n_gaps") >= 5L)
       .withColumn("mean_gap_us", expr("s DIV n_gaps"))
       .withColumn("cv2_ppm", expr(
         """CAST((CAST((CAST(n_gaps AS DECIMAL(38,0)) * q
@@ -2917,7 +2904,7 @@ object Experiment {
              - CAST(s AS DECIMAL(38,0)) * s) * 1000000 AS DECIMAL(38,0)),
              CAST(s AS DECIMAL(38,0)) * s))
            / (CAST(s AS DECIMAL(38,0)) * s) AS BIGINT)"""))
-      .withColumn("bot", col("cv2_ppm") < cv2Ppm)
+      .withColumn("bot", col("cv2_ppm") < 40000L)
       .drop("s", "q")
   }
 
@@ -3013,6 +3000,8 @@ object Experiment {
       .crossJoin(broadcast(glob))
   }
 
+  private val funnelReplicates = 200
+
   /** The q379 driver entry: FUNNEL SIGNIFICANCE UNDER HOLM — the
     * multiple-testing discipline for per-step A/B readouts: testing
     * every funnel transition separately at α inflates the family
@@ -3030,9 +3019,7 @@ object Experiment {
     * passes); the ×R explode lands on the bounded (step, R) domain;
     * Holm runs on the m-row step domain.
     */
-  def funnelSignificance(
-      spark: SparkSession, sfDir: String,
-      replicates: Int = 200, alphaMicro: Long = 50000L): DataFrame = {
+  def funnelSignificance(spark: SparkSession, sfDir: String): DataFrame = {
     val steps = Seq(1, 2)
     val f = Relational.funnel(spark, sfDir)
       .select(col("user_id"), col("steps"))
@@ -3057,7 +3044,7 @@ object Experiment {
     val reps = armAgg(
       scoped
         .select(col("step"), col("user_id"), col("conv"), col("arm_a"),
-          explode(array((1 to replicates).map(lit): _*)).as("r"))
+          explode(array((1 to funnelReplicates).map(lit): _*)).as("r"))
         .withColumn("arm_a", col("arm_a") =!=
           (conv(substring(md5(concat(lit("fs:"),
             col("step").cast("string"), lit(":"),
@@ -3074,12 +3061,12 @@ object Experiment {
         sum(when(abs(col("t_r")) >= abs(col("t_obs")), 1L).otherwise(0L))
           .cast("long").as("n_extreme"))
       .withColumn("p_micro",
-        expr(s"(n_extreme + 1) * 1000000 DIV ${replicates + 1}"))
+        expr(s"(n_extreme + 1) * 1000000 DIV ${funnelReplicates + 1}"))
     val m = steps.length
     val byP = Window.orderBy(col("p_micro").asc, col("step").asc)
     p.withColumn("holm_rank", row_number().over(byP).cast("long"))
       .withColumn("ok",
-        when(expr(s"p_micro * ($m - holm_rank + 1) <= $alphaMicro"), 1L)
+        when(expr(s"p_micro * ($m - holm_rank + 1) <= 50000"), 1L)
           .otherwise(0L))
       .withColumn("significant",
         min(col("ok")).over(byP.rowsBetween(Window.unboundedPreceding, 0))

@@ -33,8 +33,7 @@ object Graph {
     * truncates the lineage each pass (the k-means/q44 discipline) so
     * plan depth stays constant however many iterations run.
     */
-  def nationPageRank(
-      spark: SparkSession, sfDir: String, iters: Int = 3): DataFrame = {
+  def nationPageRank(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables.load(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
     val l = Tables.load(spark, sfDir, "lineitem")
@@ -63,7 +62,7 @@ object Graph {
           val teleport = 15000000L / (100L * nn)
           var ranks = nodes.withColumn("r", lit(1000000L / nn))
             .localCheckpoint(true)
-          for (_ <- 0 until iters) {
+          for (_ <- 0 until 3) {
             val contribs = withOut.join(ranks, col("node") === col("src"))
               .select(col("dst").as("node"),
                 expr("(r * 85 * w) div (100 * ow)").as("contrib"))
@@ -99,8 +98,7 @@ object Graph {
     * all-pairs; `localCheckpoint` truncates the growing lineage each
     * round (the q124 iteration discipline).
     */
-  def labelPropagation(
-      spark: SparkSession, sfDir: String, iters: Int = 3): DataFrame = {
+  def labelPropagation(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables.load(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
     val l = Tables.load(spark, sfDir, "lineitem")
@@ -125,7 +123,7 @@ object Graph {
         .union(s.select(col("s_nationkey"))).distinct()
       var labels = nodes.withColumn("lbl", col("node"))
         .localCheckpoint(true)
-      for (_ <- 0 until iters) {
+      for (_ <- 0 until 3) {
         val votes = und
           .join(labels, col("node") === col("dst"))
           .groupBy(col("src"), col("lbl")).agg(sum(col("w")).as("vw"))
@@ -216,6 +214,8 @@ object Graph {
       .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
   }
 
+  private[graft] val kCoreRounds = 8
+
   /** The q290 driver entry: K-CORE DECOMPOSITION by iterated
     * H-INDEX — the degeneracy/cohesion primitive beside PageRank
     * (influence, q124), triangles (local clustering, q126), and
@@ -234,7 +234,7 @@ object Graph {
     * H folds relationally as max(least(rank, value)) over neighbor
     * values ranked descending — order among equal values is
     * irrelevant to the fold, so the statistic is partition- and
-    * engine-deterministic (all integers). `rounds` is fixed (8) and
+    * engine-deterministic (all integers). `kCoreRounds` is fixed (8) and
     * the spec proves it reaches the fixpoint on the fixture AND
     * equals the sequential peel — the cross-algorithm theorem.
     *
@@ -242,8 +242,7 @@ object Graph {
     * [[heavyTradeEdges]] build; the loop touches (edge, value)
     * tuples with localCheckpoint per round (the q124 discipline).
     */
-  def kCore(spark: SparkSession, sfDir: String, rounds: Int = 8)
-      : DataFrame = {
+  def kCore(spark: SparkSession, sfDir: String): DataFrame = {
     val ed = heavyTradeEdges(spark, sfDir)
     val adj = ed.select(col("u").as("node"), col("v").as("nb"))
       .unionByName(ed.select(col("v").as("node"), col("u").as("nb")))
@@ -251,7 +250,7 @@ object Graph {
     val deg = adj.groupBy(col("node"))
       .agg(count(lit(1)).cast("long").as("c"))
     var c = deg
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to kCoreRounds) {
       c = adj
         .join(c.withColumnRenamed("node", "nb"), "nb")
         .select(col("node"), col("c").as("cv"))
@@ -268,9 +267,9 @@ object Graph {
   }
 
   /** Recursive-CTE k-hop reachability (q137): for every nation, the
-    * minimum hop count to each nation reachable within `maxHops`
+    * minimum hop count to each nation reachable within 4 hops
     * hops along the sparse "top trade partners" digraph (each nation
-    * keeps its `topPartners` highest-shipment-count destinations,
+    * keeps its 3 highest-shipment-count destinations,
     * ties broken by destination key — exact integer counts, so the
     * graph is engine-deterministic). This is the ITERATIVE SQL
     * surface Spark 4 added (`WITH RECURSIVE`), the declarative twin
@@ -279,7 +278,7 @@ object Graph {
     *
     * Scale shape: the fact-scale work (the q124 orders⋈lineitem
     * shuffle with broadcast dims) runs ONCE, outside the recursion —
-    * the edge list is aggregated to ≤ |nations|·topPartners rows and
+    * the edge list is aggregated to ≤ |nations|·3 rows and
     * `localCheckpoint`ed before the recursive query touches it.
     * Folding the edge build into the CTE text instead re-evaluates
     * the whole fact join EVERY iteration (measured ~6× the cost here;
@@ -287,19 +286,17 @@ object Graph {
     * as the DuckDB oracle, where CTE materialization makes it free.
     * Spark 4.1 restricts recursion to UNION ALL (no UNION dedup), so
     * the recursion enumerates WALKS, not paths — bounded by
-    * topPartners^maxHops per root, fine for hop-limited reachability
+    * 3^4 per root, fine for hop-limited reachability
     * over a dimension-sized graph; a frontier-dedup BFS at
     * billion-node scale stays a driver-side loop (q44/q124) until
-    * recursive UNION lands. The `d < maxHops` cap is the SEMANTIC
+    * recursive UNION lands. The `d < 4` cap is the SEMANTIC
     * "within k hops", shared verbatim with the oracle.
     *
     * The temp-view register→analyze→drop window is synchronized
     * (session-global names; parallel suites run different fixture
     * dirs), the q136 device.
     */
-  def khopReachability(
-      spark: SparkSession, sfDir: String,
-      maxHops: Int = 4, topPartners: Int = 3): DataFrame = {
+  def khopReachability(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables.load(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
     val l = Tables.load(spark, sfDir, "lineitem")
@@ -319,7 +316,7 @@ object Graph {
       .orderBy(col("n_ship").desc, col("dst").asc)
     val edges = trade
       .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= topPartners)
+      .where(col("rk") <= 3)
       .select(col("src"), col("dst"))
       .localCheckpoint(true)
     Graph.synchronized {
@@ -333,7 +330,7 @@ object Graph {
               SELECT h.root AS root, CAST(e.dst AS INT) AS node,
                      CAST(h.d + 1 AS INT) AS d
               FROM hops h JOIN graft_q137_edges e ON e.src = h.node
-              WHERE h.d < $maxHops
+              WHERE h.d < 4
             )
             SELECT root, node, MIN(d) AS min_hops
             FROM hops GROUP BY root, node""")
@@ -362,13 +359,12 @@ object Graph {
     * parent map and absorbs the parent's tier; resolved rows leave
     * the loop immediately, so round r touches only docs with ≥ r
     * ancestors (geometrically shrinking — 1/3, 1/9, … of the corpus
-    * under the edge rule). The `rounds` cap is a canary, not a
+    * under the edge rule). The 24-round cap is a canary, not a
     * truncation: a `require` fails loudly if any pointer survives
     * (depth ≤ log₂ max id, so 24 covers any BIGINT fixture this
     * library reads). The oracle is the recursive-CTE twin.
     */
-  def licensePropagation(
-      spark: SparkSession, sfDir: String, rounds: Int = 24): DataFrame = {
+  def licensePropagation(spark: SparkSession, sfDir: String): DataFrame = {
     val base = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         (ascii(expr("right(source, 1)")) % 4).cast("long").as("own_tier"),
@@ -384,7 +380,7 @@ object Graph {
     var todo = base.select(col("doc_id"), col("own_tier"),
       col("own_tier").as("eff_tier"), col("parent").as("anc"),
       lit(0L).as("n_anc"))
-    for (_ <- 1 to rounds if !todo.isEmpty) {
+    for (_ <- 1 to 24 if !todo.isEmpty) {
       done = done :+ todo.where(col("anc").isNull)
         .select(col("doc_id"), col("own_tier"), col("eff_tier"),
           col("n_anc"))

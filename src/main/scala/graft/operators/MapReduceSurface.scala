@@ -120,8 +120,8 @@ object MapReduceSurface {
     * driver, not claimed. Rank is recovered from the (already total)
     * order of the k-array via posexplode.
     */
-  def topKPerGroup(spark: SparkSession, sfDir: String, k: Int = 2): DataFrame = {
-    val topk = udaf(new TopK(k),
+  def topKPerGroup(spark: SparkSession, sfDir: String): DataFrame = {
+    val topk = udaf(new TopK(2),
       Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong))
     Tables.load(spark, sfDir, "orders")
       .groupBy(col("o_custkey"))

@@ -302,7 +302,7 @@ object Multimodal {
     * (doc_id % 3 == 0, the mediaTable cycle), per-partition dHash,
     * pigeonhole pairs. Spec entry point for crafted plants.
     */
-  def imagePhashPairs(docs: DataFrame, maxDist: Int = 3): DataFrame = {
+  def imagePhashPairs(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{bit_count, shiftright}
     val spark = docs.sparkSession
     import spark.implicits._
@@ -351,8 +351,10 @@ object Multimodal {
         bit_count(col("a.phash").bitwiseXOR(col("b.phash")))
           .cast("long").as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxDist)
+      .filter(col("hamming") <= 3)
   }
+
+  private val energyWindows = 16
 
   /** The q174 driver entry: AUDIO ENERGY CONTOUR — decode the PCM16
     * samples out of the WAV body (genuine little-endian signed-16
@@ -376,8 +378,7 @@ object Multimodal {
     * (id, window, partial sums) — map-side combined, bounded by
     * clips x 16 — and the per-clip total is a 16-row window.
     */
-  def audioEnergy(
-      spark: SparkSession, sfDir: String, windows: Int = 16): DataFrame = {
+  def audioEnergy(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val wavs = mediaTable(spark, sfDir).filter(_.media_type == "audio/wav")
     val samples = wavs.flatMap { m =>
@@ -394,7 +395,7 @@ object Multimodal {
         val hi = m.payload(WavHeaderLen + 2 * s + 1) & 0xFF
         val x = lo | (hi << 8)
         val v = if (x >= 32768) x - 65536 else x
-        (m.media_id, (s.toLong * windows / nS).toInt, math.abs(v).toLong)
+        (m.media_id, (s.toLong * energyWindows / nS).toInt, math.abs(v).toLong)
       }
     }.toDF("media_id", "win", "a")
     val perWin = samples.groupBy(col("media_id"), col("win"))
@@ -404,7 +405,7 @@ object Multimodal {
         sum(col("sum_abs")).over(Window.partitionBy(col("media_id"))))
       .select(col("media_id"), col("win"), col("n_samples"),
         col("sum_abs"),
-        (col("sum_abs") * lit(windows.toLong) < col("total_abs"))
+        (col("sum_abs") * lit(energyWindows.toLong) < col("total_abs"))
           .as("is_quiet"))
   }
 
@@ -422,9 +423,8 @@ object Multimodal {
     * by clips × 16); the island window partitions per clip over ≤ 16
     * rows.
     */
-  def activitySegments(
-      spark: SparkSession, sfDir: String, windows: Int = 16): DataFrame = {
-    val active = audioEnergy(spark, sfDir, windows)
+  def activitySegments(spark: SparkSession, sfDir: String): DataFrame = {
+    val active = audioEnergy(spark, sfDir)
       .where(!col("is_quiet"))
       .select(col("media_id"), col("win").cast("long").as("win"),
         col("sum_abs"))
@@ -437,6 +437,8 @@ object Multimodal {
       .select(col("media_id"), col("start_win"), col("end_win"),
         col("n_windows"), col("seg_energy"))
   }
+
+  private val patchGridSide = 4
 
   /** The q256 driver entry: PATCH-GRID FEATURES (ViT tokenization
     * shape) — the image-side preprocessing a multimodal training
@@ -456,7 +458,7 @@ object Multimodal {
     * finished rows per image with ZERO exchange — payload bytes and
     * pixels never shuffle at all, the q204 posture.
     */
-  def patchGrid(spark: SparkSession, sfDir: String, grid: Int = 4): DataFrame = {
+  def patchGrid(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val imgs = mediaTableOn(Tables.load(spark, sfDir, "documents")
       .where(col("doc_id") % 3 === 0 && octet_length(col("text")) >= 1)
@@ -470,14 +472,14 @@ object Multimodal {
         val w = bb.getInt(18)
         val h = bb.getInt(22)
         val n = m.payload.length - BmpHeaderLen
-        val sums = new Array[Long](grid * grid)
-        val counts = new Array[Long](grid * grid)
+        val sums = new Array[Long](patchGridSide * patchGridSide)
+        val counts = new Array[Long](patchGridSide * patchGridSide)
         var r = 0
         while (r < h) {
-          val pr = r * grid / h
+          val pr = r * patchGridSide / h
           var c = 0
           while (c < w) {
-            val cell = pr * grid + c * grid / w
+            val cell = pr * patchGridSide + c * patchGridSide / w
             val v = m.payload(BmpHeaderLen + ((r * w + c) * 3) % n) & 0xFF
             sums(cell) += v
             counts(cell) += 1
@@ -485,15 +487,15 @@ object Multimodal {
           }
           r += 1
         }
-        (0 until grid * grid).iterator.map { cell =>
+        (0 until patchGridSide * patchGridSide).iterator.map { cell =>
           // a header-declared dimension below the grid leaves cells
           // with zero pixels (fixture dims 16+n%64 x 16+n%48 can't,
           // arbitrary BMPs can): such a cell reports mean 0 rather
           // than dividing by zero (round-13 advice)
           val mean =
             if (counts(cell) == 0L) 0L else sums(cell) * 1000L / counts(cell)
-          (m.media_id, (cell / grid).toLong, (cell % grid).toLong,
-            counts(cell), sums(cell), mean)
+          (m.media_id, (cell / patchGridSide).toLong,
+            (cell % patchGridSide).toLong, counts(cell), sums(cell), mean)
         }
       }
     }.toDF("media_id", "pr", "pc", "n_px", "sum_i", "mean_milli")
@@ -517,9 +519,7 @@ object Multimodal {
     * decode map — one output row per clip, ZERO exchange of samples
     * or payloads; the strongest possible shuffle story.
     */
-  def loudnessGain(
-      spark: SparkSession, sfDir: String,
-      targetRms: Double = 10000.0): DataFrame = {
+  def loudnessGain(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val stats = mediaTable(spark, sfDir)
       .filter(_.media_type == "audio/wav")
@@ -553,7 +553,7 @@ object Multimodal {
         .otherwise(floor(lit(1000000.0) * rms).cast("long"))
         .as("rms_micro"),
       when(col("ssq") === 0, lit(-1L))
-        .otherwise(floor(lit(1000000.0) * (lit(targetRms) / rms))
+        .otherwise(floor(lit(1000000.0) * (lit(10000.0) / rms))
           .cast("long")).as("gain_micro"))
   }
 
@@ -873,21 +873,20 @@ object Multimodal {
     * occupancy — the q22/q23 LSH posture. Payload bytes never
     * shuffle.
     */
-  def audioFingerprintMatch(
-      spark: SparkSession, sfDir: String, maxDist: Int = 2): DataFrame = {
+  def audioFingerprintMatch(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val planted = docs.unionByName(
       docs.where(col("doc_id") % 15 === 10)
         .select((col("doc_id") + FpTwinOffset).as("doc_id"), col("text")))
     matchFingerprints(audioFingerprints(
-      mediaTableOn(planted).filter(_.media_type == "audio/wav")), maxDist)
+      mediaTableOn(planted).filter(_.media_type == "audio/wav")))
   }
 
   /** Pigeonhole match over any (media_id, fp) frame — spec entry
     * point for crafted WAVs and completeness pins.
     */
-  def matchFingerprints(fps: DataFrame, maxDist: Int = 2): DataFrame = {
+  def matchFingerprints(fps: DataFrame): DataFrame = {
     val chunks = fps.select(
       col("media_id"), col("fp"),
       explode(array((0 until FpChunks).map { c =>
@@ -906,6 +905,6 @@ object Multimodal {
         bit_count(col("a.fp").bitwiseXOR(col("b.fp")))
           .cast("long").as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxDist)
+      .filter(col("hamming") <= 2)
   }
 }

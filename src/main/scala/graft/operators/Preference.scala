@@ -151,6 +151,8 @@ object Preference {
         col("copeland").cast("long").as("copeland"))
   }
 
+  private[graft] val bradleyTerryIters = 15
+
   /** The q270 driver entry: BRADLEY-TERRY STRENGTHS by the MM
     * algorithm (Hunter 2004) — the model behind Elo-style leaderboard
     * fits on pairwise preference data, made exact with the q232
@@ -171,7 +173,8 @@ object Preference {
     * iteration cost is O(types² · rounds), corpus-independent.
     */
   def bradleyTerry(
-      spark: SparkSession, sfDir: String, iters: Int = 15): DataFrame = {
+      spark: SparkSession, sfDir: String,
+      iters: Int = bradleyTerryIters): DataFrame = {
     import spark.implicits._
     val wins = pairWins(contestRanked(spark, sfDir))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))

@@ -504,17 +504,19 @@ object ReferenceQueries {
         (col("earlier") + col("ri") + 1).as("global_rank"))
   }
 
+  private val zorderBits = 16
+
   /** Bit-interleaved z-value over two non-negative integer
-    * dimensions, `bits` bits each — the space-filling-curve key
+    * dimensions, `zorderBits` bits each — the space-filling-curve key
     * behind multi-dimensional clustering (Delta/Iceberg OPTIMIZE
     * ZORDER). Pure codegen'd integer arithmetic (shift/and/add), no
     * UDF.
     */
-  def zorderValue(xC: Column, yC: Column, bits: Int = 16): Column = {
-    val mask = lit((1L << bits) - 1)
+  def zorderValue(xC: Column, yC: Column): Column = {
+    val mask = lit((1L << zorderBits) - 1)
     val x = xC.bitwiseAND(mask)
     val y = yC.bitwiseAND(mask)
-    (0 until bits).map { i =>
+    (0 until zorderBits).map { i =>
       shiftright(x, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i)) +
         shiftright(y, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1))
     }.reduce(_ + _)

@@ -64,14 +64,13 @@ object Relational {
     * correctness is what's under the oracle; the skew win is the
     * documented 100 TB knob for keys beyond AQE's runtime split).
     */
-  def saltedJoinAgg(
-      spark: SparkSession, sfDir: String, salts: Int = 4): DataFrame =
+  def saltedJoinAgg(spark: SparkSession, sfDir: String): DataFrame =
     revenueByPriority(saltedJoin(
       Tables.load(spark, sfDir, "lineitem")
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
       Tables.load(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority")),
-      "l_orderkey", "o_orderkey", salts))
+      "l_orderkey", "o_orderkey", 4))
 
   /** The q53 driver entry: the bucketed-storage join LIFECYCLE — both
     * fact projections written as 8-bucket sorted tables (pay the
@@ -723,6 +722,12 @@ object Relational {
       .select(col("c_custkey"), col("r.*"))
   }
 
+  private[graft] val bitemporalEpoch = "1995-01-01"
+  private[graft] val bitemporalAsOfDate = "1996-06-01"
+  private[graft] val bitemporalValidAt = "1996-12-31"
+  private[graft] val bitemporalTxEarly = "1996-06-01"
+  private[graft] val bitemporalTxLate = "1999-01-01"
+
   /** The q294 driver entry: BITEMPORAL AS-OF (SQL:2011 shape) — the
     * audit/restatement query the valid-time-only stack (q108 SCD2,
     * q115 point-in-time, q117 CDC) cannot answer: "what did the
@@ -745,13 +750,8 @@ object Relational {
     * date shift; each cut is one key-grain aggregate. Nothing
     * broadcasts, nothing explodes.
     */
-  def bitemporalAsOf(spark: SparkSession, sfDir: String,
-      epochDate: String = "1995-01-01",
-      asOfDate: String = "1996-06-01",
-      validAt: String = "1996-12-31",
-      txEarly: String = "1996-06-01",
-      txLate: String = "1999-01-01"): DataFrame = {
-    val hist = scd2Merge(spark, sfDir, epochDate, asOfDate)
+  def bitemporalAsOf(spark: SparkSession, sfDir: String): DataFrame = {
+    val hist = scd2Merge(spark, sfDir, bitemporalEpoch, bitemporalAsOfDate)
     val base = hist.select(col("c_custkey"), col("valid_from"),
       expr("date_add(valid_from, CAST(c_custkey % 3 AS INT))")
         .as("tx_from"),
@@ -762,12 +762,13 @@ object Relational {
         concat(col("c_mktsegment"), lit("*")).as("seg"))
     val reg = base.unionByName(corr)
     def believed(tx: String, out: String) = reg
-      .filter(col("valid_from") <= lit(java.sql.Date.valueOf(validAt)) &&
+      .filter(
+        col("valid_from") <= lit(java.sql.Date.valueOf(bitemporalValidAt)) &&
         col("tx_from") <= lit(java.sql.Date.valueOf(tx)))
       .groupBy(col("c_custkey"))
       .agg(expr("MAX_BY(seg, STRUCT(valid_from, tx_from))").as(out))
-    believed(txLate, "seg_t2")
-      .join(believed(txEarly, "seg_t1"), Seq("c_custkey"), "left")
+    believed(bitemporalTxLate, "seg_t2")
+      .join(believed(bitemporalTxEarly, "seg_t1"), Seq("c_custkey"), "left")
       .select(col("c_custkey"), col("seg_t1"), col("seg_t2"),
         (col("seg_t1").isNotNull && col("seg_t1") =!= col("seg_t2"))
           .as("view_changed"))
@@ -898,13 +899,12 @@ object Relational {
     * oracle compares bit-exact doubles; the data maximum lands in
     * bin n+1, same as width_bucket's Postgres upper-bound rule.
     */
-  def histogram(
-      spark: SparkSession, sfDir: String, bins: Int = 20): DataFrame = {
+  def histogram(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.load(spark, sfDir, "events")
     val bounds = ev.agg(
       min(col("value")).as("lo"), max(col("value")).as("hi"))
     ev.crossJoin(broadcast(bounds))
-      .groupBy((floor((col("value") - col("lo")) * bins /
+      .groupBy((floor((col("value") - col("lo")) * 20 /
         (col("hi") - col("lo"))) + 1).cast("long").as("bucket"))
       .agg(
         count(lit(1)).as("n_rows"),
@@ -1206,10 +1206,8 @@ object Relational {
     * a corpus where one day holds billions of sessions moves to the
     * q200/q202 chunked prefix-sum device, noted here.
     */
-  def concurrencyTimeline(
-      spark: SparkSession, sfDir: String,
-      gapSeconds: Long = 1800): DataFrame = {
-    val sessions = sessionize(spark, sfDir, gapSeconds)
+  def concurrencyTimeline(spark: SparkSession, sfDir: String): DataFrame = {
+    val sessions = sessionize(spark, sfDir)
       .select(to_date(col("t_start")).as("day"),
         unix_micros(col("t_start")).as("s_us"),
         unix_micros(col("t_end")).as("e_us"))
@@ -1768,8 +1766,7 @@ object Relational {
     * only exchange carries ≤256 rows per partition after map-side
     * combine.
     */
-  def bucketFingerprints(
-      spark: SparkSession, sfDir: String, buckets: Int = 256): DataFrame = {
+  def bucketFingerprints(spark: SparkSession, sfDir: String): DataFrame = {
     def h60(c: org.apache.spark.sql.Column) =
       conv(substring(md5(c), 1, 15), 16, 10).cast("long")
     def dec(c: String) =
@@ -1784,7 +1781,7 @@ object Relational {
     Tables.load(spark, sfDir, "lineitem")
       .select(
         pmod(h60(concat(col("l_orderkey").cast("string"), lit("#"),
-          col("l_linenumber").cast("string"))), lit(buckets)).as("bucket"),
+          col("l_linenumber").cast("string"))), lit(256)).as("bucket"),
         h60(repr).as("rowfp"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_rows"),
@@ -1858,9 +1855,7 @@ object Relational {
     * list, pair fan-out is bounded by 15², and no column pair is ever
     * joined directly.
     */
-  def joinDiscovery(
-      spark: SparkSession, sfDir: String,
-      thresholdMicro: Long = 500000L): DataFrame = {
+  def joinDiscovery(spark: SparkSession, sfDir: String): DataFrame = {
     val catalog: Seq[(String, String)] = Seq(
       "region" -> "r_regionkey", "nation" -> "n_nationkey",
       "nation" -> "n_regionkey", "customer" -> "c_custkey",
@@ -1901,7 +1896,7 @@ object Relational {
         col("n_a").as("n_distinct"), col("n_common"),
         expr("CAST((n_common * 1000000) DIV n_a AS BIGINT)")
           .as("containment_micro"))
-      .filter(col("containment_micro") >= thresholdMicro)
+      .filter(col("containment_micro") >= 500000L)
       .localCheckpoint(true)
     index.unpersist()
     out
@@ -2171,8 +2166,7 @@ object Relational {
     * construction (the q131/q151 precedent). At 100 TB nothing
     * changes: the day domain does not grow with data.
     */
-  def madDailyAnomaly(
-      spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
+  def madDailyAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = Tables.load(spark, sfDir, "events")
       .select(to_date(col("ts")).as("day"),
         floor(col("value") * lit(100.0) + lit(0.5)).cast("long")
@@ -2201,7 +2195,7 @@ object Relational {
     withDev.crossJoin(broadcast(mad))
       .select(col("day"), col("n_events"), col("total_cents"),
         col("med_cents"), col("mad_cents"), col("dev"),
-        (abs(col("dev")) > lit(k.toLong) * col("mad_cents"))
+        (abs(col("dev")) > lit(3L) * col("mad_cents"))
           .as("is_anomaly"))
   }
 
@@ -2567,6 +2561,8 @@ object Relational {
           .as("is_watermark"))
   }
 
+  private val bootstrapB = 200
+
   /** The q205 driver entry: DETERMINISTIC BOOTSTRAP CONFIDENCE
     * INTERVAL on mean daily revenue — the nonparametric error bar a
     * dashboard should print next to any mean (daily totals are few
@@ -2586,8 +2582,7 @@ object Relational {
     * At true scale this becomes the Poisson bootstrap (per-row
     * weights, no index join) — same statistic, documented swap.
     */
-  def bootstrapCi(
-      spark: SparkSession, sfDir: String, b: Int = 200): DataFrame = {
+  def bootstrapCi(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = Tables.load(spark, sfDir, "events")
       .select(to_date(col("ts")).as("day"),
         floor(col("value") * lit(100.0) + lit(0.5)).cast("long")
@@ -2598,7 +2593,7 @@ object Relational {
         Window.orderBy(col("day").asc)) - 1)
       .select(col("idx").cast("long").as("idx"), col("total_cents"))
     val nRow = ranked.agg(count(lit(1)).as("n"))
-    val draws = spark.range(0, b.toLong).select(col("id").as("rb"))
+    val draws = spark.range(0, bootstrapB.toLong).select(col("id").as("rb"))
       .crossJoin(broadcast(nRow))
       .select(col("rb"), col("n"), explode(sequence(lit(0L),
         col("n") - 1)).as("i"))
@@ -2611,8 +2606,8 @@ object Relational {
       .groupBy(col("rb")).agg(sum(col("total_cents")).as("bsum"))
       .withColumn("rn", row_number().over(
         Window.orderBy(col("bsum").asc, col("rb").asc)))
-    val loRank = (b + 39) / 40          // ⌈B/40⌉  = 2.5%
-    val hiRank = (39 * b + 39) / 40     // ⌈39B/40⌉ = 97.5%
+    val loRank = (bootstrapB + 39) / 40          // ⌈B/40⌉  = 2.5%
+    val hiRank = (39 * bootstrapB + 39) / 40     // ⌈39B/40⌉ = 97.5%
     val obs = daily.agg(count(lit(1)).as("n_days"),
       sum(col("total_cents")).cast("long").as("obs_sum"))
     sums.agg(
@@ -2704,8 +2699,7 @@ object Relational {
     * rule), zero driver-side iteration; the oracle is the same
     * recursion as a DuckDB RECURSIVE CTE stepping rank-by-rank.
     */
-  def holtForecast(
-      spark: SparkSession, sfDir: String, horizon: Int = 7): DataFrame = {
+  def holtForecast(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = Tables.load(spark, sfDir, "events")
       .select(to_date(col("ts")).as("day"),
         floor(col("value") * lit(100.0) + lit(0.5)).cast("long")
@@ -2734,7 +2728,7 @@ object Relational {
         col("st.lvl").as("level_cents"), col("st.tr").as("trend_cents"))
     folded
       .select(col("n_days"), col("level_cents"), col("trend_cents"),
-        explode(sequence(lit(1), lit(horizon))).as("h"),
+        explode(sequence(lit(1), lit(7))).as("h"),
         col("last_day"))
       .select(col("h").cast("long").as("h"),
         date_add(col("last_day"), col("h").cast("int"))
@@ -2743,6 +2737,8 @@ object Relational {
         (col("level_cents") + col("h") * col("trend_cents"))
           .as("forecast_cents"))
   }
+
+  private val backtestHold = 7
 
   /** The q295 driver entry: FORECAST BACKTEST HARNESS — the
     * evaluation loop that makes q209's forecast trustworthy: freeze
@@ -2762,8 +2758,7 @@ object Relational {
     * (q209's rule) — per-series cost is O(days), series are
     * embarrassingly parallel.
     */
-  def forecastBacktest(
-      spark: SparkSession, sfDir: String, hold: Int = 7): DataFrame = {
+  def forecastBacktest(spark: SparkSession, sfDir: String): DataFrame = {
     def half(x: Column): Column =
       floor(x.cast("double") / lit(2.0)).cast("long")
     Tables.load(spark, sfDir, "events")
@@ -2773,12 +2768,12 @@ object Relational {
       .agg(count(lit(1)).as("n"),
         array_sort(collect_list(struct(col("day"), col("y")))).as("s"))
       // need >= 2 train points and a full seasonal lag inside train
-      .where(col("n") >= lit(hold + 7L + 2L))
+      .where(col("n") >= lit(backtestHold + 7L + 2L))
       .select(col("event_type"), col("n"),
         transform(col("s"), x => x.getField("y")).as("ys"))
       .select(col("event_type"), col("n"), col("ys"),
         aggregate(
-          slice(col("ys"), lit(2), size(col("ys")) - lit(1 + hold)),
+          slice(col("ys"), lit(2), size(col("ys")) - lit(1 + backtestHold)),
           struct(element_at(col("ys"), 1).as("lvl"),
             (element_at(col("ys"), 2) - element_at(col("ys"), 1))
               .as("tr")),
@@ -2789,14 +2784,14 @@ object Relational {
                 .as("tr"))
           }).as("st"))
       .select(col("event_type"), col("n").cast("long").as("n_days"),
-        expr(s"""aggregate(sequence(1, $hold), CAST(0 AS BIGINT),
+        expr(s"""aggregate(sequence(1, $backtestHold), CAST(0 AS BIGINT),
             (acc, h) -> acc + abs(st.lvl + h * st.tr -
-              element_at(ys, CAST(size(ys) - $hold + h AS INT))))""")
+              element_at(ys, CAST(size(ys) - $backtestHold + h AS INT))))""")
           .as("sae_holt"),
-        expr(s"""aggregate(sequence(1, $hold), CAST(0 AS BIGINT),
+        expr(s"""aggregate(sequence(1, $backtestHold), CAST(0 AS BIGINT),
             (acc, h) -> acc + abs(
-              element_at(ys, CAST(size(ys) - $hold + h - 7 AS INT)) -
-              element_at(ys, CAST(size(ys) - $hold + h AS INT))))""")
+              element_at(ys, CAST(size(ys) - $backtestHold + h - 7 AS INT)) -
+              element_at(ys, CAST(size(ys) - $backtestHold + h AS INT))))""")
           .as("sae_naive"))
       .withColumn("winner",
         when(col("sae_holt") < col("sae_naive"), "holt")

@@ -81,15 +81,14 @@ object Similarity {
     */
   def annLsh(
       spark: SparkSession, sfDir: String,
-      numQueries: Int = 5, k: Int = 10,
-      numTables: Int = lshTables,
-      bitsPerTable: Int = lshBitsPerTable): DataFrame = {
+      numQueries: Int = 5, k: Int = 10): DataFrame = {
     import graft.functions.VectorExpressions.lsh_bucket
     def chunked(df: DataFrame, vcol: String, idCols: Seq[String]): DataFrame =
       df.select(idCols.map(col) ++ Seq(col(vcol)) :+
-          explode(array((0 until numTables).map { c =>
+          explode(array((0 until lshTables).map { c =>
             struct(lit(c).as("chunk"),
-              lsh_bucket(col(vcol), bitsPerTable, c * bitsPerTable).as("ck"))
+              lsh_bucket(col(vcol), lshBitsPerTable, c * lshBitsPerTable)
+                .as("ck"))
           }: _*)).as("blk"): _*)
         .select(idCols.map(col) ++ Seq(col(vcol),
           col("blk.chunk").as("chunk"), col("blk.ck").as("ck")): _*)
@@ -123,14 +122,14 @@ object Similarity {
     * path next to LSH. Structure: a small centroid codebook partitions
     * the corpus into cells (each vector assigned to its nearest
     * centroid by cosine, ties to the lowest centroid id); a query
-    * scores only the vectors in its `probes` nearest cells.
+    * scores only the vectors in its `ivfProbes` nearest cells.
     *
-    * The codebook here is SEEDED — the `clusters` lowest-id vectors —
+    * The codebook here is SEEDED — the `ivfClusters` lowest-id vectors —
     * which keeps the whole operator deterministic and oracle-checkable
     * (q32); a k-means-trained codebook drops in by replacing `cents`
     * (training changes the codebook, not the operator shape).
     *
-    * Scale: assignment is `clusters` dot products per corpus vector
+    * Scale: assignment is `ivfClusters` dot products per corpus vector
     * (linear, broadcast codebook, no corpus shuffle beyond one
     * argmax aggregation of (vec_id, sim, c_id) triples — the vectors
     * themselves rejoin by id once). Probing touches ~probes/clusters
@@ -138,12 +137,11 @@ object Similarity {
     */
   def annIvf(
       spark: SparkSession, sfDir: String,
-      numQueries: Int = 5, k: Int = 10,
-      clusters: Int = ivfClusters, probes: Int = ivfProbes): DataFrame = {
+      numQueries: Int = 5, k: Int = 10): DataFrame = {
     val corpus = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
-    val cents = seededCodebook(corpus, clusters)
-    annIvfWithCodebook(spark, sfDir, cents, numQueries, k, probes)
+    val cents = seededCodebook(corpus)
+    annIvfWithCodebook(spark, sfDir, cents, numQueries, k)
   }
 
   /** The deterministic default codebook: the `clusters` lowest-id
@@ -156,7 +154,7 @@ object Similarity {
 
   /** k-means-trained codebook (Lloyd's iterations), entirely in
     * DataFrame ops — no collect of the corpus, no MLlib dependency:
-    * assignment = broadcast-codebook argmax (`clusters` dot products
+    * assignment = broadcast-codebook argmax (`ivfClusters` dot products
     * per vector, linear); update = per-(cell, position) mean via
     * posexplode + re-assembly, then re-normalization to the unit
     * sphere (spherical k-means — the right variant under cosine).
@@ -178,9 +176,7 @@ object Similarity {
     * At 100 TB: train on a corpus SAMPLE (pass `corpus.sample(...)`),
     * then assign the full corpus once — the standard IVF build.
     */
-  def kmeansCodebook(
-      corpus: DataFrame, clusters: Int = ivfClusters,
-      iters: Int = 5): DataFrame = {
+  def kmeansCodebook(corpus: DataFrame, iters: Int = 5): DataFrame = {
     // pin the corpus hash-partitioned by vec_id and cached: the
     // embedding arrays are shuffled ONCE here; every iteration's
     // join-back then reuses this partitioning, so only the small
@@ -190,7 +186,7 @@ object Similarity {
     val c = corpus.repartition(col("vec_id")).persist()
     try {
       // CODEBOOK STATE DRIVER-SIDE (round-18, guide §1.2): the book
-      // is `clusters` rows (a KNOB — 16 here), but each Lloyd's
+      // is `ivfClusters` rows (16), but each Lloyd's
       // iteration used to maintain it as a DataFrame: a left-join of
       // the previous book against the new means plus an eager
       // localCheckpoint per iteration (2+ extra jobs x iters). The
@@ -206,7 +202,7 @@ object Similarity {
       def toDf(rows: Seq[(Long, Seq[Double])]): DataFrame =
         rows.toDF("c_id", "cv")
       var cents: Seq[(Long, Seq[Double])] =
-        seededCodebook(c, clusters).collect()
+        seededCodebook(c).collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1)))
           .sortBy(_._1).toSeq
       for (_ <- 0 until iters) {
@@ -236,11 +232,13 @@ object Similarity {
     } finally c.unpersist()
   }
 
+  private[graft] val ivfTrainIters = 3
+
   /** The q163 driver entry: IVF served from a LLOYD'S-TRAINED
     * codebook — the extension the seeded-book q32 deliberately left
     * open ([[annIvfWithCodebook]] "a trained book drops in"). At
     * 100 TB the seeded book is the weak link: cell sizes track
-    * whatever the first `clusters` vectors happened to be, so hot
+    * whatever the first `ivfClusters` vectors happened to be, so hot
     * cells make probing scan far more than probes/clusters of the
     * corpus; trained centroids equalize cell mass and sharpen
     * boundaries (recall floor pinned in SimilaritySpec on structured
@@ -250,15 +248,11 @@ object Similarity {
     * pico-exact mean (oracle: per-iteration CTE chain, q155's
     * generated-replay precedent).
     */
-  def annIvfTrained(
-      spark: SparkSession, sfDir: String,
-      numQueries: Int = 5, k: Int = 10,
-      clusters: Int = ivfClusters, probes: Int = ivfProbes,
-      iters: Int = 3): DataFrame = {
+  def annIvfTrained(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
     annIvfWithCodebook(spark, sfDir,
-      kmeansCodebook(corpus, clusters, iters), numQueries, k, probes)
+      kmeansCodebook(corpus, iters = ivfTrainIters))
   }
 
   /** (vec_id, c_id) nearest-centroid assignment against a broadcast
@@ -354,7 +348,7 @@ object Similarity {
 
   def annPq(
       spark: SparkSession, sfDir: String,
-      numQueries: Int = 5, k: Int = 10, rerank: Int = 40): DataFrame = {
+      numQueries: Int = 5, k: Int = 10): DataFrame = {
     val corpus = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
     val (codes, cents) = pqIndex(spark, sfDir)
@@ -373,7 +367,7 @@ object Similarity {
     val wAdc = Window.partitionBy(col("q_id"))
       .orderBy(col("adc_pico").asc, col("vec_id").asc)
     val cand = adc.withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= rerank)
+      .filter(col("rn") <= 40)
       .select(col("q_id"), col("vec_id"))
     // exact re-rank on the shortlist only
     val scored = cand.join(corpus, "vec_id")
@@ -400,15 +394,13 @@ object Similarity {
     * batch itself). Output is the ADC top-k — the no-re-rank serving
     * tier; a re-rank tier composes on top exactly as in q153.
     */
-  def annPqPersistedServe(
-      spark: SparkSession, sfDir: String,
-      numQueries: Int = 5, k: Int = 10): DataFrame =
+  def annPqPersistedServe(spark: SparkSession, sfDir: String): DataFrame =
     Scratch.withScratch(spark, "q156_pq_index", sfDir) { dir =>
       val (codes, cents) = pqIndex(spark, sfDir)
       codes.write.mode("overwrite").parquet(s"$dir/codes")
       cents.write.mode("overwrite").parquet(s"$dir/books")
       servePq(spark, s"$dir/codes", s"$dir/books",
-        queries(spark, sfDir, numQueries), k)
+        queries(spark, sfDir, 5), 10)
     }
 
   /** ADC serving from a persisted index: scans codes, broadcasts the
@@ -436,6 +428,9 @@ object Similarity {
       .select(col("q_id"), col("vec_id"), col("adc_pico"), col("rn"))
   }
 
+  private val pqStreamQueries = 5
+  private val pqStreamK = 10
+
   /** The q160 driver entry: ONLINE ANN SERVING — queries arrive as a
     * STREAM and are answered from the persisted PQ index (q156's
     * artifact), the deployment shape of a retrieval endpoint: index
@@ -456,9 +451,7 @@ object Similarity {
     * top-k depends only on its own row + the static index), so the
     * oracle is q156's verbatim.
     */
-  def annPqServeStream(
-      spark: SparkSession, sfDir: String,
-      numQueries: Int = 5, k: Int = 10): DataFrame =
+  def annPqServeStream(spark: SparkSession, sfDir: String): DataFrame =
     Scratch.withScratch(spark, "q160_pq_stream", sfDir) { dir =>
       val (codes, cents) = pqIndex(spark, sfDir)
       codes.write.mode("overwrite").parquet(s"$dir/codes")
@@ -470,14 +463,14 @@ object Similarity {
       val served = s"$dir/served"
       val q = spark.readStream.schema(embBatch.schema)
         .option("pathGlobFilter", "embeddings.parquet").parquet(sfDir)
-        .where(col("vec_id") < numQueries)
+        .where(col("vec_id") < pqStreamQueries)
         .select(col("vec_id").as("q_id"),
           Vectors.l2normalize(col("embedding")).as("q"))
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           if (!batch.isEmpty)
             servePq(batch.sparkSession, s"$dir/codes", s"$dir/books",
-              batch, k)
+              batch, pqStreamK)
               .write.mode("append").parquet(served)
         }
         .option("checkpointLocation", s"$dir/ckpt")
@@ -493,16 +486,18 @@ object Similarity {
       if (new java.io.File(served).exists()) spark.read.parquet(served)
       else {
         val emptyQueries = embBatch
-          .where(col("vec_id") < numQueries)
+          .where(col("vec_id") < pqStreamQueries)
           .select(col("vec_id").as("q_id"),
             Vectors.l2normalize(col("embedding")).as("q"))
           .limit(0)
-        val servedSchema =
-          servePq(spark, s"$dir/codes", s"$dir/books", emptyQueries, k).schema
+        val servedSchema = servePq(spark, s"$dir/codes", s"$dir/books",
+          emptyQueries, pqStreamK).schema
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], servedSchema)
       }
     }
+
+  private val pqBaseCount = 250
 
   /** The q161 driver entry: INCREMENTAL PQ INDEX MAINTENANCE — the
     * append-only growth path of the persisted index (q46's
@@ -522,13 +517,11 @@ object Similarity {
     * touches the existing codes. The seeded books live in the base
     * corpus by construction (centroid ids < pqCentroids < baseCount).
     */
-  def annPqIncrementalServe(
-      spark: SparkSession, sfDir: String,
-      numQueries: Int = 5, k: Int = 10, baseCount: Int = 250): DataFrame =
+  def annPqIncrementalServe(spark: SparkSession, sfDir: String): DataFrame =
     Scratch.withScratch(spark, "q161_pq_incr", sfDir) { dir =>
       val corpus = Tables.load(spark, sfDir, "embeddings")
         .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
-      val base = corpus.filter(col("vec_id") < baseCount)
+      val base = corpus.filter(col("vec_id") < pqBaseCount)
       val cents = base.filter(col("vec_id") < pqCentroids)
         .select(col("vec_id").as("c_id"),
           pqSubspaceSplit(col("u")).as(Seq("s", "cv")))
@@ -536,10 +529,10 @@ object Similarity {
       cents.write.mode("overwrite").parquet(s"$dir/books")
       // day 2: encode the delta against the PERSISTED books only
       val books = spark.read.parquet(s"$dir/books")
-      pqEncode(corpus.filter(col("vec_id") >= baseCount), books)
+      pqEncode(corpus.filter(col("vec_id") >= pqBaseCount), books)
         .write.mode("append").parquet(s"$dir/codes")
       servePq(spark, s"$dir/codes", s"$dir/books",
-        queries(spark, sfDir, numQueries), k)
+        queries(spark, sfDir, 5), 10)
     }
 
   /** [[annIvf]] parameterized on the codebook frame `(c_id, cv)` —
@@ -547,7 +540,7 @@ object Similarity {
     */
   def annIvfWithCodebook(
       spark: SparkSession, sfDir: String, cents: DataFrame,
-      numQueries: Int = 5, k: Int = 10, probes: Int = ivfProbes): DataFrame = {
+      numQueries: Int = 5, k: Int = 10): DataFrame = {
     val corpus = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
     val assigned = assignCells(corpus, cents).join(corpus, "vec_id")
@@ -558,7 +551,7 @@ object Similarity {
       .select(col("q_id"), col("q"), col("c_id"),
         Vectors.dot(col("q"), col("cv")).as("sim"))
       .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= probes)
+      .filter(col("rn") <= ivfProbes)
       .select(col("q_id"), col("q"), col("c_id"))
     val scored = assigned.join(broadcast(qprobes), "c_id")
       .filter(col("vec_id") =!= col("q_id"))
@@ -570,6 +563,8 @@ object Similarity {
       .filter(col("rk") <= k)
       .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
   }
+
+  private val bitextK = 4
 
   /** The q168 driver entry: MARGIN-BASED BITEXT MINING — the parallel-
     * corpus construction of Artetxe & Schwenk 2019 (the LASER /
@@ -586,7 +581,7 @@ object Similarity {
     * margin_pct = floor(100 · sim · 2k / (sk + tk)) where sk/tk are
     * the BIGINT sums of each side's top-k sims. Both engines divide
     * the same two exact integers. A pair mines when its margin
-    * clears `marginPct` (105 = the paper's ~1.05 threshold) AND it
+    * clears 105% (the paper's ~1.05 threshold) AND it
     * is its source's best margin (one pair per source row, the
     * forward mining direction; intersecting with the reverse
     * direction composes the same operator label-swapped).
@@ -598,16 +593,13 @@ object Similarity {
     * — the top-k window and the argmax window both key on one side's
     * id, so nothing here is corpus-quadratic.
     */
-  def bitextMine(
-      spark: SparkSession, sfDir: String,
-      srcLabel: Int = 0, tgtLabel: Int = 1,
-      k: Int = 4, marginPct: Long = 105L): DataFrame = {
+  def bitextMine(spark: SparkSession, sfDir: String): DataFrame = {
     val u = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"),
         Vectors.l2normalize(col("embedding")).as("v"))
-    val srcV = u.where(col("label") === srcLabel)
+    val srcV = u.where(col("label") === 0)
       .select(col("vec_id").as("s_id"), col("v").as("sv"))
-    val tgtV = u.where(col("label") === tgtLabel)
+    val tgtV = u.where(col("label") === 1)
       .select(col("vec_id").as("t_id"), col("v").as("tv"))
     val sims = srcV.crossJoin(broadcast(tgtV))
       .select(col("s_id"), col("t_id"),
@@ -617,12 +609,12 @@ object Similarity {
     val wS = Window.partitionBy(col("s_id"))
       .orderBy(col("sim_micro").desc, col("t_id").asc)
     val topS = sims.withColumn("rn", row_number().over(wS))
-      .where(col("rn") <= k)
+      .where(col("rn") <= bitextK)
       .groupBy(col("s_id")).agg(sum(col("sim_micro")).as("sk"))
     val wT = Window.partitionBy(col("t_id"))
       .orderBy(col("sim_micro").desc, col("s_id").asc)
     val topT = sims.withColumn("rn", row_number().over(wT))
-      .where(col("rn") <= k)
+      .where(col("rn") <= bitextK)
       .groupBy(col("t_id")).agg(sum(col("sim_micro")).as("tk"))
     val wBest = Window.partitionBy(col("s_id"))
       .orderBy(col("margin_pct").desc, col("sim_micro").desc,
@@ -630,10 +622,10 @@ object Similarity {
     sims.join(topS, "s_id").join(topT, "t_id")
       .where(col("sk") + col("tk") > 0)
       .withColumn("margin_pct",
-        floor((lit(100L * 2 * k) * col("sim_micro")).cast("double") /
+        floor((lit(100L * 2 * bitextK) * col("sim_micro")).cast("double") /
           (col("sk") + col("tk")).cast("double")).cast("long"))
       .withColumn("rn", row_number().over(wBest))
-      .where(col("rn") === 1 && col("margin_pct") >= marginPct)
+      .where(col("rn") === 1 && col("margin_pct") >= 105L)
       .select(col("s_id"), col("t_id"), col("sim_micro"),
         col("margin_pct"))
   }
@@ -654,10 +646,7 @@ object Similarity {
     * (q31/q32/q156 — the band filter composes on any candidate
     * source), so the quadratic never materializes.
     */
-  def hardNegatives(
-      spark: SparkSession, sfDir: String,
-      m: Int = 5, loMicro: Long = 100000L,
-      hiMicro: Long = 950000L): DataFrame = {
+  def hardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
     val u = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"),
         Vectors.l2normalize(col("embedding")).as("v"))
@@ -673,9 +662,9 @@ object Similarity {
       .select(col("a_id"), col("n_id"),
         floor(lit(1000000.0) * Vectors.dot(col("av"), col("nv")))
           .cast("long").as("sim_micro"))
-      .where(col("sim_micro") >= loMicro && col("sim_micro") < hiMicro)
+      .where(col("sim_micro") >= 100000L && col("sim_micro") < 950000L)
       .withColumn("neg_rank", row_number().over(w))
-      .where(col("neg_rank") <= m)
+      .where(col("neg_rank") <= 5)
   }
 
   /** The q322 driver entry: ANN-COMPOSED HARD-NEGATIVE MINING — the
@@ -689,7 +678,7 @@ object Similarity {
     * Candidate generation: every corpus vector is assigned to its one
     * nearest cell ([[assignCells]] — broadcast codebook, argmax, no
     * corpus-side shuffle of the vectors); every ANCHOR probes its
-    * `probes` nearest cells; candidates = different-label vectors
+    * `ivfProbes` nearest cells; candidates = different-label vectors
     * assigned to a probed cell. Because assignment is a partition,
     * each (anchor, candidate) pair arises at most once — no dedup
     * stage. The cell-keyed join co-partitions both sides on `c_id`:
@@ -706,8 +695,7 @@ object Similarity {
     */
   def annHardNegatives(
       spark: SparkSession, sfDir: String,
-      m: Int = 5, loMicro: Long = 100000L, hiMicro: Long = 950000L,
-      clusters: Int = ivfClusters, probes: Int = ivfProbes): DataFrame = {
+      clusters: Int = ivfClusters): DataFrame = {
     val u = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"),
         Vectors.l2normalize(col("embedding")).as("v"))
@@ -725,7 +713,7 @@ object Similarity {
       .select(col("a_id"), col("a_label"), col("av"), col("c_id"),
         Vectors.dot(col("av"), col("cv")).as("sim"))
       .withColumn("rn", row_number().over(wp))
-      .where(col("rn") <= probes)
+      .where(col("rn") <= ivfProbes)
       .select(col("a_id"), col("a_label"), col("av"), col("c_id"))
     val w = Window.partitionBy(col("a_id"))
       .orderBy(col("sim_micro").desc, col("n_id").asc)
@@ -735,16 +723,16 @@ object Similarity {
       .select(col("a_id"), col("n_id"),
         floor(lit(1000000.0) * Vectors.dot(col("av"), col("nv")))
           .cast("long").as("sim_micro"))
-      .where(col("sim_micro") >= loMicro && col("sim_micro") < hiMicro)
+      .where(col("sim_micro") >= 100000L && col("sim_micro") < 950000L)
       .withColumn("neg_rank", row_number().over(w))
-      .where(col("neg_rank") <= m)
+      .where(col("neg_rank") <= 5)
   }
 
   /** The q323 driver entry: ANN-COMPOSED BITEXT MINING — [[bitextMine]]
     * with its sims frame served by the q32 IVF index instead of the
     * exact label-slice cross join (the CCMatrix deployment shape: the
     * margin is computed over each side's ANN shortlist, Artetxe &
-    * Schwenk 2019 §3.2). Source rows probe their `probes` nearest
+    * Schwenk 2019 §3.2). Source rows probe their `ivfProbes` nearest
     * cells; the candidate sims are (source x targets assigned to a
     * probed cell); sk/tk are each side's top-k sums OVER THE CANDIDATE
     * SET — exactly how the production system computes them, since the
@@ -761,26 +749,24 @@ object Similarity {
     */
   def annBitextMine(
       spark: SparkSession, sfDir: String,
-      srcLabel: Int = 0, tgtLabel: Int = 1,
-      k: Int = 4, marginPct: Long = 105L,
-      clusters: Int = ivfClusters, probes: Int = ivfProbes): DataFrame = {
+      clusters: Int = ivfClusters): DataFrame = {
     val u = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"),
         Vectors.l2normalize(col("embedding")).as("v"))
     val corpus = u.select(col("vec_id"), col("v").as("u"))
     val cents = seededCodebook(corpus, clusters)
     val tgt = assignCells(corpus, cents).join(u, "vec_id")
-      .where(col("label") === tgtLabel)
+      .where(col("label") === 1)
       .select(col("c_id"), col("vec_id").as("t_id"), col("v").as("tv"))
     val wp = Window.partitionBy(col("s_id"))
       .orderBy(col("sim").desc, col("c_id").asc)
-    val sProbes = u.where(col("label") === srcLabel)
+    val sProbes = u.where(col("label") === 0)
       .select(col("vec_id").as("s_id"), col("v").as("sv"))
       .crossJoin(broadcast(cents))
       .select(col("s_id"), col("sv"), col("c_id"),
         Vectors.dot(col("sv"), col("cv")).as("sim"))
       .withColumn("rn", row_number().over(wp))
-      .where(col("rn") <= probes)
+      .where(col("rn") <= ivfProbes)
       .select(col("s_id"), col("sv"), col("c_id"))
     val sims = sProbes.join(tgt, "c_id")
       .select(col("s_id"), col("t_id"),
@@ -790,12 +776,12 @@ object Similarity {
     val wS = Window.partitionBy(col("s_id"))
       .orderBy(col("sim_micro").desc, col("t_id").asc)
     val topS = sims.withColumn("rn", row_number().over(wS))
-      .where(col("rn") <= k)
+      .where(col("rn") <= bitextK)
       .groupBy(col("s_id")).agg(sum(col("sim_micro")).as("sk"))
     val wT = Window.partitionBy(col("t_id"))
       .orderBy(col("sim_micro").desc, col("s_id").asc)
     val topT = sims.withColumn("rn", row_number().over(wT))
-      .where(col("rn") <= k)
+      .where(col("rn") <= bitextK)
       .groupBy(col("t_id")).agg(sum(col("sim_micro")).as("tk"))
     val wBest = Window.partitionBy(col("s_id"))
       .orderBy(col("margin_pct").desc, col("sim_micro").desc,
@@ -803,13 +789,16 @@ object Similarity {
     sims.join(topS, "s_id").join(topT, "t_id")
       .where(col("sk") + col("tk") > 0)
       .withColumn("margin_pct",
-        floor((lit(100L * 2 * k) * col("sim_micro")).cast("double") /
+        floor((lit(100L * 2 * bitextK) * col("sim_micro")).cast("double") /
           (col("sk") + col("tk")).cast("double")).cast("long"))
       .withColumn("rn", row_number().over(wBest))
-      .where(col("rn") === 1 && col("margin_pct") >= marginPct)
+      .where(col("rn") === 1 && col("margin_pct") >= 105L)
       .select(col("s_id"), col("t_id"), col("sim_micro"),
         col("margin_pct"))
   }
+
+  private[graft] val annRecallKs = Seq(1, 5, 10)
+  private[graft] val annRecallSampleMod = 37L
 
   /** The q329 driver entry: ANN RECALL EVALUATION — the index-quality
     * gate every production vector store runs before switching serving
@@ -817,7 +806,7 @@ object Similarity {
     * al. 2017): on a FIXED eval set of query vectors, the IVF
     * shortlist's top-k is compared against the exhaustive top-k, and
     * recall@k = |ANN∩BRUTE| / |BRUTE| over the whole set. Queries are
-    * the deterministic vec_id % `sampleMod` slice — the standard
+    * the deterministic vec_id % `annRecallSampleMod` slice — the standard
     * sampled-eval design: brute force is the EVAL-ONLY cost (queries
     * fixed as the corpus grows), never the serving path. Both sides
     * rank by the identical floored-micro cosine under the identical
@@ -833,16 +822,13 @@ object Similarity {
     * set. Both shortlists pin once (each is read per k — the q291
     * rule); the per-k reduces land on counted scalars.
     */
-  def annRecallEval(
-      spark: SparkSession, sfDir: String,
-      ks: Seq[Int] = Seq(1, 5, 10), sampleMod: Long = 37L,
-      clusters: Int = ivfClusters, probes: Int = ivfProbes): DataFrame = {
+  def annRecallEval(spark: SparkSession, sfDir: String): DataFrame = {
     val u = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("v"))
     val corpus = u.select(col("vec_id"), col("v").as("u"))
-    val queries = u.where(col("vec_id") % sampleMod === 0)
+    val queries = u.where(col("vec_id") % annRecallSampleMod === 0)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val kMax = ks.max
+    val kMax = annRecallKs.max
     val wRank = Window.partitionBy(col("q_id"))
       .orderBy(col("sim_micro").desc, col("n_id").asc)
     val brute = queries
@@ -858,7 +844,7 @@ object Similarity {
       .where(col("b_rn") <= kMax)
       .select(col("q_id"), col("n_id"), col("b_rn").cast("long").as("b_rn"))
       .localCheckpoint(true) // read per k below
-    val cents = seededCodebook(corpus, clusters)
+    val cents = seededCodebook(corpus)
     val assigned = assignCells(corpus, cents).join(u, "vec_id")
       .select(col("c_id"), col("vec_id").as("n_id"), col("v").as("nv"))
     val wp = Window.partitionBy(col("q_id"))
@@ -867,7 +853,7 @@ object Similarity {
       .select(col("q_id"), col("qv"), col("c_id"),
         Vectors.dot(col("qv"), col("cv")).as("sim"))
       .withColumn("rn", row_number().over(wp))
-      .where(col("rn") <= probes)
+      .where(col("rn") <= ivfProbes)
       .select(col("q_id"), col("qv"), col("c_id"))
     val ann = qProbes.join(assigned, "c_id")
       .where(col("q_id") =!= col("n_id"))
@@ -879,7 +865,7 @@ object Similarity {
       .select(col("q_id"), col("n_id"), col("a_rn").cast("long").as("a_rn"))
     val joined = brute.join(ann, Seq("q_id", "n_id"))
       .localCheckpoint(true) // read per k below
-    ks.map { k =>
+    annRecallKs.map { k =>
       val d = brute.where(col("b_rn") <= k)
         .agg(count(lit(1)).cast("long").as("denom"),
           countDistinct(col("q_id")).cast("long").as("n_queries"))
@@ -894,6 +880,8 @@ object Similarity {
           .as("recall_ppm"))
     }.reduce(_ unionByName _)
   }
+
+  private val stalenessRot = 7
 
   /** The q330 driver entry: ANN INDEX STALENESS AUDIT — the ops
     * question q175's drift alarm raises but does not answer: after an
@@ -920,20 +908,18 @@ object Similarity {
     * cosine, one map-side-combined cell-grain aggregate. The output
     * is codebook-bounded.
     */
-  def indexStaleness(
-      spark: SparkSession, sfDir: String,
-      clusters: Int = ivfClusters, rot: Int = 7): DataFrame = {
+  def indexStaleness(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val v = col("embedding")
     val reencoded = when(col("label") < 5, v)
-      .otherwise(concat(slice(v, lit(rot + 1), size(v) - rot),
-        slice(v, lit(1), lit(rot))))
+      .otherwise(concat(slice(v, lit(stalenessRot + 1), size(v) - stalenessRot),
+        slice(v, lit(1), lit(stalenessRot))))
     val u1 = emb.select(col("vec_id"),
       Vectors.l2normalize(v).as("v1"))
     val u2 = emb.select(col("vec_id"),
       Vectors.l2normalize(reencoded).as("v2"))
     val corpus1 = u1.select(col("vec_id"), col("v1").as("u"))
-    val cents = seededCodebook(corpus1, clusters)
+    val cents = seededCodebook(corpus1)
     val a1 = assignCells(corpus1, cents)
       .select(col("vec_id"), col("c_id"))
     val a2 = assignCells(u2.select(col("vec_id"), col("v2").as("u")), cents)
@@ -951,6 +937,8 @@ object Similarity {
         expr("n_moved * 1000000 DIV n").as("moved_ppm"),
         expr("sim_sum DIV n").as("mean_self_sim_micro"))
   }
+
+  private val driftRot = 7
 
   /** The q175 driver entry: EMBEDDING DRIFT MONITOR — the standing
     * alarm a production feature store runs between embedding-model
@@ -977,16 +965,14 @@ object Similarity {
     * combined (label, pos) aggregate (bounded by labels x dims);
     * centroid join and cosine are dim-bounded.
     */
-  def embeddingDrift(
-      spark: SparkSession, sfDir: String,
-      thresholdMicro: Long = 500000L, rot: Int = 7): DataFrame = {
+  def embeddingDrift(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val day1 = emb.select(col("label"),
       Vectors.l2normalize(col("embedding")).as("u"))
     val v = col("embedding")
     val reencoded = when(col("label") < 5, v)
-      .otherwise(concat(slice(v, lit(rot + 1), size(v) - rot),
-        slice(v, lit(1), lit(rot))))
+      .otherwise(concat(slice(v, lit(driftRot + 1), size(v) - driftRot),
+        slice(v, lit(1), lit(driftRot))))
     val day2 = emb.select(col("label"),
       Vectors.l2normalize(reencoded).as("u"))
     def centroids(side: DataFrame): DataFrame = side
@@ -1010,7 +996,7 @@ object Similarity {
       .select(col("label"), col("n_day1"), col("n_day2"),
         floor(lit(1000000.0) * Vectors.cosine(col("c1"), col("c2")))
           .cast("long").as("drift_cos_micro"))
-      .withColumn("is_drifted", col("drift_cos_micro") < thresholdMicro)
+      .withColumn("is_drifted", col("drift_cos_micro") < 500000L)
   }
 
   /** The q183 driver entry: EMBEDDING-TRUNCATION RECALL AUDIT (the
@@ -1132,6 +1118,8 @@ object Similarity {
           (col("n_dims").cast("double") * lit(1000000.0)))
   }
 
+  private[graft] val dominantEigenIters = 40
+
   /** The q214 driver entry: DOMINANT EIGENVECTOR of the embedding
     * second-moment matrix via INTEGER power iteration — the core of
     * embedding whitening / anisotropy removal (the "all-but-the-top"
@@ -1157,8 +1145,7 @@ object Similarity {
     * the driver, independent of corpus size — at 100 TB nothing
     * changes but the one aggregate's input.
     */
-  def dominantEigen(
-      spark: SparkSession, sfDir: String, iters: Int = 40): DataFrame = {
+  def dominantEigen(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val d = 64
     val emb = Tables.load(spark, sfDir, "embeddings")
@@ -1190,7 +1177,7 @@ object Similarity {
     def matVec(v: Array[BigInt]): Array[BigInt] =
       Array.tabulate(d)(j => (0 until d).map(k => c(j)(k) * v(k)).sum)
     var v = Array.fill(d)(BigInt(1000000))
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to dominantEigenIters) {
       val w = matVec(v)
       val m = w.map(_.abs).max
       if (m != 0) v = w.map(x => x * 1000000 / m) // truncating, == HUGEINT //
@@ -1216,6 +1203,9 @@ object Similarity {
     * Scale shape: both inputs are top-k-bounded (queries x 10 rows);
     * the audit is a join + count over that bounded set.
     */
+  private val bqQueries = 5
+  private val bqK = 10
+
   /** The q299 driver entry: BINARY (SIGN) QUANTIZATION + HAMMING
     * RETRIEVAL AUDIT — the third leg of the quantization family:
     * int8 preserves magnitudes (q71), PQ preserves subspace shape
@@ -1237,8 +1227,7 @@ object Similarity {
     * scan — the corpus vectors themselves never join; rank-≤-k
     * windows bound the shuffle at k rows per query.
     */
-  def binaryQuantAudit(spark: SparkSession, sfDir: String,
-      numQueries: Int = 5, k: Int = 10): DataFrame = {
+  def binaryQuantAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val words = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), expr(
         """aggregate(sequence(1, size(embedding)), CAST(0 AS BIGINT),
@@ -1246,15 +1235,15 @@ object Similarity {
              WHEN element_at(embedding, i) > CAST(0 AS FLOAT)
              THEN SHIFTLEFT(CAST(1 AS BIGINT), i - 1)
              ELSE CAST(0 AS BIGINT) END)""").as("w"))
-    val qw = words.orderBy(col("vec_id")).limit(numQueries)
+    val qw = words.orderBy(col("vec_id")).limit(bqQueries)
       .select(col("vec_id").as("q_id"), col("w").as("qw"))
     val topH = words.join(broadcast(qw), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         expr("CAST(bit_count(w ^ qw) AS BIGINT)").as("hamming"))
       .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
         .orderBy(col("hamming").asc, col("vec_id").asc)))
-      .filter(col("rk") <= k)
-    val overlap = annBrute(spark, sfDir, numQueries, k)
+      .filter(col("rk") <= bqK)
+    val overlap = annBrute(spark, sfDir, bqQueries, bqK)
       .select(col("q_id"), col("vec_id"))
       .join(topH.select(col("q_id"), col("vec_id")), Seq("q_id", "vec_id"))
       .groupBy(col("q_id")).agg(count(lit(1)).as("n_overlap"))
@@ -1318,15 +1307,12 @@ object Similarity {
     * Q·k-row frame (tiny, broadcast) against the label column and
     * reduces to Q rows.
     */
-  def ndcgAudit(
-      spark: SparkSession, sfDir: String,
-      numQueries: Int = 5, k: Int = 10): DataFrame = {
-    require(k <= ndcgGainMicro.length, "gain table covers ranks 1..10")
+  def ndcgAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val labels = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("label"))
     val gainArr = array(ndcgGainMicro.map(lit): _*)
     val idealArr = array(ndcgIdealMicro.map(lit): _*)
-    annBrute(spark, sfDir, numQueries, k)
+    annBrute(spark, sfDir)
       .join(labels.select(col("vec_id").as("q_id"),
         col("label").as("q_label")), Seq("q_id"))
       .join(labels.select(col("vec_id"), col("label").as("r_label")),
@@ -1427,24 +1413,15 @@ object Similarity {
   val mmrPoolSize: Int = 50
   val mmrLamTenths: Int = 7
 
-  def mmrTopK(
-      spark: SparkSession, sfDir: String,
-      numQueries: Int = mmrNumQueries, k: Int = mmrK,
-      poolSize: Int = mmrPoolSize,
-      lamTenths: Int = mmrLamTenths): DataFrame = {
-    require(k >= 1 && poolSize >= k, "pool must cover k selections")
-    require(lamTenths >= 0 && lamTenths <= 10, "lambda in tenths of [0,1]")
+  def mmrTopK(spark: SparkSession, sfDir: String): DataFrame = {
     // the greedy selection collects the pairs frame
     // (numQueries·poolSize² rows) to the driver — knob-bounded at the
     // defaults (12,250 rows) but QUADRATIC in poolSize, so non-default
     // knobs must fail loudly instead of OOMing the driver (round-18
     // advice). 10M rows ≈ 320 MB of (long,long,long,long) tuples —
     // far under driver heap, far over any sensible MMR pool.
-    require(numQueries.toLong * poolSize * poolSize <= 10000000L,
-      s"mmrTopK collects numQueries*poolSize^2 pair rows driver-side; " +
-        s"${numQueries.toLong * poolSize * poolSize} exceeds the 10M bound")
-    val lam = lamTenths.toLong
-    val pool = annBrute(spark, sfDir, numQueries, poolSize)
+    val lam = mmrLamTenths.toLong
+    val pool = annBrute(spark, sfDir, mmrNumQueries, mmrPoolSize)
       .select(col("q_id"), col("vec_id"),
         expr("CAST(floor(1000000.0 * cosine) AS BIGINT)").as("simq"))
       .localCheckpoint(true) // read by the pair builder + the collect
@@ -1483,7 +1460,7 @@ object Similarity {
     val out = Seq.newBuilder[(Long, Long, Long, Long, Long, Long)]
     poolRows.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (qId, cands) =>
       var selected = Vector.empty[Long]
-      for (t <- 1 to math.min(k, cands.length)) {
+      for (t <- 1 to math.min(mmrK, cands.length)) {
         val remaining = cands.filterNot(c => selected.contains(c._2))
         // penalty = max over selected of sim(cand -> sel); the
         // DataFrame form's inner join drops t>=2 candidates with no
@@ -1542,7 +1519,6 @@ object Similarity {
     */
   def matryoshkaRecall(
       spark: SparkSession, sfDir: String,
-      numQueries: Int = mrlQueries, k: Int = mrlK,
       dims: Seq[Int] = mrlDims): DataFrame = {
     require(dims.nonEmpty && dims == dims.sorted, "ascending dim grid")
     val emb = Tables.load(spark, sfDir, "embeddings")
@@ -1551,7 +1527,7 @@ object Similarity {
       def trunc(c: Column) = d.map(dd => slice(c, 1, dd)).getOrElse(c)
       val corpus = emb.select(col("vec_id"),
         Vectors.l2normalize(trunc(col("embedding"))).as("u"))
-      val q = emb.orderBy(col("vec_id")).limit(numQueries)
+      val q = emb.orderBy(col("vec_id")).limit(mrlQueries)
         .select(col("vec_id").as("q_id"),
           Vectors.l2normalize(trunc(col("embedding"))).as("qv"))
       corpus.join(broadcast(q), col("vec_id") =!= col("q_id"))
@@ -1561,7 +1537,7 @@ object Similarity {
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("q_id"))
             .orderBy(col("sim_micro").desc, col("vec_id").asc)))
-        .where(col("rk") <= k)
+        .where(col("rk") <= mrlK)
     }
     val truth = topkAt(None)
       .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
@@ -1574,7 +1550,7 @@ object Similarity {
       .groupBy(col("dim"))
       .agg(count(lit(1)).cast("long").as("n_ranked"),
         sum(coalesce(col("hit"), lit(0L))).cast("long").as("n_hits"))
-      .withColumn("k", lit(k.toLong))
+      .withColumn("k", lit(mrlK.toLong))
       .withColumn("recall_ppm", expr("n_hits * 1000000 DIV n_ranked"))
   }
 
@@ -1608,14 +1584,10 @@ object Similarity {
     * is row-local HOF arithmetic over the bounded (d'×d) sign grid
     * — no exchange beyond the pair join.
     */
-  def jlDistortionAudit(
-      spark: SparkSession, sfDir: String,
-      outDim: Int = jlOutDim, numQueries: Int = jlQueries,
-      k: Int = jlK): DataFrame = {
-    require(outDim >= 1, "need at least one projected dimension")
+  def jlDistortionAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val pairs = annBrute(spark, sfDir, numQueries, k)
+    val pairs = annBrute(spark, sfDir, jlQueries, jlK)
       .select(col("q_id"), col("vec_id"))
       .join(emb.select(col("vec_id").as("q_id"), col("embedding").as("ea")),
         Seq("q_id"))
@@ -1631,13 +1603,13 @@ object Similarity {
       .withColumn("orig_sq", expr(
         "aggregate(d, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)"))
       .withColumn("proj_sq", expr(
-        s"""aggregate(transform(sequence(0, ${outDim - 1}),
+        s"""aggregate(transform(sequence(0, ${jlOutDim - 1}),
               j -> aggregate(sequence(1, size(d)), CAST(0.0 AS DOUBLE),
                 (acc, i) -> acc + ($sign) * element_at(d, i))),
             CAST(0.0 AS DOUBLE), (acc, p) -> acc + p * p)"""))
       .select(col("q_id"), col("vec_id"),
         expr(s"""CASE WHEN orig_sq = 0.0 THEN CAST(1000000 AS BIGINT)
-             ELSE CAST(floor(1000000.0 * (proj_sq / $outDim) / orig_sq)
+             ELSE CAST(floor(1000000.0 * (proj_sq / $jlOutDim) / orig_sq)
                AS BIGINT) END""").as("distortion_ppm"))
   }
 

@@ -104,10 +104,8 @@ object Sketches {
     * that the build side is SCANNED THREE TIMES, which at 100 TB is
     * the dominant cost of the whole operator.
     */
-  def bloomSemiJoin(
-      spark: SparkSession, sfDir: String,
-      priceFloor: Double = 300000.0): DataFrame = {
-    val (joined, keys) = bloomSemiJoinPlanned(spark, sfDir, priceFloor)
+  def bloomSemiJoin(spark: SparkSession, sfDir: String): DataFrame = {
+    val (joined, keys) = bloomSemiJoinPlanned(spark, sfDir, 300000.0)
     try joined.localCheckpoint(true)
     finally keys.unpersist()
   }
@@ -335,7 +333,7 @@ object Sketches {
     * exposed so SketchesSpec can assert the WindowGroupLimit pushdown
     * on the live plan (localCheckpoint truncates it).
     */
-  private[graft] def kmvSketchFrame(tu: DataFrame, k: Int = KmvK): DataFrame = {
+  private[graft] def kmvSketchFrame(tu: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val h = conv(substring(md5(concat(lit("kmv:"),
       col("user_id").cast("string"))), 1, 15), 16, 10).cast("long")
@@ -343,17 +341,17 @@ object Sketches {
     val hashes = tu.select(col("event_type"), h.as("h")).distinct()
     val rk = row_number().over(
       Window.partitionBy(col("event_type")).orderBy(col("h").asc))
-    hashes.withColumn("rk", rk).where(col("rk") <= k)
+    hashes.withColumn("rk", rk).where(col("rk") <= KmvK)
   }
 
   /** The operator over any `(event_type, user_id)` frame. */
-  def kmvSketchOn(tu: DataFrame, k: Int = KmvK): DataFrame = {
+  def kmvSketchOn(tu: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val h = conv(substring(md5(concat(lit("kmv:"),
       col("user_id").cast("string"))), 1, 15), 16, 10).cast("long")
     // distinct hashes per type — the sketch's input universe
     val hashes = tu.select(col("event_type"), h.as("h")).distinct()
-    val sketch = kmvSketchFrame(tu, k)
+    val sketch = kmvSketchFrame(tu)
       .localCheckpoint(true) // reused thrice below; the frame is ≤ k·|types| rows
     // ALL = merge of the per-type sketches: k smallest of the union
     // of sketch hashes (hash values may repeat across types — the
@@ -362,7 +360,7 @@ object Sketches {
       Window.partitionBy(col("event_type")).orderBy(col("h").asc))
     val merged = sketch.select(lit("ALL").as("event_type"), col("h"))
       .distinct()
-      .withColumn("rk", allRk).where(col("rk") <= k)
+      .withColumn("rk", allRk).where(col("rk") <= KmvK)
     val exact = hashes.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_exact"))
       .unionByName(hashes.select(col("h")).distinct()
@@ -371,14 +369,14 @@ object Sketches {
     val est = sketch.unionByName(merged)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_in_sketch"),
-        max(when(col("rk") === k, col("h"))).as("kth"))
+        max(when(col("rk") === KmvK, col("h"))).as("kth"))
     est.join(exact, "event_type")
       .select(col("event_type"), col("n_exact"),
         col("n_in_sketch"),
         coalesce(col("kth"), lit(-1L)).as("kth_hash"),
-        when(col("n_in_sketch") < k, col("n_exact"))
+        when(col("n_in_sketch") < KmvK, col("n_exact"))
           .otherwise(expr(
-            s"CAST((CAST(${k - 1} AS DECIMAL(38,0)) * ${1L << 60}) " +
+            s"CAST((CAST(${KmvK - 1} AS DECIMAL(38,0)) * ${1L << 60}) " +
               "DIV kth AS BIGINT)"))
           .as("est_distinct"))
   }
@@ -508,7 +506,7 @@ object Sketches {
     * ever shuffling the full key domain:
     *
     *   pass 1: a [[MisraGriesAgg]] global aggregate — per-partition
-    *     state and the exchange payload are both bounded by `cap`
+    *     state and the exchange payload are both bounded by the 1300-entry cap
     *     entries (vs the full distinct-key domain an exact groupBy
     *     ships; at 10^9 keys that bound is the whole point), and the
     *     MG theorem makes the surviving keys a SUPERSET of every true
@@ -523,21 +521,18 @@ object Sketches {
     * query); the sketch only bounds memory. cap == k == 1300 on the
     * 2000-distinct-key fixture so the trim path genuinely runs.
     */
-  def heavyHittersExact(
-      spark: SparkSession, sfDir: String,
-      cap: Int = 1300, k: Int = 1300): DataFrame = {
+  def heavyHittersExact(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    require(cap >= k, "MG guarantee needs cap >= k")
     val keys = Tables.load(spark, sfDir, "lineitem")
       .select(col("l_partkey")).as[Long]
-    val mg = keys.select(new MisraGriesAgg(cap).toColumn).head()
+    val mg = keys.select(new MisraGriesAgg(1300).toColumn).head()
     val cands: Seq[Long] = mg.counts.keys.toSeq
     val n = mg.n
     keys.toDF("key")
       .filter(col("key").isInCollection(cands))
       .groupBy(col("key"))
       .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") * k > lit(n))
+      .filter(col("cnt") * 1300 > lit(n))
       .select(col("key").as("l_partkey"), col("cnt").cast("long").as("cnt"),
         lit(n).as("n_total"),
         expr(s"CAST(cnt * 1000000 DIV $n AS BIGINT)").as("freq_micro"))

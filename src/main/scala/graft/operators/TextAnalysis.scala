@@ -245,6 +245,9 @@ object TextAnalysis {
         md5(normalizedText(col("text"))).as("fp"),
         substring(md5(normalizedText(col("text"))), 1, 8).as("fp_short"))
 
+  private val bm25K1 = 1.2
+  private val bm25B = 0.75
+
   /** BM25 ranked retrieval (q114): score every document against a
     * bounded query-term set — the search/relevance step a curation
     * pipeline runs to pull topical subsets out of a corpus. Because
@@ -263,11 +266,8 @@ object TextAnalysis {
     * ratio instead; BM25's saturation + length normalization is the
     * semantics users actually ask for in retrieval.)
     */
-  def bm25Search(
-      spark: SparkSession, sfDir: String,
-      terms: Seq[String] = Seq("spark", "query", "merge", "vector"),
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val termArr = array(terms.map(lit): _*)
+  def bm25Search(spark: SparkSession, sfDir: String): DataFrame = {
+    val termArr = array(Seq("spark", "query", "merge", "vector").map(lit): _*)
     val perDoc = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         normWords(col("text")).as("tks"))
@@ -288,9 +288,9 @@ object TextAnalysis {
         log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) /
           (col("df") + lit(0.5))))
       .select(col("term"), col("doc_id"), col("tf"), col("df"), col("dl"),
-        floor(lit(1e6) * (col("idf") * (col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) *
-            (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))))
+        floor(lit(1e6) * (col("idf") * (col("tf") * lit(bm25K1 + 1)) /
+          (col("tf") + lit(bm25K1) *
+            (lit(1 - bm25B) + lit(bm25B) * col("dl") / col("avgdl")))))
           .cast("long").as("score_micro"))
   }
 
@@ -318,10 +318,7 @@ object TextAnalysis {
   val championM: Int = 20
   val championK: Int = 10
 
-  def championListEval(
-      spark: SparkSession, sfDir: String,
-      m: Int = championM, k: Int = championK): DataFrame = {
-    require(m >= k && k >= 1, "champion list must cover the serving k")
+  def championListEval(spark: SparkSession, sfDir: String): DataFrame = {
     val hits = bm25Search(spark, sfDir).localCheckpoint(true)
     val wScore = Window.partitionBy(col("term"))
       .orderBy(col("score_micro").desc, col("doc_id").asc)
@@ -329,13 +326,13 @@ object TextAnalysis {
       .orderBy(col("tf").desc, col("doc_id").asc)
     val full = hits
       .withColumn("rk", row_number().over(wScore))
-      .where(col("rk") <= k)
+      .where(col("rk") <= championK)
       .select(col("term"), col("doc_id"))
     val pruned = hits
       .withColumn("crk", row_number().over(wTf))
-      .where(col("crk") <= m)
+      .where(col("crk") <= championM)
       .withColumn("prk", row_number().over(wScore))
-      .where(col("prk") <= k)
+      .where(col("prk") <= championK)
       .select(col("term"), col("doc_id"), lit(1L).as("in_pruned"))
     val dfreq = hits.groupBy(col("term"))
       .agg(max(col("df")).cast("long").as("postings_full"))
@@ -346,7 +343,7 @@ object TextAnalysis {
           .as("n_overlap"))
       .join(dfreq, Seq("term"))
       .withColumn("postings_scanned",
-        least(col("postings_full"), lit(m.toLong)))
+        least(col("postings_full"), lit(championM.toLong)))
       .withColumn("recall_ppm", expr("n_overlap * 1000000 DIV n_full"))
       .withColumn("scan_savings_ppm",
         expr("(postings_full - postings_scanned) * 1000000 " +
@@ -369,8 +366,7 @@ object TextAnalysis {
     * the corpus), then one running sum over the same window
     * partitioning. The doc-token join is doc-grain.
     */
-  def ragContext(spark: SparkSession, sfDir: String,
-      budget: Long = 256, candK: Int = 100): DataFrame = {
+  def ragContext(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("term"))
       .orderBy(col("score_micro").desc, col("doc_id").asc)
     bm25Search(spark, sfDir)
@@ -379,10 +375,10 @@ object TextAnalysis {
         .select(col("doc_id"), bpeTokenCount(col("text")).as("ntok")),
         "doc_id")
       .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= candK)
+      .filter(col("rk") <= 100)
       .withColumn("cum", sum(col("ntok"))
         .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .filter(col("cum") <= budget)
+      .filter(col("cum") <= 256L)
       .groupBy(col("term"))
       .agg(count(lit(1)).cast("long").as("n_ctx_docs"),
         max(col("cum")).cast("long").as("ctx_tokens"),
@@ -406,13 +402,12 @@ object TextAnalysis {
     * instead of the corpus — the entire point of the funnel; both
     * rank windows partition by term over <= k candidate rows.
     */
-  def twoStageRerank(
-      spark: SparkSession, sfDir: String, k: Int = 10): DataFrame = {
+  def twoStageRerank(spark: SparkSession, sfDir: String): DataFrame = {
     val w1 = Window.partitionBy(col("term"))
       .orderBy(col("score_micro").desc, col("doc_id").asc)
     val stage1 = bm25Search(spark, sfDir)
       .withColumn("rank1", row_number().over(w1).cast("long"))
-      .where(col("rank1") <= k)
+      .where(col("rank1") <= 10)
     val w2 = Window.partitionBy(col("term"))
       .orderBy(col("xenc_score").desc, col("doc_id").asc)
     stage1
@@ -453,11 +448,9 @@ object TextAnalysis {
     * Oracle: the identical walk as a RECURSIVE CTE (the q209
     * discipline), one chain per dictionary word.
     */
-  def greedyEncode(
-      spark: SparkSession, sfDir: String,
-      vocabSize: Int = 150, topK: Int = 20): DataFrame = {
+  def greedyEncode(spark: SparkSession, sfDir: String): DataFrame = {
     val (_, encoded) = greedyEncodedWords(
-      Tables.load(spark, sfDir, "documents"), vocabSize)
+      Tables.load(spark, sfDir, "documents"), 150)
     val counts = encoded
       .select(col("cnt"), explode(col("pieces")).as("piece"))
       .groupBy(col("piece")).agg(sum(col("cnt")).as("n_uses"))
@@ -465,7 +458,7 @@ object TextAnalysis {
     counts.crossJoin(broadcast(tot))
       .withColumn("rank", row_number().over(
         Window.orderBy(col("n_uses").desc, col("piece").asc)).cast("long"))
-      .where(col("rank") <= topK)
+      .where(col("rank") <= 20)
       .select(col("rank"), col("piece"),
         length(col("piece")).cast("long").as("piece_len"),
         col("n_uses"),
@@ -519,6 +512,10 @@ object TextAnalysis {
     (vocab, encoded)
   }
 
+  private[graft] val ulmRounds = 2
+  private[graft] val ulmMultiK = 48
+  private[graft] val ulmMaxPiece = 4
+
   /** The q284 driver entry: UNIGRAM-LM (SentencePiece-family)
     * TOKENIZER TRAINER — the third tokenizer family, completing the
     * set: BPE grows a vocabulary bottom-up by merging (q155/q164),
@@ -553,14 +550,13 @@ object TextAnalysis {
     * collects driver-side under the bounded-domain rule and ships
     * back as a map literal — no joins inside the DP at all.
     */
-  def ulmTrain(spark: SparkSession, sfDir: String,
-      rounds: Int = 2, multiK: Int = 48, maxPiece: Int = 4): DataFrame = {
+  def ulmTrain(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // the TRAINER entry always trains — the memo belongs to the
     // artifact CONSUMERS (q285's lifecycle), never to the entry that
     // documents training cost (the q155-vs-q157 rule; a memoized
     // trainer would bench its own cache hit)
-    ulmTrainCompute(spark, sfDir, rounds, multiK, maxPiece)
+    ulmTrainCompute(spark, sfDir)
       .toDF("piece", "n_uses", "cost_micro")
   }
 
@@ -574,41 +570,36 @@ object TextAnalysis {
       .groupBy(col("w")).agg(count(lit(1)).cast("long").as("c"))
 
   /** Trained ULM vocabulary (piece, count, micro-nat cost) — the
-    * hard-EM loop of [[ulmTrain]], memoized per (path + data
-    * fingerprint, params) like [[trainedMerges]]: deterministic, so
+    * hard-EM loop of [[ulmTrain]], memoized per path + data
+    * fingerprint like [[trainedMerges]]: deterministic, so
     * a cache hit is result-identical, and every consumer of the
     * tokenizer artifact (q284 table, q285 encode lifecycle) shares
     * one training run per dataset.
     */
-  private[graft] def ulmTrainedVocab(
-      spark: SparkSession, sfDir: String,
-      rounds: Int = 2, multiK: Int = 48, maxPiece: Int = 4)
+  private[graft] def ulmTrainedVocab(spark: SparkSession, sfDir: String)
       : Seq[(String, Long, Long)] =
     ulmVocabMemo.getOrElseUpdate(
-      (sfDir + "@" + Tables.fingerprint(sfDir, "documents"),
-        rounds, multiK, maxPiece),
-      ulmTrainCompute(spark, sfDir, rounds, multiK, maxPiece))
+      sfDir + "@" + Tables.fingerprint(sfDir, "documents"),
+      ulmTrainCompute(spark, sfDir))
 
-  private def ulmTrainCompute(
-      spark: SparkSession, sfDir: String,
-      rounds: Int, multiK: Int, maxPiece: Int)
+  private def ulmTrainCompute(spark: SparkSession, sfDir: String)
       : Seq[(String, Long, Long)] = {
       val words = ulmWords(spark, sfDir)
         .localCheckpoint(true) // feeds the seed AND every E-step
-      // seed: every <=maxPiece substring of every dictionary word,
+      // seed: every <=ulmMaxPiece substring of every dictionary word,
       // weighted by word count; chars always kept (encoding closure),
       // multi-char pieces tie-pinned top-K
       val sub = words
         .select(col("c"), explode(expr(
           s"""flatten(transform(sequence(1, length(w)), i ->
-                transform(sequence(1, least($maxPiece, length(w) - i + 1)),
+                transform(sequence(1, least($ulmMaxPiece, length(w) - i + 1)),
                   k -> substring(w, i, k))))""")).as("piece"))
         .groupBy(col("piece")).agg(sum(col("c")).cast("long").as("cnt"))
       val seed = sub.filter(length(col("piece")) === 1)
         .unionByName(sub.filter(length(col("piece")) >= 2)
           .withColumn("rk", row_number().over(
             Window.orderBy(col("cnt").desc, col("piece").asc)))
-          .filter(col("rk") <= multiK).drop("rk"))
+          .filter(col("rk") <= ulmMultiK).drop("rk"))
         .collect().map(r => (r.getString(0), r.getLong(1)))
         .toSeq.sortBy(_._1)
       // micro-nat costs: the same IEEE chain the oracle runs —
@@ -622,10 +613,10 @@ object TextAnalysis {
       }
       var counts = seed
       var costs = withCosts(counts)
-      for (_ <- 1 to rounds) {
+      for (_ <- 1 to ulmRounds) {
         val usage = words
           .select(col("w"), col("c"), typedlit(costs).as("vm"))
-          .select(col("c"), expr(ulmViterbiExpr(maxPiece)).as("path"))
+          .select(col("c"), expr(ulmViterbiExpr(ulmMaxPiece)).as("path"))
           .select(col("c"), explode(split(col("path"), " ")).as("piece"))
           .groupBy(col("piece")).agg(sum(col("c")).cast("long").as("u"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -643,7 +634,7 @@ object TextAnalysis {
   }
 
   private val ulmVocabMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Int, Int), Seq[(String, Long, Long)]]
+    .empty[String, Seq[(String, Long, Long)]]
 
   /** The q285 driver entry: ULM ENCODE LIFECYCLE — the serving half
     * of q284 as the artifact lifecycle (train → parquet vocab →
@@ -662,11 +653,10 @@ object TextAnalysis {
     * broadcast join + doc aggregate. The artifact write/read-back
     * stays in the timed path (the lifecycle IS the entry).
     */
-  def ulmEncode(spark: SparkSession, sfDir: String,
-      rounds: Int = 2, multiK: Int = 48, maxPiece: Int = 4): DataFrame =
+  def ulmEncode(spark: SparkSession, sfDir: String): DataFrame =
     Scratch.withScratch(spark, "q285_ulm_vocab", sfDir) { dir =>
       import spark.implicits._
-      ulmTrainedVocab(spark, sfDir, rounds, multiK, maxPiece)
+      ulmTrainedVocab(spark, sfDir)
         .toDF("piece", "n_uses", "cost_micro")
         .write.mode("overwrite").parquet(s"$dir/vocab")
       val vm = spark.read.parquet(s"$dir/vocab")
@@ -675,7 +665,7 @@ object TextAnalysis {
       val encoded = ulmWords(spark, sfDir)
         .select(col("w"), typedlit(vm).as("vm"))
         .select(col("w"),
-          expr(ulmViterbiExpr(maxPiece, "bn")).as("n_pieces"))
+          expr(ulmViterbiExpr(ulmMaxPiece, "bn")).as("n_pieces"))
       Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"),
           explode(normWords(col("text"))).as("w"))
@@ -717,6 +707,8 @@ object TextAnalysis {
        length(w) + 1).$field"""
   }
 
+  private val rrfK = 60
+
   /** The q252 driver entry: RECIPROCAL RANK FUSION — the standard
     * zero-training ensemble for combining heterogeneous retrieval
     * lists (Cormack et al. 2009 shape): each system contributes
@@ -737,9 +729,7 @@ object TextAnalysis {
     * the BM25 stage itself keeps the q114 posture (terms broadcast,
     * only hit rows shuffle).
     */
-  def rrfFusion(
-      spark: SparkSession, sfDir: String,
-      kConst: Int = 60, topK: Int = 10): DataFrame = {
+  def rrfFusion(spark: SparkSession, sfDir: String): DataFrame = {
     val lex = bm25Search(spark, sfDir)
       .groupBy(col("doc_id"))
       .agg(sum(col("score_micro")).as("lex_total"))
@@ -767,15 +757,15 @@ object TextAnalysis {
       order = Seq(col("quality_micro").desc, col("doc_id").asc),
       out = "rank_q")
       .withColumn("rrf_scaled",
-        expr(s"1000000000000 DIV ($kConst + rank_lex) + " +
-          s"1000000000000 DIV ($kConst + rank_q)"))
+        expr(s"1000000000000 DIV ($rrfK + rank_lex) + " +
+          s"1000000000000 DIV ($rrfK + rank_q)"))
     // the FUSED rank only survives to topK rows, so the right plan at
     // any scale is distributed top-k (TakeOrderedAndProject: per-
     // partition heads + one merge — no global sort, no chunked
     // machinery) and a rank window over the BOUNDED topK survivors
     // (the bounded-domain exception; <= 10 rows)
     fused.orderBy(col("rrf_scaled").desc, col("doc_id").asc)
-      .limit(topK)
+      .limit(10)
       .withColumn("rank_fused", row_number().over(
         Window.orderBy(col("rrf_scaled").desc, col("doc_id").asc))
         .cast("long"))
@@ -827,7 +817,7 @@ object TextAnalysis {
     * one window per doc — no all-pairs anything; the corpus-size
     * scalar rides a broadcast, not a driver collect into the plan.
     */
-  def tfidfTerms(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
+  def tfidfTerms(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
     val toks = docs.select(col("doc_id"),
       explode(normWords(col("text"))).as("tok"))
@@ -848,7 +838,7 @@ object TextAnalysis {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("score").desc, col("tok").asc)
       scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= k)
+        .filter(col("rk") <= 3)
         .select(col("doc_id"), col("tok"), col("tf"), col("df"),
           col("score"), col("rk"))
         .localCheckpoint(true)
@@ -863,12 +853,12 @@ object TextAnalysis {
     * (doc, gram) for the distinct count. Docs shorter than 5 words
     * carry no grams and drop out, same as the shingling operators.
     */
-  def repetitionStats(spark: SparkSession, sfDir: String, n: Int = 5): DataFrame =
+  def repetitionStats(spark: SparkSession, sfDir: String): DataFrame =
     // 8-byte xxhash64 grams ride the (doc, gram) shuffle instead of
     // ~25-byte strings — the q21/q22 precedent (hashed shingles under
     // the string-shingle oracle; collisions don't happen at per-doc
     // set sizes)
-    Dedup.shingleHashes(Tables.load(spark, sfDir, "documents"), n)
+    Dedup.shingleHashes(Tables.load(spark, sfDir, "documents"), 5)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         count_distinct(col("sh")).as("n_distinct"))
@@ -1065,6 +1055,12 @@ object TextAnalysis {
       .orderBy(col("n").desc, col("pair").asc)
       .limit(k)
 
+  /** Merge rounds of the deployment's BPE tokenizer: q155 trains it,
+    * q157 encodes with it and q238 audits it; their oracles read the
+    * same value.
+    */
+  private[graft] val bpeRounds = 20
+
   /** Full BPE tokenizer induction (q155): iterate q135's pair-count
     * round to an actual merge TABLE — count adjacent symbol pairs,
     * take the (count desc, left asc, right asc) argmax, merge every
@@ -1102,7 +1098,7 @@ object TextAnalysis {
     * (SparkEntry.bpeTrainOracleSql).
     */
   def bpeTrain(
-      spark: SparkSession, sfDir: String, rounds: Int = 20): DataFrame =
+      spark: SparkSession, sfDir: String, rounds: Int = bpeRounds): DataFrame =
     bpeTrainOn(spark,
       Tables.load(spark, sfDir, "documents").select(col("text")), rounds)
 
@@ -1467,7 +1463,6 @@ object TextAnalysis {
     if (out.isEmpty) Seq(ranked.head) else out
   }
 
-
   /** The ORIGINAL full-recount merge loop — every round scans the
     * whole corpus into a pair aggregate. Kept as the differential
     * twin: this is the form the generated DuckDB CTE oracle replays,
@@ -1524,6 +1519,9 @@ object TextAnalysis {
     merges.result()
   }
 
+  private[graft] val bpeBytesVocabTarget = 33
+  private[graft] val bpeBytesMaxRounds = 12
+
   /** The q164 driver entry: BYTE-LEVEL BPE trainer with a vocab-size
     * stop — the production-tokenizer variant of q155. Two deltas from
     * the codepoint trainer, both straight from Sennrich-descendant
@@ -1532,9 +1530,9 @@ object TextAnalysis {
     * ever be out-of-vocabulary — a codepoint trainer meeting an
     * unseen char at encode time has no symbol for it, a byte trainer
     * never can; (2) training stops when the vocabulary (base bytes
-    * observed + one new symbol per merge) reaches `vocabTarget`, the
+    * observed + one new symbol per merge) reaches `bpeBytesVocabTarget`, the
     * way real tokenizers are sized, rather than after a fixed merge
-    * count (`maxRounds` stays as a hard ceiling so an oversized
+    * count (`bpeBytesMaxRounds` stays as a hard ceiling so an oversized
     * target cannot loop unbounded).
     *
     * Byte symbols render as UPPERCASE HEX PAIRS ("41", "C3"):
@@ -1556,12 +1554,10 @@ object TextAnalysis {
     * count, so per-round cost tracks corpus bytes — the same
     * asymptote as codepoints.
     */
-  def bpeTrainBytes(
-      spark: SparkSession, sfDir: String,
-      vocabTarget: Int = 33, maxRounds: Int = 12): DataFrame =
+  def bpeTrainBytes(spark: SparkSession, sfDir: String): DataFrame =
     bpeTrainBytesOn(spark,
       Tables.load(spark, sfDir, "documents").select(col("text")),
-      vocabTarget, maxRounds)
+      bpeBytesVocabTarget, bpeBytesMaxRounds)
 
   /** The q164 loop input — symbolized byte streams, dictionary-
     * collapsed (weightStreams) and checkpoint-pinned across all
@@ -1602,6 +1598,9 @@ object TextAnalysis {
       .withColumn("vocab_size", lit(v0) + col("merge_round"))
   }
 
+  private[graft] val bpeExtendBaseRounds = 10
+  private[graft] val bpeExtendExtraRounds = 5
+
   /** The q173 driver entry: INCREMENTAL BPE VOCAB EXTENSION — the
     * tokenizer analogue of q46 (persisted dedup signatures) and q161
     * (frozen PQ books): when the corpus grows, you do NOT retrain the
@@ -1629,7 +1628,8 @@ object TextAnalysis {
     */
   def bpeExtend(
       spark: SparkSession, sfDir: String,
-      baseRounds: Int = 10, extraRounds: Int = 5): DataFrame =
+      baseRounds: Int = bpeExtendBaseRounds,
+      extraRounds: Int = bpeExtendExtraRounds): DataFrame =
     Scratch.withScratch(spark, "q173_bpe_ext", sfDir) { dir =>
       val SEP = "\u0001"
       val docs = Tables.load(spark, sfDir, "documents")
@@ -1721,9 +1721,11 @@ object TextAnalysis {
         .collect().toSeq.map(r => (r.getInt(0), r.getString(1),
           r.getString(2), r.getString(3), r.getLong(4))))
 
+  private[graft] val bpeEncodeHeadN = 8
+
   def bpeEncode(
       spark: SparkSession, sfDir: String,
-      rounds: Int = 20, headN: Int = 8): DataFrame =
+      rounds: Int = bpeRounds): DataFrame =
     Scratch.withScratch(spark, "q157_bpe_merges", sfDir) { dir =>
       import spark.implicits._
       trainedMerges(spark, sfDir, rounds)
@@ -1736,7 +1738,7 @@ object TextAnalysis {
         .map(r => (r.getString(0), r.getString(1)))
       bpeEncodeWith(spark,
         Tables.load(spark, sfDir, "documents")
-          .select(col("doc_id"), col("text")), merges, headN)
+          .select(col("doc_id"), col("text")), merges, bpeEncodeHeadN)
     }
 
   /** Encode `docs(doc_id, text)` with an already-trained merge list
@@ -1776,9 +1778,8 @@ object TextAnalysis {
     * to the language column is doc-grain on doc_id; one language-
     * domain aggregate ends the plan.
     */
-  def tokenizerFertility(
-      spark: SparkSession, sfDir: String, rounds: Int = 20): DataFrame = {
-    val merges = trainedMerges(spark, sfDir, rounds)
+  def tokenizerFertility(spark: SparkSession, sfDir: String): DataFrame = {
+    val merges = trainedMerges(spark, sfDir, bpeRounds)
       .map { case (_, l, r, _, _) => (l, r) }
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("lang"),
@@ -1816,8 +1817,7 @@ object TextAnalysis {
     * grain and before any join, and a 100 TB build shards this by
     * token range into the standard segmented index files.
     */
-  def invertedIndex(
-      spark: SparkSession, sfDir: String, cap: Int = 50): DataFrame =
+  def invertedIndex(spark: SparkSession, sfDir: String): DataFrame =
     Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         explode(normWords(col("text"))).as("tok"))
@@ -1825,7 +1825,7 @@ object TextAnalysis {
       .groupBy(col("tok"))
       .agg(count(lit(1)).as("df"),
         array_join(slice(array_sort(collect_list(col("doc_id"))),
-          1, cap), ",").as("postings"))
+          1, 50), ",").as("postings"))
 
   /** The q141 driver entry: character-bigram LM perplexity scoring —
     * the CCNet/RefinedWeb quality-filter shape: train an n-gram
@@ -2031,15 +2031,14 @@ object TextAnalysis {
     * global single-partition sort — and the rank window then runs
     * over R rows. The regression aggregate is one tiny reduce.
     */
-  def zipfAudit(
-      spark: SparkSession, sfDir: String, topR: Int = 100): DataFrame = {
+  def zipfAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val counts = Tables.load(spark, sfDir, "documents")
       .select(explode(normWords(col("text"))).as("tok"))
       .where(col("tok") =!= "")
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val w = Window.orderBy(col("c").desc, col("tok").asc)
     val ranked = counts
-      .orderBy(col("c").desc, col("tok").asc).limit(topR)
+      .orderBy(col("c").desc, col("tok").asc).limit(100)
       .withColumn("r", row_number().over(w))
       .select(
         floor(lit(1000000.0) * log(col("r").cast("double")))
@@ -2098,11 +2097,9 @@ object TextAnalysis {
     * ln c(b) with one floor around the assembled double — same
     * output contract, no exact-product intermediate.
     */
-  def pmiCollocations(
-      spark: SparkSession, sfDir: String,
-      minCount: Int = 5, topK: Int = 50): DataFrame =
+  def pmiCollocations(spark: SparkSession, sfDir: String): DataFrame =
     pmiCollocationsOn(
-      Tables.load(spark, sfDir, "documents"), minCount, topK)
+      Tables.load(spark, sfDir, "documents"), 5, 50)
 
   def pmiCollocationsOn(
       docs: DataFrame, minCount: Int, topK: Int): DataFrame = {
@@ -2297,11 +2294,10 @@ object TextAnalysis {
     * Scale shape: one (batch, token) pass, map-side combined; the
     * min-aggregate is gram-domain-bounded; the running sums window
     * over the BATCH domain only (ingest cadence — daily batches at
-    * production scale, `batchSize` docs here), never over docs.
+    * production scale, 50 docs here), never over docs.
     */
-  def heapsAudit(
-      spark: SparkSession, sfDir: String, batchSize: Int = 50): DataFrame =
-    heapsOn(Tables.load(spark, sfDir, "documents"), batchSize)
+  def heapsAudit(spark: SparkSession, sfDir: String): DataFrame =
+    heapsOn(Tables.load(spark, sfDir, "documents"), 50)
 
   def heapsOn(docs: DataFrame, batchSize: Int): DataFrame = {
     val toks = docs
@@ -2447,6 +2443,8 @@ object TextAnalysis {
         (col("tercile") < 2).as("keep"))
   }
 
+  private[graft] val mixtureReweightRounds = 10
+
   /** The q215 driver entry: MULTIPLICATIVE-WEIGHTS DOMAIN REWEIGHTING
     * — the DoReMi-shaped mixture optimizer: domains (the lang column)
     * whose documents score HIGH under the reference LM (hard domains)
@@ -2466,8 +2464,7 @@ object TextAnalysis {
     * bounded-state precedent) and the oracle replays it as generated
     * CTEs over the same 5-row table.
     */
-  def mixtureReweight(
-      spark: SparkSession, sfDir: String, rounds: Int = 10): DataFrame = {
+  def mixtureReweight(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val dom = perplexityScore(spark, sfDir)
       .select(col("lang"), expr("(-ll_micro) DIV n_bigrams").as("s"))
@@ -2484,7 +2481,7 @@ object TextAnalysis {
       return Seq.empty[(String, Long, Long, Long)]
         .toDF("lang", "n_docs", "loss_micro", "w_micro")
     var w = dom.map(_ => 1000000L)
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to mixtureReweightRounds) {
       val sw = w.sum
       val avg = w.zip(dom).map { case (wi, d) => wi * d._3 }.sum / sw
       val up = w.zip(dom).map { case (wi, d) =>
@@ -2531,8 +2528,7 @@ object TextAnalysis {
     * per-row filter-size) — zero shuffle beyond the dictionary
     * collapse, the q50/q306 posture.
     */
-  def watermarkDetect(spark: SparkSession, sfDir: String,
-      flagPpm: Long = 900000L): DataFrame = {
+  def watermarkDetect(spark: SparkSession, sfDir: String): DataFrame = {
     val vocab: Seq[String] = Tables.load(spark, sfDir, "documents")
       .select(explode(normWords(col("text"))).as("v"))
       .where(col("v") =!= "")
@@ -2572,7 +2568,7 @@ object TextAnalysis {
     scored.select(col("doc_id"), col("planted"),
         (col("n") - 1L).cast("long").as("n_trans"), col("n_green"),
         expr("n_green * 1000000 DIV (n - 1)").as("green_ppm"))
-      .withColumn("flagged", col("green_ppm") >= flagPpm)
+      .withColumn("flagged", col("green_ppm") >= 900000L)
   }
 
   /** The q311 driver entry: VOCABULARY-GROWTH CURVE (Heaps'-law
@@ -2656,9 +2652,7 @@ object TextAnalysis {
     * with map-side combine. Everything doc-local except that one
     * bounded-width exchange; no dictionary, no joins.
     */
-  def repetitionFilter(
-      spark: SparkSession, sfDir: String,
-      flagPpm: Long = 150000L): DataFrame = {
+  def repetitionFilter(spark: SparkSession, sfDir: String): DataFrame = {
     val planted = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         when(col("doc_id") % 11 === 0,
@@ -2685,8 +2679,10 @@ object TextAnalysis {
         expr("(n_grams - n_distinct) * 1000000 DIV n_grams")
           .as("dup_ppm"),
         col("max_rep"))
-      .withColumn("flagged", col("dup_ppm") > flagPpm)
+      .withColumn("flagged", col("dup_ppm") > 150000L)
   }
+
+  private val prefixBlockChars = 16
 
   /** The q324 driver entry: PREFIX-CACHE AUDIT — the serving-side
     * accounting behind paged-KV prefix caching (vLLM's radix-tree /
@@ -2695,7 +2691,7 @@ object TextAnalysis {
     * RAG boilerplate), the KV blocks of the shared prefix are computed
     * once and reused, and capacity planning needs the HIT RATE BY
     * DEPTH before the cache is built. The corpus stands in for the
-    * request log: per depth d (1..maxDepth blocks of `blockChars`
+    * request log: per depth d (1..8 blocks of `prefixBlockChars`
     * normalized chars), documents group by the md5 of their first
     * d·blockChars chars — only 16-byte digests shuffle, never the
     * prefixes — and a doc is a cache HIT at depth d iff an earlier doc
@@ -2706,22 +2702,20 @@ object TextAnalysis {
     * d·blockChars leaves the audit at depth d — partial-block sharing
     * would claim savings a block-granular cache cannot realize).
     *
-    * Scale shape: one scan exploding ≤ maxDepth rows per doc, one
+    * Scale shape: one scan exploding ≤ 8 rows per doc, one
     * digest-grain map-side-combined count, then a reduce onto the
-    * BOUNDED depth domain (maxDepth rows total). Nothing here is
+    * BOUNDED depth domain (8 rows total). Nothing here is
     * corpus-quadratic and no window exists at all.
     */
-  def prefixCacheAudit(
-      spark: SparkSession, sfDir: String,
-      blockChars: Int = 16, maxDepth: Int = 8): DataFrame = {
+  def prefixCacheAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
       .select(normalizedText(col("text")).as("t"))
     docs
       .select(col("t"),
-        explode(sequence(lit(1), lit(maxDepth))).as("depth"))
-      .where(length(col("t")) >= col("depth") * blockChars)
+        explode(sequence(lit(1), lit(8))).as("depth"))
+      .where(length(col("t")) >= col("depth") * prefixBlockChars)
       .select(col("depth").cast("long").as("depth"),
-        md5(expr(s"substr(t, 1, depth * $blockChars)")).as("pfx"))
+        md5(expr(s"substr(t, 1, depth * $prefixBlockChars)")).as("pfx"))
       .groupBy(col("depth"), col("pfx"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("depth"))
@@ -2752,9 +2746,7 @@ object TextAnalysis {
     * by context — the bounded-domain exception to the global-window
     * rule, documented per the q303/q304 hazard survey.
     */
-  def nucleusAudit(
-      spark: SparkSession, sfDir: String, pNum: Int = 9,
-      pDen: Int = 10): DataFrame = {
+  def nucleusAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val words = Tables.load(spark, sfDir, "documents")
       .select(normWords(col("text")).as("w"))
     val bigrams = words
@@ -2774,7 +2766,7 @@ object TextAnalysis {
       .withColumn("total", sum(col("c")).over(wTot).cast("long"))
       .withColumn("fanout", count(lit(1)).over(wTot).cast("long"))
     ranked
-      .where(col("cum") * pDen >= col("total") * pNum)
+      .where(col("cum") * 10 >= col("total") * 9)
       .groupBy(col("prev"), col("fanout"), col("total"))
       .agg(min(col("rk")).cast("long").as("nucleus_k"),
         min(struct(col("rk"), col("cum"))).getField("cum").cast("long")
@@ -2864,7 +2856,7 @@ object TextAnalysis {
     * MRR@k against contamination twins) — the retrieval-quality
     * counterpart of q329's vector eval, over the LEXICAL index: the
     * corpus's natural cross-split near-duplicates (the q313 device —
-    * eval docs sharing >= `minShared` distinct 5-gram digests with a
+    * eval docs sharing >= 5 distinct 5-gram digests with a
     * train doc; relevant doc = the argmax-overlap train doc under the
     * (shared desc, id asc) total order) become the relevance
     * judgments, each flagged eval doc queries the train corpus with
@@ -2887,10 +2879,7 @@ object TextAnalysis {
     * train docs, the q21 posting discipline); the per-k arms reduce a
     * pinned (query, rank) frame of |queries| rows.
     */
-  def bm25RetrievalEval(
-      spark: SparkSession, sfDir: String,
-      ks: Seq[Int] = Seq(1, 5, 10), minShared: Long = 5L,
-      k1: Double = 1.2, b: Double = 0.75, topK: Int = 10): DataFrame = {
+  def bm25RetrievalEval(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.TrainingPrep.{hashBucket, splitBuckets, trainBuckets}
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
@@ -2913,7 +2902,7 @@ object TextAnalysis {
     val wT = Window.partitionBy(col("q_id"))
       .orderBy(col("shared").desc, col("td").asc)
     val truth = ov.withColumn("rn", row_number().over(wT))
-      .where(col("rn") === 1 && col("shared") >= minShared)
+      .where(col("rn") === 1 && col("shared") >= 5L)
       .select(col("q_id"), col("td").as("rel"))
     val train = docs.where(col("split") === "train")
       .withColumn("dl", size(col("w")).cast("long"))
@@ -2933,23 +2922,23 @@ object TextAnalysis {
       .withColumn("idf", log(lit(1.0) +
         (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
       .select(col("q_id"), col("d_id"),
-        floor(lit(1e6) * (col("idf") * (col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) *
-            (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))))
+        floor(lit(1e6) * (col("idf") * (col("tf") * lit(bm25K1 + 1)) /
+          (col("tf") + lit(bm25K1) *
+            (lit(1 - bm25B) + lit(bm25B) * col("dl") / col("avgdl")))))
           .cast("long").as("c"))
     val wR = Window.partitionBy(col("q_id"))
       .orderBy(col("s").desc, col("d_id").asc)
     val ranked = contrib.groupBy(col("q_id"), col("d_id"))
       .agg(sum(col("c")).cast("long").as("s"))
       .withColumn("rk", row_number().over(wR))
-      .where(col("rk") <= topK)
+      .where(col("rk") <= 10)
     val relRank = truth.as("t")
       .join(ranked.as("r"),
         col("t.q_id") === col("r.q_id") && col("t.rel") === col("r.d_id"),
         "left")
       .select(col("t.q_id"), col("r.rk").cast("long").as("rk"))
       .localCheckpoint(true) // read once per k arm
-    ks.map { k =>
+    Seq(1, 5, 10).map { k =>
       relRank.agg(count(lit(1)).cast("long").as("n_queries"),
         sum(when(col("rk") <= k, 1L).otherwise(0L)).cast("long")
           .as("n_hits"),
@@ -2968,7 +2957,7 @@ object TextAnalysis {
     * modified precision; Lin 2004 ROUGE recall) computed for exactly
     * the pairs a decontamination audit flags: each eval doc's
     * argmax-shared-grams train twin (the q313/q334 pairing, same
-    * 5-gram truth, same `minShared` floor) is scored as the
+    * 5-gram truth, same 5-digest floor) is scored as the
     * REFERENCE against the eval doc as the CANDIDATE. The table
     * answers the question the binary contamination flag can't: is
     * the twin a verbatim copy (p₁≈p₂≈10⁶), a paraphrase (high p₁,
@@ -2990,9 +2979,7 @@ object TextAnalysis {
     * broadcast (it is |flagged evals| · grams — eval-set-bounded,
     * the documented eval-only cost axis). Pair-grain output.
     */
-  def bleuOverlapEval(
-      spark: SparkSession, sfDir: String,
-      minShared: Long = 5L): DataFrame = {
+  def bleuOverlapEval(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.TrainingPrep.{hashBucket, splitBuckets, trainBuckets}
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
@@ -3015,7 +3002,7 @@ object TextAnalysis {
     val wT = Window.partitionBy(col("q_id"))
       .orderBy(col("shared").desc, col("td").asc)
     val truth = ov.withColumn("rn", row_number().over(wT))
-      .where(col("rn") === 1 && col("shared") >= minShared)
+      .where(col("rn") === 1 && col("shared") >= 5L)
       .select(col("q_id"), col("td").as("rel"))
       .localCheckpoint(true) // read by lens + both clip joins
     val lens = docs.select(col("doc_id"), size(col("w")).cast("long")
@@ -3132,16 +3119,14 @@ object TextAnalysis {
     * it lands in a RAG corpus (indirect prompt injection). Counts
     * leftmost-non-overlapping matches of the fixed directive
     * lexicon over lowercased text, exact per-token density in ppm,
-    * and the gate flag at `flagPpm`.
+    * and the gate flag at 5000 ppm.
     *
     * Scale shape: q347's embarrassing-parallel posture — regexp
     * count and token count are row-local; the only exchange is
     * whatever the consumer does with the flag column.
     */
-  def instructionScan(
-      spark: SparkSession, sfDir: String,
-      flagPpm: Long = 5000L): DataFrame =
-    instructionScanOn(Tables.load(spark, sfDir, "documents"), flagPpm)
+  def instructionScan(spark: SparkSession, sfDir: String): DataFrame =
+    instructionScanOn(Tables.load(spark, sfDir, "documents"))
 
   /** The q357 driver entry: SHARED-BOILERPLATE HEAD-GRAMS — the
     * C4-style boilerplate detector at the SOURCE grain: each feed's
@@ -3164,15 +3149,14 @@ object TextAnalysis {
     * (WindowGroupLimit prunes at the exchange), then the share
     * census lives on the bounded sources × k domain.
     */
-  def boilerplateHeadGrams(
-      spark: SparkSession, sfDir: String, k: Int = 10): DataFrame =
-    boilerplateHeadGramsOn(Tables.load(spark, sfDir, "documents"), k)
+  def boilerplateHeadGrams(spark: SparkSession, sfDir: String): DataFrame =
+    boilerplateHeadGramsOn(Tables.load(spark, sfDir, "documents"))
 
   /** The q357 core over any `(source, text)` frame — split out so the
     * spec can plant a cross-source cookie banner and watch it
     * surface through the SAME plan.
     */
-  def boilerplateHeadGramsOn(docs: DataFrame, k: Int = 10): DataFrame = {
+  def boilerplateHeadGramsOn(docs: DataFrame): DataFrame = {
     val counts = docs
       .select(col("source"), normWords(col("text")).as("w"))
       .where(size(col("w")) >= 5)
@@ -3186,7 +3170,7 @@ object TextAnalysis {
       .orderBy(col("c").desc, col("g").asc)
     val heads = counts
       .withColumn("rk", row_number().over(w).cast("long"))
-      .where(col("rk") <= k)
+      .where(col("rk") <= 10)
     heads.groupBy(col("g"))
       .agg(count(lit(1)).cast("long").as("n_sources"),
         sum(col("c")).cast("long").as("n_total"),
@@ -3200,8 +3184,7 @@ object TextAnalysis {
     * the SAME plan (the fixture corpus is organically directive-free,
     * which is itself the expected clean-corpus reading).
     */
-  def instructionScanOn(
-      docs: DataFrame, flagPpm: Long = 5000L): DataFrame =
+  def instructionScanOn(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
         regexp_count(lower(col("text")), lit(directivePattern))
@@ -3210,7 +3193,7 @@ object TextAnalysis {
       .where(col("n_tokens") >= 1L)
       .withColumn("density_ppm",
         expr("n_directives * 1000000 DIV n_tokens"))
-      .withColumn("flagged", col("density_ppm") > flagPpm)
+      .withColumn("flagged", col("density_ppm") > 5000L)
 
   /** The q360 driver entry: WORD-FERTILITY AUDIT — the
     * tokenizer-efficiency report at the MIXTURE-TABLE grain: q238
@@ -3417,16 +3400,12 @@ object TextAnalysis {
     * twice over one scan each; the training loop's bounded driver
     * state is q155's (measured caps); one lang-domain aggregate.
     */
-  def tokenizerMigrationDiff(
-      spark: SparkSession, sfDir: String,
-      v1Rounds: Int = 10, v2Rounds: Int = 20): DataFrame = {
-    require(v2Rounds > v1Rounds && v1Rounds >= 1,
-      "v2 must extend v1's merge table")
-    val merges = trainedMerges(spark, sfDir, v2Rounds)
+  def tokenizerMigrationDiff(spark: SparkSession, sfDir: String): DataFrame = {
+    val merges = trainedMerges(spark, sfDir, 20)
       .map { case (_, l, r, _, _) => (l, r) }
     val docs = Tables.load(spark, sfDir, "documents")
     val e1 = bpeEncodeWith(spark, docs.select(col("doc_id"), col("text")),
-      merges.take(v1Rounds), headN = 1)
+      merges.take(10), headN = 1)
       .select(col("doc_id"), col("n_tokens").as("t1"))
     val e2 = bpeEncodeWith(spark, docs.select(col("doc_id"), col("text")),
       merges, headN = 1)
@@ -3521,9 +3500,8 @@ object TextAnalysis {
     * doc-keyed window for the previous-identified-span lag (per-doc
     * state bounded by doc length), one doc-grain aggregate.
     */
-  def codeSwitchCensus(
-      spark: SparkSession, sfDir: String, spanWords: Int = 10): DataFrame =
-    codeSwitchCensusOn(Tables.load(spark, sfDir, "documents"), spanWords)
+  def codeSwitchCensus(spark: SparkSession, sfDir: String): DataFrame =
+    codeSwitchCensusOn(Tables.load(spark, sfDir, "documents"))
 
   /** The q378 core over any `(doc_id, text)` frame. */
   def codeSwitchCensusOn(docs: DataFrame, spanWords: Int = 10): DataFrame = {

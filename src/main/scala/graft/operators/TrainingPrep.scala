@@ -80,11 +80,8 @@ object TrainingPrep {
     * a per-row hash. At 100 TB the comp frame is the persisted
     * output of the dedup stage, making this a pure map-side join.
     */
-  def leakageFreeSplit(
-      spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame = {
-    val pairs = Dedup.minhashLshPairsVerified(spark, sfDir,
-      threshold = threshold)
+  def leakageFreeSplit(spark: SparkSession, sfDir: String): DataFrame = {
+    val pairs = Dedup.minhashLshPairsVerified(spark, sfDir)
     val comps = Dedup.connectedComponents(pairs)
       .withColumnRenamed("id", "doc_id")
     Tables.load(spark, sfDir, "documents").select(col("doc_id"))
@@ -111,12 +108,9 @@ object TrainingPrep {
     * split=train and bias every stratum. Rates here: majority 'en'
     * kept at 25%, every other language at 75%.
     */
-  def stratifiedSample(
-      spark: SparkSession, sfDir: String,
-      rates: Map[String, Int] = Map("en" -> 25),
-      defaultRate: Int = 75): DataFrame = {
+  def stratifiedSample(spark: SparkSession, sfDir: String): DataFrame = {
     val bucket = hashBucket(col("doc_id"), "samp:", 100)
-    val rate = rates.foldLeft(lit(defaultRate)) { case (acc, (lang, r)) =>
+    val rate = Map("en" -> 25).foldLeft(lit(75)) { case (acc, (lang, r)) =>
       when(col("lang") === lang, r).otherwise(acc)
     }
     Tables.load(spark, sfDir, "documents")
@@ -151,8 +145,7 @@ object TrainingPrep {
     * tomorrow's ingest changes rates only via the aggregate, never
     * by reshuffling today's draws.
     */
-  def mixtureResample(
-      spark: SparkSession, sfDir: String, half: Double = 0.5): DataFrame = {
+  def mixtureResample(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     val perLang = docs.groupBy(col("lang"))
@@ -166,7 +159,7 @@ object TrainingPrep {
         col("w").cast("double") / col("tw").cast("double"))
       .withColumn("keep_rate",
         least(lit(1.0).cast("double"),
-          (col("td").cast("double") * lit(half)) * col("share") /
+          (col("td").cast("double") * lit(0.5)) * col("share") /
             col("d").cast("double")))
       .select(col("lang"), col("keep_rate"))
     val u = conv(substring(md5(concat(lit("mix:"),
@@ -177,6 +170,8 @@ object TrainingPrep {
       .select(col("doc_id"), col("lang"), col("n_chars"),
         col("keep_rate"))
   }
+
+  private val featureBuckets = 1024
 
   /** The q144 driver entry: FEATURE HASHING (the "hashing trick",
     * sklearn HashingVectorizer / Vowpal Wabbit shape) — tokens map
@@ -197,23 +192,22 @@ object TrainingPrep {
     * doc-partition — no vocabulary state anywhere at any corpus
     * size.
     */
-  def hashedFeatures(
-      spark: SparkSession, sfDir: String, buckets: Int = 1024): DataFrame =
-    hashedFeaturesOn(Tables.load(spark, sfDir, "documents"), buckets)
+  def hashedFeatures(spark: SparkSession, sfDir: String): DataFrame =
+    hashedFeaturesOn(Tables.load(spark, sfDir, "documents"))
 
   /** The featurizer over any `(doc_id, text)` frame — stateless by
     * construction (no fitted vocabulary), which is exactly why the
     * streamed serve (q179) can call it per micro-batch.
     */
-  def hashedFeaturesOn(docs: DataFrame, buckets: Int = 1024): DataFrame =
+  def hashedFeaturesOn(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
         explode(TextAnalysis.normWords(col("text")))
           .as("tok"))
       .withColumn("h",
         conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long"))
-      .groupBy(col("doc_id"), pmod(col("h"), lit(buckets)).as("bucket"))
-      .agg(sum(when(expr(s"(h div $buckets) % 2") === 0, 1L)
+      .groupBy(col("doc_id"), pmod(col("h"), lit(featureBuckets)).as("bucket"))
+      .agg(sum(when(expr(s"(h div $featureBuckets) % 2") === 0, 1L)
         .otherwise(-1L)).as("feat"))
       .where(col("feat") =!= 0)
 
@@ -251,19 +245,17 @@ object TrainingPrep {
     * map-side combined. Inference is one pass, no corpus-keyed
     * shuffle beyond the feature aggregate itself.
     */
-  def scoreDocs(
-      spark: SparkSession, sfDir: String, buckets: Int = 1024): DataFrame =
+  def scoreDocs(spark: SparkSession, sfDir: String): DataFrame =
     scoreWith(
       Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("text")),
-      placeholderWeights(spark, buckets), weightMicro(lit("w_bias")),
-      buckets)
+      placeholderWeights(spark), weightMicro(lit("w_bias")))
 
   /** The md5-derived placeholder model: (bucket, wq) micro-int rows.
     * A trained model's parquet replaces this frame unchanged.
     */
-  def placeholderWeights(spark: SparkSession, buckets: Int): DataFrame =
-    spark.range(buckets)
+  def placeholderWeights(spark: SparkSession): DataFrame =
+    spark.range(featureBuckets)
       .select(col("id").as("bucket"),
         weightMicro(concat(lit("w_"), col("id").cast("string"))).as("wq"))
 
@@ -271,9 +263,8 @@ object TrainingPrep {
     * bucket = -1 bias row — the one parquet a deployment persists
     * and the streamed serve (q179) reads back per micro-batch.
     */
-  def placeholderModel(
-      spark: SparkSession, buckets: Int = 1024): DataFrame =
-    placeholderWeights(spark, buckets)
+  def placeholderModel(spark: SparkSession): DataFrame =
+    placeholderWeights(spark)
       .unionByName(spark.range(1).select(lit(-1L).as("bucket"),
         weightMicro(lit("w_bias")).as("wq")))
 
@@ -283,9 +274,8 @@ object TrainingPrep {
     * and the static model, so micro-batching cannot change them).
     */
   def scoreWith(
-      docs: DataFrame, weights: DataFrame, biasQ: Column,
-      buckets: Int = 1024): DataFrame = {
-    val logits = hashedFeaturesOn(docs, buckets)
+      docs: DataFrame, weights: DataFrame, biasQ: Column): DataFrame = {
+    val logits = hashedFeaturesOn(docs)
       .join(broadcast(weights), Seq("bucket"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_active"),
@@ -401,8 +391,7 @@ object TrainingPrep {
     * k-bounded TopK Aggregator (q89) is the drop-in for extreme
     * stratum skew.
     */
-  def weightedSample(
-      spark: SparkSession, sfDir: String, k: Int = 20): DataFrame = {
+  def weightedSample(spark: SparkSession, sfDir: String): DataFrame = {
     val h = conv(substring(
       md5(concat(lit("ws:"), col("doc_id").cast("string"))), 1, 15),
       16, 10).cast("long")
@@ -414,7 +403,7 @@ object TrainingPrep {
       .select(col("doc_id"), col("lang"),
         col("n_chars").cast("long").as("w"), pr.as("pr"))
       .withColumn("rk", row_number().over(byLang).cast("long"))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= 20)
       .select(col("lang"), col("doc_id"), col("w"),
         floor(col("pr") * 1e6).cast("long").as("pr_micro"), col("rk"))
   }
@@ -709,6 +698,8 @@ object TrainingPrep {
       .select(col("lang"), col("doc_id"), col("rk"))
   }
 
+  private val coordinatedPct = 10
+
   /** The q262 driver entry: COORDINATED (JOIN-CONSISTENT) SAMPLING —
     * the warehouse sampling trick for multi-table pipelines: both
     * fact tables filter by the SAME salted hash of the JOIN KEY
@@ -723,12 +714,11 @@ object TrainingPrep {
     * the integrity law (every sampled lineitem finds its order) and
     * the subset property.
     */
-  def coordinatedSample(
-      spark: SparkSession, sfDir: String, pct: Int = 10): DataFrame = {
+  def coordinatedSample(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables.load(spark, sfDir, "orders")
-      .where(hashBucket(col("o_orderkey"), "cs:", 100) < pct)
+      .where(hashBucket(col("o_orderkey"), "cs:", 100) < coordinatedPct)
     val l = Tables.load(spark, sfDir, "lineitem")
-      .where(hashBucket(col("l_orderkey"), "cs:", 100) < pct)
+      .where(hashBucket(col("l_orderkey"), "cs:", 100) < coordinatedPct)
       .select(col("l_orderkey"),
         expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
           .as("cents"))
@@ -754,9 +744,7 @@ object TrainingPrep {
     * bounds reduce out of the same windowed pass via conditional
     * aggregation), then one final per-type aggregate.
     */
-  def winsorize(
-      spark: SparkSession, sfDir: String,
-      loPct: Int = 1, hiPct: Int = 99): DataFrame = {
+  def winsorize(spark: SparkSession, sfDir: String): DataFrame = {
     val cents = expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
     val byType = Window.partitionBy(col("event_type"))
     val ranked = Tables.load(spark, sfDir, "events")
@@ -765,9 +753,9 @@ object TrainingPrep {
       .withColumn("n", count(lit(1)).over(byType))
     val bounds = ranked.groupBy(col("event_type"))
       .agg(
-        min(when(col("rk") === expr(s"($loPct * n + 99) DIV 100"),
+        min(when(col("rk") === expr("(1 * n + 99) DIV 100"),
           col("v"))).as("lo_cents"),
-        min(when(col("rk") === expr(s"($hiPct * n + 99) DIV 100"),
+        min(when(col("rk") === expr("(99 * n + 99) DIV 100"),
           col("v"))).as("hi_cents"))
     ranked.join(broadcast(bounds), "event_type")
       .select(col("event_type"), col("v"), col("lo_cents"), col("hi_cents"),
@@ -802,19 +790,17 @@ object TrainingPrep {
     * rank is a (pos-1) DIV 64 bucket aggregate with map-side combine.
     * Epochs fan out by a 2-element explode, not a self-join.
     */
-  def epochOrder(
-      spark: SparkSession, sfDir: String,
-      epochs: Int = 2, batch: Int = 64): DataFrame = {
+  def epochOrder(spark: SparkSession, sfDir: String): DataFrame = {
     val pri = md5(concat(lit("ep"), col("epoch").cast("string"),
       lit(":"), col("doc_id").cast("string")))
     val w = Window.partitionBy(col("epoch"))
       .orderBy(col("pri").asc, col("doc_id").asc)
     Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("n_chars"),
-        explode(sequence(lit(0L), lit(epochs - 1L))).as("epoch"))
+        explode(sequence(lit(0L), lit(1L))).as("epoch"))
       .withColumn("pri", pri)
       .withColumn("pos", row_number().over(w).cast("long"))
-      .groupBy(col("epoch"), expr(s"(pos - 1) DIV $batch").as("batch_id"))
+      .groupBy(col("epoch"), expr("(pos - 1) DIV 64").as("batch_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
         min_by(col("doc_id"), col("pos")).as("head_doc"))
       .select(col("epoch"), col("batch_id"), col("n_docs"),
@@ -993,6 +979,8 @@ object TrainingPrep {
           " DIV 1000000 AS BIGINT)").as("hll_estimate"))
   }
 
+  private val paddingWindow = 2048
+
   /** The q226 driver entry: PADDING-WASTE AUDIT — the training-
     * efficiency table behind sequence packing decisions: bucket
     * documents by log2 token length and report, per bucket, the
@@ -1009,10 +997,9 @@ object TrainingPrep {
     * Scale shape: one doc-grain pass map-side combined to the
     * ~log2(max_len) bucket domain.
     */
-  def paddingWasteAudit(
-      spark: SparkSession, sfDir: String, window: Int = 2048): DataFrame = {
+  def paddingWasteAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = TextAnalysis.tokenCount(col("text"))
-    val w = lit(window.toLong)
+    val w = lit(paddingWindow.toLong)
     Tables.load(spark, sfDir, "documents")
       .select(toks.as("t"))
       .where(col("t") > 0)
@@ -1031,9 +1018,13 @@ object TrainingPrep {
         col("n_tokens").cast("long").as("n_tokens"),
         col("n_overflow_docs").cast("long").as("n_overflow_docs"),
         col("pad_to_window_waste").cast("long").as("pad_to_window_waste"),
-        (expr(s"((n_tokens + ${window - 1}L) DIV ${window}L) * ${window}L")
-          - col("n_tokens")).cast("long").as("greedy_pack_waste"))
+        (expr(s"((n_tokens + ${paddingWindow - 1}L) DIV ${paddingWindow}L)" +
+          s" * ${paddingWindow}L") - col("n_tokens")).cast("long")
+          .as("greedy_pack_waste"))
   }
+
+  private val manifestWindow = 256
+  private val manifestStride = 192
 
   /** The q227 driver entry: CONTEXT-WINDOW CHUNK MANIFEST — the most
     * common preprocessing op in the stack: split every document into
@@ -1048,22 +1039,22 @@ object TrainingPrep {
     * Scale shape: pure row-local arithmetic + explode — zero shuffle;
     * the manifest is the artifact, order-free.
     */
-  def chunkManifest(
-      spark: SparkSession, sfDir: String,
-      window: Int = 256, stride: Int = 192): DataFrame = {
+  def chunkManifest(spark: SparkSession, sfDir: String): DataFrame = {
     val t = TextAnalysis.tokenCount(col("text"))
     Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), t.as("t"))
       .where(col("t") > 0)
       .withColumn("n_chunks",
-        when(col("t") <= window, lit(1L))
+        when(col("t") <= manifestWindow, lit(1L))
           .otherwise(lit(1L) +
-            expr(s"(t - $window + ${stride - 1}L) DIV ${stride}L")))
+            expr(s"(t - $manifestWindow + ${manifestStride - 1}L)" +
+              s" DIV ${manifestStride}L")))
       .select(col("doc_id"), col("t"),
         explode(sequence(lit(0L), col("n_chunks") - 1L)).as("chunk_idx"))
       .select(col("doc_id"), col("chunk_idx"),
-        (col("chunk_idx") * stride).as("start_tok"),
-        least(col("chunk_idx") * stride + window, col("t")).as("end_tok"))
+        (col("chunk_idx") * manifestStride).as("start_tok"),
+        least(col("chunk_idx") * manifestStride + manifestWindow, col("t"))
+          .as("end_tok"))
       .withColumn("n_toks", col("end_tok") - col("start_tok"))
   }
 
@@ -1088,9 +1079,9 @@ object TrainingPrep {
   private val mixtureWeightsMemo = scala.collection.concurrent.TrieMap
     .empty[String, Seq[(String, Long)]]
 
-  def budgetApportion(
-      spark: SparkSession, sfDir: String,
-      budget: Long = 1000000L): DataFrame = {
+  private val apportionBudget = 1000000L
+
+  def budgetApportion(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val w = mixtureWeightsMemo.getOrElseUpdate(
       sfDir + "@" + Tables.fingerprint(sfDir, "documents"),
@@ -1101,11 +1092,11 @@ object TrainingPrep {
     val tot = w.agg(sum(col("w_micro")).as("tw"))
     val base = w.crossJoin(broadcast(tot))
       .select(col("lang"), col("w_micro"),
-        expr(s"(${budget}L * w_micro) DIV tw").as("quota"),
-        expr(s"(${budget}L * w_micro) % tw").as("rem"),
+        expr(s"(${apportionBudget}L * w_micro) DIV tw").as("quota"),
+        expr(s"(${apportionBudget}L * w_micro) % tw").as("rem"),
         col("tw"))
     val leftover = base
-      .agg((lit(budget) - sum(col("quota"))).as("seats"))
+      .agg((lit(apportionBudget) - sum(col("quota"))).as("seats"))
     val ranked = base.crossJoin(broadcast(leftover))
       .withColumn("rk", row_number().over(
         Window.orderBy(col("rem").desc, col("lang").asc)).cast("long"))
@@ -1134,8 +1125,7 @@ object TrainingPrep {
     * verdict replaced the partition-less global windows here),
     * batch-grain aggregates after.
     */
-  def lengthBucketedBatches(spark: SparkSession, sfDir: String,
-      batchSize: Int = 8): DataFrame = {
+  def lengthBucketedBatches(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         graft.operators.TextAnalysis.bpeTokenCount(col("text"))
@@ -1144,7 +1134,7 @@ object TrainingPrep {
         order: Seq[org.apache.spark.sql.Column]) =
       Relational.chunkedRowNumber(toks, bucket, order)
         .withColumn("batch_id",
-          expr(s"CAST((rk - 1) DIV $batchSize AS BIGINT)"))
+          expr("CAST((rk - 1) DIV 8 AS BIGINT)"))
         .groupBy(col("batch_id"))
         .agg(count(lit(1)).as("bs"), max(col("ntok")).as("mx"),
           sum(col("ntok")).as("tk"))
@@ -1163,6 +1153,8 @@ object TrainingPrep {
         bucket = Relational.rangeBucket(col("ntok"), 16),
         Seq(col("ntok").asc, col("doc_id").asc)))
   }
+
+  private val packCapacity = 4096
 
   /** The q305 driver entry: GREEDY SEQUENCE-PACKING MANIFEST —
     * first-fit-decreasing packing of documents into fixed
@@ -1194,18 +1186,16 @@ object TrainingPrep {
     * replays the identical fold as a recursive CTE carrying the fills
     * list, so equality proves the whole sequential recurrence.
     */
-  def packedWindows(spark: SparkSession, sfDir: String,
-      capacity: Int = 4096, chunkSize: Int = 256): DataFrame =
+  def packedWindows(spark: SparkSession, sfDir: String): DataFrame =
     packedWindowsFrom(
-      packedAssignments(spark, sfDir, capacity, chunkSize), capacity)
+      packedAssignments(spark, sfDir), packCapacity)
 
   /** The per-doc (window_id, doc_id, ntok, item) assignment frame the
     * q305 manifest groups over — exposed so downstream audits (q335's
     * attention-mask accounting) consume the IDENTICAL first-fit fold
     * rather than re-deriving it.
     */
-  def packedAssignments(spark: SparkSession, sfDir: String,
-      capacity: Int = 4096, chunkSize: Int = 256): DataFrame = {
+  def packedAssignments(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         graft.operators.TextAnalysis.bpeTokenCount(col("text"))
@@ -1215,13 +1205,14 @@ object TrainingPrep {
       bucket = Relational.rangeBucket(col("ntok"), 16, descending = true),
       order = Seq(col("ntok").desc, col("doc_id").asc))
     val lists = ranked
-      .withColumn("chunk", expr(s"CAST((rk - 1) DIV $chunkSize AS BIGINT)"))
+      .withColumn("chunk", expr("CAST((rk - 1) DIV 256 AS BIGINT)"))
       .groupBy(col("chunk"))
       .agg(array_sort(collect_list(struct(col("rk"), col("doc_id"),
         col("ntok"), col("item")))).as("xs"))
     // first-fit probe: 1-based index of the first window with room,
     // 0 when none (array_position's not-found convention)
-    val p = s"array_position(transform(acc.fills, f -> f + x.item <= ${capacity}L), true)"
+    val p = "array_position(transform(acc.fills, " +
+      s"f -> f + x.item <= ${packCapacity}L), true)"
     val folded = lists.withColumn("st", expr(
       s"""aggregate(
             xs,
@@ -1281,7 +1272,7 @@ object TrainingPrep {
     * c_corpus from the corpus dictionary, each doc scores the MEAN
     * weight of its word occurrences (Σ w(tok) DIV n_words — micro
     * units, truncating DIV, order-independent), and the manifest is
-    * the top-`take` docs under (score DESC, doc_id ASC) — the
+    * the top-100 docs under (score DESC, doc_id ASC) — the
     * resampled subcorpus a targeted continued-pretraining run reads.
     *
     * Scale shape: the dictionary aggregate is corpus-wide but
@@ -1291,10 +1282,9 @@ object TrainingPrep {
     * shuffle: words collapse to (doc, word, cnt) map-side first);
     * the top-k rank rides [[Relational.chunkedRowNumber]] (bucket =
     * fixed-width score ranges DESC) instead of a partition-less
-    * window, then keeps `take` rows.
+    * window, then keeps 100 rows.
     */
-  def domainAffinitySample(spark: SparkSession, sfDir: String,
-      take: Int = 100): DataFrame = {
+  def domainAffinitySample(spark: SparkSession, sfDir: String): DataFrame = {
     val words = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("lang"),
         explode(TextAnalysis.normWords(col("text")))
@@ -1316,7 +1306,7 @@ object TrainingPrep {
     Relational.chunkedRowNumber(perDoc,
       bucket = Relational.rangeBucket(col("aff_micro"), 10000L, descending = true),
       order = Seq(col("aff_micro").desc, col("doc_id").asc))
-      .where(col("rk") <= take)
+      .where(col("rk") <= 100)
       .select(col("rk").as("rnk"), col("doc_id"), col("n_words"),
         col("aff_micro"))
   }
@@ -1324,7 +1314,7 @@ object TrainingPrep {
   /** The q310 driver entry: EPOCH-SHUFFLE SHARD MANIFEST — the
     * deterministic reshuffle a multi-epoch pretraining run needs:
     * each epoch e permutes the corpus by the salted order
-    * md5(e:doc_id) and deals it into `shards` contiguous rank
+    * md5(e:doc_id) and deals it into 8 contiguous rank
     * ranges, so (a) every epoch reads a DIFFERENT order (no
     * epoch-to-epoch correlation for the optimizer to exploit),
     * (b) shard populations are balanced to ±1 by construction
@@ -1339,17 +1329,16 @@ object TrainingPrep {
     * bounded (epoch × shard) grain. Doc ids never shuffle as text;
     * the digest folds per shard.
     */
-  def epochShards(spark: SparkSession, sfDir: String,
-      epochs: Int = 3, shards: Int = 8): DataFrame = {
+  def epochShards(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents").select(col("doc_id"))
     val n = docs.count()
-    val perEpoch = (1 to epochs).map { e =>
+    val perEpoch = (1 to 3).map { e =>
       val salt = md5(concat(lit(s"ep$e:"), col("doc_id").cast("string")))
       Relational.chunkedRowNumber(docs,
         bucket = substring(salt, 1, 2),
         order = Seq(salt.asc, col("doc_id").asc))
         .select(lit(e.toLong).as("epoch"), col("doc_id"), col("rk"),
-          expr(s"CAST((rk - 1) * $shards DIV ${n}L AS BIGINT)").as("shard"))
+          expr(s"CAST((rk - 1) * 8 DIV ${n}L AS BIGINT)").as("shard"))
     }
     perEpoch.reduce(_.unionByName(_))
       .groupBy(col("epoch"), col("shard"))
@@ -1359,6 +1348,8 @@ object TrainingPrep {
         md5(concat_ws(",", transform(array_sort(collect_list(col("doc_id"))),
           x => x.cast("string")))).as("shard_digest"))
   }
+
+  private val interleaveGrid = 4
 
   /** The q314 driver entry: INTERLEAVED MULTIMODAL SEQUENCE MANIFEST
     * — the VLM data-prep shape (M3W/Flamingo lineage): an interleaved
@@ -1378,9 +1369,8 @@ object TrainingPrep {
     * the payload bytes are never touched at all (the patch count is
     * the grid constant, the decode stays in q256); zero shuffle.
     */
-  def interleavedManifest(spark: SparkSession, sfDir: String,
-      grid: Int = 4): DataFrame = {
-    val patches = grid * grid
+  def interleavedManifest(spark: SparkSession, sfDir: String): DataFrame = {
+    val patches = interleaveGrid * interleaveGrid
     val toks = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         graft.operators.TextAnalysis.bpeTokenCount(col("text"))
@@ -1479,8 +1469,7 @@ object TrainingPrep {
     * batch-grain then scheme-grain aggregates; zero partition-less
     * windows.
     */
-  def sftLossDensity(spark: SparkSession, sfDir: String,
-      batchSize: Int = 8): DataFrame = {
+  def sftLossDensity(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         graft.operators.TextAnalysis.bpeTokenCount(col("text"))
@@ -1491,7 +1480,7 @@ object TrainingPrep {
     def scheme(name: String, bucket: Column, order: Seq[Column]) =
       Relational.chunkedRowNumber(toks, bucket, order)
         .withColumn("batch_id",
-          expr(s"CAST((rk - 1) DIV $batchSize AS BIGINT)"))
+          expr("CAST((rk - 1) DIV 8 AS BIGINT)"))
         .groupBy(col("batch_id"))
         .agg(count(lit(1)).as("bs"), max(col("ntok")).as("mx"),
           sum(col("n_completion")).as("loss_toks"))
@@ -1691,6 +1680,8 @@ object TrainingPrep {
       md5(concat_ws(" ", stream)).as("stream_digest"))
   }
 
+  private val contaminationN = 5
+
   /** The q313 driver entry: CROSS-SPLIT CONTAMINATION AUDIT — the
     * train/eval n-gram overlap scan every serious eval pipeline runs
     * (the GPT-3 appendix-C dedup rule, Brown et al. 2020): an eval
@@ -1710,22 +1701,23 @@ object TrainingPrep {
     * verdicts are a doc-grain aggregate. No all-pairs anything —
     * cost is the shingle scan plus one dictionary-grain join.
     */
-  def splitContamination(spark: SparkSession, sfDir: String,
-      n: Int = 5, flagPpm: Long = 500000L): DataFrame = {
+  def splitContamination(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         TextAnalysis.normWords(col("text"))
           .as("w"))
       .withColumn("nw", size(col("w")).cast("long"))
-      .where(col("nw") >= n)
+      .where(col("nw") >= contaminationN)
       .withColumn("split",
         when(hashBucket(col("doc_id"), "", splitBuckets) < trainBuckets,
           "train").otherwise("eval"))
     val grams = docs
-      .withColumn("i", explode(expr(s"sequence(1, CAST(nw AS INT) - ${n - 1})")))
+      .withColumn("i", explode(expr(
+        s"sequence(1, CAST(nw AS INT) - ${contaminationN - 1})")))
       .select(col("doc_id"), col("split"),
         substring(md5(concat_ws(" ",
-          (0 until n).map(d => element_at(col("w"), col("i") + d)): _*)),
+          (0 until contaminationN).map(d =>
+            element_at(col("w"), col("i") + d)): _*)),
           1, 16).as("g"))
       .distinct()
     val trainSet = grams.where(col("split") === "train")
@@ -1739,7 +1731,7 @@ object TrainingPrep {
           .as("n_shared"))
       .select(col("doc_id"), col("n_grams"), col("n_shared"),
         expr("n_shared * 1000000 DIV n_grams").as("contamination_ppm"))
-      .withColumn("flagged", col("contamination_ppm") > flagPpm)
+      .withColumn("flagged", col("contamination_ppm") > 500000L)
   }
 
   /** The q312 driver entry: CORPUS-EXPORT OFFSET INDEX — the byte
@@ -1799,10 +1791,8 @@ object TrainingPrep {
   val chunkWin: Int = 64
   val chunkStride: Int = 48
 
-  def slidingChunks(spark: SparkSession, sfDir: String,
-      win: Int = chunkWin, stride: Int = chunkStride): DataFrame = {
-    require(stride >= 1 && win > stride, "need 1 <= stride < win")
-    val ov = win - stride
+  def slidingChunks(spark: SparkSession, sfDir: String): DataFrame = {
+    val ov = chunkWin - chunkStride
     val words = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         TextAnalysis.normWords(col("text"))
@@ -1811,18 +1801,22 @@ object TrainingPrep {
       .where(col("n") > 0 && element_at(col("w"), 1) =!= "")
     words
       .withColumn("k", expr(
-        s"CAST(GREATEST(1L, (n - ${ov}L + ${stride - 1}L) DIV ${stride}L) AS BIGINT)"))
+        s"CAST(GREATEST(1L, (n - ${ov}L + ${chunkStride - 1}L)" +
+          s" DIV ${chunkStride}L) AS BIGINT)"))
       .withColumn("i", explode(expr("sequence(0L, k - 1L)")))
       .select(col("doc_id"), col("n").as("n_tokens"),
         col("k").as("n_chunks"), col("i").cast("long").as("chunk_idx"),
-        (col("i") * stride).cast("long").as("start_tok"),
-        least(lit(win.toLong), col("n") - col("i") * stride).cast("long")
-          .as("len_tok"),
+        (col("i") * chunkStride).cast("long").as("start_tok"),
+        least(lit(chunkWin.toLong), col("n") - col("i") * chunkStride)
+          .cast("long").as("len_tok"),
         md5(concat_ws(" ", slice(col("w"),
-          (col("i") * stride + 1).cast("int"),
-          least(lit(win.toLong), col("n") - col("i") * stride).cast("int"))))
+          (col("i") * chunkStride + 1).cast("int"),
+          least(lit(chunkWin.toLong), col("n") - col("i") * chunkStride)
+            .cast("int"))))
           .as("chunk_digest"))
   }
+
+  private val topicBudget = 100L
 
   /** The q302 driver entry: TOPIC-BALANCED SUBCORPUS MANIFEST — the
     * cluster-balanced curation move (DCLM/DataComp lineage): web-scale
@@ -1842,13 +1836,12 @@ object TrainingPrep {
     * vectors never shuffle), cell-grain apportionment on the bounded
     * cell domain, one per-cell rank window for the sample.
     */
-  def topicBalancedSample(spark: SparkSession, sfDir: String,
-      budget: Long = 100L, clusters: Int = 16): DataFrame = {
+  def topicBalancedSample(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"),
         graft.functions.Vectors.l2normalize(col("embedding")).as("u"))
     val cells = graft.operators.Similarity.assignCells(corpus,
-      graft.operators.Similarity.seededCodebook(corpus, clusters))
+      graft.operators.Similarity.seededCodebook(corpus, 16))
     val sizes = cells.groupBy(col("c_id"))
       .agg(count(lit(1)).cast("long").as("sz"))
       .withColumn("w",
@@ -1856,9 +1849,9 @@ object TrainingPrep {
     val tot = sizes.agg(sum(col("w")).as("tw"))
     val base = sizes.crossJoin(broadcast(tot))
       .select(col("c_id"), col("sz"), col("w"),
-        expr(s"(${budget}L * w) DIV tw").as("quota"),
-        expr(s"(${budget}L * w) % tw").as("rem"))
-    val leftover = base.agg((lit(budget) - sum(col("quota"))).as("seats"))
+        expr(s"(${topicBudget}L * w) DIV tw").as("quota"),
+        expr(s"(${topicBudget}L * w) % tw").as("rem"))
+    val leftover = base.agg((lit(topicBudget) - sum(col("quota"))).as("seats"))
     val quotas = base.crossJoin(broadcast(leftover))
       .withColumn("rk", row_number().over(
         Window.orderBy(col("rem").desc, col("c_id").asc)).cast("long"))
@@ -1901,8 +1894,7 @@ object TrainingPrep {
     * one doc-keyed window pass for the span bookkeeping, one
     * doc-grain ordered re-join (q266's posture). No joins.
     */
-  def spanCorruption(
-      spark: SparkSession, sfDir: String, pct: Int = 15): DataFrame = {
+  def spanCorruption(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), posexplode(TextAnalysis.normWords(col("text")))
         .as(Seq("pos", "tok")))
@@ -1912,7 +1904,7 @@ object TrainingPrep {
       .withColumn("m", expr(
         s"""CAST(conv(substring(md5(concat('mask:',
             CAST(doc_id AS STRING), ':', CAST(pos AS STRING))), 1, 15),
-            16, 10) AS BIGINT) % 100 < $pct"""))
+            16, 10) AS BIGINT) % 100 < 15"""))
       .withColumn("prev_m", lag(col("m"), 1, false).over(w))
       .withColumn("start", col("m") && !col("prev_m"))
       .withColumn("span_idx", when(col("m"),
@@ -1936,6 +1928,8 @@ object TrainingPrep {
         rendered(inputPiece).as("input_fp"),
         rendered(targetPiece).as("target_fp"))
   }
+  private val curriculumStageCount = 4
+
   /** The q327 driver entry: CURRICULUM PACING MANIFEST — the
     * easy-to-hard training schedule (Bengio et al. 2009 curriculum
     * learning, with the exponential pacing of Platanios et al. 2019):
@@ -1946,7 +1940,7 @@ object TrainingPrep {
     * any real vocabulary's count table would) — then globally ranked
     * easy-first through [[graft.operators.Relational.chunkedRowNumber]]
     * (fixed-width difficulty-range buckets, no partition-less window)
-    * and cut into `stages` exponentially growing stages: stage s
+    * and cut into `curriculumStageCount` exponentially growing stages: stage s
     * covers ranks up to N·(2^s − 1) DIV (2^stages − 1), so each stage
     * doubles the budget of the previous and the boundaries tile N
     * exactly (the telescoping is spec-pinned). Output: one row per
@@ -1955,11 +1949,10 @@ object TrainingPrep {
     *
     * Scale shape: one fact-scale word explode into a broadcast-
     * dictionary join and a doc-grain sum, one chunked global rank,
-    * then a bounded reduce onto the `stages` domain. The stage CASE
-    * chain is row-local integer arithmetic.
+    * then a bounded reduce onto the `curriculumStageCount` domain.
+    * The stage CASE chain is row-local integer arithmetic.
     */
-  def curriculumStages(
-      spark: SparkSession, sfDir: String, stages: Int = 4): DataFrame = {
+  def curriculumStages(spark: SparkSession, sfDir: String): DataFrame = {
     val words = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         explode(split(graft.operators.TextAnalysis
@@ -1975,8 +1968,9 @@ object TrainingPrep {
       bucket = Relational.rangeBucket(col("difficulty"), 1L << 20),
       order = Seq(col("difficulty").asc, col("doc_id").asc))
     val total = difficulty.agg(count(lit(1)).cast("long").as("nn"))
-    val denom = (1L << stages) - 1L
-    val stageExpr = (1 to stages).foldRight(lit(stages.toLong): Column) {
+    val denom = (1L << curriculumStageCount) - 1L
+    val stageExpr = (1 to curriculumStageCount)
+        .foldRight(lit(curriculumStageCount.toLong): Column) {
       (s, rest) =>
         when(col("rk") <= expr(s"nn * ${(1L << s) - 1L} DIV $denom"),
           lit(s.toLong)).otherwise(rest)
@@ -2014,10 +2008,8 @@ object TrainingPrep {
     * the q305 assignment frame; every pair count is row-local
     * arithmetic. Nothing here touches text.
     */
-  def packingAttentionAudit(
-      spark: SparkSession, sfDir: String,
-      capacity: Int = 4096, chunkSize: Int = 256): DataFrame =
-    packedAssignments(spark, sfDir, capacity, chunkSize)
+  def packingAttentionAudit(spark: SparkSession, sfDir: String): DataFrame =
+    packedAssignments(spark, sfDir)
       .groupBy(col("window_id"))
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("item")).cast("long").as("tokens"),
@@ -2036,8 +2028,8 @@ object TrainingPrep {
   /** The q336 driver entry: EPOCH WATER-FILLING under a token budget —
     * the data-constrained allocation question of Muennighoff et al.
     * 2023 ("Scaling Data-Constrained Language Models"): a training run
-    * has `budgetX` × the corpus's tokens to spend, each (source, lang)
-    * cell may be repeated at most `maxEpochs` times before repetition
+    * has 2 × the corpus's tokens to spend, each (source, lang)
+    * cell may be repeated at most 4 times before repetition
     * stops helping, and the allocator wants the MAX-MIN FAIR fill —
     * every cell gets the same water level L of tokens except cells
     * whose epoch cap is below the level, which saturate at the cap
@@ -2064,29 +2056,24 @@ object TrainingPrep {
     * data-scale cliff. At 100 TB the cell aggregate is the same one
     * exchange; the allocator itself never grows.
     */
-  def epochWaterfill(
-      spark: SparkSession, sfDir: String,
-      budgetX: Int = 2, maxEpochs: Int = 4): DataFrame =
+  def epochWaterfill(spark: SparkSession, sfDir: String): DataFrame =
     waterfillOn(Tables.load(spark, sfDir, "documents")
       .select(col("source"), col("lang"),
         size(regexp_extract_all(col("text"),
           lit(TextAnalysis.bpeTokenPattern), lit(0)))
           .cast("long").as("ntok"))
       .groupBy(col("source"), col("lang"))
-      .agg(sum(col("ntok")).cast("long").as("avail_tokens")),
-      budgetX, maxEpochs)
+      .agg(sum(col("ntok")).cast("long").as("avail_tokens")))
 
   /** The q336 allocator core over any `(source, lang, avail_tokens)`
     * cell frame — split out so q359 can run the SAME max-min law
     * over soft-dedup-effective token counts.
     */
-  def waterfillOn(
-      cells: DataFrame, budgetX: Int, maxEpochs: Int): DataFrame = {
-    require(budgetX >= 1 && maxEpochs >= 1, "degenerate budget")
+  def waterfillOn(cells: DataFrame): DataFrame = {
     val dom = cells
-      .withColumn("cap_tokens", col("avail_tokens") * maxEpochs)
+      .withColumn("cap_tokens", col("avail_tokens") * 4)
     val tot = dom.agg(
-      (sum(col("avail_tokens")) * budgetX).cast("long").as("b"),
+      (sum(col("avail_tokens")) * 2).cast("long").as("b"),
       count(lit(1)).cast("long").as("m"))
     val w = Window
       .orderBy(col("cap_tokens").asc, col("source").asc, col("lang").asc)
@@ -2116,6 +2103,8 @@ object TrainingPrep {
         expr("alloc_tokens * 1000000 DIV avail_tokens"))
   }
 
+  private val moeExperts = 8
+
   /** The q344 driver entry: MIXTURE-OF-EXPERTS ROUTING AUDIT — the
     * load-balance / token-drop accounting every MoE training run
     * watches (Shazeer 2017's aux loss, Switch Transformer's capacity
@@ -2141,9 +2130,7 @@ object TrainingPrep {
     * 8-expert domain. Media never moves — only (digest-routed token
     * position, expert) pairs.
     */
-  def moeRoutingAudit(
-      spark: SparkSession, sfDir: String, experts: Int = 8): DataFrame = {
-    require(experts >= 2, "routing needs at least two experts")
+  def moeRoutingAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         regexp_extract_all(col("text"),
@@ -2152,9 +2139,9 @@ object TrainingPrep {
         posexplode(col("ts")).as(Seq("pos", "tok")))
       .select(col("doc_id"), col("ntok"), col("pos").cast("long").as("pos"),
         expr(s"CAST(conv(substring(md5(tok), 1, 8), 16, 10) AS BIGINT) " +
-          s"% $experts").as("expert"))
+          s"% $moeExperts").as("expert"))
       .withColumn("cap",
-        expr(s"(5 * ntok + ${4 * experts - 1}) DIV ${4 * experts}"))
+        expr(s"(5 * ntok + ${4 * moeExperts - 1}) DIV ${4 * moeExperts}"))
     val w = Window.partitionBy(col("doc_id"), col("expert"))
       .orderBy(col("pos").asc)
     val routed = toks
@@ -2166,7 +2153,7 @@ object TrainingPrep {
       .withColumn("dropped", (col("routed") - col("kept")).cast("long"))
     val tot = routed.agg(
       sum(col("routed")).cast("long").as("total"),
-      expr(s"""CAST($experts * SUM(CAST(routed AS DECIMAL(38, 0)) * routed)
+      expr(s"""CAST($moeExperts * SUM(CAST(routed AS DECIMAL(38, 0)) * routed)
           * 1000000 DIV (SUM(routed) * SUM(routed)) AS BIGINT)""")
         .as("balance_x_e6"))
     routed.crossJoin(broadcast(tot))
@@ -2299,9 +2286,7 @@ object TrainingPrep {
     * weight join + the q336 cell aggregate; the allocator itself is
     * unchanged (bounded cell domain).
     */
-  def effectiveWaterfill(
-      spark: SparkSession, sfDir: String,
-      budgetX: Int = 2, maxEpochs: Int = 4): DataFrame = {
+  def effectiveWaterfill(spark: SparkSession, sfDir: String): DataFrame = {
     val weights = graft.operators.Dedup.softDedupWeights(spark, sfDir)
       .select(col("doc_id"), col("weight_micro"))
     val cells = Tables.load(spark, sfDir, "documents")
@@ -2316,18 +2301,15 @@ object TrainingPrep {
       // to allocate (and would 0-divide epochs_ppm) — drop it
       .where(col("avail_tokens") >= 1L)
     waterfillOn(cells.select(col("source"), col("lang"),
-        col("avail_tokens")), budgetX, maxEpochs)
+        col("avail_tokens")))
       .join(cells.select(col("source"), col("lang"), col("raw_tokens")),
         Seq("source", "lang"))
   }
 
-  def needleManifest(
-      spark: SparkSession, sfDir: String,
-      depths: Seq[Int] = Seq(10, 50, 90)): DataFrame = {
-    require(depths.forall(d => d >= 0 && d <= 100), "depth is a percent")
+  def needleManifest(spark: SparkSession, sfDir: String): DataFrame = {
     exportOffsets(spark, sfDir)
       .select(col("doc_id"), col("n_bytes"), col("start_offset"),
-        explode(lit(depths.map(_.toLong).toArray)).as("depth_pct"))
+        explode(lit(Array(10L, 50L, 90L))).as("depth_pct"))
       .withColumn("doc_pos",
         expr("n_bytes * depth_pct DIV 100"))
       .withColumn("insert_at",
@@ -2355,17 +2337,14 @@ object TrainingPrep {
     * times (q87's posture); per-user state is bounded by that
     * user's history, never corpus-wide.
     */
-  def sftUnrollCost(
-      spark: SparkSession, sfDir: String,
-      gapSeconds: Long = 1800L): DataFrame =
-    sftUnrollCostOn(Tables.load(spark, sfDir, "events"), gapSeconds)
+  def sftUnrollCost(spark: SparkSession, sfDir: String): DataFrame =
+    sftUnrollCostOn(Tables.load(spark, sfDir, "events"))
 
   /** The q362 core over any events-shaped frame `(user_id, ts,
     * event_id, props)` — split out so the spec can hand-build a
     * conversation with known prefix sums through the SAME plan.
     */
-  def sftUnrollCostOn(
-      events: DataFrame, gapSeconds: Long = 1800L): DataFrame = {
+  def sftUnrollCostOn(events: DataFrame): DataFrame = {
     val order = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").asc, col("event_id").asc)
     val running = order.rowsBetween(Window.unboundedPreceding, 0)
@@ -2376,7 +2355,7 @@ object TrainingPrep {
       .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(order))
       .withColumn("new_sess",
         when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > gapSeconds * 1000000L,
+          unix_micros(col("ts")) - col("prev_us") > 1800L * 1000000L,
           1L).otherwise(0L))
       .withColumn("session_idx", sum(col("new_sess")).over(running))
     val conv = Window.partitionBy(col("user_id"), col("session_idx"))
@@ -2407,7 +2386,7 @@ object TrainingPrep {
     * beside q312's offset index and q315's datasheet: leaf = md5 of
     * each doc's normalized text (the exact-dedup key, q-fingerprint
     * convention), shard digest = md5 of the doc-id-ordered
-    * concatenation of its leaves (shard = doc_id DIV `shardDocs`,
+    * concatenation of its leaves (shard = doc_id DIV 64,
     * the key-range layout of q310), root = md5 of the
     * shard-id-ordered concatenation of shard digests. The tree is
     * what makes re-verification INCREMENTAL: a consumer re-hashes
@@ -2419,14 +2398,13 @@ object TrainingPrep {
     * Scale shape: per-shard state is bounded by the constant shard
     * size (collect_list inside a shard-keyed aggregate — never
     * corpus-wide); the root folds the shard-digest table, which is
-    * n_docs/shardDocs rows. At 100 TB the two-level tree generalizes
+    * n_docs/64 rows. At 100 TB the two-level tree generalizes
     * to k levels by re-applying the same shard fold on shard ids —
     * each level shrinks the table by the fan-out, exactly a
     * treeAggregate (q06's device) over digests.
     */
-  def merkleManifest(
-      spark: SparkSession, sfDir: String, shardDocs: Long = 64L): DataFrame =
-    merkleManifestOn(Tables.load(spark, sfDir, "documents"), shardDocs)
+  def merkleManifest(spark: SparkSession, sfDir: String): DataFrame =
+    merkleManifestOn(Tables.load(spark, sfDir, "documents"))
 
   /** The q364 driver entry: LENGTH-HISTOGRAM TRANSPORT PLAN — the
     * 1D optimal-transport move plan that takes the corpus's length
@@ -2447,16 +2425,13 @@ object TrainingPrep {
     * domain (max n_chars DIV bucketChars rows — the partition-less
     * windows here order ~10 rows, never the corpus).
     */
-  def lengthTransportPlan(
-      spark: SparkSession, sfDir: String, bucketChars: Long = 64L): DataFrame =
-    lengthTransportPlanOn(Tables.load(spark, sfDir, "documents"), bucketChars)
+  def lengthTransportPlan(spark: SparkSession, sfDir: String): DataFrame =
+    lengthTransportPlanOn(Tables.load(spark, sfDir, "documents"))
 
   /** The q364 core over any frame with an `n_chars` column. */
-  def lengthTransportPlanOn(
-      docs: DataFrame, bucketChars: Long = 64L): DataFrame = {
-    require(bucketChars >= 1L, "bucket width is a positive char count")
+  def lengthTransportPlanOn(docs: DataFrame): DataFrame = {
     val cur = docs
-      .select(expr(s"n_chars DIV $bucketChars").as("bucket"))
+      .select(expr("n_chars DIV 64").as("bucket"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).cast("long").as("current"))
     val tot = cur.agg(sum(col("current")).cast("long").as("n"),
@@ -2484,28 +2459,26 @@ object TrainingPrep {
     * re-pack under q312's offsets) and which are untouched — the
     * whole point of key-range sharding is that a takedown's blast
     * radius is enumerable, not "re-export everything". Opt-out set
-    * = the `optOutN` lexicographically-first sources (deterministic
+    * = the 2 lexicographically-first sources (deterministic
     * stand-in for the legal list, derived in-plan so the oracle
-    * shares it). Per shard (q363's doc_id DIV `shardDocs` layout):
+    * shares it). Per shard (q363's doc_id DIV 64 layout):
     * doc/token counts, removed doc/token counts, the touched flag;
     * global columns: shards touched and the corpus-wide removed
     * token share in ppm.
     *
     * Scale shape: the opt-out dimension is bounded (sources) and
     * broadcast; one shard-keyed aggregate over the fact scan; the
-    * global fold runs on the n/shardDocs-row shard table.
+    * global fold runs on the n/64-row shard table.
     */
-  def takedownImpact(
-      spark: SparkSession, sfDir: String,
-      shardDocs: Long = 64L, optOutN: Int = 2): DataFrame = {
+  def takedownImpact(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
     val opt = docs.select(col("source")).distinct()
       .withColumn("srk",
         row_number().over(Window.orderBy(col("source").asc)).cast("long"))
-      .where(col("srk") <= optOutN.toLong)
+      .where(col("srk") <= 2L)
       .select(col("source"), lit(true).as("opt_out"))
     val shards = docs
-      .select(expr(s"doc_id DIV $shardDocs").as("shard_id"), col("source"),
+      .select(expr("doc_id DIV 64").as("shard_id"), col("source"),
         TextAnalysis.bpeTokenCount(col("text")).as("ntok"))
       .join(broadcast(opt), Seq("source"), "left")
       .groupBy(col("shard_id"))
@@ -2541,14 +2514,12 @@ object TrainingPrep {
     * range-partition device at 100 TB), a doc-keyed self-join of
     * adjacent epochs, one epoch-domain aggregate.
     */
-  def epochFixedPoints(
-      spark: SparkSession, sfDir: String, epochs: Int = 4): DataFrame = {
-    require(epochs >= 2, "need at least two epochs to compare")
+  def epochFixedPoints(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("epoch"))
       .orderBy(col("pri").asc, col("doc_id").asc)
     val pos = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
-        explode(sequence(lit(0L), lit(epochs - 1L))).as("epoch"))
+        explode(sequence(lit(0L), lit(3L))).as("epoch"))
       .withColumn("pri", md5(concat(lit("ep"), col("epoch").cast("string"),
         lit(":"), col("doc_id").cast("string"))))
       .withColumn("pos", row_number().over(w).cast("long"))
@@ -2566,6 +2537,8 @@ object TrainingPrep {
       .withColumn("mean_disp_milli",
         expr("sum_abs_disp * 1000 DIV n_docs"))
   }
+
+  private val sampleGrid = 1024L
 
   /** The q384 driver entry: MASS-PROPORTIONAL SYSTEMATIC SAMPLE —
     * the deterministic "sample documents proportional to their byte
@@ -2587,14 +2560,12 @@ object TrainingPrep {
     * (count = pointsBelow(end) − pointsBelow(start)) — no join, no
     * shuffle beyond the offsets themselves.
     */
-  def systematicSample(
-      spark: SparkSession, sfDir: String,
-      grid: Long = 1024L): DataFrame = {
-    require(grid >= 1L, "grid step is a positive byte count")
-    val phi = grid / 2L
+  def systematicSample(spark: SparkSession, sfDir: String): DataFrame = {
+    val phi = sampleGrid / 2L
     // grid points below x: none at or above x; zero when x <= phi
     def below(x: String): String =
-      s"CASE WHEN $x <= ${phi}L THEN 0L ELSE ($x - ${phi}L + ${grid - 1}L) DIV ${grid}L END"
+      s"CASE WHEN $x <= ${phi}L THEN 0L " +
+        s"ELSE ($x - ${phi}L + ${sampleGrid - 1}L) DIV ${sampleGrid}L END"
     exportOffsets(spark, sfDir)
       .withColumn("j0", expr(below("start_offset")))
       .withColumn("n_hits",
@@ -2603,7 +2574,7 @@ object TrainingPrep {
       .withColumn("sample_idx",
         explode(expr("sequence(j0, j0 + n_hits - 1L)")))
       .select(col("sample_idx").cast("long").as("sample_idx"),
-        (lit(phi) + col("sample_idx") * grid).cast("long").as("position"),
+        (lit(phi) + col("sample_idx") * sampleGrid).cast("long").as("position"),
         col("doc_id"), col("start_offset"), col("n_bytes"),
         col("n_hits").cast("long").as("n_hits"))
   }
@@ -2624,20 +2595,18 @@ object TrainingPrep {
     * Scale shape: one aggregate over the q305 assignment frame;
     * everything after is single-row arithmetic.
     */
-  def packingPolicyCompare(
-      spark: SparkSession, sfDir: String,
-      capacity: Int = 4096, chunkSize: Int = 256): DataFrame =
-    packedAssignments(spark, sfDir, capacity, chunkSize)
+  def packingPolicyCompare(spark: SparkSession, sfDir: String): DataFrame =
+    packedAssignments(spark, sfDir)
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("item")).cast("long").as("total_items"),
         countDistinct(col("window_id")).cast("long").as("bins_ffd"))
-      .withColumn("capacity", lit(capacity.toLong))
+      .withColumn("capacity", lit(packCapacity.toLong))
       .withColumn("bins_lb",
-        expr(s"(total_items + ${capacity - 1}L) DIV ${capacity}L"))
+        expr(s"(total_items + ${packCapacity - 1}L) DIV ${packCapacity}L"))
       .withColumn("ffd_util_ppm",
-        expr(s"total_items * 1000000 DIV (bins_ffd * ${capacity}L)"))
+        expr(s"total_items * 1000000 DIV (bins_ffd * ${packCapacity}L)"))
       .withColumn("lb_util_ppm",
-        expr(s"total_items * 1000000 DIV (bins_lb * ${capacity}L)"))
+        expr(s"total_items * 1000000 DIV (bins_lb * ${packCapacity}L)"))
       .withColumn("overhead_ppm",
         expr("(bins_ffd - bins_lb) * 1000000 DIV bins_lb"))
       .select(col("capacity"), col("n_docs"), col("total_items"),
@@ -2659,16 +2628,14 @@ object TrainingPrep {
     * one doc-grain aggregate re-keyed once onto the bounded source
     * domain — no new shuffle beyond the census itself.
     */
-  def strideEfficiency(
-      spark: SparkSession, sfDir: String,
-      win: Int = chunkWin, stride: Int = chunkStride): DataFrame = {
-    val perDoc = slidingChunks(spark, sfDir, win, stride)
+  def strideEfficiency(spark: SparkSession, sfDir: String): DataFrame = {
+    val perDoc = slidingChunks(spark, sfDir)
       .groupBy(col("doc_id"))
       .agg(max(col("n_tokens")).cast("long").as("n_tokens"),
         max(col("n_chunks")).cast("long").as("n_chunks"),
         sum(col("len_tok")).cast("long").as("encoded_tokens"),
         sum(when(col("chunk_idx") > 0L &&
-          col("len_tok") < (win / 2).toLong, 1L).otherwise(0L))
+          col("len_tok") < (chunkWin / 2).toLong, 1L).otherwise(0L))
           .cast("long").as("runt_chunks"))
     perDoc
       .join(Tables.load(spark, sfDir, "documents")
@@ -2705,18 +2672,14 @@ object TrainingPrep {
     * the id-domain guard (`require` max id = n−1) fails loudly if
     * the corpus isn't contiguously keyed rather than skewing draws.
     */
-  def negativeSamples(
-      spark: SparkSession, sfDir: String,
-      k: Int = 4, m: Int = 8): DataFrame =
-    negativeSamplesOn(Tables.load(spark, sfDir, "documents"), k, m)
+  def negativeSamples(spark: SparkSession, sfDir: String): DataFrame =
+    negativeSamplesOn(Tables.load(spark, sfDir, "documents"))
 
   /** The q371 core over any `(doc_id, source)` frame — split out so
     * the spec can drive a tiny corpus where the cross-source filter
     * genuinely leaves anchors short of k.
     */
-  def negativeSamplesOn(
-      frame: DataFrame, k: Int = 4, m: Int = 8): DataFrame = {
-    require(m >= k && k >= 1, "need m >= k >= 1 candidates")
+  def negativeSamplesOn(frame: DataFrame): DataFrame = {
     val docs = frame.select(col("doc_id"), col("source"))
     val bounds = docs.agg(count(lit(1)).cast("long").as("n"),
       max(col("doc_id")).cast("long").as("mx")).head()
@@ -2725,7 +2688,7 @@ object TrainingPrep {
       "negative sampling assumes >= 2 contiguous doc ids [0, n)")
     val cand = docs
       .select(col("doc_id").as("anchor_id"), col("source").as("anchor_src"),
-        explode(array((1 to m).map(lit): _*)).as("j"))
+        explode(array((1 to 8).map(lit): _*)).as("j"))
       .withColumn("off",
         conv(substring(md5(concat(lit("neg:"),
           col("anchor_id").cast("string"), lit(":"),
@@ -2740,7 +2703,7 @@ object TrainingPrep {
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("anchor_id")).orderBy(col("j").asc))
         .cast("long"))
-      .where(col("rank") <= k.toLong)
+      .where(col("rank") <= 4L)
       .select(col("anchor_id"), col("rank"), col("neg_id"), col("neg_src"))
     val kept = negs.groupBy(col("anchor_id"))
       .agg(count(lit(1)).cast("long").as("n_kept"))
@@ -2748,10 +2711,9 @@ object TrainingPrep {
   }
 
   /** The q363 core over any `(doc_id, text)` frame. */
-  def merkleManifestOn(docs: DataFrame, shardDocs: Long = 64L): DataFrame = {
-    require(shardDocs >= 1L, "shard size is a positive doc count")
+  def merkleManifestOn(docs: DataFrame): DataFrame = {
     val shards = docs
-      .select(expr(s"doc_id DIV $shardDocs").as("shard_id"), col("doc_id"),
+      .select(expr("doc_id DIV 64").as("shard_id"), col("doc_id"),
         md5(TextAnalysis.normalizedText(col("text"))).as("leaf"),
         length(col("text")).cast("long").as("nch"))
       .groupBy(col("shard_id"))

@@ -34,9 +34,9 @@ object Sinks {
     * path (`src/nodejs/mapper.js:71-79`); Tables.csv reads them back
     * transparently.
     */
-  def writeCsv(df: DataFrame, path: String, header: Boolean = false,
+  def writeCsv(df: DataFrame, path: String,
       codec: Option[String] = None): Unit = {
-    val w = df.write.mode("overwrite").option("header", header.toString)
+    val w = df.write.mode("overwrite").option("header", "false")
     codec.foreach(c => w.option("compression", c))
     w.csv(path)
   }

@@ -1441,9 +1441,7 @@ object EventStream {
     * frame pins once; every delay arm is a conditional sum over it,
     * landing on the bounded delay-grid domain.
     */
-  def watermarkDelayPlanner(
-      spark: SparkSession, sfDir: String,
-      delaysSec: Seq[Long] = Seq(0L, 60L, 120L, 300L, 600L)): DataFrame = {
+  def watermarkDelayPlanner(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = graft.sources.Tables.load(spark, sfDir, "events")
       .select(col("event_id"), unix_micros(col("ts")).as("t"))
       .withColumn("arr", col("t") + expr(
@@ -1456,7 +1454,7 @@ object EventStream {
       when(col("wm").isNull || col("wm") <= col("t"), 0L)
         .otherwise(col("wm") - col("t")).as("lt"))
       .localCheckpoint(true) // read once per delay arm
-    delaysSec.map { d =>
+    Seq(0L, 60L, 120L, 300L, 600L).map { d =>
       late.agg(
         count(lit(1)).cast("long").as("n_events"),
         sum(when(col("lt") > 0L, 1L).otherwise(0L)).cast("long")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -104,9 +104,25 @@ object ScalingProbe {
     val probes = resolve(names, variants(nDocs), graft.SparkEntry.queries)
     spark.sparkContext.setLogLevel("ERROR")
 
-    // K× documents: copy c Caesar-ciphers the TEXT (bijective letter
-    // translate, shift (3c)%26 — injective across c<26 since
-    // gcd(3,26)=1), the same device part/customer names use below.
+    // K× table: copy c of the sf0.1 table is `copy(table, c)`; the
+    // K copies are written as one table
+    def replicate(table: String)(copy: (DataFrame, Int) => DataFrame): Unit = {
+      val t = spark.read.parquet(s"$src/$table.parquet")
+      (0 until k).map(copy(t, _)).reduce(_ unionAll _).write.mode("overwrite")
+        .parquet(s"$big/$table.parquet")
+    }
+    // copy c's Caesar cipher: each alphabet of `text` shifts by
+    // (3c) mod its length — a bijection, injective across c < 26 for
+    // letters and c < 10 for digits since gcd(3,26) = gcd(3,10) = 1
+    def caesar(text: Column, c: Int, alphabets: String*): Column =
+      translate(text, alphabets.mkString, alphabets.map { a =>
+        val s = 3 * c % a.length
+        a.drop(s) + a.take(s)
+      }.mkString)
+    val letters = "abcdefghijklmnopqrstuvwxyz"
+
+    // K× documents: copy c Caesar-ciphers the TEXT, the same device
+    // part/customer names use below.
     // Round-16 correction: the original device ROTATED each doc's
     // words, but a rotation keeps every 5-gram shingle except the
     // ~8 at the two junctions — cross-copy Jaccard ≈ (n−8)/n ≈
@@ -120,43 +136,29 @@ object ScalingProbe {
     // a bigger corpus means MORE DISTINCT documents, the probe's
     // stated contract. Word counts, lengths, and per-copy
     // distributions are unchanged (bijective on letters).
-    // Round-16 advice: ALSO rotate digits (shift (3c)%10, injective
-    // across c<10 batches of the letter cycle — gcd(3,10)=1) — a
-    // letters-only cipher leaves digit-only/non-Latin tokens invariant,
-    // so an all-numeric 5-gram would be IDENTICAL in every copy and
-    // partially defeat the cross-copy-disjoint contract on
-    // numeric-heavy documents. Non-Latin scripts remain invariant
-    // (fixture text is ASCII; noted limitation beside the c<26 caveat).
-    val alphaD = "abcdefghijklmnopqrstuvwxyz"
-    val alphaDU = alphaD.toUpperCase
-    val digits = "0123456789"
-    val copies = (0 until k).map { c =>
-      val s = (3 * c) % 26
-      val sd = (3 * c) % 10
-      docs.select(
+    // Round-16 advice: ALSO rotate digits — a letters-only cipher
+    // leaves digit-only/non-Latin tokens invariant, so an all-numeric
+    // 5-gram would be IDENTICAL in every copy and partially defeat
+    // the cross-copy-disjoint contract on numeric-heavy documents.
+    // Non-Latin scripts remain invariant (fixture text is ASCII;
+    // noted limitation beside the c<26 caveat).
+    replicate("documents") { (t, c) =>
+      t.select(
         (col("doc_id") + lit(c * 10000000L)).as("doc_id"),
-        translate(col("text"),
-          alphaD + alphaDU + digits,
-          alphaD.drop(s) + alphaD.take(s) +
-            alphaDU.drop(s) + alphaDU.take(s) +
-            digits.drop(sd) + digits.take(sd)).as("text"),
+        caesar(col("text"), c, letters, letters.toUpperCase, "0123456789")
+          .as("text"),
         col("lang"), col("n_chars"), col("source"))
     }
-    copies.reduce(_ unionAll _).write.mode("overwrite")
-      .parquet(s"$big/documents.parquet")
 
     // K× embeddings: copy c rotates the vector by c positions
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
-    val embCopies = (0 until k).map { c =>
+    replicate("embeddings") { (t, c) =>
       val v = col("embedding"); val n = size(v)
-      emb.select(
+      t.select(
         (col("vec_id") + lit(c * 10000000L)).as("vec_id"),
         concat(slice(v, lit(c % 64 + 1), n - lit(c % 64)),
           slice(v, lit(1), lit(c % 64))).as("embedding"),
         col("label"))
     }
-    embCopies.reduce(_ unionAll _).write.mode("overwrite")
-      .parquet(s"$big/embeddings.parquet")
 
     // K× events: copy c shifts TIME by c*35 days (shift expression
     // adapts to the fixture's observed ts encoding — raw long nanos
@@ -167,26 +169,21 @@ object ScalingProbe {
     // stays constant (growing density instead would grow the true
     // OUTPUT of time-window operators quadratically, which measures
     // the workload, not the operator).
-    val ev = spark.read.parquet(s"$src/events.parquet")
-    val tsIsLong = ev.schema("ts").dataType ==
-      org.apache.spark.sql.types.LongType
-    (0 until k).map { c =>
+    replicate("events") { (t, c) =>
       val shifted =
-        if (tsIsLong) col("ts") + lit(c * 35L * 86400L * 1000000000L)
+        if (t.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+          col("ts") + lit(c * 35L * 86400L * 1000000000L)
         else expr(s"ts + INTERVAL ${c * 35} DAYS")
-      ev.withColumn("event_id", col("event_id") + lit(c * 100000000L))
+      t.withColumn("event_id", col("event_id") + lit(c * 100000000L))
         .withColumn("user_id", col("user_id") + lit(c * 1000000L))
         .withColumn("ts", shifted)
-    }.reduce(_ unionAll _).write.mode("overwrite")
-      .parquet(s"$big/events.parquet")
+    }
 
     // K× orders: disjoint key/customer ranges per copy
-    val ord = spark.read.parquet(s"$src/orders.parquet")
-    (0 until k).map { c =>
-      ord.withColumn("o_orderkey", col("o_orderkey") + lit(c * 100000000L))
+    replicate("orders") { (t, c) =>
+      t.withColumn("o_orderkey", col("o_orderkey") + lit(c * 100000000L))
         .withColumn("o_custkey", col("o_custkey") + lit(c * 1000000L))
-    }.reduce(_ unionAll _).write.mode("overwrite")
-      .parquet(s"$big/orders.parquet")
+    }
 
     // K× customer / part: disjoint key ranges per copy (q108/q115
     // mutate and join on c_custkey; q111 blocks on p_name — names
@@ -196,46 +193,32 @@ object ScalingProbe {
     // bigger registry means MORE DISTINCT people, not K copies of
     // the same person — repeating names would grow q283's TRUE match
     // output quadratically (workload, not operator)
-    val alphaC = "abcdefghijklmnopqrstuvwxyz"
-    val cust = spark.read.parquet(s"$src/customer.parquet")
-    (0 until k).map { c =>
-      val s = (3 * c) % 26
-      cust.withColumn("c_custkey", col("c_custkey") + lit(c * 1000000L))
-        .withColumn("c_name",
-          translate(col("c_name"), alphaC, alphaC.drop(s) + alphaC.take(s)))
-    }.reduce(_ unionAll _).write.mode("overwrite")
-      .parquet(s"$big/customer.parquet")
+    replicate("customer") { (t, c) =>
+      t.withColumn("c_custkey", col("c_custkey") + lit(c * 1000000L))
+        .withColumn("c_name", caesar(col("c_name"), c, letters))
+    }
     // part names Caesar-cipher per copy (bijective translate keeps
     // within-copy edit distances intact, pushes cross-copy distances
     // far above the match threshold) — a bigger catalog means MORE
     // DISTINCT names, not the same 64 names at K× multiplicity;
     // repeating them K× would grow the TRUE output quadratically
     // (workload, not operator — the events-density rule above)
-    val alpha = "abcdefghijklmnopqrstuvwxyz"
-    val part = spark.read.parquet(s"$src/part.parquet")
-    (0 until k).map { c =>
-      val s = (3 * c) % 26
-      part.withColumn("p_partkey", col("p_partkey") + lit(c * 1000000L))
-        .withColumn("p_name",
-          translate(col("p_name"), alpha, alpha.drop(s) + alpha.take(s)))
-    }.reduce(_ unionAll _).write.mode("overwrite")
-      .parquet(s"$big/part.parquet")
+    replicate("part") { (t, c) =>
+      t.withColumn("p_partkey", col("p_partkey") + lit(c * 1000000L))
+        .withColumn("p_name", caesar(col("p_name"), c, letters))
+    }
 
     // K× lineitem / supplier: key shifts aligned with orders/customer
     // so joins stay consistent; nationkeys untouched — the q124 graph
     // keeps its 25 nodes while edge weights grow K× (more trade,
     // same nations — the realistic growth axis)
-    val li = spark.read.parquet(s"$src/lineitem.parquet")
-    (0 until k).map { c =>
-      li.withColumn("l_orderkey", col("l_orderkey") + lit(c * 100000000L))
+    replicate("lineitem") { (t, c) =>
+      t.withColumn("l_orderkey", col("l_orderkey") + lit(c * 100000000L))
         .withColumn("l_suppkey", col("l_suppkey") + lit(c * 1000000L))
-    }.reduce(_ unionAll _).write.mode("overwrite")
-      .parquet(s"$big/lineitem.parquet")
-    val sup = spark.read.parquet(s"$src/supplier.parquet")
-    (0 until k).map { c =>
-      sup.withColumn("s_suppkey", col("s_suppkey") + lit(c * 1000000L))
-    }.reduce(_ unionAll _).write.mode("overwrite")
-      .parquet(s"$big/supplier.parquet")
+    }
+    replicate("supplier") { (t, c) =>
+      t.withColumn("s_suppkey", col("s_suppkey") + lit(c * 1000000L))
+    }
     // nation / region are FIXED dims (25 / 5 rows at any SF): copy
     // them through unreplicated so FK-closure operators (q128) run
     for (t <- Seq("nation", "region"))

@@ -21,6 +21,16 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(diff == 0)
   }
 
+  test("the HOF reference is not rewritten to DotProduct") {
+    // the differential cases compare two formulations only while the
+    // optimizer leaves dotHof as aggregate(zip_with(...))
+    val e = graft.sources.Tables.load(spark, SparkTestSession.sf, "embeddings")
+    val plan = e.select(Vectors.dotHof(col("embedding"), col("embedding")))
+      .queryExecution.optimizedPlan.toString.toLowerCase
+    assert(!plan.contains("dotproduct"), plan)
+    assert(plan.contains("aggregate(zip_with"), plan)
+  }
+
   test("DotProduct interpreted eval matches codegen path") {
     val v = Seq((Array(1.5f, -2.0f, 3.25f), Array(2.0f, 4.0f, -1.0f)))
       .toDF("a", "b")
