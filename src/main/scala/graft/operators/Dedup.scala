@@ -2455,7 +2455,7 @@ object Dedup {
         .localCheckpoint(true) // feeds the batch census AND the verdict
       val batchCensus = newSh.groupBy(col("sh"))
         .agg(count(lit(1)).cast("long").as("n_batch"))
-      newSh.join(census, Seq("sh"), "left")
+      val verdict = newSh.join(census, Seq("sh"), "left")
         .join(batchCensus, "sh")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).cast("long").as("n_shingles"),
@@ -2465,6 +2465,11 @@ object Dedup {
             .otherwise(0L)).cast("long").as("n_batch_dup"))
         .withColumn("dup_ppm",
           expr("(n_hist_dup + n_batch_dup) * 1000000 DIV n_shingles"))
+      // An empty batch must not plan the census join: AQE prunes it
+      // once newSh reads empty, but the census broadcast job it already
+      // started keeps reading the files deleted below and fails.
+      // limit(0) optimizes to an empty relation that reads nothing.
+      (if (newSh.isEmpty) verdict.limit(0) else verdict)
         .localCheckpoint(true) // materialize before the artifact deletes
     } finally if (censusPath.isEmpty)
       Scratch.delete(spark, new java.io.File(path).getParent)

@@ -21,8 +21,22 @@ object ReferenceQueries {
     * is exact and order-independent — which makes the Spark result
     * hash-identical to the DuckDB oracle regardless of partitioning
     * (the IEEE-754 accumulation-order hazard flagged in SURVEY.md §7.4).
+    *
+    * The sum runs over the unscaled cents as a long (Spark's
+    * `DecimalAggregates` rewrite, taken up to precision 18): a
+    * DECIMAL(28,2) buffer is a byte array, which turns off the fast
+    * hash map in every aggregate that holds it. The result is the
+    * same double bit for bit: `DECIMAL(28,2)` and the rebuilt
+    * decimal both convert through `BigDecimal.doubleValue` of the same
+    * unscaled value. A sum past 2^63 cents (about 9.2e16) overflows
+    * the long, which an ANSI session reports as an error.
     */
-  def moneySum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
+  def moneySum(c: Column): Column = {
+    import org.apache.spark.sql.catalyst.expressions.{MakeDecimal, UnscaledValue}
+    import org.apache.spark.sql.graftshim.{columnToExpr, exprToColumn}
+    val cents = sum(exprToColumn(UnscaledValue(columnToExpr(c.cast(DecimalType(18, 2))))))
+    exprToColumn(MakeDecimal(columnToExpr(cents), 28, 2)).cast("double")
+  }
 
   /** Scan 1a shape: `SELECT pageURL, pageRank FROM rankings WHERE
     * pageRank > 1000` (`/root/reference/README.md:139`) on `orders`.

@@ -95,11 +95,11 @@ object Relational {
       graft.sinks.Sinks.writeBucketed(
         Tables.load(spark, sfDir, "lineitem")
           .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
-        liT, "l_orderkey", 8)
+        liT, "l_orderkey")
       graft.sinks.Sinks.writeBucketed(
         Tables.load(spark, sfDir, "orders")
           .select(col("o_orderkey"), col("o_orderpriority")),
-        oT, "o_orderkey", 8)
+        oT, "o_orderkey")
       revenueByPriority(
         spark.table(liT).hint("merge")
           .join(spark.table(oT).hint("merge"),

@@ -616,7 +616,7 @@ object TextAnalysis {
       for (_ <- 1 to ulmRounds) {
         val usage = words
           .select(col("w"), col("c"), typedlit(costs).as("vm"))
-          .select(col("c"), expr(ulmViterbiExpr(ulmMaxPiece)).as("path"))
+          .select(col("c"), expr(ulmViterbiExpr("bp")).as("path"))
           .select(col("c"), explode(split(col("path"), " ")).as("piece"))
           .groupBy(col("piece")).agg(sum(col("c")).cast("long").as("u"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -665,7 +665,7 @@ object TextAnalysis {
       val encoded = ulmWords(spark, sfDir)
         .select(col("w"), typedlit(vm).as("vm"))
         .select(col("w"),
-          expr(ulmViterbiExpr(ulmMaxPiece, "bn")).as("n_pieces"))
+          expr(ulmViterbiExpr("bn")).as("n_pieces"))
       Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"),
           explode(normWords(col("text"))).as("w"))
@@ -681,10 +681,11 @@ object TextAnalysis {
   /** Row-local Viterbi over one dictionary word `w` under the map
     * column `vm` (piece → micro-nat cost): nested `aggregate` HOFs —
     * outer over positions building the best-state array, inner over
-    * the <=maxPiece last-piece lengths — with the (cost, n, path)
-    * struct total order doing both optimization and tie-break.
+    * the <=ulmMaxPiece last-piece lengths — with the (cost, n, path)
+    * struct total order doing both optimization and tie-break; `field`
+    * picks the best state's path (`bp`) or piece count (`bn`).
     */
-  private def ulmViterbiExpr(maxPiece: Int, field: String = "bp"): String = {
+  private def ulmViterbiExpr(field: String): String = {
     val piece = "substring(w, i - k + 1, k)"
     val prev = "element_at(acc, i - k + 1)"
     val cand = s"""named_struct(
@@ -697,7 +698,7 @@ object TextAnalysis {
          array(named_struct('bc', CAST(0 AS BIGINT),
            'bn', CAST(0 AS BIGINT), 'bp', '')),
          (acc, i) -> acc || array(
-           aggregate(sequence(1, least($maxPiece, i)),
+           aggregate(sequence(1, least($ulmMaxPiece, i)),
              named_struct('bc', CAST(4611686018427387904 AS BIGINT),
                'bn', CAST(0 AS BIGINT), 'bp', ''),
              (best, k) -> CASE

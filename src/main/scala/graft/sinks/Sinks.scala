@@ -72,15 +72,15 @@ object Sinks {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** Bucketed catalog table: rows hash-partitioned into `buckets`
-    * files per partition by `bucketCol`, sorted within buckets. Two
+  /** Bucketed catalog table: rows hash-partitioned into 8 files per
+    * partition by `bucketCol`, sorted within buckets. Two
     * tables bucketed the same way join WITHOUT any shuffle exchange —
     * the co-located-join strategy for repeated fact-fact joins at
     * 100 TB (pay the shuffle once at write time, never again at read).
     * RelationalSpec asserts the exchange-free plan.
     */
   def writeBucketed(
-      df: DataFrame, table: String, bucketCol: String, buckets: Int): Unit = {
+      df: DataFrame, table: String, bucketCol: String): Unit = {
     val spark = df.sparkSession
     // true overwrite: a location orphaned by a previous session (the
     // in-memory catalog forgets tables on exit, files persist) blocks
@@ -91,7 +91,7 @@ object Sinks {
     loc.getFileSystem(spark.sessionState.newHadoopConf()).delete(loc, true)
     df.write.mode("overwrite")
       .format("parquet")
-      .bucketBy(buckets, bucketCol)
+      .bucketBy(8, bucketCol)
       .sortBy(bucketCol)
       .saveAsTable(table)
   }

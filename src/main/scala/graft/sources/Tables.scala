@@ -58,11 +58,11 @@ object Tables {
     // schema-evolution entry exists to prove exactly this). Round 9
     // hard-coded the nanos contract and lost 58/162 entries when the
     // fixtures regenerated.
-    if (name == "events") df.withColumn("ts", normalizeTs(df, "ts"))
+    if (name == "events") df.withColumn("ts", normalizeTs(df))
     else df
   }
 
-  /** Normalize an event-time column to session-TZ TimestampType from
+  /** Normalize the event-time column `ts` to session-TZ TimestampType from
     * whatever physical encoding the parquet generation carries:
     *   - LongType        → nanos-as-long (legacy NANOS fixture): exact
     *                       integer DIV 1000 → micros (double division
@@ -74,14 +74,14 @@ object Tables {
     * Any other type is a fixture-contract break and fails LOUDLY in
     * one place instead of 60 scattered DATATYPE_MISMATCH stacks.
     */
-  def normalizeTs(df: DataFrame, colName: String): org.apache.spark.sql.Column = {
+  def normalizeTs(df: DataFrame): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-    df.schema(colName).dataType match {
-      case LongType         => timestamp_micros(expr(s"$colName DIV 1000"))
-      case TimestampNTZType => col(colName).cast(TimestampType)
-      case TimestampType    => col(colName)
+    df.schema("ts").dataType match {
+      case LongType         => timestamp_micros(expr("ts DIV 1000"))
+      case TimestampNTZType => col("ts").cast(TimestampType)
+      case TimestampType    => col("ts")
       case other => throw new IllegalStateException(
-        s"fixture contract changed: events.$colName is $other — expected " +
+        s"fixture contract changed: events.ts is $other — expected " +
           "LongType (legacy TIMESTAMP(NANOS) via nanosAsLong), " +
           "TIMESTAMP_NTZ (TIMESTAMP(MICROS/MILLIS, isAdjustedToUTC=false)) " +
           "or TIMESTAMP; teach Tables.normalizeTs the new encoding")
@@ -103,7 +103,7 @@ object Tables {
     }.toMap
     // the one column with encoding history; normalizeTs throws the
     // single clear "fixture contract changed" message on drift
-    normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"), "ts")
+    normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
     observed.map { case (n, s) =>
       n -> s.fields.map(f => s"${f.name}:${f.dataType.simpleString}")
         .mkString(",")
@@ -146,6 +146,17 @@ object Tables {
     * unparseable lines; the dropped count is (total file lines -
     * surviving rows), observable via [[droppedLineCount]] when the
     * caller needs the reference's `line_count` metric.
+    *
+    * Lines take one of two paths ([[PlainCsvFileFormat]]). A plain
+    * line (ASCII, no `"`, no control byte but tab, not blank) is split
+    * on `,` in one pass, as the reference's `line.split(',')`
+    * (`mapper.py:50-54`), and its tokens go to Spark's own value
+    * conversion; any other line goes through Spark's Univocity parser.
+    * Rows and drops equal `spark.read.csv` with the same schema and
+    * mode bit for bit, so the drop set still depends on the selected
+    * columns and on `spark.sql.csv.parser.columnPruning.enabled`:
+    * with pruning, a malformed field that no selected column reads
+    * drops nothing (ROADMAP direction 6 keeps that hazard open).
     */
   def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     csv(spark, Seq(path), schema)
@@ -156,9 +167,10 @@ object Tables {
     */
   def csv(spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame =
     spark.read
+      .format(classOf[PlainCsvFileFormat].getName)
       .schema(schema)
       .option("mode", "DROPMALFORMED")
-      .csv(paths: _*)
+      .load(paths: _*)
 
   /** CSV read with an `observe()` row counter attached: the returned
     * Observation yields the exact surviving-row count ("rows_out")

@@ -37,7 +37,7 @@ object EventStream {
       // file stream source requires a directory; glob selects the table
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir)
-    stream.withColumn("ts", graft.sources.Tables.normalizeTs(stream, "ts"))
+    stream.withColumn("ts", graft.sources.Tables.normalizeTs(stream))
   }
 
   /** Streaming hourly tumbling-window aggregate over the events file
@@ -310,7 +310,7 @@ object EventStream {
       val out = s"$dir/out"
       val ev = spark.read.parquet(s"$sfDir/events.parquet")
       val evTs = ev.withColumn("ts",
-        graft.sources.Tables.normalizeTs(ev, "ts"))
+        graft.sources.Tables.normalizeTs(ev))
       evTs.select(col("event_type"),
           date_trunc("hour", col("ts")).as("hour"))
         .groupBy(col("event_type"))
@@ -916,7 +916,7 @@ object EventStream {
     val df = graft.operators.Scratch.withScratch(spark, "q265_late", sfDir) { dir =>
       val ev = spark.read.parquet(s"$sfDir/events.parquet")
       val evTs = ev.withColumn("ts",
-        graft.sources.Tables.normalizeTs(ev, "ts"))
+        graft.sources.Tables.normalizeTs(ev))
       // three ordered batches by event_id mod 3. FileStreamSource
       // schedules files oldest-mtime-first, so batch order is pinned
       // by STAMPING each write's data files with an explicit,
@@ -1037,7 +1037,7 @@ object EventStream {
       val stateRoot = s"$dir/state"
       new java.io.File(stateRoot).mkdirs()
       val ev = spark.read.parquet(s"$sfDir/events.parquet")
-      ev.withColumn("ts", graft.sources.Tables.normalizeTs(ev, "ts"))
+      ev.withColumn("ts", graft.sources.Tables.normalizeTs(ev))
         .repartition(4, col("event_id"))
         .write.mode("overwrite").parquet(s"$dir/in")
       val sp = statePinnedSession(spark)

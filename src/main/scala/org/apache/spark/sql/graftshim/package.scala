@@ -20,4 +20,25 @@ package object graftshim {
     */
   def unloadAllStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
+
+  /** A Hadoop configuration shipped once to the executors, the way
+    * Spark's file sources ship theirs (`private[spark]`).
+    */
+  def broadcastConf(
+      sc: org.apache.spark.SparkContext,
+      conf: org.apache.hadoop.conf.Configuration): () => org.apache.hadoop.conf.Configuration = {
+    val b = org.apache.spark.util.SerializableConfiguration.broadcast(sc, conf)
+    () => b.value.value
+  }
+
+  /** Open a file split's line reader the way Spark's CSV source does:
+    * created with task interrupts deferred (`private[spark]` Utils), so
+    * an interrupt cannot leak a half-opened stream.
+    */
+  def openLines(
+      file: org.apache.spark.sql.execution.datasources.PartitionedFile,
+      conf: org.apache.hadoop.conf.Configuration
+  ): org.apache.spark.sql.execution.datasources.HadoopFileLinesReader =
+    org.apache.spark.util.Utils.createResourceUninterruptiblyIfInTaskThread(
+      new org.apache.spark.sql.execution.datasources.HadoopFileLinesReader(file, None, conf))
 }

@@ -1447,4 +1447,29 @@ class DedupSpec extends AnyFunSuite {
         s"exchange carries document text: $line")
     }
   }
+
+  test("q350 on empty input: no task fails reading the census it deletes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-q350-empty").toString
+    spark.read.parquet(s"${SparkTestSession.sf}/documents.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val failed = new java.util.concurrent.atomic.AtomicInteger
+    val sl = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.reason != org.apache.spark.Success) failed.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(sl)
+    try {
+      // three runs: each one used to fail a census read
+      (1 to 3).foreach { _ =>
+        assert(SparkEntry.queries("q350_dup_span_incremental")(spark, dir).collect().isEmpty)
+      }
+      // a job the entry leaves running ends after it returns: wait for it
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (sc.statusTracker.getActiveJobIds().nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      org.apache.spark.graftbus.drainListenerBus(sc)
+    } finally sc.removeSparkListener(sl)
+    assert(failed.get == 0)
+  }
 }

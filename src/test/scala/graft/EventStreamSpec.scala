@@ -195,7 +195,7 @@ class EventStreamSpec extends AnyFunSuite {
           .schema(observed)
           .option("maxFilesPerTrigger", "1")
           .parquet(s"$base/in")
-        s.withColumn("ts", graft.sources.Tables.normalizeTs(s, "ts"))
+        s.withColumn("ts", graft.sources.Tables.normalizeTs(s))
       }
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))

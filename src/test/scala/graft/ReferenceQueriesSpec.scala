@@ -40,6 +40,45 @@ class ReferenceQueriesSpec extends AnyFunSuite {
     assert(got == Map("clic" -> 3.70, "view" -> 3.90))
   }
 
+  test("moneySum over long cents is bit-identical to the DECIMAL(28,2) sum (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.apache.spark.sql.types.DecimalType
+    def decimalSum(c: org.apache.spark.sql.Column) =
+      sum(c.cast(DecimalType(18, 2))).cast("double")
+    val two52 = (1L << 52).toDouble / 100
+    val value: Gen[Option[Double]] = Gen.frequency(
+      4 -> Gen.chooseNum(-99999999L, 99999999L).map(c => Some(c / 100.0)),
+      2 -> Gen.chooseNum(-1e6, 1e6).map(Some(_)), // off-cent: the cast rounds
+      1 -> Gen.oneOf(0.145, 1.005, -2.675).map(Some(_)),
+      1 -> Gen.oneOf(-1.0, 1.0).flatMap(s =>
+        Gen.chooseNum(two52, 2 * two52).map(v => Some(s * v))), // ±2^52…2^53 cents
+      1 -> Gen.const(None))
+    val rows = Gen.listOf(Gen.zip(Gen.choose(0, 9), value))
+    // fixed groups: all null; cent sums just under, at and past 2^52
+    // and 2^53; a sum near 5e18 cents
+    val edges = Seq[(Int, Option[Double])](
+      (10, None), (10, None),
+      (11, Some(two52)), (11, Some(-0.01)), (12, Some(two52)), (12, Some(two52)),
+      (13, Some(-2 * two52)), (13, Some(-0.03)),
+      (14, Some(9.9e15)), (14, Some(9.9e15)), (14, Some(9.9e15)), (14, Some(9.9e15)),
+      (14, Some(9.9e15)), (15, Some(0.145)), (15, Some(1.005)), (15, Some(-2.675)))
+    def bits(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getInt(0) ->
+        (if (r.isNullAt(1)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(1)))))
+        .toMap
+    val prop = Prop.forAll(rows) { sample =>
+      val df = (sample ++ edges).toDF("g", "x")
+      val got = bits(df.groupBy("g").agg(ReferenceQueries.moneySum(col("x"))))
+      got == bits(df.groupBy("g").agg(decimalSum(col("x")))) &&
+        got(10).isEmpty && got(12).isDefined
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, res.status.toString)
+    // the global (no-key) aggregate of no rows is null on both sides
+    val none = Seq.empty[Option[Double]].toDF("x")
+    assert(none.agg(ReferenceQueries.moneySum(col("x"))).head().isNullAt(0))
+  }
+
   test("aggregation is invariant under partitioning (the reference's core algebra)") {
     // The whole reference design rests on agg(data) == merge(parts.map(agg))
     // (SURVEY.md §5 property test). Re-partitioning must not change sums.

@@ -560,8 +560,8 @@ class RelationalSpec extends AnyFunSuite {
       .select(col("l_orderkey"), col("l_extendedprice"))
     val o = graft.sources.Tables.load(spark, sf, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"))
-    Sinks.writeBucketed(li, "li_bkt", "l_orderkey", 8)
-    Sinks.writeBucketed(o, "o_bkt", "o_orderkey", 8)
+    Sinks.writeBucketed(li, "li_bkt", "l_orderkey")
+    Sinks.writeBucketed(o, "o_bkt", "o_orderkey")
     // hint forces sort-merge (broadcast would bypass bucketing at this
     // tiny SF); with equal bucket counts SMJ needs no exchange
     val joined = spark.table("li_bkt").hint("merge")

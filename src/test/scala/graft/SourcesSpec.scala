@@ -282,7 +282,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(fromLong.schema("ts").dataType ==
       org.apache.spark.sql.types.TimestampType)
     // generation B: session-TZ timestamp
-    val asTs = live.withColumn("ts", Tables.normalizeTs(live, "ts"))
+    val asTs = live.withColumn("ts", Tables.normalizeTs(live))
     asTs.write.mode("overwrite").parquet(s"$base/genB/events.parquet")
     val fromTs = Tables.load(spark, s"$base/genB", "events")
     assert(fromTs.schema("ts").dataType ==
@@ -299,7 +299,7 @@ class SourcesSpec extends AnyFunSuite {
     // place with a diagnosable message, not 60 scattered analysis errors
     val bad = spark.range(1).selectExpr("cast(id as string) as ts")
     val e = intercept[IllegalStateException] {
-      Tables.normalizeTs(bad, "ts")
+      Tables.normalizeTs(bad)
     }
     assert(e.getMessage.contains("fixture contract changed"))
   }
