@@ -727,7 +727,7 @@ object Dedup {
     * (doc_id, mh_0..mh_63) layout the banding machinery consumes.
     */
   def readSignatures(spark: SparkSession, sigPath: String): DataFrame =
-    spark.read.parquet(sigPath).select(
+    Tables.parquet(spark, sigPath).select(
       col("doc_id") +:
         (0 until numHashes).map(i => col("sig")(i).as(s"mh_$i")): _*)
 
@@ -2437,42 +2437,39 @@ object Dedup {
     */
   def dupSpanIncremental(
       spark: SparkSession, sfDir: String,
-      censusPath: Option[String] = None): DataFrame = {
-    val path = censusPath.getOrElse(Scratch.dir(spark, "q350_census", sfDir))
-    try {
-      val docs = Tables.load(spark, sfDir, "documents")
-      // the q341 single-pass 64-bit hasher on both sides — the
-      // artifact stores (hash, count), ~16 B/span either way
-      def digested(side: DataFrame) = shingleHashes(side, 5).distinct()
-      // 1. "yesterday": persist the history span census
-      digested(docs.filter(col("doc_id") % newBatchModulus =!= 0))
-        .groupBy(col("sh"))
-        .agg(count(lit(1)).cast("long").as("n_hist"))
-        .write.mode("overwrite").parquet(path)
-      // 2. "today": census read back; only the new batch is shingled
-      val census = spark.read.parquet(path)
-      val newSh = digested(docs.filter(col("doc_id") % newBatchModulus === 0))
-        .localCheckpoint(true) // feeds the batch census AND the verdict
-      val batchCensus = newSh.groupBy(col("sh"))
-        .agg(count(lit(1)).cast("long").as("n_batch"))
-      val verdict = newSh.join(census, Seq("sh"), "left")
-        .join(batchCensus, "sh")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).cast("long").as("n_shingles"),
-          sum(when(col("n_hist").isNotNull, 1L).otherwise(0L))
-            .cast("long").as("n_hist_dup"),
-          sum(when(col("n_hist").isNull && col("n_batch") >= 2L, 1L)
-            .otherwise(0L)).cast("long").as("n_batch_dup"))
-        .withColumn("dup_ppm",
-          expr("(n_hist_dup + n_batch_dup) * 1000000 DIV n_shingles"))
-      // An empty batch must not plan the census join: AQE prunes it
-      // once newSh reads empty, but the census broadcast job it already
-      // started keeps reading the files deleted below and fails.
-      // limit(0) optimizes to an empty relation that reads nothing.
-      (if (newSh.isEmpty) verdict.limit(0) else verdict)
-        .localCheckpoint(true) // materialize before the artifact deletes
-    } finally if (censusPath.isEmpty)
-      Scratch.delete(spark, new java.io.File(path).getParent)
+      censusPath: Option[String] = None): DataFrame =
+    censusPath match {
+      case Some(path) => dupSpanVerdict(spark, sfDir, path).localCheckpoint(true)
+      case None => Scratch.withScratch(spark, "q350_census", sfDir)(
+        dupSpanVerdict(spark, sfDir, _))
+    }
+
+  private def dupSpanVerdict(spark: SparkSession, sfDir: String, path: String): DataFrame = {
+    val docs = Tables.load(spark, sfDir, "documents")
+    // the q341 single-pass 64-bit hasher on both sides — the
+    // artifact stores (hash, count), ~16 B/span either way
+    def digested(side: DataFrame) = shingleHashes(side, 5).distinct()
+    // 1. "yesterday": persist the history span census
+    digested(docs.filter(col("doc_id") % newBatchModulus =!= 0))
+      .groupBy(col("sh"))
+      .agg(count(lit(1)).cast("long").as("n_hist"))
+      .write.mode("overwrite").parquet(path)
+    // 2. "today": census read back; only the new batch is shingled
+    val census = Tables.parquet(spark, path)
+    val newSh = digested(docs.filter(col("doc_id") % newBatchModulus === 0))
+      .localCheckpoint(true) // feeds the batch census AND the verdict
+    val batchCensus = newSh.groupBy(col("sh"))
+      .agg(count(lit(1)).cast("long").as("n_batch"))
+    newSh.join(census, Seq("sh"), "left")
+      .join(batchCensus, "sh")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).cast("long").as("n_shingles"),
+        sum(when(col("n_hist").isNotNull, 1L).otherwise(0L))
+          .cast("long").as("n_hist_dup"),
+        sum(when(col("n_hist").isNull && col("n_batch") >= 2L, 1L)
+          .otherwise(0L)).cast("long").as("n_batch_dup"))
+      .withColumn("dup_ppm",
+        expr("(n_hist_dup + n_batch_dup) * 1000000 DIV n_shingles"))
   }
 
   /** The q351 driver entry: CLUSTER CANONICALIZATION — the selection

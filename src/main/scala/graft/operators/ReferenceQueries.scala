@@ -25,16 +25,19 @@ object ReferenceQueries {
     * The sum runs over the unscaled cents as a long (Spark's
     * `DecimalAggregates` rewrite, taken up to precision 18): a
     * DECIMAL(28,2) buffer is a byte array, which turns off the fast
-    * hash map in every aggregate that holds it. The result is the
-    * same double bit for bit: `DECIMAL(28,2)` and the rebuilt
-    * decimal both convert through `BigDecimal.doubleValue` of the same
-    * unscaled value. A sum past 2^63 cents (about 9.2e16) overflows
-    * the long, which an ANSI session reports as an error.
+    * hash map in every aggregate that holds it. A double that is a
+    * whole number of cents below 2^40 gives its cents without a
+    * decimal string ([[graft.functions.MoneyCents]] has the exactness
+    * argument); any other value takes `cast(x as decimal(18,2))`. The
+    * result is the same double bit for bit: `DECIMAL(28,2)` and the
+    * rebuilt decimal both convert through `BigDecimal.doubleValue` of
+    * the same unscaled value. A sum past 2^63 cents (about 9.2e16)
+    * overflows the long, which an ANSI session reports as an error.
     */
   def moneySum(c: Column): Column = {
-    import org.apache.spark.sql.catalyst.expressions.{MakeDecimal, UnscaledValue}
+    import org.apache.spark.sql.catalyst.expressions.MakeDecimal
     import org.apache.spark.sql.graftshim.{columnToExpr, exprToColumn}
-    val cents = sum(exprToColumn(UnscaledValue(columnToExpr(c.cast(DecimalType(18, 2))))))
+    val cents = sum(exprToColumn(graft.functions.MoneyCents(columnToExpr(c))))
     exprToColumn(MakeDecimal(columnToExpr(cents), 28, 2)).cast("double")
   }
 
@@ -397,7 +400,7 @@ object ReferenceQueries {
       .write.mode("overwrite").parquet(s"$dir/small")
     graft.sinks.Sinks.compactParquet(
       spark, s"$dir/small", s"$dir/compact", targetBytes = 256L << 10)
-    spark.read.parquet(s"$dir/compact")
+    Tables.parquet(spark, s"$dir/compact")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_rows"), moneySum(col("value")).as("sum_value"))
   }
@@ -557,7 +560,7 @@ object ReferenceQueries {
         .withColumn("z_value", zorderValue(col("user_id"), col("day_bin")))
       graft.sinks.Sinks.writeSortedParquetBy(
         ev, dir, Seq("z_value", "event_id"), partitions = 8)
-      spark.read.parquet(dir)
+      Tables.parquet(spark, dir)
         .select(col("event_id"), col("user_id"), col("day_bin"),
           col("z_value"))
     }

@@ -648,7 +648,7 @@ object Relational {
     mutated.union(inserted).write.mode("overwrite").parquet(s"$dir/v2")
 
     def fingered(path: String, side: String) =
-      spark.read.parquet(path).select(
+      Tables.parquet(spark, path).select(
         col("event_id"),
         md5(concat_ws("|", col("event_type"),
           col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))
@@ -1439,7 +1439,7 @@ object Relational {
   def mapStructFuncs(spark: SparkSession, sfDir: String): DataFrame =
     Scratch.withScratch(spark, "q95_nested", sfDir) { path =>
       nestedOrders(spark, sfDir).write.parquet(path)
-      spark.read.parquet(path).select(
+      Tables.parquet(spark, path).select(
         col("o_orderkey"),
         col("info.price").as("price"),
         col("info.meta.prio").as("prio"),

@@ -409,8 +409,8 @@ object Similarity {
     */
   def servePq(spark: SparkSession, codesPath: String, booksPath: String,
       q: DataFrame, k: Int): DataFrame = {
-    val codes = spark.read.parquet(codesPath)
-    val books = spark.read.parquet(booksPath)
+    val codes = Tables.parquet(spark, codesPath)
+    val books = Tables.parquet(spark, booksPath)
     val qdist = q
       .select(col("q_id"), pqSubspaceSplit(col("q")).as(Seq("s", "qs")))
       .join(broadcast(books), "s")
@@ -459,7 +459,7 @@ object Similarity {
       // stream schema probed from the file's batch schema (the same
       // adaptive contract as EventStream.readEvents — never declare a
       // physical encoding blind)
-      val embBatch = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val embBatch = Tables.parquet(spark, s"$sfDir/embeddings.parquet")
       val served = s"$dir/served"
       val q = spark.readStream.schema(embBatch.schema)
         .option("pathGlobFilter", "embeddings.parquet").parquet(sfDir)
@@ -483,7 +483,7 @@ object Similarity {
       // query frame (analysis only, nothing executes), so the serve
       // contract has exactly one definition (round-9 nit: the previous
       // field-by-field literal here could silently drift from servePq).
-      if (new java.io.File(served).exists()) spark.read.parquet(served)
+      if (new java.io.File(served).exists()) Tables.parquet(spark, served)
       else {
         val emptyQueries = embBatch
           .where(col("vec_id") < pqStreamQueries)
@@ -528,7 +528,7 @@ object Similarity {
       pqEncode(base, cents).write.mode("overwrite").parquet(s"$dir/codes")
       cents.write.mode("overwrite").parquet(s"$dir/books")
       // day 2: encode the delta against the PERSISTED books only
-      val books = spark.read.parquet(s"$dir/books")
+      val books = Tables.parquet(spark, s"$dir/books")
       pqEncode(corpus.filter(col("vec_id") >= pqBaseCount), books)
         .write.mode("append").parquet(s"$dir/codes")
       servePq(spark, s"$dir/codes", s"$dir/books",

@@ -417,7 +417,7 @@ object Sketches {
         .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").as("w"),
           count(lit(1)).as("n_events"))
       words.write.mode("overwrite").parquet(s"$dir/bitmap")
-      val idx = spark.read.parquet(s"$dir/bitmap")
+      val idx = Tables.parquet(spark, s"$dir/bitmap")
       val sizes = idx.groupBy(col("event_type"))
         .agg(sum(expr("bit_count(w)")).as("n_users"))
       val inter = idx.as("a").join(idx.as("b"),

@@ -659,7 +659,7 @@ object TextAnalysis {
       ulmTrainedVocab(spark, sfDir)
         .toDF("piece", "n_uses", "cost_micro")
         .write.mode("overwrite").parquet(s"$dir/vocab")
-      val vm = spark.read.parquet(s"$dir/vocab")
+      val vm = Tables.parquet(spark, s"$dir/vocab")
         .select(col("piece"), col("cost_micro")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val encoded = ulmWords(spark, sfDir)
@@ -1651,7 +1651,7 @@ object TextAnalysis {
             r.getString(3), r.getLong(4))))
         .toDF("merge_round", "left_sym", "right_sym", "merged", "n")
         .write.mode("overwrite").parquet(s"$dir/merges")
-      val baseDf = spark.read.parquet(s"$dir/merges")
+      val baseDf = Tables.parquet(spark, s"$dir/merges")
       val frozen = baseDf.orderBy(col("merge_round"))
         .select(col("left_sym"), col("right_sym"))
         .collect().toSeq.map(r => (r.getString(0), r.getString(1)))
@@ -1732,7 +1732,7 @@ object TextAnalysis {
       trainedMerges(spark, sfDir, rounds)
         .toDF("merge_round", "left_sym", "right_sym", "merged", "n")
         .write.mode("overwrite").parquet(s"$dir/merges")
-      val merges = spark.read.parquet(s"$dir/merges")
+      val merges = Tables.parquet(spark, s"$dir/merges")
         .orderBy(col("merge_round"))
         .select(col("left_sym"), col("right_sym"))
         .collect().toSeq

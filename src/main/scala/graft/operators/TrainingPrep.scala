@@ -836,7 +836,7 @@ object TrainingPrep {
         .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
           sum(col("x") * col("x")).as("sxx"))
       per.write.mode("overwrite").parquet(s"$dir/moments")
-      val back = spark.read.parquet(s"$dir/moments")
+      val back = Tables.parquet(spark, s"$dir/moments")
       val merged = back.agg(
         lit(-1L).as("shard"), sum(col("n")).as("n"),
         sum(col("sx")).as("sx"), sum(col("sxx")).as("sxx"))
@@ -941,7 +941,7 @@ object TrainingPrep {
         .select((col("doc_id") % 8).as("shard"), col("text"))
       hllRegisters(docs)
         .write.mode("overwrite").parquet(s"$dir/registers")
-      val back = spark.read.parquet(s"$dir/registers")
+      val back = Tables.parquet(spark, s"$dir/registers")
       val allRegs = back
         .unionByName(back.groupBy(col("idx")).agg(max(col("m")).as("m"))
           .select(lit(-1L).as("shard"), col("idx"), col("m")))

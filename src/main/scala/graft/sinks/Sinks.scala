@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
+import graft.sources.Tables
 
 /** Sink + metrics layer (SURVEY.md §2 O9, §3.1 step 11).
   *
@@ -118,7 +119,7 @@ object Sinks {
       if (f.getPath.getName.endsWith(".parquet")) total += f.getLen
     }
     val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-    (spark.read.parquet(inPath).coalesce(n), n)
+    (Tables.parquet(spark, inPath).coalesce(n), n)
   }
 
   /** Small-file compaction (q85): rewrite a parquet directory into

@@ -46,8 +46,11 @@ object Tables {
       scala.util.hashing.MurmurHash3.stringHash(sig))
   }
 
+  /** One fixture table (TESTDATA.md) through [[parquet]]: no Spark job
+    * runs to read its schema, so building the frame starts none.
+    */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = parquet(spark, s"$sfDir/$name.parquet")
     // events.ts ADAPTIVE INGESTION (round-10): the fixture's physical
     // encoding has drifted across regenerations — TIMESTAMP(NANOS)
     // (readable only as long via spark.sql.legacy.parquet.nanosAsLong,
@@ -60,6 +63,65 @@ object Tables {
     // fixtures regenerated.
     if (name == "events") df.withColumn("ts", normalizeTs(df))
     else df
+  }
+
+  /** `spark.read.parquet(path)` with the schema read on the driver, the
+    * way the reference's driver lists its objects once and hands the keys
+    * out (`src/python/driver.py:91-94`). Spark's own inference
+    * (`ParquetUtils.inferSchema` with `mergeSchema` off) reads one footer
+    * in a one-task job; this reads the same footer here, with Spark's
+    * own pieces: the file is chosen as Spark chooses it
+    * (`_common_metadata`, then `_metadata`, then the first data file by
+    * path), its footer is read without row groups, and
+    * `ParquetFileFormat.readSchemaFromFooter` takes the stored Spark
+    * schema or converts the parquet one under the session's settings
+    * (`nanosAsLong`, binary-as-string, INT96, NTZ inference). The
+    * schema is read again on every call: a path rewritten in place
+    * (perfbench's `uv_etl`) never meets a stale one.
+    *
+    * A path with no file to read (missing, a glob, empty) and a session
+    * that merges schemas read through `spark.read.parquet` unchanged, so
+    * they fail or merge exactly as before.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val sqlConf = spark.sessionState.conf
+    if (sqlConf.isParquetSchemaMergingEnabled) return None
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    // InMemoryFileIndex's leaves: hidden names (`_`, `.`) are skipped
+    // except the two summary files
+    def hidden(name: String) =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) &&
+        !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+    def leaves(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves(fs, _))
+    val files =
+      try leaves(fs, fs.getFileStatus(root)).sortBy(_.getPath.toString)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    def named(n: String) = files.find(_.getPath.getName == n)
+    named("_common_metadata").orElse(named("_metadata"))
+      .orElse(files.find(f => !Set("_common_metadata", "_metadata")(f.getPath.getName)))
+      .map { f =>
+        val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+          new ParquetToSparkSchemaConverter(sqlConf))
+      }
   }
 
   /** Normalize the event-time column `ts` to session-TZ TimestampType from
@@ -99,11 +161,11 @@ object Tables {
   def assertFixtureContract(
       spark: SparkSession, sfDir: String): Map[String, String] = {
     val observed = fixtureNames.map { n =>
-      n -> spark.read.parquet(s"$sfDir/$n.parquet").schema
+      n -> parquet(spark, s"$sfDir/$n.parquet").schema
     }.toMap
     // the one column with encoding history; normalizeTs throws the
     // single clear "fixture contract changed" message on drift
-    normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
+    normalizeTs(parquet(spark, s"$sfDir/events.parquet"))
     observed.map { case (n, s) =>
       n -> s.fields.map(f => s"${f.name}:${f.dataType.simpleString}")
         .mkString(",")
@@ -150,8 +212,13 @@ object Tables {
     * Lines take one of two paths ([[PlainCsvFileFormat]]). A plain
     * line (ASCII, no `"`, no control byte but tab, not blank) is split
     * on `,` in one pass, as the reference's `line.split(',')`
-    * (`mapper.py:50-54`), and its tokens go to Spark's own value
-    * conversion; any other line goes through Spark's Univocity parser.
+    * (`mapper.py:50-54`), and each field is typed once, straight from
+    * the line's bytes, when it has its strict form: `-?[0-9]+` for ints
+    * and longs, `-?[0-9]+(\.[0-9]+)?` for doubles (exact `m / 10^k` up to
+    * 15 significant digits, `Double.parseDouble` beyond), `yyyy-MM-dd`
+    * from year 1000 for dates, anything for strings, empty for null.
+    * Any other line (quotes, non-ASCII, `NaN`, `+5`, `1e3`, `2011-1-16`,
+    * `n/a`, a wrong field count) goes through Spark's Univocity parser.
     * Rows and drops equal `spark.read.csv` with the same schema and
     * mode bit for bit, so the drop set still depends on the selected
     * columns and on `spark.sql.csv.parser.columnPruning.enabled`:

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import graft.sources.Tables
 
 /** Structured Streaming layer. The reference's S3-event loop is
   * control-plane only (SURVEY.md §2 "Streaming semantics: none"), but
@@ -31,7 +32,7 @@ object EventStream {
     * build; zero cost at scale.
     */
   private def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val observed = spark.read.parquet(s"$sfDir/events.parquet")
+    val observed = Tables.parquet(spark, s"$sfDir/events.parquet")
     val stream = spark.readStream
       .schema(observed.schema)
       // file stream source requires a directory; glob selects the table
@@ -308,7 +309,7 @@ object EventStream {
   def streamAlerts(spark: SparkSession, sfDir: String): DataFrame =
     graft.operators.Scratch.withScratch(spark, "q254_alerts", sfDir) { dir =>
       val out = s"$dir/out"
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
+      val ev = Tables.parquet(spark, s"$sfDir/events.parquet")
       val evTs = ev.withColumn("ts",
         graft.sources.Tables.normalizeTs(ev))
       evTs.select(col("event_type"),
@@ -317,7 +318,7 @@ object EventStream {
         .agg(count(lit(1)).as("total_events"),
           countDistinct(col("hour")).as("n_hours"))
         .write.mode("overwrite").parquet(s"$dir/baseline")
-      val base = spark.read.parquet(s"$dir/baseline")
+      val base = Tables.parquet(spark, s"$dir/baseline")
       val q = hourlyStream(statePinnedSession(spark), sfDir).writeStream
         .outputMode(OutputMode.Complete())
         .option("checkpointLocation", s"$dir/ckpt")
@@ -914,7 +915,7 @@ object EventStream {
       spark: SparkSession, sfDir: String): (DataFrame, Long) = {
     var dropped = 0L
     val df = graft.operators.Scratch.withScratch(spark, "q265_late", sfDir) { dir =>
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
+      val ev = Tables.parquet(spark, s"$sfDir/events.parquet")
       val evTs = ev.withColumn("ts",
         graft.sources.Tables.normalizeTs(ev))
       // three ordered batches by event_id mod 3. FileStreamSource
@@ -940,7 +941,7 @@ object EventStream {
       }
       val sp = statePinnedSession(spark)
       val in = sp.readStream
-        .schema(sp.read.parquet(s"$dir/in").schema)
+        .schema(Tables.parquet(sp, s"$dir/in").schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$dir/in")
       val agg = in
@@ -1036,13 +1037,13 @@ object EventStream {
     graft.operators.Scratch.withScratch(spark, "q263_mv", sfDir) { dir =>
       val stateRoot = s"$dir/state"
       new java.io.File(stateRoot).mkdirs()
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
+      val ev = Tables.parquet(spark, s"$sfDir/events.parquet")
       ev.withColumn("ts", graft.sources.Tables.normalizeTs(ev))
         .repartition(4, col("event_id"))
         .write.mode("overwrite").parquet(s"$dir/in")
       val sp = statePinnedSession(spark)
       val in = sp.readStream
-        .schema(sp.read.parquet(s"$dir/in").schema)
+        .schema(Tables.parquet(sp, s"$dir/in").schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$dir/in")
       val q = in.writeStream
@@ -1263,7 +1264,7 @@ object EventStream {
         .write.mode("overwrite").parquet(s"$dir/incoming")
       // stream schema PROBED from the files' batch schema — never
       // declared blind (the round-9 micros-as-nanos lesson)
-      val schema = spark.read.parquet(s"$dir/incoming").schema
+      val schema = Tables.parquet(spark, s"$dir/incoming").schema
       val out = s"$dir/out"
       val q = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2)
@@ -1272,7 +1273,7 @@ object EventStream {
         .option("checkpointLocation", s"$dir/ckpt")
         .foreachBatch { (batch: DataFrame, id: Long) =>
           val s = batch.sparkSession
-          val idx = s.read.parquet(s"$dir/index")
+          val idx = Tables.parquet(s, s"$dir/index")
           batch
             .withColumn("fp", md5(normalizedText(col("text"))))
             .join(idx, Seq("fp"), "left_anti")
@@ -1296,7 +1297,7 @@ object EventStream {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           acceptedSchema)
       // index refresh: tomorrow's history = today's ∪ accepted
-      spark.read.parquet(s"$dir/index")
+      Tables.parquet(spark, s"$dir/index")
         .unionByName(accepted.select(col("fp")))
         .distinct()
         .write.mode("overwrite").parquet(s"$dir/index_next")
@@ -1323,7 +1324,7 @@ object EventStream {
         .select(col("doc_id"), col("text"))
         .repartition(4)
         .write.mode("overwrite").parquet(s"$dir/incoming")
-      val schema = spark.read.parquet(s"$dir/incoming").schema
+      val schema = Tables.parquet(spark, s"$dir/incoming").schema
       val out = s"$dir/out"
       // the model is STATIC for the life of the stream: read the
       // artifact ONCE (weights pinned via localCheckpoint, bias row
@@ -1331,7 +1332,7 @@ object EventStream {
       // round-11 advice: re-reading the parquet + a driver .head()
       // inside foreachBatch charged a per-batch cost to an artifact
       // that never changes between batches
-      val model = spark.read.parquet(s"$dir/model")
+      val model = Tables.parquet(spark, s"$dir/model")
       val weights = model.where(col("bucket") >= 0L).localCheckpoint(true)
       val bq = model.where(col("bucket") === -1L).head().getLong(1)
       val q = spark.readStream.schema(schema)
@@ -1385,7 +1386,7 @@ object EventStream {
             .as("cents"))
         .repartition(4)
         .write.mode("overwrite").parquet(s"$dir/incoming")
-      val schema = spark.read.parquet(s"$dir/incoming").schema
+      val schema = Tables.parquet(spark, s"$dir/incoming").schema
       val out = s"$dir/out"
       val q = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2)
@@ -1395,7 +1396,7 @@ object EventStream {
         .foreachBatch { (batch: DataFrame, id: Long) =>
           val s = batch.sparkSession
           graft.operators.Relational
-            .madEventGateWith(batch, s.read.parquet(s"$dir/bounds"))
+            .madEventGateWith(batch, Tables.parquet(s, s"$dir/bounds"))
             .write.mode("overwrite").parquet(s"$out/batch=$id")
         }
         .trigger(Trigger.AvailableNow())

@@ -45,7 +45,18 @@ class PlainCsvSpec extends AnyFunSuite {
     "1.2.3.22,http://q\"x,2011-01-18,13.5,ua,US,en,word,18",     // bare quote
     "1.2.3.23,http://r,2011-01-19,14.5,ua,US,en,word,19,",       // trailing comma
     "1.2.3.24,http://s,2011-01-20,Infinity,ua,US,en,word,-20",
-    "1.2.3.25,http://t,2011-01-21,1e3,ua,US,en,word,+21")
+    "1.2.3.25,http://t,2011-01-21,1e3,ua,US,en,word,+21",
+    "1.2.3.26,http://u,2011-01-22,007,ua,US,en,word,007",         // leading zeros
+    "1.2.3.27,http://v,2011-01-23,-0,ua,US,en,word,-0",
+    "1.2.3.28,http://w,2011-01-24,-0.0,ua,US,en,word,2147483648", // int overflow
+    "1.2.3.29,http://x,2011-01-25,.5,ua,US,en,word,-2147483648",
+    "1.2.3.30,http://y,2011-01-26,5.,ua,US,en,word,30",
+    "1.2.3.31,http://z,2011-01-27,1234567890.123457,ua,US,en,word,31",  // 16 digits
+    "1.2.3.32,http://aa,2011-01-28,9007199254.7409937,ua,US,en,word,32", // 17 digits
+    "1.2.3.33,http://ab,2011-01-29,1.0E-5,ua,US,en,word,33",
+    "1.2.3.34,http://ac,2019-02-29,1.5,ua,US,en,word,34",         // no such day
+    "1.2.3.35,http://ad,2020-02-29,0.1,ua,US,en,word,35",
+    "1.2.3.36,http://ae,0999-01-01,0.3,ua,US,en,word,36")
 
   private lazy val files: Seq[String] = {
     val dir = Files.createTempDirectory("graft-plain-csv")
@@ -112,6 +123,45 @@ class PlainCsvSpec extends AnyFunSuite {
     val all = Tables.csv(spark, files.head, schema).collect()
     assert(all.length >= 10 && all.length < hostile.count(_.trim.nonEmpty))
     assert(all.exists(r => r.get(3) != null && r.getDouble(3).isNaN))
+  }
+
+  test("typed tokens equal Spark's conversion bit for bit (ScalaCheck)") {
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val typed = StructType(Seq(StructField("i", IntegerType), StructField("l", LongType),
+      StructField("d", DoubleType), StructField("t", DateType), StructField("s", StringType)))
+    def digits(lo: Int, hi: Int) =
+      Gen.choose(lo, hi).flatMap(n => Gen.listOfN(n, Gen.numChar)).map(_.mkString)
+    val sign = Gen.oneOf("", "", "-")
+    val int = Gen.frequency(3 -> Gen.zip(sign, digits(1, 10)).map { case (a, b) => a + b },
+      1 -> Gen.chooseNum(Int.MinValue, Int.MaxValue).map(_.toString))
+    val long = Gen.frequency(3 -> Gen.zip(sign, digits(1, 19)).map { case (a, b) => a + b },
+      1 -> Gen.chooseNum(Long.MinValue, Long.MaxValue).map(_.toString))
+    val double = Gen.frequency(
+      4 -> Gen.zip(sign, digits(1, 12), Gen.option(digits(1, 24))).map {
+        case (a, b, f) => a + b + f.fold("")("." + _) },
+      1 -> Gen.chooseNum(-1e12, 1e12).map(_.toString)) // 16-17 digits, some exponents
+    val date = Gen.zip(Gen.choose(900, 9999), Gen.choose(0, 13), Gen.choose(0, 32)).map {
+      case (y, m, d) => f"$y%04d-$m%02d-$d%02d" }
+    val line = Gen.zip(int, long, double, date, Gen.alphaStr).map {
+      case (i, l, d, t, s) => Seq(i, l, d, t, s).mkString(",") }
+    def bits(df: DataFrame): Seq[String] = df.collect().toSeq.map { r =>
+      (0 until 5).map(k => if (r.isNullAt(k)) "null" else if (k == 2)
+        java.lang.Double.doubleToRawLongBits(r.getDouble(k)).toString else r.get(k).toString)
+        .mkString("|")
+    }.sorted
+    val dir = Files.createTempDirectory("graft-typed-csv")
+    var round = 0
+    val prop = Prop.forAll(Gen.listOfN(200, line)) { ls =>
+      round += 1
+      val path = dir.resolve(s"typed_$round.csv")
+      Files.write(path, ls.mkString("\n").getBytes("UTF-8"))
+      val got = bits(Tables.csv(spark, path.toString, typed))
+      got.nonEmpty && got ==
+        bits(spark.read.schema(typed).option("mode", "DROPMALFORMED").csv(path.toString))
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("Tables.csv scans through PlainCsvFileFormat, one scan per read") {

@@ -61,7 +61,12 @@ class ReferenceQueriesSpec extends AnyFunSuite {
       (11, Some(two52)), (11, Some(-0.01)), (12, Some(two52)), (12, Some(two52)),
       (13, Some(-2 * two52)), (13, Some(-0.03)),
       (14, Some(9.9e15)), (14, Some(9.9e15)), (14, Some(9.9e15)), (14, Some(9.9e15)),
-      (14, Some(9.9e15)), (15, Some(0.145)), (15, Some(1.005)), (15, Some(-2.675)))
+      (14, Some(9.9e15)), (15, Some(0.145)), (15, Some(1.005)), (15, Some(-2.675)),
+      // the whole-cent shortcut's bound (2^40) from both sides, and values
+      // it must leave to the cast: sub-cent, signed zero, NaN-free extremes
+      (16, Some(1099511627775.99)), (16, Some(-1099511627776.0)),
+      (16, Some(1099511627776.01)), (17, Some(Double.MinPositiveValue)),
+      (17, Some(-0.0)), (17, Some(-0.005)), (17, Some(0.015)))
     def bits(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getInt(0) ->
         (if (r.isNullAt(1)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(1)))))

@@ -54,6 +54,60 @@ class SourcesSpec extends AnyFunSuite {
     assert(obs.get("rows_out") == 2L)
   }
 
+  /** Jobs started by `body` on this thread (and the threads it hands
+    * its local properties to).
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobCount"
+    val id = java.util.UUID.randomUUID.toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == id) n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty(key, id)
+    try {
+      body
+      org.apache.spark.graftbus.drainListenerBus(sc)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
+
+  test("job counts: Tables.load starts none, q01 runs 1 job and q04 runs 2") {
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    assert(jobsOf(Tables.load(spark, SparkTestSession.sf, "orders")) == 0)
+    assert(jobsOf(noop(SparkEntry.queries("q01_scan_1a")(spark, SparkTestSession.sf))) == 1)
+    assert(jobsOf(noop(SparkEntry.queries("q04_agg_2a")(spark, SparkTestSession.sf))) == 2)
+  }
+
+  test("Tables.load and Tables.parquet read the schema Spark infers") {
+    Tables.fixtureNames.foreach { n =>
+      val p = s"${SparkTestSession.sf}/$n.parquet"
+      val raw = spark.read.parquet(p)
+      assert(Tables.parquet(spark, p).schema == raw.schema, n)
+      val loaded = if (n == "events") raw.withColumn("ts", Tables.normalizeTs(raw)) else raw
+      assert(Tables.load(spark, SparkTestSession.sf, n).schema == loaded.schema, n)
+    }
+    val dir = Files.createTempDirectory("graft-footer").toString
+    val orders = Tables.load(spark, SparkTestSession.sf, "orders")
+    graft.sinks.Sinks.writeParquet(orders, s"$dir/flat")
+    graft.sinks.Sinks.writeParquet(orders, s"$dir/parted", Seq("o_orderstatus"))
+    assert(Files.exists(Paths.get(s"$dir/flat/_SUCCESS")))
+    Seq("flat", "parted").foreach { d =>
+      val p = s"$dir/$d"
+      assert(Tables.parquet(spark, p).schema == spark.read.parquet(p).schema, d)
+      assert(Tables.parquet(spark, p).count() == orders.count(), d)
+    }
+    intercept[org.apache.spark.sql.AnalysisException](Tables.parquet(spark, s"$dir/missing"))
+  }
+
   test("all fixture tables load") {
     Tables.fixtureNames.foreach { n =>
       assert(Tables.load(spark, SparkTestSession.sf, n).count() > 0, n)
