@@ -34,7 +34,7 @@ object GraftSession {
   /** Apply graft's defaults to any builder (cluster or local). */
   def configure(
       b: SparkSession.Builder,
-      shufflePartitions: Int = 32
+      shufflePartitions: Int
   ): SparkSession.Builder = b
     // One shuffle partition per core locally; on a 1000-executor
     // cluster this would be ~2-3x total cores. AQE coalesces down.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,10 +10,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus
-    ).getOrCreate()
+    val spark = GraftSession.local(cores = cpus, appName = "verify")
     spark.sparkContext.setLogLevel("WARN")
     // fixture-contract canary: fail HERE with one clear message if a
     // fixture regeneration drifted an encoding (round-9 lesson), not

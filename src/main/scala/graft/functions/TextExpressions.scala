@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -33,6 +34,16 @@ object TextExpressions {
     h
   }
 
+  /** The input check of the string-taking expressions below: `child`
+    * must be a string column, else `fn` fails analysis naming the type.
+    */
+  private def stringInput(child: Expression, fn: String): TypeCheckResult =
+    child.dataType match {
+      case StringType => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"$fn needs a string column, got $other")
+    }
+
   /** Hashes of all word n-gram shingles of `child` (a whitespace-
     * normalized string). Shingle hash = order-dependent mix of the n
     * word hashes (polynomial in a large odd constant), so distinct
@@ -45,15 +56,8 @@ object TextExpressions {
 
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case StringType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"shingle_hashes needs a string column, got $other")
-      }
+    override def checkInputDataTypes(): TypeCheckResult =
+      stringInput(child, "shingle_hashes")
 
     override def nullSafeEval(v: Any): Any = {
       val bytes = v.asInstanceOf[UTF8String].getBytes
@@ -137,15 +141,8 @@ object TextExpressions {
     override def dataType: DataType =
       ArrayType(StringType, containsNull = false)
 
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case StringType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"cdc_chunk_strings needs a string column, got $other")
-      }
+    override def checkInputDataTypes(): TypeCheckResult =
+      stringInput(child, "cdc_chunk_strings")
 
     override def nullSafeEval(v: Any): Any = {
       val s = v.asInstanceOf[UTF8String]

@@ -79,6 +79,31 @@ object Dedup {
     */
   val defaultMaxPostingLen = 1000
 
+  /** Per-doc list count `n_sh` of a capped posting index `(ids)`: the
+    * shingle-set sizes of q21 and q240.
+    */
+  private def postingSizes(index: DataFrame): DataFrame =
+    index
+      .select(explode(col("ids")).as("doc_id"))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+
+  /** Shared-list count `n_common` of every (id_a, id_b) pair that
+    * `keep` admits among the co-members of each posting list of
+    * `index`: all ordered pairs by two explodes + a filter, no
+    * array-of-struct allocation per list element, which made this ~30%
+    * faster than the nested transform/slice/struct formulation it
+    * replaced (round-3 measurement; identical rows). The pair count of
+    * q21 and q240.
+    */
+  private def postingPairs(index: DataFrame, keep: Column): DataFrame =
+    index
+      .filter(size(col("ids")) > 1)
+      .select(explode(col("ids")).as("id_a"), col("ids"))
+      .select(col("id_a"), explode(col("ids")).as("id_b"))
+      .filter(keep)
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("n_common"))
+
   /** Exact n-gram Jaccard near-dup pairs (jaccard >= threshold,
     * a < b) via an inverted index: ONE shuffle builds posting lists
     * keyed by 64-bit shingle hash (distinct-per-doc folds into
@@ -106,20 +131,8 @@ object Dedup {
       .filter(size(col("ids")) <= maxPostingLen)
       .persist()
     try {
-      val sizes = index
-        .select(explode(col("ids")).as("doc_id"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-      // all ordered pairs within each posting list: two explodes + a
-      // filter — no array-of-struct allocation per list element, which
-      // made this ~30% faster than the nested transform/slice/struct
-      // formulation it replaced (round-3 measurement; identical rows)
-      val common = index
-        .filter(size(col("ids")) > 1)
-        .select(explode(col("ids")).as("id_a"), col("ids"))
-        .select(col("id_a"), explode(col("ids")).as("id_b"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).as("n_common"))
+      val sizes = postingSizes(index)
+      val common = postingPairs(index, col("id_a") < col("id_b"))
       common
         .join(sizes.withColumnRenamed("doc_id", "id_a")
           .withColumnRenamed("n_sh", "n_a"), "id_a")
@@ -306,16 +319,8 @@ object Dedup {
       .filter(size(col("ids")) <= defaultMaxPostingLen)
       .persist()
     try {
-      val sizes = index
-        .select(explode(col("ids")).as("doc_id"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-      val common = index
-        .filter(size(col("ids")) > 1)
-        .select(explode(col("ids")).as("id_a"), col("ids"))
-        .select(col("id_a"), explode(col("ids")).as("id_b"))
-        .filter(col("id_a") =!= col("id_b")) // DIRECTED: both orders
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).as("n_common"))
+      val sizes = postingSizes(index)
+      val common = postingPairs(index, col("id_a") =!= col("id_b")) // DIRECTED
       common
         .join(sizes.withColumnRenamed("doc_id", "id_a")
           .withColumnRenamed("n_sh", "n_a"), "id_a")
@@ -780,36 +785,38 @@ object Dedup {
     *     Jaccard decides.
     *
     * `sigPath`: where the signatures live. Default is a
-    * per-application directory under the JVM temp dir (unique via
-    * `applicationId`, so concurrent verify/bench sessions never race),
-    * deleted afterwards. Local-mode only — on a real cluster pass a
-    * shared-filesystem path (HDFS/object store), which is also the
-    * path a real daily pipeline would keep, not delete.
+    * [[Scratch.withScratch]] leaf (unique per application and
+    * invocation, so concurrent verify/bench sessions never race),
+    * deleted once no job of the invocation still reads it. Local-mode
+    * only — on a real cluster pass a shared-filesystem path
+    * (HDFS/object store), which is also the path a real daily pipeline
+    * would keep, not delete.
     */
   def minhashIncrementalPersisted(
       spark: SparkSession, sfDir: String,
       sigPath: Option[String] = None): DataFrame = {
-    val path = sigPath.getOrElse(Scratch.dir(spark, "q46_sig", sfDir))
-    try {
+    // feeds the id fetch AND the verification join: cached until the
+    // result is pinned
+    var cand: Option[DataFrame] = None
+    def verified(path: String): DataFrame = {
       persistHistorySignatures(spark, sfDir, path)
       val docs = Tables.load(spark, sfDir, "documents")
-      val cand = persistedCandidates(spark, sfDir, path)
-        .persist() // feeds the id fetch AND the verification join
-      try {
-        val candIds = cand
-          .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-          .distinct()
-        // candidate docs' shingle sets — the only place history text is
-        // read, and only for docs that appear in a candidate pair
-        val sets = shingleHashes(docs.join(candIds, "doc_id"), 5)
-          .groupBy(col("doc_id"))
-          .agg(collect_set(col("sh")).as("shs"))
-        verifyExactJaccard(cand, sets, 0.5).localCheckpoint(true)
-      } finally cand.unpersist()
-    } finally if (sigPath.isEmpty)
-      // default (session-temp) signatures are scratch: remove the
-      // whole per-application parent (exclusively this session's)
-      Scratch.delete(spark, new java.io.File(path).getParent)
+      val c = persistedCandidates(spark, sfDir, path).persist()
+      cand = Some(c)
+      val candIds = c
+        .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
+        .distinct()
+      // candidate docs' shingle sets — the only place history text is
+      // read, and only for docs that appear in a candidate pair
+      val sets = shingleHashes(docs.join(candIds, "doc_id"), 5)
+        .groupBy(col("doc_id"))
+        .agg(collect_set(col("sh")).as("shs"))
+      verifyExactJaccard(c, sets, 0.5)
+    }
+    try sigPath match {
+      case Some(path) => verified(path).localCheckpoint(true)
+      case None => Scratch.withScratch(spark, "q46_sig", sfDir)(verified)
+    } finally cand.foreach(_.unpersist())
   }
 
   def minhashLshPairs(
@@ -932,6 +939,22 @@ object Dedup {
   val CdcWindow = 8
   val CdcBoundaryRate = 64
 
+  /** (doc_id, source, text) with the q100 boilerplate injected:
+    * [[boilerplateHeader]] prepended where doc_id % 3 == 0,
+    * [[boilerplateFooter]] appended where doc_id % 5 == 0. The input
+    * of q239 and q248, the Spark twin of the injection in the oracle's
+    * `cdcSpanCtes`.
+    */
+  private def boilerplatedDocs(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id"), col("source"),
+        concat(
+          when(col("doc_id") % 3 === 0, lit(boilerplateHeader + " "))
+            .otherwise(lit("")),
+          col("text"),
+          when(col("doc_id") % 5 === 0, lit(" " + boilerplateFooter))
+            .otherwise(lit(""))).as("text"))
+
   /** The q239 driver entry: CONTENT-DEFINED CHUNKING DEDUP — the
     * storage-layer dedup device (restic/borg lineage, and the delta
     * layer under corpus snapshots): chunk boundaries are functions of
@@ -951,14 +974,7 @@ object Dedup {
     * aggregate, so text never enters the exchange (q20's rule).
     */
   def cdcChunkStats(spark: SparkSession, sfDir: String): DataFrame =
-    cdcChunkStatsOn(Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id"), col("source"),
-        concat(
-          when(col("doc_id") % 3 === 0, lit(boilerplateHeader + " "))
-            .otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 5 === 0, lit(" " + boilerplateFooter))
-            .otherwise(lit(""))).as("text")))
+    cdcChunkStatsOn(boilerplatedDocs(spark, sfDir))
 
   /** The operator over any (doc_id, source, text) frame — spec entry
     * point (the offset-invariance property is pinned on crafted
@@ -1008,14 +1024,7 @@ object Dedup {
     * the q21 cap; text never enters an exchange.
     */
   def cdcProvenance(spark: SparkSession, sfDir: String): DataFrame = {
-    val chunks = cdcChunks(Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id"), col("source"),
-        concat(
-          when(col("doc_id") % 3 === 0, lit(boilerplateHeader + " "))
-            .otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 5 === 0, lit(" " + boilerplateFooter))
-            .otherwise(lit(""))).as("text")))
+    val chunks = cdcChunks(boilerplatedDocs(spark, sfDir))
       .where(length(col("chunk")) >= 16)
       .select(col("doc_id"), md5(col("chunk")).as("dg"))
       .distinct()
@@ -2208,14 +2217,25 @@ object Dedup {
       when(eq(element_at(a, i), element_at(b, i)), lit(1L))
         .otherwise(lit(0L))).reduce(_ + _)
 
-  private def bandKeysOf(sigs: DataFrame): DataFrame =
-    sigs
+  /** Every doc pair (id_a < id_b) whose 64-slot signatures agree on
+    * one of the 16 bands of 4 (band keys md5'd): the banded candidates
+    * of q332 and q397, the Spark twin of the oracle's `bandCandCtes`
+    * `bands`/`cand` tail.
+    */
+  private def bandCandidates(sigs: DataFrame): DataFrame = {
+    val bands = sigs
       .select(col("doc_id"), col("sig"),
         explode(sequence(lit(0), lit(15))).as("band"))
       .select(col("doc_id"), col("band"),
         md5(concat_ws(":", (1 to 4).map(j =>
           element_at(col("sig"), col("band") * 4 + j).cast("string")): _*))
           .as("bh"))
+    bands.as("a").join(bands.as("b"),
+        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .distinct()
+  }
 
   def lshBandingEval(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
@@ -2228,12 +2248,7 @@ object Dedup {
       .localCheckpoint(true) // read by both hit joins
     val sigs = bandingSigsFromSets(sets)
       .localCheckpoint(true) // read by bands + twice by the est join
-    val bands = bandKeysOf(sigs)
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
+    val cand = bandCandidates(sigs)
     // ONE flags pass over the candidate pairs (round-19, guide §2.4):
     // the per-pair signature estimate and the truth membership become
     // two columns of a single frame, and one aggregate produces
@@ -2313,12 +2328,7 @@ object Dedup {
     val sets = docShingleSets(docs).localCheckpoint(true)
     val sigs = bandingSigsFromSets(sets)
       .localCheckpoint(true) // read by bands + twice by the pair join
-    val bands = bandKeysOf(sigs)
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
+    val cand = bandCandidates(sigs)
       .localCheckpoint(true) // read by the truth join + the sig join
     // exact Jaccard on candidates only (the q22 verify discipline)
     val sizes = sets.groupBy(col("doc_id"))

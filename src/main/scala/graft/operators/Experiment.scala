@@ -92,6 +92,20 @@ object Experiment {
         col("last_touch"), col("n_clicks_7d"), col("n_views_7d"))
   }
 
+  /** Distinct (user_id, day, event_type) baskets and the one-row unit
+    * count `n_units`: the input of q133 and q150, the Spark twin of the
+    * oracle's `userDayCtes`.
+    */
+  private def userDayUnits(
+      spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    val ud = Tables.load(spark, sfDir, "events")
+      .select(col("user_id"), to_date(col("ts")).as("day"),
+        col("event_type"))
+      .distinct()
+    (ud, ud.select(col("user_id"), col("day")).distinct()
+      .agg(count(lit(1)).as("n_units")))
+  }
+
   /** Event-type co-occurrence / market-basket counts (q133): for
     * every unordered pair of event types, how many (user, day) units
     * contain both, plus the support fraction — the input to
@@ -105,12 +119,7 @@ object Experiment {
     * division of exact counts.
     */
   def coOccurrence(spark: SparkSession, sfDir: String): DataFrame = {
-    val ud = Tables.load(spark, sfDir, "events")
-      .select(col("user_id"), to_date(col("ts")).as("day"),
-        col("event_type"))
-      .distinct()
-    val units = ud.select(col("user_id"), col("day")).distinct()
-      .agg(count(lit(1)).as("n_units"))
+    val (ud, units) = userDayUnits(spark, sfDir)
     val a = ud.select(col("user_id"), col("day"),
       col("event_type").as("type_a"))
     val b = ud.select(col("user_id").as("u2"), col("day").as("d2"),
@@ -138,12 +147,7 @@ object Experiment {
     * catalog-sized frame) — nothing re-touches the fact table.
     */
   def associationRules(spark: SparkSession, sfDir: String): DataFrame = {
-    val ud = Tables.load(spark, sfDir, "events")
-      .select(col("user_id"), to_date(col("ts")).as("day"),
-        col("event_type"))
-      .distinct()
-    val units = ud.select(col("user_id"), col("day")).distinct()
-      .agg(count(lit(1)).as("n_units"))
+    val (ud, units) = userDayUnits(spark, sfDir)
     val marginals = ud.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
     val a = ud.select(col("user_id"), col("day"),
       col("event_type").as("type_a"))
@@ -228,6 +232,13 @@ object Experiment {
         col("n_censored"), col("log_surv_micro"))
   }
 
+  /** One letter per event type, the path alphabet of q134 and q145. */
+  private def initial: Column = when(col("event_type") === "view", "v")
+    .when(col("event_type") === "click", "c")
+    .when(col("event_type") === "purchase", "p")
+    .when(col("event_type") === "signup", "s")
+    .otherwise("e")
+
   /** Sequence-pattern detection (q134) — the MATCH_RECOGNIZE / CEP
     * shape Spark lacks natively, composed from built-ins: each
     * (user, day) journey becomes a compact path string (one char per
@@ -242,11 +253,6 @@ object Experiment {
     * codegen'd per row with no further shuffle.
     */
   def cepPattern(spark: SparkSession, sfDir: String): DataFrame = {
-    val initial = when(col("event_type") === "view", "v")
-      .when(col("event_type") === "click", "c")
-      .when(col("event_type") === "purchase", "p")
-      .when(col("event_type") === "signup", "s")
-      .otherwise("e")
     Tables.load(spark, sfDir, "events")
       .groupBy(col("user_id"), to_date(col("ts")).as("day"))
       .agg(
@@ -278,11 +284,6 @@ object Experiment {
     * a global sort.
     */
   def listaggPaths(spark: SparkSession, sfDir: String): DataFrame = {
-    val initial = when(col("event_type") === "view", "v")
-      .when(col("event_type") === "click", "c")
-      .when(col("event_type") === "purchase", "p")
-      .when(col("event_type") === "signup", "s")
-      .otherwise("e")
     Tables.load(spark, sfDir, "events")
       .select(col("user_id"), to_date(col("ts")).as("day"),
         col("ts"), col("event_id"), initial.as("i"))
@@ -505,15 +506,24 @@ object Experiment {
       .join(en, Seq("doc_id"))
   }
 
-  def rocAuc(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The [[rocAucScored]] docs grouped by score (count c, positives p)
+    * with the count strictly below each score (cum): the doubled
+    * mid-rank input of q212 and q276, the Spark twin of the oracle's
+    * `scoreRankCtes`.
+    */
+  private def scoreRanked(spark: SparkSession, sfDir: String): DataFrame = {
     val scored = rocAucScored(spark, sfDir)
     val byScore = scored.groupBy(col("score"))
       .agg(count(lit(1)).as("c"),
         sum(when(col("is_en"), 1L).otherwise(0L)).as("p"))
     val wc = Window.orderBy(col("score").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = byScore
+    byScore
       .withColumn("cum", coalesce(sum(col("c")).over(wc), lit(0L)))
+  }
+
+  def rocAuc(spark: SparkSession, sfDir: String): DataFrame = {
+    val ranked = scoreRanked(spark, sfDir)
     val agg = ranked.agg(
       sum(col("p")).as("n_pos"),
       (sum(col("c")) - sum(col("p"))).as("n_neg"),
@@ -1285,14 +1295,7 @@ object Experiment {
     * domain ≤ 10⁶ micros), then scalar arithmetic on one row.
     */
   def mannWhitney(spark: SparkSession, sfDir: String): DataFrame = {
-    val scored = rocAucScored(spark, sfDir)
-    val byScore = scored.groupBy(col("score"))
-      .agg(count(lit(1)).as("c"),
-        sum(when(col("is_en"), 1L).otherwise(0L)).as("p"))
-    val wc = Window.orderBy(col("score").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = byScore
-      .withColumn("cum", coalesce(sum(col("c")).over(wc), lit(0L)))
+    val ranked = scoreRanked(spark, sfDir)
     ranked.agg(
         sum(col("p")).cast("long").as("n_pos"),
         (sum(col("c")) - sum(col("p"))).cast("long").as("n_neg"),
@@ -1832,6 +1835,23 @@ object Experiment {
       .withColumn("flagged", col("tvd_ppm") > 50000L)
   }
 
+  /** The logged-policy census of q337 and q343: per (user, action)
+    * counts n_ua and cent rewards r_ua, per-user counts n_u, and the
+    * one-row total n. The Spark twin of the oracle's `policyLogCtes`.
+    */
+  private def policyLog(spark: SparkSession,
+      sfDir: String): (DataFrame, DataFrame, DataFrame) = {
+    val ua = Tables.load(spark, sfDir, "events")
+      .select(col("user_id"), col("event_type"),
+        floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
+      .groupBy(col("user_id"), col("event_type"))
+      .agg(count(lit(1)).cast("long").as("n_ua"),
+        sum(col("cents")).cast("long").as("r_ua"))
+    val perUser = ua.groupBy(col("user_id"))
+      .agg(sum(col("n_ua")).cast("long").as("n_u"))
+    (ua, perUser, perUser.agg(sum(col("n_u")).cast("long").as("n")))
+  }
+
   /** The q337 driver entry: OFF-POLICY EVALUATION by inverse
     * propensity scoring — the counterfactual "what if we always
     * served action a" table every recommendation/RLHF team reads
@@ -1859,15 +1879,7 @@ object Experiment {
     * final table lives on the bounded action domain. No windows.
     */
   def ipsPolicyEval(spark: SparkSession, sfDir: String): DataFrame = {
-    val ua = Tables.load(spark, sfDir, "events")
-      .select(col("user_id"), col("event_type"),
-        floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
-      .groupBy(col("user_id"), col("event_type"))
-      .agg(count(lit(1)).cast("long").as("n_ua"),
-        sum(col("cents")).cast("long").as("r_ua"))
-    val perUser = ua.groupBy(col("user_id"))
-      .agg(sum(col("n_ua")).cast("long").as("n_u"))
-    val n = perUser.agg(sum(col("n_u")).cast("long").as("n"))
+    val (ua, perUser, n) = policyLog(spark, sfDir)
     ua.join(perUser, "user_id")
       .select(col("event_type"), col("n_ua"), col("r_ua"),
         expr("n_u * 1000 DIV n_ua").as("w_e3"))
@@ -2148,18 +2160,10 @@ object Experiment {
     * action domain.
     */
   def doublyRobust(spark: SparkSession, sfDir: String): DataFrame = {
-    val ua = Tables.load(spark, sfDir, "events")
-      .select(col("user_id"), col("event_type"),
-        floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
-      .groupBy(col("user_id"), col("event_type"))
-      .agg(count(lit(1)).cast("long").as("n_ua"),
-        sum(col("cents")).cast("long").as("r_ua"))
-    val perUser = ua.groupBy(col("user_id"))
-      .agg(sum(col("n_ua")).cast("long").as("n_u"))
+    val (ua, perUser, n) = policyLog(spark, sfDir)
     val model = ua.groupBy(col("event_type"))
       .agg(expr("CAST(SUM(r_ua) * 1000 DIV SUM(n_ua) AS BIGINT)")
         .as("rhat_milli"))
-    val n = perUser.agg(sum(col("n_u")).cast("long").as("n"))
     ua.join(perUser, "user_id")
       .join(broadcast(model), "event_type")
       .select(col("event_type"), col("n_ua"), col("rhat_milli"),

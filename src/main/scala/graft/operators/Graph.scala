@@ -13,6 +13,34 @@ import graft.sources.Tables
   */
 object Graph {
 
+  /** One row per lineitem with its customer nation (`c_nationkey`) and
+    * supplier nation (`s_nationkey`): the orders⋈lineitem shuffle join
+    * with the customer and supplier dims broadcast. This is the
+    * fact-scale stage of q124, q126/q290, q137 and q199; the Spark twin
+    * of the oracle's `nationEdgesSql` join.
+    */
+  private def tradeRows(spark: SparkSession, sfDir: String): DataFrame = {
+    val o = Tables.load(spark, sfDir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"))
+    val l = Tables.load(spark, sfDir, "lineitem")
+      .select(col("l_orderkey"), col("l_suppkey"))
+    val c = Tables.load(spark, sfDir, "customer")
+      .select(col("c_custkey"), col("c_nationkey"))
+    val s = Tables.load(spark, sfDir, "supplier")
+      .select(col("s_suppkey"), col("s_nationkey"))
+    o.join(l, col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(c), col("c_custkey") === col("o_custkey"))
+      .join(broadcast(s), col("s_suppkey") === col("l_suppkey"))
+  }
+
+  /** Every nation that is some customer's or some supplier's (`node`):
+    * the node set of q124 and q199.
+    */
+  private def tradeNodes(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.load(spark, sfDir, "customer").select(col("c_nationkey").as("node"))
+      .union(Tables.load(spark, sfDir, "supplier").select(col("s_nationkey")))
+      .distinct()
+
   /** PageRank (q124) over the customer-nation → supplier-nation trade
     * graph (edge weight = lineitems sold from supplier nation to
     * customer nation), 3 Lloyd-style iterations, damping 0.85.
@@ -34,25 +62,14 @@ object Graph {
     * plan depth stays constant however many iterations run.
     */
   def nationPageRank(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = Tables.load(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.load(spark, sfDir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val c = Tables.load(spark, sfDir, "customer")
-      .select(col("c_custkey"), col("c_nationkey"))
-    val s = Tables.load(spark, sfDir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"))
-    val edges = o.join(l, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(c), col("c_custkey") === col("o_custkey"))
-      .join(broadcast(s), col("s_suppkey") === col("l_suppkey"))
+    val edges = tradeRows(spark, sfDir)
       .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
       .agg(count(lit(1)).as("w"))
     val withOut = edges
       .join(edges.groupBy("src").agg(sum("w").as("ow")), "src")
       .persist()
     try {
-      val nodes = c.select(col("c_nationkey").as("node"))
-        .union(s.select(col("s_nationkey"))).distinct().persist()
+      val nodes = tradeNodes(spark, sfDir).persist()
       try {
         val nn = nodes.count()
         // Empty graph: no nodes to rank — emit the (empty) result with
@@ -99,17 +116,7 @@ object Graph {
     * round (the q124 iteration discipline).
     */
   def labelPropagation(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = Tables.load(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.load(spark, sfDir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val c = Tables.load(spark, sfDir, "customer")
-      .select(col("c_custkey"), col("c_nationkey"))
-    val s = Tables.load(spark, sfDir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"))
-    val directed = o.join(l, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(c), col("c_custkey") === col("o_custkey"))
-      .join(broadcast(s), col("s_suppkey") === col("l_suppkey"))
+    val directed = tradeRows(spark, sfDir)
       .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
       .agg(count(lit(1)).as("w"))
       .where(col("src") =!= col("dst"))
@@ -119,8 +126,7 @@ object Graph {
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
       .persist()
     try {
-      val nodes = c.select(col("c_nationkey").as("node"))
-        .union(s.select(col("s_nationkey"))).distinct()
+      val nodes = tradeNodes(spark, sfDir)
       var labels = nodes.withColumn("lbl", col("node"))
         .localCheckpoint(true)
       for (_ <- 0 until 3) {
@@ -175,17 +181,7 @@ object Graph {
     */
   private[graft] def heavyTradeEdges(
       spark: SparkSession, sfDir: String): DataFrame = {
-    val o = Tables.load(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.load(spark, sfDir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val c = Tables.load(spark, sfDir, "customer")
-      .select(col("c_custkey"), col("c_nationkey"))
-    val s = Tables.load(spark, sfDir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"))
-    val directed = o.join(l, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(c), col("c_custkey") === col("o_custkey"))
-      .join(broadcast(s), col("s_suppkey") === col("l_suppkey"))
+    val directed = tradeRows(spark, sfDir)
       .where(col("c_nationkey") =!= col("s_nationkey"))
       .groupBy(col("c_nationkey").as("a"), col("s_nationkey").as("b"))
       .agg(count(lit(1)).as("w"))
@@ -297,17 +293,7 @@ object Graph {
     * dirs), the q136 device.
     */
   def khopReachability(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = Tables.load(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.load(spark, sfDir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val c = Tables.load(spark, sfDir, "customer")
-      .select(col("c_custkey"), col("c_nationkey"))
-    val s = Tables.load(spark, sfDir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"))
-    val trade = o.join(l, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(c), col("c_custkey") === col("o_custkey"))
-      .join(broadcast(s), col("s_suppkey") === col("l_suppkey"))
+    val trade = tradeRows(spark, sfDir)
       .where(col("c_nationkey") =!= col("s_nationkey"))
       .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
       .agg(count(lit(1)).as("n_ship"))

@@ -382,20 +382,10 @@ object Multimodal {
     import spark.implicits._
     val wavs = mediaTable(spark, sfDir).filter(_.media_type == "audio/wav")
     val samples = wavs.flatMap { m =>
-      val bb = ByteBuffer.wrap(m.payload).order(ByteOrder.LITTLE_ENDIAN)
-      require(new String(m.payload, 0, 4, "US-ASCII") == "RIFF" &&
-        new String(m.payload, 8, 4, "US-ASCII") == "WAVE",
-        s"media ${m.media_id}: not a WAV")
-      val dataSize = bb.getInt(40)
-      require(dataSize == m.payload.length - WavHeaderLen,
-        s"media ${m.media_id}: data-size field disagrees with payload")
-      val nS = dataSize / 2
+      val nS = wavSampleCount(m)
       (0 until nS).iterator.map { s =>
-        val lo = m.payload(WavHeaderLen + 2 * s) & 0xFF
-        val hi = m.payload(WavHeaderLen + 2 * s + 1) & 0xFF
-        val x = lo | (hi << 8)
-        val v = if (x >= 32768) x - 65536 else x
-        (m.media_id, (s.toLong * energyWindows / nS).toInt, math.abs(v).toLong)
+        (m.media_id, (s.toLong * energyWindows / nS).toInt,
+          math.abs(wavSample(m.payload, s)))
       }
     }.toDF("media_id", "win", "a")
     val perWin = samples.groupBy(col("media_id"), col("win"))
@@ -524,21 +514,11 @@ object Multimodal {
     val stats = mediaTable(spark, sfDir)
       .filter(_.media_type == "audio/wav")
       .map { m =>
-        val bb = ByteBuffer.wrap(m.payload).order(ByteOrder.LITTLE_ENDIAN)
-        require(new String(m.payload, 0, 4, "US-ASCII") == "RIFF" &&
-          new String(m.payload, 8, 4, "US-ASCII") == "WAVE",
-          s"media ${m.media_id}: not a WAV")
-        val dataSize = bb.getInt(40)
-        require(dataSize == m.payload.length - WavHeaderLen,
-          s"media ${m.media_id}: data-size field disagrees with payload")
-        val nS = dataSize / 2
+        val nS = wavSampleCount(m)
         var ssq = 0L
         var s = 0
         while (s < nS) {
-          val lo = m.payload(WavHeaderLen + 2 * s) & 0xFF
-          val hi = m.payload(WavHeaderLen + 2 * s + 1) & 0xFF
-          val x = lo | (hi << 8)
-          val v = (if (x >= 32768) x - 65536 else x).toLong
+          val v = wavSample(m.payload, s)
           ssq += v * v
           s += 1
         }
@@ -555,6 +535,35 @@ object Multimodal {
       when(col("ssq") === 0, lit(-1L))
         .otherwise(floor(lit(1000000.0) * (lit(10000.0) / rms))
           .cast("long")).as("gain_micro"))
+  }
+
+  /** Fails unless `m` carries the RIFF/WAVE magic. */
+  private def requireWav(m: MediaRecord): Unit =
+    require(new String(m.payload, 0, 4, "US-ASCII") == "RIFF" &&
+      new String(m.payload, 8, 4, "US-ASCII") == "WAVE",
+      s"media ${m.media_id}: not a WAV")
+
+  /** PCM16 sample count of a checked WAV record: the magic, and a
+    * data-size field that agrees with the payload. The header check of
+    * q174, q204 and q210, the Spark twin of the oracle's `wavCte`.
+    */
+  private def wavSampleCount(m: MediaRecord): Int = {
+    requireWav(m)
+    val dataSize = ByteBuffer.wrap(m.payload).order(ByteOrder.LITTLE_ENDIAN)
+      .getInt(40)
+    require(dataSize == m.payload.length - WavHeaderLen,
+      s"media ${m.media_id}: data-size field disagrees with payload")
+    dataSize / 2
+  }
+
+  /** Sample `si` of a PCM16 WAV payload, little-endian signed: the
+    * Spark twin of the oracle's `pcmDecodeSql` plus its sign step.
+    */
+  private def wavSample(payload: Array[Byte], si: Int): Long = {
+    val lo = payload(WavHeaderLen + 2 * si) & 0xFF
+    val hi = payload(WavHeaderLen + 2 * si + 1) & 0xFF
+    val x = lo | (hi << 8)
+    (if (x >= 32768) x - 65536 else x).toLong
   }
 
   /** The q197 driver entry: BINARY-LAKE INGESTION via the
@@ -623,6 +632,29 @@ object Multimodal {
   val DftSin64: Array[Long] = Array.tabulate(64)(n =>
     math.floor(32768.0 * math.sin(2.0 * math.Pi * n / 64.0)).toLong)
 
+  /** Squared magnitude of DFT bin `k` over the `len` samples from
+    * sample `start`, twiddles `(k * n) % 64` from the tables above and
+    * each component descaled by one TRUNCATING division before
+    * squaring: the frame step of q210's bands and q235's fingerprints,
+    * the Spark twin of the oracle's `dftCtes`.
+    */
+  private def dftBinEnergy(payload: Array[Byte], start: Int, len: Int,
+      k: Int): Long = {
+    var re = 0L
+    var im = 0L
+    var n = 0
+    while (n < len) {
+      val v = wavSample(payload, start + n)
+      val idx = (k * n) % 64
+      re += v * DftCos64(idx)
+      im += v * DftSin64(idx)
+      n += 1
+    }
+    val rq = re / DftScale // truncating, matches DuckDB //
+    val iq = im / DftScale
+    rq * rq + iq * iq
+  }
+
   /** The q210 driver entry: SPECTRAL ENERGY-BAND PROFILE — the
     * windowed-DFT front end of audio fingerprinting (Haitsma &
     * Kalker's band-energy device) and of every spectrogram-based
@@ -655,19 +687,9 @@ object Multimodal {
   def spectralBandsOn(wavs: Dataset[MediaRecord]): DataFrame = {
     val spark = wavs.sparkSession
     import spark.implicits._
-    val cosT = DftCos64
-    val sinT = DftSin64
     val bins = SpectralBins
     val perBin = wavs.flatMap { m =>
-      val bb = ByteBuffer.wrap(m.payload).order(ByteOrder.LITTLE_ENDIAN)
-      require(new String(m.payload, 0, 4, "US-ASCII") == "RIFF" &&
-        new String(m.payload, 8, 4, "US-ASCII") == "WAVE",
-        s"media ${m.media_id}: not a WAV")
-      val dataSize = bb.getInt(40)
-      require(dataSize == m.payload.length - WavHeaderLen,
-        s"media ${m.media_id}: data-size field disagrees with payload")
-      val nS = dataSize / 2
-      val frames = nS / 64
+      val frames = wavSampleCount(m) / 64
       if (frames == 0) Iterator.empty
       else {
         val energy = Array.fill(bins.length)(0L)
@@ -675,24 +697,7 @@ object Multimodal {
         while (f < frames) {
           var b = 0
           while (b < bins.length) {
-            val k = bins(b)
-            var re = 0L
-            var im = 0L
-            var n = 0
-            while (n < 64) {
-              val si = f * 64 + n
-              val lo = m.payload(WavHeaderLen + 2 * si) & 0xFF
-              val hi = m.payload(WavHeaderLen + 2 * si + 1) & 0xFF
-              val x = lo | (hi << 8)
-              val v = (if (x >= 32768) x - 65536 else x).toLong
-              val idx = (k * n) % 64
-              re += v * cosT(idx)
-              im += v * sinT(idx)
-              n += 1
-            }
-            val rq = re / DftScale // truncating, matches DuckDB //
-            val iq = im / DftScale
-            energy(b) += rq * rq + iq * iq
+            energy(b) += dftBinEnergy(m.payload, f * 64, 64, bins(b))
             b += 1
           }
           f += 1
@@ -801,14 +806,10 @@ object Multimodal {
   def audioFingerprints(wavs: Dataset[MediaRecord]): DataFrame = {
     val spark = wavs.sparkSession
     import spark.implicits._
-    val cosT = DftCos64
-    val sinT = DftSin64
     wavs.flatMap { m =>
-      val bb = ByteBuffer.wrap(m.payload).order(ByteOrder.LITTLE_ENDIAN)
-      require(new String(m.payload, 0, 4, "US-ASCII") == "RIFF" &&
-        new String(m.payload, 8, 4, "US-ASCII") == "WAVE",
-        s"media ${m.media_id}: not a WAV")
-      val nS = bb.getInt(40) / 2
+      requireWav(m)
+      val nS = ByteBuffer.wrap(m.payload).order(ByteOrder.LITTLE_ENDIAN)
+        .getInt(40) / 2
       if (nS / FpFrameLen < FpFrames) Iterator.empty
       else {
         val e = Array.ofDim[Long](FpFrames, FpBins)
@@ -816,23 +817,8 @@ object Multimodal {
         while (f < FpFrames) {
           var k = 1
           while (k <= FpBins) {
-            var re = 0L
-            var im = 0L
-            var n = 0
-            while (n < FpFrameLen) {
-              val si = f * FpFrameLen + n
-              val lo = m.payload(WavHeaderLen + 2 * si) & 0xFF
-              val hi = m.payload(WavHeaderLen + 2 * si + 1) & 0xFF
-              val x = lo | (hi << 8)
-              val v = (if (x >= 32768) x - 65536 else x).toLong
-              val idx = (k * n) % 64
-              re += v * cosT(idx)
-              im += v * sinT(idx)
-              n += 1
-            }
-            val rq = re / DftScale // truncating, matches DuckDB //
-            val iq = im / DftScale
-            e(f)(k - 1) = rq * rq + iq * iq
+            e(f)(k - 1) =
+              dftBinEnergy(m.payload, f * FpFrameLen, FpFrameLen, k)
             k += 1
           }
           f += 1

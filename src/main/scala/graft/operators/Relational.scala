@@ -2677,6 +2677,25 @@ object Relational {
           .as("ts_slope_cents_per_day"))
   }
 
+  /** Holt's α=β=½ (lvl, tr) struct after folding the series `ys`
+    * without its last `hold` values: seeded from the first two points,
+    * each step halved by an exact ⌊·/2⌋. The in-row recursion of q209
+    * (hold 0) and q295, the Spark twin of their oracles' recursive
+    * CTE step.
+    */
+  private def holtFold(ys: Column, hold: Int): Column = {
+    def half(x: Column): Column = floor(x.cast("double") / lit(2.0)).cast("long")
+    aggregate(
+      slice(ys, lit(2), size(ys) - lit(1 + hold)),
+      struct(element_at(ys, 1).as("lvl"),
+        (element_at(ys, 2) - element_at(ys, 1)).as("tr")),
+      (st, y) => {
+        val lvl2 = half(y + st.getField("lvl") + st.getField("tr"))
+        struct(lvl2.as("lvl"),
+          half(lvl2 - st.getField("lvl") + st.getField("tr")).as("tr"))
+      })
+  }
+
   /** The q209 driver entry: HOLT DOUBLE-EXPONENTIAL FORECAST — the
     * level+trend smoother (Holt 1957) over daily revenue with a
     * 7-day horizon: the capacity-planning forecast a pipeline
@@ -2705,25 +2724,13 @@ object Relational {
         floor(col("value") * lit(100.0) + lit(0.5)).cast("long")
           .as("cents"))
       .groupBy(col("day")).agg(sum(col("cents")).as("y"))
-    def half(x: Column): Column = floor(x.cast("double") / lit(2.0)).cast("long")
     val folded = daily
       .agg(count(lit(1)).as("n"), max(col("day")).as("last_day"),
         array_sort(collect_list(struct(col("day"), col("y")))).as("s"))
       .where(col("n") >= 2)
       .select(col("n"), col("last_day"),
         transform(col("s"), x => x.getField("y")).as("ys"))
-      .select(col("n"), col("last_day"),
-        aggregate(
-          slice(col("ys"), lit(2), size(col("ys")) - 1),
-          struct(element_at(col("ys"), 1).as("lvl"),
-            (element_at(col("ys"), 2) - element_at(col("ys"), 1))
-              .as("tr")),
-          (st, y) => {
-            val lvl2 = half(y + st.getField("lvl") + st.getField("tr"))
-            struct(lvl2.as("lvl"),
-              half(lvl2 - st.getField("lvl") + st.getField("tr"))
-                .as("tr"))
-          }).as("st"))
+      .select(col("n"), col("last_day"), holtFold(col("ys"), 0).as("st"))
       .select(col("n").as("n_days"), col("last_day"),
         col("st.lvl").as("level_cents"), col("st.tr").as("trend_cents"))
     folded
@@ -2759,8 +2766,6 @@ object Relational {
     * embarrassingly parallel.
     */
   def forecastBacktest(spark: SparkSession, sfDir: String): DataFrame = {
-    def half(x: Column): Column =
-      floor(x.cast("double") / lit(2.0)).cast("long")
     Tables.load(spark, sfDir, "events")
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).cast("long").as("y"))
@@ -2772,17 +2777,7 @@ object Relational {
       .select(col("event_type"), col("n"),
         transform(col("s"), x => x.getField("y")).as("ys"))
       .select(col("event_type"), col("n"), col("ys"),
-        aggregate(
-          slice(col("ys"), lit(2), size(col("ys")) - lit(1 + backtestHold)),
-          struct(element_at(col("ys"), 1).as("lvl"),
-            (element_at(col("ys"), 2) - element_at(col("ys"), 1))
-              .as("tr")),
-          (st, y) => {
-            val lvl2 = half(y + st.getField("lvl") + st.getField("tr"))
-            struct(lvl2.as("lvl"),
-              half(lvl2 - st.getField("lvl") + st.getField("tr"))
-                .as("tr"))
-          }).as("st"))
+        holtFold(col("ys"), backtestHold).as("st"))
       .select(col("event_type"), col("n").cast("long").as("n_days"),
         expr(s"""aggregate(sequence(1, $backtestHold), CAST(0 AS BIGINT),
             (acc, h) -> acc + abs(st.lvl + h * st.tr -

@@ -21,7 +21,7 @@ object Scratch {
 
   private val invocation = new java.util.concurrent.atomic.AtomicLong
 
-  def dir(spark: SparkSession, tag: String, sfDir: String): String =
+  private def dir(spark: SparkSession, tag: String, sfDir: String): String =
     System.getProperty("java.io.tmpdir", "/tmp") +
       s"/graft_${tag}_${spark.sparkContext.applicationId}/" +
       new java.io.File(sfDir).getName

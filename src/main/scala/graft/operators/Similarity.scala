@@ -30,24 +30,46 @@ object Similarity {
       .select(col("vec_id").as("q_id"),
         Vectors.l2normalize(col("embedding")).as("q"))
 
+  /** `(vec_id, u)` with `u` the unit embedding: the corpus every ANN
+    * path scores, the Spark twin of the oracle's `normalizedVectors`.
+    */
+  private def unitCorpus(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
+
+  /** `(vec_id, label, v)` with `v` the unit embedding: the input of
+    * q168, q169, q322 and q323.
+    */
+  private def labeledUnits(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("label"),
+        Vectors.l2normalize(col("embedding")).as("v"))
+
+  /** Exact cosine of every candidate `(q_id, vec_id)` pair carrying its
+    * unit vectors `q` and `u`, top `k` per query by (cosine desc,
+    * vec_id asc): the serve tail of q30/q31/q32/q153/q163, the Spark
+    * twin of the oracle's `cosineTop10Sql`.
+    */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val scored = pairs.select(col("q_id"), col("vec_id"),
+      Vectors.dot(col("q"), col("u")).as("cosine"))
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("cosine").desc, col("vec_id").asc)
+    scored.withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= k)
+      .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
+  }
+
   /** Exact top-k neighbors per query by cosine (self excluded).
     * Deterministic: ties broken by vec_id.
     */
   def annBrute(
       spark: SparkSession, sfDir: String,
       numQueries: Int = 5, k: Int = 10): DataFrame = {
-    val corpus = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
-    val scored = corpus
+    val corpus = unitCorpus(spark, sfDir)
+    cosineTopK(corpus
       .join(broadcast(queries(spark, sfDir, numQueries)),
-        col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        Vectors.dot(col("q"), col("u")).as("cosine"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
+        col("vec_id") =!= col("q_id")), k)
   }
 
   /** Number of hyperplanes: 8 tables x 4 bits (multi-table LSH — a
@@ -93,8 +115,7 @@ object Similarity {
         .select(idCols.map(col) ++ Seq(col(vcol),
           col("blk.chunk").as("chunk"), col("blk.ck").as("ck")): _*)
 
-    val corpus = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
+    val corpus = unitCorpus(spark, sfDir)
     val q = queries(spark, sfDir, numQueries)
     val cChunk = chunked(corpus, "u", Seq("vec_id"))
     val qChunk = chunked(q, "q", Seq("q_id"))
@@ -105,13 +126,7 @@ object Similarity {
       .select(col("qq.q_id").as("q_id"), col("c.vec_id").as("vec_id"),
         col("qq.q").as("q"), col("c.u").as("u"))
       .distinct()
-    val scored = cand.select(col("q_id"), col("vec_id"),
-      Vectors.dot(col("q"), col("u")).as("cosine"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
+    cosineTopK(cand, k)
   }
 
   /** IVF coarse-quantizer defaults: 16 cells, 4 probed per query. */
@@ -138,8 +153,7 @@ object Similarity {
   def annIvf(
       spark: SparkSession, sfDir: String,
       numQueries: Int = 5, k: Int = 10): DataFrame = {
-    val corpus = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
+    val corpus = unitCorpus(spark, sfDir)
     val cents = seededCodebook(corpus)
     annIvfWithCodebook(spark, sfDir, cents, numQueries, k)
   }
@@ -249,8 +263,7 @@ object Similarity {
     * generated-replay precedent).
     */
   def annIvfTrained(spark: SparkSession, sfDir: String): DataFrame = {
-    val corpus = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
+    val corpus = unitCorpus(spark, sfDir)
     annIvfWithCodebook(spark, sfDir,
       kmeansCodebook(corpus, iters = ivfTrainIters))
   }
@@ -322,8 +335,7 @@ object Similarity {
     * 8×16 geometry), books are the 8 seeded 16-centroid codebooks.
     */
   def pqIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val corpus = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
+    val corpus = unitCorpus(spark, sfDir)
     val cents = corpus.filter(col("vec_id") < pqCentroids)
       .select(col("vec_id").as("c_id"),
         pqSubspaceSplit(col("u")).as(Seq("s", "cv")))
@@ -346,17 +358,18 @@ object Similarity {
       .agg(min(col("dc")).as("m"))
       .select(col("vec_id"), col("s"), col("m.c_id").as("code"))
 
-  def annPq(
-      spark: SparkSession, sfDir: String,
-      numQueries: Int = 5, k: Int = 10): DataFrame = {
-    val corpus = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
-    val (codes, cents) = pqIndex(spark, sfDir)
-    // per-query ADC lookup table: distance to every (s, centroid)
-    val q = queries(spark, sfDir, numQueries)
+  /** Integer ADC of every `(vec_id, s, code)` code against each query
+    * `(q_id, q)` through the broadcast per-query (subspace, centroid)
+    * distance table over `books` `(c_id, s, cv)`, self excluded; the
+    * `n` lowest per query by (adc_pico asc, vec_id asc), ranked `rn`.
+    * The ADC stage of q153 and of the persisted serve (q156/q160/q161),
+    * the Spark twin of the oracle's `pqAdcCtes` `qdist`/`adc` tail.
+    */
+  private def pqAdcTop(codes: DataFrame, books: DataFrame, q: DataFrame,
+      n: Int): DataFrame = {
     val qdist = q
       .select(col("q_id"), pqSubspaceSplit(col("q")).as(Seq("s", "qs")))
-      .join(broadcast(cents), "s")
+      .join(broadcast(books), "s")
       .select(col("q_id"), col("s"), col("c_id"),
         pqD2Pico(col("qs"), col("cv")).as("d"))
     val adc = codes.join(broadcast(qdist),
@@ -364,21 +377,23 @@ object Similarity {
       .where(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("d")).as("adc_pico"))
-    val wAdc = Window.partitionBy(col("q_id"))
+    val w = Window.partitionBy(col("q_id"))
       .orderBy(col("adc_pico").asc, col("vec_id").asc)
-    val cand = adc.withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= 40)
+    adc.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= n)
+  }
+
+  def annPq(
+      spark: SparkSession, sfDir: String,
+      numQueries: Int = 5, k: Int = 10): DataFrame = {
+    val corpus = unitCorpus(spark, sfDir)
+    val (codes, cents) = pqIndex(spark, sfDir)
+    val q = queries(spark, sfDir, numQueries)
+    // ADC shortlist through the per-query (s, centroid) distance table
+    val cand = pqAdcTop(codes, cents, q, 40)
       .select(col("q_id"), col("vec_id"))
     // exact re-rank on the shortlist only
-    val scored = cand.join(corpus, "vec_id")
-      .join(broadcast(q), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        Vectors.dot(col("q"), col("u")).as("cosine"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
+    cosineTopK(cand.join(corpus, "vec_id").join(broadcast(q), "q_id"), k)
   }
 
   /** Persisted PQ index lifecycle (q156): q153's index is WRITTEN as
@@ -411,20 +426,7 @@ object Similarity {
       q: DataFrame, k: Int): DataFrame = {
     val codes = Tables.parquet(spark, codesPath)
     val books = Tables.parquet(spark, booksPath)
-    val qdist = q
-      .select(col("q_id"), pqSubspaceSplit(col("q")).as(Seq("s", "qs")))
-      .join(broadcast(books), "s")
-      .select(col("q_id"), col("s"), col("c_id"),
-        pqD2Pico(col("qs"), col("cv")).as("d"))
-    val adc = codes.join(broadcast(qdist),
-        codes("s") === qdist("s") && col("code") === col("c_id"))
-      .where(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("d")).as("adc_pico"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_pico").asc, col("vec_id").asc)
-    adc.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    pqAdcTop(codes, books, q, k)
       .select(col("q_id"), col("vec_id"), col("adc_pico"), col("rn"))
   }
 
@@ -519,8 +521,7 @@ object Similarity {
     */
   def annPqIncrementalServe(spark: SparkSession, sfDir: String): DataFrame =
     Scratch.withScratch(spark, "q161_pq_incr", sfDir) { dir =>
-      val corpus = Tables.load(spark, sfDir, "embeddings")
-        .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
+      val corpus = unitCorpus(spark, sfDir)
       val base = corpus.filter(col("vec_id") < pqBaseCount)
       val cents = base.filter(col("vec_id") < pqCentroids)
         .select(col("vec_id").as("c_id"),
@@ -541,8 +542,7 @@ object Similarity {
   def annIvfWithCodebook(
       spark: SparkSession, sfDir: String, cents: DataFrame,
       numQueries: Int = 5, k: Int = 10): DataFrame = {
-    val corpus = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
+    val corpus = unitCorpus(spark, sfDir)
     val assigned = assignCells(corpus, cents).join(corpus, "vec_id")
     val q = queries(spark, sfDir, numQueries)
     val wq = Window.partitionBy(col("q_id"))
@@ -553,18 +553,47 @@ object Similarity {
       .withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= ivfProbes)
       .select(col("q_id"), col("q"), col("c_id"))
-    val scored = assigned.join(broadcast(qprobes), "c_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        Vectors.dot(col("q"), col("u")).as("cosine"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
+    cosineTopK(assigned.join(broadcast(qprobes), "c_id")
+      .filter(col("vec_id") =!= col("q_id")), k)
   }
 
   private val bitextK = 4
+
+  /** Margin mining over candidate pairs carrying `(s_id, sv)` and
+    * `(t_id, tv)`: micro-unit cosines pinned once, each side's
+    * top-`bitextK` sums, one final division, the forward-best rank at
+    * margin >= 105. The tail of q168 and q323, the Spark twin of the
+    * oracle's `bitextMarginSql`.
+    */
+  private def bitextMargin(pairs: DataFrame): DataFrame = {
+    val sims = pairs
+      .select(col("s_id"), col("t_id"),
+        floor(lit(1000000.0) * Vectors.dot(col("sv"), col("tv")))
+          .cast("long").as("sim_micro"))
+      .localCheckpoint(true) // read 3x (top-k both sides + the join)
+    val wS = Window.partitionBy(col("s_id"))
+      .orderBy(col("sim_micro").desc, col("t_id").asc)
+    val topS = sims.withColumn("rn", row_number().over(wS))
+      .where(col("rn") <= bitextK)
+      .groupBy(col("s_id")).agg(sum(col("sim_micro")).as("sk"))
+    val wT = Window.partitionBy(col("t_id"))
+      .orderBy(col("sim_micro").desc, col("s_id").asc)
+    val topT = sims.withColumn("rn", row_number().over(wT))
+      .where(col("rn") <= bitextK)
+      .groupBy(col("t_id")).agg(sum(col("sim_micro")).as("tk"))
+    val wBest = Window.partitionBy(col("s_id"))
+      .orderBy(col("margin_pct").desc, col("sim_micro").desc,
+        col("t_id").asc)
+    sims.join(topS, "s_id").join(topT, "t_id")
+      .where(col("sk") + col("tk") > 0)
+      .withColumn("margin_pct",
+        floor((lit(100L * 2 * bitextK) * col("sim_micro")).cast("double") /
+          (col("sk") + col("tk")).cast("double")).cast("long"))
+      .withColumn("rn", row_number().over(wBest))
+      .where(col("rn") === 1 && col("margin_pct") >= 105L)
+      .select(col("s_id"), col("t_id"), col("sim_micro"),
+        col("margin_pct"))
+  }
 
   /** The q168 driver entry: MARGIN-BASED BITEXT MINING — the parallel-
     * corpus construction of Artetxe & Schwenk 2019 (the LASER /
@@ -594,40 +623,32 @@ object Similarity {
     * id, so nothing here is corpus-quadratic.
     */
   def bitextMine(spark: SparkSession, sfDir: String): DataFrame = {
-    val u = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("label"),
-        Vectors.l2normalize(col("embedding")).as("v"))
+    val u = labeledUnits(spark, sfDir)
     val srcV = u.where(col("label") === 0)
       .select(col("vec_id").as("s_id"), col("v").as("sv"))
     val tgtV = u.where(col("label") === 1)
       .select(col("vec_id").as("t_id"), col("v").as("tv"))
-    val sims = srcV.crossJoin(broadcast(tgtV))
-      .select(col("s_id"), col("t_id"),
-        floor(lit(1000000.0) * Vectors.dot(col("sv"), col("tv")))
+    bitextMargin(srcV.crossJoin(broadcast(tgtV)))
+  }
+
+  /** The hard-negative band/rank over candidate pairs carrying
+    * `(a_id, a_label, av)` and `(n_id, n_label, nv)`: different id and
+    * label, micro-unit cosine in [0.1, 0.95), the 5 nearest per anchor
+    * by (sim desc, id asc). The tail of q169 and q322, the Spark twin of
+    * the band/rank SELECT both oracles end with.
+    */
+  private def hardNegativeBand(pairs: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("a_id"))
+      .orderBy(col("sim_micro").desc, col("n_id").asc)
+    pairs
+      .where(col("a_id") =!= col("n_id") &&
+        col("a_label") =!= col("n_label"))
+      .select(col("a_id"), col("n_id"),
+        floor(lit(1000000.0) * Vectors.dot(col("av"), col("nv")))
           .cast("long").as("sim_micro"))
-      .localCheckpoint(true) // read 3x (top-k both sides + the join)
-    val wS = Window.partitionBy(col("s_id"))
-      .orderBy(col("sim_micro").desc, col("t_id").asc)
-    val topS = sims.withColumn("rn", row_number().over(wS))
-      .where(col("rn") <= bitextK)
-      .groupBy(col("s_id")).agg(sum(col("sim_micro")).as("sk"))
-    val wT = Window.partitionBy(col("t_id"))
-      .orderBy(col("sim_micro").desc, col("s_id").asc)
-    val topT = sims.withColumn("rn", row_number().over(wT))
-      .where(col("rn") <= bitextK)
-      .groupBy(col("t_id")).agg(sum(col("sim_micro")).as("tk"))
-    val wBest = Window.partitionBy(col("s_id"))
-      .orderBy(col("margin_pct").desc, col("sim_micro").desc,
-        col("t_id").asc)
-    sims.join(topS, "s_id").join(topT, "t_id")
-      .where(col("sk") + col("tk") > 0)
-      .withColumn("margin_pct",
-        floor((lit(100L * 2 * bitextK) * col("sim_micro")).cast("double") /
-          (col("sk") + col("tk")).cast("double")).cast("long"))
-      .withColumn("rn", row_number().over(wBest))
-      .where(col("rn") === 1 && col("margin_pct") >= 105L)
-      .select(col("s_id"), col("t_id"), col("sim_micro"),
-        col("margin_pct"))
+      .where(col("sim_micro") >= 100000L && col("sim_micro") < 950000L)
+      .withColumn("neg_rank", row_number().over(w))
+      .where(col("neg_rank") <= 5)
   }
 
   /** The q169 driver entry: HARD-NEGATIVE MINING — the contrastive-
@@ -647,24 +668,12 @@ object Similarity {
     * source), so the quadratic never materializes.
     */
   def hardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
-    val u = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("label"),
-        Vectors.l2normalize(col("embedding")).as("v"))
+    val u = labeledUnits(spark, sfDir)
     val anchors = u.select(col("vec_id").as("a_id"),
       col("label").as("a_label"), col("v").as("av"))
     val cands = u.select(col("vec_id").as("n_id"),
       col("label").as("n_label"), col("v").as("nv"))
-    val w = Window.partitionBy(col("a_id"))
-      .orderBy(col("sim_micro").desc, col("n_id").asc)
-    anchors.crossJoin(broadcast(cands))
-      .where(col("a_id") =!= col("n_id") &&
-        col("a_label") =!= col("n_label"))
-      .select(col("a_id"), col("n_id"),
-        floor(lit(1000000.0) * Vectors.dot(col("av"), col("nv")))
-          .cast("long").as("sim_micro"))
-      .where(col("sim_micro") >= 100000L && col("sim_micro") < 950000L)
-      .withColumn("neg_rank", row_number().over(w))
-      .where(col("neg_rank") <= 5)
+    hardNegativeBand(anchors.crossJoin(broadcast(cands)))
   }
 
   /** The q322 driver entry: ANN-COMPOSED HARD-NEGATIVE MINING — the
@@ -696,9 +705,7 @@ object Similarity {
   def annHardNegatives(
       spark: SparkSession, sfDir: String,
       clusters: Int = ivfClusters): DataFrame = {
-    val u = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("label"),
-        Vectors.l2normalize(col("embedding")).as("v"))
+    val u = labeledUnits(spark, sfDir)
     val corpus = u.select(col("vec_id"), col("v").as("u"))
     val cents = seededCodebook(corpus, clusters)
     val assigned = assignCells(corpus, cents).join(u, "vec_id")
@@ -715,17 +722,7 @@ object Similarity {
       .withColumn("rn", row_number().over(wp))
       .where(col("rn") <= ivfProbes)
       .select(col("a_id"), col("a_label"), col("av"), col("c_id"))
-    val w = Window.partitionBy(col("a_id"))
-      .orderBy(col("sim_micro").desc, col("n_id").asc)
-    aProbes.join(assigned, "c_id")
-      .where(col("a_id") =!= col("n_id") &&
-        col("a_label") =!= col("n_label"))
-      .select(col("a_id"), col("n_id"),
-        floor(lit(1000000.0) * Vectors.dot(col("av"), col("nv")))
-          .cast("long").as("sim_micro"))
-      .where(col("sim_micro") >= 100000L && col("sim_micro") < 950000L)
-      .withColumn("neg_rank", row_number().over(w))
-      .where(col("neg_rank") <= 5)
+    hardNegativeBand(aProbes.join(assigned, "c_id"))
   }
 
   /** The q323 driver entry: ANN-COMPOSED BITEXT MINING — [[bitextMine]]
@@ -750,9 +747,7 @@ object Similarity {
   def annBitextMine(
       spark: SparkSession, sfDir: String,
       clusters: Int = ivfClusters): DataFrame = {
-    val u = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("label"),
-        Vectors.l2normalize(col("embedding")).as("v"))
+    val u = labeledUnits(spark, sfDir)
     val corpus = u.select(col("vec_id"), col("v").as("u"))
     val cents = seededCodebook(corpus, clusters)
     val tgt = assignCells(corpus, cents).join(u, "vec_id")
@@ -768,33 +763,7 @@ object Similarity {
       .withColumn("rn", row_number().over(wp))
       .where(col("rn") <= ivfProbes)
       .select(col("s_id"), col("sv"), col("c_id"))
-    val sims = sProbes.join(tgt, "c_id")
-      .select(col("s_id"), col("t_id"),
-        floor(lit(1000000.0) * Vectors.dot(col("sv"), col("tv")))
-          .cast("long").as("sim_micro"))
-      .localCheckpoint(true) // read 3x (top-k both sides + the join)
-    val wS = Window.partitionBy(col("s_id"))
-      .orderBy(col("sim_micro").desc, col("t_id").asc)
-    val topS = sims.withColumn("rn", row_number().over(wS))
-      .where(col("rn") <= bitextK)
-      .groupBy(col("s_id")).agg(sum(col("sim_micro")).as("sk"))
-    val wT = Window.partitionBy(col("t_id"))
-      .orderBy(col("sim_micro").desc, col("s_id").asc)
-    val topT = sims.withColumn("rn", row_number().over(wT))
-      .where(col("rn") <= bitextK)
-      .groupBy(col("t_id")).agg(sum(col("sim_micro")).as("tk"))
-    val wBest = Window.partitionBy(col("s_id"))
-      .orderBy(col("margin_pct").desc, col("sim_micro").desc,
-        col("t_id").asc)
-    sims.join(topS, "s_id").join(topT, "t_id")
-      .where(col("sk") + col("tk") > 0)
-      .withColumn("margin_pct",
-        floor((lit(100L * 2 * bitextK) * col("sim_micro")).cast("double") /
-          (col("sk") + col("tk")).cast("double")).cast("long"))
-      .withColumn("rn", row_number().over(wBest))
-      .where(col("rn") === 1 && col("margin_pct") >= 105L)
-      .select(col("s_id"), col("t_id"), col("sim_micro"),
-        col("margin_pct"))
+    bitextMargin(sProbes.join(tgt, "c_id"))
   }
 
   private[graft] val annRecallKs = Seq(1, 5, 10)
@@ -1425,8 +1394,7 @@ object Similarity {
       .select(col("q_id"), col("vec_id"),
         expr("CAST(floor(1000000.0 * cosine) AS BIGINT)").as("simq"))
       .localCheckpoint(true) // read by the pair builder + the collect
-    val corpus = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), Vectors.l2normalize(col("embedding")).as("u"))
+    val corpus = unitCorpus(spark, sfDir)
     val pairs = pool.select(col("q_id"), col("vec_id").as("a"))
       .join(pool.select(col("q_id"), col("vec_id").as("b")), Seq("q_id"))
       .where(col("a") =!= col("b"))

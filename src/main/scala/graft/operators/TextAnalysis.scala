@@ -1118,16 +1118,24 @@ object TextAnalysis {
   private[graft] def bpeSafeText(text: Column): Column =
     replace(text, lit("\u0001"), lit(""))
 
+  /** Each text of >= 2 chars as its sentinel-wrapped symbol `stream`
+    * (every char between U+0001 sentinels): the input of
+    * [[bpeTrainOn]] and of its recount twin.
+    */
+  private def sentinelStreams(docs: DataFrame): DataFrame = {
+    val SEP = "\u0001"
+    docs
+      .where(length(col("text")) >= 2)
+      .select(regexp_replace(bpeSafeText(col("text")), "(?s)(.)", SEP + "$1" + SEP)
+        .as("stream"))
+  }
+
   /** The trainer over any one-string-column corpus (spec entry point:
     * lets the overlap semantics be pinned on adversarial literals).
     */
   def bpeTrainOn(
       spark: SparkSession, docs: DataFrame, rounds: Int): DataFrame = {
-    val SEP = "\u0001"
-    val streams = docs
-      .where(length(col("text")) >= 2)
-      .select(regexp_replace(bpeSafeText(col("text")), "(?s)(.)", SEP + "$1" + SEP)
-        .as("stream"))
+    val streams = sentinelStreams(docs)
     import spark.implicits._
     bpeMergeLoop(checkpointStreams(weightStreams(streams)), rounds)
       .toDF("merge_round", "left_sym", "right_sym", "merged", "n")
@@ -1158,11 +1166,7 @@ object TextAnalysis {
     */
   private[graft] def bpeTrainOnRecount(
       spark: SparkSession, docs: DataFrame, rounds: Int): DataFrame = {
-    val SEP = "\u0001"
-    val streams = docs
-      .where(length(col("text")) >= 2)
-      .select(regexp_replace(bpeSafeText(col("text")), "(?s)(.)", SEP + "$1" + SEP)
-        .as("stream"))
+    val streams = sentinelStreams(docs)
     import spark.implicits._
     bpeMergeLoopRecount(checkpointStreams(streams), rounds)
       .toDF("merge_round", "left_sym", "right_sym", "merged", "n")
@@ -2853,6 +2857,40 @@ object TextAnalysis {
         expr("n_target_hit * 1000000 DIV n_pos").as("target_hit_ppm"))
   }
 
+  /** q313's split-twin truth: normWords docs with >= 5 words and their
+    * md5 80/20 train/eval `split` (pinned: read by the truth grams and
+    * again by the caller), and each eval doc's best train doc sharing
+    * >= 5 distinct 5-gram digests (`truth`: q_id, rel). The input of
+    * q334 and q345, the Spark twin of the oracle's `splitTwinCtes`.
+    */
+  private def splitTwins(
+      spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    import graft.operators.TrainingPrep.{hashBucket, splitBuckets, trainBuckets}
+    val docs = Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id"),
+        normWords(col("text")).as("w"))
+      .where(size(col("w")) >= 5)
+      .withColumn("split",
+        when(hashBucket(col("doc_id"), "", splitBuckets) < trainBuckets,
+          "train").otherwise("eval"))
+      .localCheckpoint(true)
+    val grams = docs.select(col("doc_id"), col("split"), explode(expr(
+        """array_distinct(transform(sequence(1, size(w) - 4),
+             i -> substring(md5(array_join(slice(w, i, 5), ' ')), 1, 16)))"""))
+        .as("g"))
+    val ov = grams.where(col("split") === "eval")
+      .select(col("doc_id").as("q_id"), col("g"))
+      .join(grams.where(col("split") === "train")
+        .select(col("doc_id").as("td"), col("g")), "g")
+      .groupBy(col("q_id"), col("td"))
+      .agg(count(lit(1)).as("shared"))
+    val wT = Window.partitionBy(col("q_id"))
+      .orderBy(col("shared").desc, col("td").asc)
+    (docs, ov.withColumn("rn", row_number().over(wT))
+      .where(col("rn") === 1 && col("shared") >= 5L)
+      .select(col("q_id"), col("td").as("rel")))
+  }
+
   /** The q334 driver entry: LEXICAL RETRIEVAL EVAL (BM25 recall@k /
     * MRR@k against contamination twins) — the retrieval-quality
     * counterpart of q329's vector eval, over the LEXICAL index: the
@@ -2881,30 +2919,7 @@ object TextAnalysis {
     * pinned (query, rank) frame of |queries| rows.
     */
   def bm25RetrievalEval(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.TrainingPrep.{hashBucket, splitBuckets, trainBuckets}
-    val docs = Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id"),
-        normWords(col("text")).as("w"))
-      .where(size(col("w")) >= 5)
-      .withColumn("split",
-        when(hashBucket(col("doc_id"), "", splitBuckets) < trainBuckets,
-          "train").otherwise("eval"))
-      .localCheckpoint(true) // read by grams, train tf, and qterms
-    val grams = docs.select(col("doc_id"), col("split"), explode(expr(
-        """array_distinct(transform(sequence(1, size(w) - 4),
-             i -> substring(md5(array_join(slice(w, i, 5), ' ')), 1, 16)))"""))
-        .as("g"))
-    val ov = grams.where(col("split") === "eval")
-      .select(col("doc_id").as("q_id"), col("g"))
-      .join(grams.where(col("split") === "train")
-        .select(col("doc_id").as("td"), col("g")), "g")
-      .groupBy(col("q_id"), col("td"))
-      .agg(count(lit(1)).as("shared"))
-    val wT = Window.partitionBy(col("q_id"))
-      .orderBy(col("shared").desc, col("td").asc)
-    val truth = ov.withColumn("rn", row_number().over(wT))
-      .where(col("rn") === 1 && col("shared") >= 5L)
-      .select(col("q_id"), col("td").as("rel"))
+    val (docs, truth) = splitTwins(spark, sfDir)
     val train = docs.where(col("split") === "train")
       .withColumn("dl", size(col("w")).cast("long"))
     val stats = train.agg(count(lit(1)).as("n_docs"),
@@ -2981,30 +2996,8 @@ object TextAnalysis {
     * the documented eval-only cost axis). Pair-grain output.
     */
   def bleuOverlapEval(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.TrainingPrep.{hashBucket, splitBuckets, trainBuckets}
-    val docs = Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id"),
-        normWords(col("text")).as("w"))
-      .where(size(col("w")) >= 5)
-      .withColumn("split",
-        when(hashBucket(col("doc_id"), "", splitBuckets) < trainBuckets,
-          "train").otherwise("eval"))
-      .localCheckpoint(true) // read by the truth grams + both multisets
-    val grams5 = docs.select(col("doc_id"), col("split"), explode(expr(
-        """array_distinct(transform(sequence(1, size(w) - 4),
-             i -> substring(md5(array_join(slice(w, i, 5), ' ')), 1, 16)))"""))
-        .as("g"))
-    val ov = grams5.where(col("split") === "eval")
-      .select(col("doc_id").as("q_id"), col("g"))
-      .join(grams5.where(col("split") === "train")
-        .select(col("doc_id").as("td"), col("g")), "g")
-      .groupBy(col("q_id"), col("td"))
-      .agg(count(lit(1)).as("shared"))
-    val wT = Window.partitionBy(col("q_id"))
-      .orderBy(col("shared").desc, col("td").asc)
-    val truth = ov.withColumn("rn", row_number().over(wT))
-      .where(col("rn") === 1 && col("shared") >= 5L)
-      .select(col("q_id"), col("td").as("rel"))
+    val (docs, twins) = splitTwins(spark, sfDir)
+    val truth = twins
       .localCheckpoint(true) // read by lens + both clip joins
     val lens = docs.select(col("doc_id"), size(col("w")).cast("long")
       .as("len"))

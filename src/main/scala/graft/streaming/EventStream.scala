@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.sources.Tables
 
@@ -267,26 +267,15 @@ object EventStream {
   def hourlyToParquetSink(spark: SparkSession, sfDir: String): DataFrame =
     graft.operators.Scratch.withScratch(spark, "q81_sink", sfDir) { dir =>
       val out = s"$dir/out"
-      val q = hourlyStream(statePinnedSession(spark), sfDir).writeStream
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", s"$dir/ckpt")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      unloadStateStores()
-      // explicit schema: a zero-batch run (or an all-dropped input)
-      // must read as an empty frame, not fail inference
-      val schema = StructType(Seq(
+      runForeachBatch(hourlyStream(statePinnedSession(spark), sfDir),
+          OutputMode.Complete(), dir) { (batch, _) =>
+        batch.write.mode("overwrite").parquet(out)
+      }
+      parquetOrEmpty(spark, StructType(Seq(
         StructField("hour", TimestampType),
         StructField("event_type", StringType),
         StructField("n_events", LongType),
-        StructField("sum_value", DoubleType)))
-      if (new java.io.File(out).exists) spark.read.schema(schema).parquet(out)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        StructField("sum_value", DoubleType))), existing(out))
     }
 
   /** The q254 driver entry: STREAMING THRESHOLD ALERTS against a
@@ -319,30 +308,21 @@ object EventStream {
           countDistinct(col("hour")).as("n_hours"))
         .write.mode("overwrite").parquet(s"$dir/baseline")
       val base = Tables.parquet(spark, s"$dir/baseline")
-      val q = hourlyStream(statePinnedSession(spark), sfDir).writeStream
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", s"$dir/ckpt")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.join(broadcast(base), "event_type")
-            .where(col("n_events") * col("n_hours") * lit(2L) >
-              col("total_events") * lit(3L))
-            .select(col("hour"), col("event_type"), col("n_events"),
-              col("total_events"), col("n_hours"))
-            .write.mode("overwrite").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      unloadStateStores()
-      val schema = StructType(Seq(
+      runForeachBatch(hourlyStream(statePinnedSession(spark), sfDir),
+          OutputMode.Complete(), dir) { (batch, _) =>
+        batch.join(broadcast(base), "event_type")
+          .where(col("n_events") * col("n_hours") * lit(2L) >
+            col("total_events") * lit(3L))
+          .select(col("hour"), col("event_type"), col("n_events"),
+            col("total_events"), col("n_hours"))
+          .write.mode("overwrite").parquet(out)
+      }
+      parquetOrEmpty(spark, StructType(Seq(
         StructField("hour", TimestampType),
         StructField("event_type", StringType),
         StructField("n_events", LongType),
         StructField("total_events", LongType),
-        StructField("n_hours", LongType)))
-      if (new java.io.File(out).exists) spark.read.schema(schema).parquet(out)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        StructField("n_hours", LongType))), existing(out))
     }
 
   /** Run a streaming frame to completion on the fixture files
@@ -355,7 +335,15 @@ object EventStream {
     * result copy in the catalog for the session lifetime.
     */
   def runToBatch(spark: SparkSession, build: SparkSession => DataFrame,
-      name: String, mode: OutputMode = OutputMode.Complete()): DataFrame = {
+      name: String, mode: OutputMode = OutputMode.Complete()): DataFrame =
+    runToMemory(spark, build, name, mode)._1
+
+  /** [[runToBatch]] that also returns the finished query, whose
+    * progress reports q265 reads.
+    */
+  private def runToMemory(spark: SparkSession,
+      build: SparkSession => DataFrame, name: String,
+      mode: OutputMode): (DataFrame, StreamingQuery) = {
     val s = statePinnedSession(spark)
     val q = build(s).writeStream
       .outputMode(mode)
@@ -364,12 +352,75 @@ object EventStream {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    try s.table(name).localCheckpoint(true)
+    try (s.table(name).localCheckpoint(true), q)
     finally {
       s.catalog.dropTempView(name)
       unloadStateStores()
     }
   }
+
+  /** Run `stream` to completion (Trigger.AvailableNow) through
+    * `foreachBatch(write)`, checkpointed under `dir`, then unload the
+    * state stores: the file-sink twin of [[runToBatch]] behind q81,
+    * q120, q171, q179, q187, q254 and q263.
+    */
+  private def runForeachBatch(stream: DataFrame, mode: OutputMode,
+      dir: String)(write: (DataFrame, Long) => Unit): Unit = {
+    val q = stream.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", s"$dir/ckpt")
+      .foreachBatch(write)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    unloadStateStores()
+  }
+
+  /** `paths` read back under a DECLARED `schema`, or an empty frame of
+    * that schema when there are none: a zero-batch run (or an
+    * all-dropped input) writes nothing and must read as empty, not
+    * fail inference.
+    */
+  private def parquetOrEmpty(spark: SparkSession, schema: StructType,
+      paths: Seq[String]): DataFrame =
+    if (paths.nonEmpty) spark.read.schema(schema).parquet(paths: _*)
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** `dir` if a sink has created it. */
+  private def existing(dir: String): Seq[String] =
+    Seq(dir).filter(new java.io.File(_).exists)
+
+  /** The `batch=N` leaves a per-batch-overwrite sink wrote under `out`,
+    * listed explicitly: a glob or a bare partitioned-dir read would
+    * either log spurious sink-metadata probes or inject the batch id as
+    * a partition column.
+    */
+  private def batchLeaves(out: String): Seq[String] =
+    Option(new java.io.File(out).listFiles()).toSeq.flatten
+      .filter(_.isDirectory).map(_.getAbsolutePath).sorted
+
+  /** The newest `v{N}` state version under `stateRoot` with N < `below`:
+    * the predecessor a versioned merge reads ([[cdcMergeBatch]],
+    * [[mvMergeBatch]]) and, unbounded, the final state of q120/q263.
+    */
+  private def latestVersion(stateRoot: String, below: Long): Seq[String] = {
+    val vs = Option(new java.io.File(stateRoot).list())
+      .getOrElse(Array.empty[String])
+      .filter(_.startsWith("v")).map(_.drop(1).toLong)
+      .filter(_ < below)
+    if (vs.isEmpty) Nil else Seq(s"$stateRoot/v${vs.max}")
+  }
+
+  /** A stream over the files an entry rendered to `$dir/incoming`, two
+    * per trigger, its schema PROBED from the files' batch schema, never
+    * declared blind (the round-9 micros-as-nanos lesson): the input of
+    * q171, q179 and q187.
+    */
+  private def incomingStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(Tables.parquet(spark, s"$dir/incoming").schema)
+      .option("maxFilesPerTrigger", 2)
+      .parquet(s"$dir/incoming")
 
   /** Unload every loaded state-store provider. Each [[runToBatch]]
     * invocation streams against a FRESH temporary checkpoint, so its
@@ -416,6 +467,16 @@ object EventStream {
     runToBatch(spark, sessionWindowStream(_, sfDir),
       s"q140_sesswin_${runSeq.incrementAndGet()}")
 
+  /** The watermarked purchase side of q62 and q105:
+    * `(p_user, purchase_id, purchase_ts, value)`.
+    */
+  private def purchaseStream(spark: SparkSession, sfDir: String): DataFrame =
+    readEvents(spark, sfDir)
+      .filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
+        col("ts").as("purchase_ts"), col("value"))
+      .withWatermark("purchase_ts", "1 hour")
+
   /** Stream-stream join: click→purchase attribution. Each purchase
     * joins every click by the same user within the preceding hour.
     * Both sides are watermarked and the join condition bounds event
@@ -428,11 +489,7 @@ object EventStream {
       .filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
       .withWatermark("click_ts", "1 hour")
-    val purchases = readEvents(spark, sfDir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"), col("value"))
-      .withWatermark("purchase_ts", "1 hour")
+    val purchases = purchaseStream(spark, sfDir)
     purchases.join(clicks,
       col("p_user") === col("c_user") &&
         col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
@@ -493,11 +550,7 @@ object EventStream {
       .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
         col("ts").as("click_ts"))
       .withWatermark("click_ts", "1 hour")
-    val purchases = readEvents(spark, sfDir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"), col("value"))
-      .withWatermark("purchase_ts", "1 hour")
+    val purchases = purchaseStream(spark, sfDir)
     clicks.join(purchases,
       col("c_user") === col("p_user") &&
         col("purchase_ts") >= col("click_ts") &&
@@ -850,17 +903,8 @@ object EventStream {
   def cdcMergeBatch(
       batch: DataFrame, batchId: Long, stateRoot: String): Unit = {
     val sp = batch.sparkSession
-    val prevDir = {
-      val d = new java.io.File(stateRoot)
-      val vs = Option(d.list()).getOrElse(Array.empty[String])
-        .filter(_.startsWith("v")).map(_.drop(1).toLong)
-        .filter(_ < batchId)
-      if (vs.isEmpty) None else Some(s"$stateRoot/v${vs.max}")
-    }
-    val prev = prevDir
-      .map(p => sp.read.schema(cdcStateSchema).parquet(p))
-      .getOrElse(sp.createDataFrame(
-        sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], cdcStateSchema))
+    val prev = parquetOrEmpty(sp, cdcStateSchema,
+      latestVersion(stateRoot, batchId))
     prev.unionByName(batch.withColumn("n_changes", lit(1L)))
       .groupBy(col("user_id"))
       .agg(
@@ -939,34 +983,21 @@ object EventStream {
         dataFiles().filterNot(f => before(f.getName))
           .foreach(_.setLastModified(mtimeBase + m * 60000L))
       }
-      val sp = statePinnedSession(spark)
-      val in = sp.readStream
-        .schema(Tables.parquet(sp, s"$dir/in").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dir/in")
-      val agg = in
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("w.start").as("hour"), col("event_type"),
-          col("n_events"))
-      val name = s"q265_late_${runSeq.incrementAndGet()}"
-      val q = agg.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", s"$dir/ckpt")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val (result, q) = runToMemory(spark, sp =>
+        sp.readStream
+          .schema(Tables.parquet(sp, s"$dir/in").schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(s"$dir/in")
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(col("w.start").as("hour"), col("event_type"),
+            col("n_events")),
+        s"q265_late_${runSeq.incrementAndGet()}", OutputMode.Append())
       dropped = q.recentProgress
         .flatMap(p => Option(p.stateOperators).toSeq.flatten)
         .map(_.numRowsDroppedByWatermark).sum
-      try sp.table(name).localCheckpoint(true)
-      finally {
-        sp.catalog.dropTempView(name)
-        unloadStateStores()
-      }
+      result
     }
     (df, dropped)
   }
@@ -996,17 +1027,8 @@ object EventStream {
           .as("cents"))
       .groupBy(col("event_type"), col("day"))
       .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
-    val prevDir = {
-      val vs = Option(new java.io.File(stateRoot).list())
-        .getOrElse(Array.empty[String])
-        .filter(_.startsWith("v")).map(_.drop(1).toLong)
-        .filter(_ < batchId)
-      if (vs.isEmpty) None else Some(s"$stateRoot/v${vs.max}")
-    }
-    val prev = prevDir
-      .map(p => sp.read.schema(mvStateSchema).parquet(p))
-      .getOrElse(sp.createDataFrame(
-        sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], mvStateSchema))
+    val prev = parquetOrEmpty(sp, mvStateSchema,
+      latestVersion(stateRoot, batchId))
     prev.unionByName(delta)
       .groupBy(col("event_type"), col("day"))
       .agg(sum(col("n_events")).as("n_events"),
@@ -1046,25 +1068,12 @@ object EventStream {
         .schema(Tables.parquet(sp, s"$dir/in").schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$dir/in")
-      val q = in.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", s"$dir/ckpt")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          mvMergeBatch(batch, id, stateRoot)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      unloadStateStores()
-      val vs = Option(new java.io.File(stateRoot).list())
-        .getOrElse(Array.empty[String])
-        .filter(_.startsWith("v")).map(_.drop(1).toLong)
-      val st =
-        if (vs.isEmpty) spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          mvStateSchema)
-        else spark.read.schema(mvStateSchema).parquet(s"$stateRoot/v${vs.max}")
-      st.select(col("event_type"), col("day"), col("n_events"),
+      runForeachBatch(in, OutputMode.Append(), dir) { (batch, id) =>
+        mvMergeBatch(batch, id, stateRoot)
+      }
+      parquetOrEmpty(spark, mvStateSchema,
+          latestVersion(stateRoot, Long.MaxValue))
+        .select(col("event_type"), col("day"), col("n_events"),
           col("sum_cents"))
         .localCheckpoint(true)
     }
@@ -1095,24 +1104,12 @@ object EventStream {
       val stateRoot = s"$dir/state"
       new java.io.File(stateRoot).mkdirs()
       val sp = statePinnedSession(spark)
-      val q = cdcChanges(readEvents(sp, sfDir)).writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", s"$dir/ckpt")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          cdcMergeBatch(batch, id, stateRoot)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val vs = Option(new java.io.File(stateRoot).list())
-        .getOrElse(Array.empty[String])
-        .filter(_.startsWith("v")).map(_.drop(1).toLong)
-      val st =
-        if (vs.isEmpty) spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          cdcStateSchema)
-        else spark.read.schema(cdcStateSchema)
-          .parquet(s"$stateRoot/v${vs.max}")
+      runForeachBatch(cdcChanges(readEvents(sp, sfDir)),
+          OutputMode.Append(), dir) { (batch, id) =>
+        cdcMergeBatch(batch, id, stateRoot)
+      }
+      val st = parquetOrEmpty(spark, cdcStateSchema,
+        latestVersion(stateRoot, Long.MaxValue))
       // cents-BIGINT output (not DECIMAL) for the exact hash compare —
       // see Relational.cdcReplay; the state table keeps exact decimals.
       st.select(col("user_id"), col("op").as("last_op"),
@@ -1262,40 +1259,19 @@ object EventStream {
       docs.where(col("doc_id") % 2 === 1)
         .repartition(4)
         .write.mode("overwrite").parquet(s"$dir/incoming")
-      // stream schema PROBED from the files' batch schema — never
-      // declared blind (the round-9 micros-as-nanos lesson)
-      val schema = Tables.parquet(spark, s"$dir/incoming").schema
       val out = s"$dir/out"
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(s"$dir/incoming")
-        .writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val s = batch.sparkSession
-          val idx = Tables.parquet(s, s"$dir/index")
+      runForeachBatch(incomingStream(spark, dir), OutputMode.Append(), dir) {
+        (batch, id) =>
+          val idx = Tables.parquet(batch.sparkSession, s"$dir/index")
           batch
             .withColumn("fp", md5(normalizedText(col("text"))))
             .join(idx, Seq("fp"), "left_anti")
             .select(col("doc_id"), col("fp"))
             .write.mode("overwrite").parquet(s"$out/batch=$id")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val acceptedSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("fp", StringType)))
-      // enumerate the batch=N leaves explicitly: a glob or a bare
-      // partitioned-dir read would either log spurious sink-metadata
-      // probes or inject the batch id as a partition column
-      val parts = Option(new java.io.File(out).listFiles()).toSeq.flatten
-        .filter(_.isDirectory).map(_.getAbsolutePath).sorted
-      val accepted =
-        if (parts.nonEmpty)
-          spark.read.schema(acceptedSchema).parquet(parts: _*)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          acceptedSchema)
+      }
+      val accepted = parquetOrEmpty(spark, StructType(Seq(
+        StructField("doc_id", LongType), StructField("fp", StringType))),
+        batchLeaves(out))
       // index refresh: tomorrow's history = today's ∪ accepted
       Tables.parquet(spark, s"$dir/index")
         .unionByName(accepted.select(col("fp")))
@@ -1324,7 +1300,6 @@ object EventStream {
         .select(col("doc_id"), col("text"))
         .repartition(4)
         .write.mode("overwrite").parquet(s"$dir/incoming")
-      val schema = Tables.parquet(spark, s"$dir/incoming").schema
       val out = s"$dir/out"
       // the model is STATIC for the life of the stream: read the
       // artifact ONCE (weights pinned via localCheckpoint, bias row
@@ -1335,30 +1310,18 @@ object EventStream {
       val model = Tables.parquet(spark, s"$dir/model")
       val weights = model.where(col("bucket") >= 0L).localCheckpoint(true)
       val bq = model.where(col("bucket") === -1L).head().getLong(1)
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(s"$dir/incoming")
-        .writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
+      runForeachBatch(incomingStream(spark, dir), OutputMode.Append(), dir) {
+        (batch, id) =>
           graft.operators.TrainingPrep
             .scoreWith(batch, weights, lit(bq))
             .write.mode("overwrite").parquet(s"$out/batch=$id")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      }
       weights.unpersist()
-      val outSchema = StructType(Seq(
+      parquetOrEmpty(spark, StructType(Seq(
         StructField("doc_id", LongType), StructField("n_active", LongType),
         StructField("z_micro", LongType),
         StructField("score_micro", LongType),
-        StructField("keep", BooleanType)))
-      val parts = Option(new java.io.File(out).listFiles()).toSeq.flatten
-        .filter(_.isDirectory).map(_.getAbsolutePath).sorted
-      if (parts.nonEmpty) spark.read.schema(outSchema).parquet(parts: _*)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+        StructField("keep", BooleanType))), batchLeaves(out))
     }
 
   /** The q187 driver entry: STREAMING OUTLIER GATE from persisted
@@ -1386,34 +1349,21 @@ object EventStream {
             .as("cents"))
         .repartition(4)
         .write.mode("overwrite").parquet(s"$dir/incoming")
-      val schema = Tables.parquet(spark, s"$dir/incoming").schema
       val out = s"$dir/out"
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(s"$dir/incoming")
-        .writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val s = batch.sparkSession
+      runForeachBatch(incomingStream(spark, dir), OutputMode.Append(), dir) {
+        (batch, id) =>
           graft.operators.Relational
-            .madEventGateWith(batch, Tables.parquet(s, s"$dir/bounds"))
+            .madEventGateWith(batch,
+              Tables.parquet(batch.sparkSession, s"$dir/bounds"))
             .write.mode("overwrite").parquet(s"$out/batch=$id")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val outSchema = StructType(Seq(
+      }
+      parquetOrEmpty(spark, StructType(Seq(
         StructField("event_id", LongType),
         StructField("event_type", StringType),
         StructField("cents", LongType),
         StructField("med_cents", LongType),
         StructField("mad_cents", LongType),
-        StructField("is_outlier", BooleanType)))
-      val parts = Option(new java.io.File(out).listFiles()).toSeq.flatten
-        .filter(_.isDirectory).map(_.getAbsolutePath).sorted
-      if (parts.nonEmpty) spark.read.schema(outSchema).parquet(parts: _*)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+        StructField("is_outlier", BooleanType))), batchLeaves(out))
     }
 
   /** The q333 driver entry: WATERMARK-DELAY PLANNER — the tuning
