@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Dump the executed plans of a list of driver entries to files — the
+/** Dump the plans of a list of driver entries to files — the
   * optimization-round evidence artifact (plans/r{N}/<query>_<tag>.txt).
   * Each file holds every SQL execution that building the entry and
   * writing it to `noop` starts, in order: each `localCheckpoint` pin,
@@ -14,18 +14,29 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * and the final write. So an entry that returns a pinned frame shows
   * the pipeline that filled the pin, not just a `Scan ExistingRDD`.
   *
+  * Per execution the file holds the optimized logical plan, the
+  * physical plan before AQE and the formatted executed plan. The first
+  * two are the same in every run of one commit (except q283, whose
+  * Expand lists its two distinct aggregates in either order); the
+  * executed plan is not (AQE picks build sides, exchange reuse and
+  * stage order from which stage finishes first), so compare commits on
+  * the first two.
+  *
   * Usage: runMain graft.tools.PlanDump <outDir> <tag> q01_scan_1a,q02_scan_1b
   */
 object PlanDump {
 
-  /** Formatted executed plan of every SQL execution (successful or
+  /** The plans (see above) of every SQL execution (successful or
     * failed) that `SparkEntry.queries(name)` and a `noop` write of its
     * result start, in completion order.
     */
   def executions(spark: SparkSession, sfDir: String, name: String): Seq[String] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
     def record(funcName: String, qe: QueryExecution, outcome: String): Unit =
-      plans.add(s"== $funcName ($outcome) ==\n" + qe.explainString(FormattedMode))
+      plans.add(s"== $funcName ($outcome) ==\n" +
+        s"== Optimized Logical Plan ==\n${qe.optimizedPlan}\n" +
+        s"== Spark Plan (pre-AQE) ==\n${qe.sparkPlan}\n" +
+        qe.explainString(FormattedMode))
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         record(funcName, qe, "ok")
@@ -36,8 +47,7 @@ object PlanDump {
     org.apache.spark.graftbus.drainListenerBus(sc)
     spark.listenerManager.register(listener)
     try {
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      graft.Bench.timeNoop(spark)(graft.SparkEntry.queries(name)(spark, sfDir))
       org.apache.spark.graftbus.drainListenerBus(sc)
     } finally spark.listenerManager.unregister(listener)
     scala.jdk.CollectionConverters.IteratorHasAsScala(plans.iterator).asScala.toSeq
@@ -57,7 +67,6 @@ object PlanDump {
         catch { case e: Throwable => s"PLAN DUMP FAILED: $e" }
       Files.write(outDir.resolve(s"${n}_$tag.txt"), text.getBytes("UTF-8"))
       println(s"[plandump] wrote ${n}_$tag.txt (${text.length} chars)")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
     spark.stop()
   }
