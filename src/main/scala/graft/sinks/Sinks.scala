@@ -1,8 +1,16 @@
 package graft.sinks
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskFailedReason
+import org.apache.spark.graftbus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.sources.Tables
 
 /** Sink + metrics layer (SURVEY.md §2 O9, §3.1 step 11).
@@ -12,9 +20,9 @@ import graft.sources.Tables
   * (`src/python/mapper.py:64-72`, `src/python/reducer.py:73-77`) and
   * the driver folds that into a Lambda-seconds + S3-requests cost
   * model (`src/python/driver.py:216-279`, formulas `:259-269`).
-  * Spark-native: writers are `df.write`, per-task metrics come from a
-  * SparkListener, and the cost model is reproduced as a reporting
-  * utility over those metrics.
+  * Spark-native: writers are `df.write`, per-task metrics come from one
+  * recorder ([[Sinks.withMetrics]]), and the cost model is reproduced
+  * as a reporting utility over those metrics.
   */
 object Sinks {
 
@@ -146,9 +154,11 @@ object Sinks {
       .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
   }
 
-  /** Per-job metrics the reference tracks per task object: rows out,
-    * wall seconds, executor cpu-seconds, bytes read/written, shuffle
-    * traffic.
+  /** What the reference tracks per task object (rows out, wall
+    * seconds, executor cpu-seconds, bytes read/written, shuffle
+    * traffic), plus what a check of a run counts: jobs started, shuffle
+    * records written, the first line of every failed task's reason,
+    * and every SQL execution that finished, in completion order.
     */
   case class JobMetrics(
       rowsOut: Long,
@@ -158,7 +168,11 @@ object Sinks {
       bytesRead: Long,
       bytesWritten: Long,
       shuffleBytes: Long,
-      peakMemory: Long) {
+      peakMemory: Long,
+      jobs: Int,
+      shuffleRecords: Long,
+      failedTasks: Seq[String],
+      executions: Seq[Execution]) {
 
     /** The reference's published cost model (driver.py:259-269):
       * Lambda $0.00001667/GB-s at the configured container size plus
@@ -178,16 +192,44 @@ object Sinks {
     }
   }
 
-  /** Run `action` while aggregating task metrics — the Spark twin of
-    * the reference's metadata-on-every-object protocol. Thread-safe;
-    * listener is removed afterwards.
+  /** One finished SQL execution: the action that started it
+    * (`collect`, `localCheckpoint`, a write's save mode, ...), its
+    * plans, and the error it failed with, if it failed.
+    */
+  case class Execution(action: String, qe: QueryExecution, failure: Option[Exception])
+
+  /** How long [[withMetrics]] waits for jobs still running after
+    * `action` returns.
+    */
+  private val LeftoverJobWaitNs = 60L * 1000000000L
+
+  /** Run `action` and record what the whole SparkContext runs meanwhile:
+    * the Spark twin of the reference's metadata-on-every-object
+    * protocol, and the one recorder of a run in this code base.
+    *
+    * It watches every job of the context, not only those `action`
+    * starts on its own thread, and never filters a failed task out.
+    * AQE can leave a job running after `action` returns (a broadcast
+    * for a join side it pruned), so it waits, up to 60 s, until the
+    * context has no active job; then it drains the asynchronous
+    * listener bus before it reads the counts. Both listeners are
+    * removed afterwards.
     */
   def withMetrics[T](spark: SparkSession)(action: => T): (T, JobMetrics) = {
     val rows = new LongAdder; val cpu = new LongAdder; val run = new LongAdder
     val read = new LongAdder; val written = new LongAdder
-    val shuffle = new LongAdder; val peak = new AtomicLong
-    val listener = new SparkListener {
+    val shuffle = new LongAdder; val shuffleRecs = new LongAdder
+    val peak = new AtomicLong; val jobs = new LongAdder
+    val failed = new ConcurrentLinkedQueue[String]
+    val executions = new ConcurrentLinkedQueue[Execution]
+    val tasks = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.increment()
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        t.reason match {
+          case org.apache.spark.Success => ()
+          case r: TaskFailedReason =>
+            failed.add(r.toErrorString.linesIterator.nextOption().getOrElse(""))
+        }
         val m = t.taskMetrics
         if (m != null) {
           rows.add(m.outputMetrics.recordsWritten)
@@ -196,16 +238,31 @@ object Sinks {
           read.add(m.inputMetrics.bytesRead)
           written.add(m.outputMetrics.bytesWritten)
           shuffle.add(m.shuffleWriteMetrics.bytesWritten)
+          shuffleRecs.add(m.shuffleWriteMetrics.recordsWritten)
           peak.accumulateAndGet(m.peakExecutionMemory, math.max)
         }
       }
     }
-    spark.sparkContext.addSparkListener(listener)
+    val queries = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.add(Execution(action, qe, None))
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit =
+        executions.add(Execution(action, qe, Some(e)))
+    }
+    val sc = spark.sparkContext
+    // events of earlier runs still queued would reach the new listeners
+    graftbus.drainListenerBus(sc)
+    sc.addSparkListener(tasks)
+    spark.listenerManager.register(queries)
     val t0 = System.nanoTime()
     try {
       val out = action
-      // listener events are async; drain before reading
-      org.apache.spark.graftbus.drainListenerBus(spark.sparkContext)
+      // the status tracker learns of jobs through the bus: drain first
+      graftbus.drainListenerBus(sc)
+      val deadline = System.nanoTime() + LeftoverJobWaitNs
+      while (sc.statusTracker.getActiveJobIds().nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      graftbus.drainListenerBus(sc)
       val metrics = JobMetrics(
         rowsOut = rows.sum(),
         wallSeconds = (System.nanoTime() - t0) / 1e9,
@@ -214,8 +271,15 @@ object Sinks {
         bytesRead = read.sum(),
         bytesWritten = written.sum(),
         shuffleBytes = shuffle.sum(),
-        peakMemory = peak.get())
+        peakMemory = peak.get(),
+        jobs = jobs.intValue(),
+        shuffleRecords = shuffleRecs.sum(),
+        failedTasks = failed.asScala.toSeq,
+        executions = executions.asScala.toSeq)
       (out, metrics)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      spark.listenerManager.unregister(queries)
+      sc.removeSparkListener(tasks)
+    }
   }
 }

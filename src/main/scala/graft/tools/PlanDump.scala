@@ -3,8 +3,9 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.execution.FormattedMode
+
+import graft.sinks.Sinks
 
 /** Dump the plans of a list of driver entries to files — the
   * optimization-round evidence artifact (plans/r{N}/<query>_<tag>.txt).
@@ -30,28 +31,15 @@ object PlanDump {
     * failed) that `SparkEntry.queries(name)` and a `noop` write of its
     * result start, in completion order.
     */
-  def executions(spark: SparkSession, sfDir: String, name: String): Seq[String] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    def record(funcName: String, qe: QueryExecution, outcome: String): Unit =
-      plans.add(s"== $funcName ($outcome) ==\n" +
+  def executions(spark: SparkSession, sfDir: String, name: String): Seq[String] =
+    Sinks.withMetrics(spark)(
+      graft.Bench.timeNoop(spark)(graft.SparkEntry.queries(name)(spark, sfDir))
+    )._2.executions.map { case Sinks.Execution(action, qe, failure) =>
+      s"== $action (${failure.fold("ok")(e => s"failed: $e")}) ==\n" +
         s"== Optimized Logical Plan ==\n${qe.optimizedPlan}\n" +
         s"== Spark Plan (pre-AQE) ==\n${qe.sparkPlan}\n" +
-        qe.explainString(FormattedMode))
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        record(funcName, qe, "ok")
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        record(funcName, qe, s"failed: $exception")
+        qe.explainString(FormattedMode)
     }
-    val sc = spark.sparkContext
-    org.apache.spark.graftbus.drainListenerBus(sc)
-    spark.listenerManager.register(listener)
-    try {
-      graft.Bench.timeNoop(spark)(graft.SparkEntry.queries(name)(spark, sfDir))
-      org.apache.spark.graftbus.drainListenerBus(sc)
-    } finally spark.listenerManager.unregister(listener)
-    scala.jdk.CollectionConverters.IteratorHasAsScala(plans.iterator).asScala.toSeq
-  }
 
   def main(args: Array[String]): Unit = {
     val outDir = Paths.get(args(0))

@@ -153,21 +153,9 @@ class MapReduceSpec extends AnyFunSuite {
     // carries partial (bucket, sum, count) rows — at most `leaves`
     // distinct keys — never lineitem rows. Read the real shuffle
     // volume off the executed metrics rather than trusting the plan.
-    val metrics = {
-      val sl = new org.apache.spark.scheduler.SparkListener {
-        val recs = new java.util.concurrent.atomic.AtomicLong
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          recs.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      }
-      spark.sparkContext.addSparkListener(sl)
-      try {
-        df.write.format("noop").mode("overwrite").save()
-        org.apache.spark.graftbus.drainListenerBus(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(sl)
-      sl.recs.get()
-    }
-    val nParts = ReferenceQueriesSpecHelpers.factPartitions(spark, sf)
+    val metrics = graft.sinks.Sinks.withMetrics(spark)(
+      df.write.format("noop").mode("overwrite").save())._2.shuffleRecords
+    val nParts = graft.sources.Tables.load(spark, sf, "lineitem").rdd.getNumPartitions
     val lineitemRows = q06.getLong(1)
     assert(metrics < lineitemRows / 10,
       s"tree shuffled $metrics records - round 0 must combine map-side " +
@@ -179,12 +167,4 @@ class MapReduceSpec extends AnyFunSuite {
       executed.contains("coalesced"),
       s"AQE did not coalesce the micro-rounds:\n$executed")
   }
-}
-
-/** q403's spec needs the fact-scan task count for its shuffle-volume
-  * bound; split out so the listener arithmetic above stays readable.
-  */
-object ReferenceQueriesSpecHelpers {
-  def factPartitions(spark: org.apache.spark.sql.SparkSession, sf: String): Int =
-    graft.sources.Tables.load(spark, sf, "lineitem").rdd.getNumPartitions
 }

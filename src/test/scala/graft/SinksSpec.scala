@@ -187,6 +187,31 @@ class SinksSpec extends AnyFunSuite {
     assert(m.bytesRead > 0)
   }
 
+  test("withMetrics waits for a job the action leaves running and records its failed task") {
+    import spark.implicits._
+    // the task signals that it runs, sleeps, then fails
+    val slowFailure = spark.range(1)
+      .map { i => SinksSpec.lateTaskRunning.countDown(); Thread.sleep(500); i }
+      .select(raise_error(concat(lit("late failure "), col("value").cast("string"))))
+    val late = new Thread(() => try slowFailure.collect() catch { case _: Exception => () })
+    val (_, m) = Sinks.withMetrics(spark) {
+      late.start()
+      assert(SinksSpec.lateTaskRunning.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    }
+    late.join()
+    assert(m.failedTasks.exists(_.contains("late failure 0")), m.failedTasks)
+  }
+
+  test("withMetrics records every SQL execution in completion order") {
+    val (_, m) = Sinks.withMetrics(spark) {
+      spark.range(3).collect()
+      spark.range(5).write.format("noop").mode("overwrite").save()
+    }
+    // Spark names a write's execution after its save mode
+    assert(m.executions.map(_.action) == Seq("collect", "overwrite"), m.executions)
+    assert(m.executions.forall(_.failure.isEmpty))
+  }
+
   test("estimatedCostUsd reproduces the reference formula on hand-computed inputs") {
     // driver.py:259-269: lambdaCost = totalLambdaSecs * memory/1024 *
     // 0.00001667; s3 = GETs * 0.004/10000 + PUTs * 0.005/1000.
@@ -196,12 +221,13 @@ class SinksSpec extends AnyFunSuite {
       rowsOut = 0, wallSeconds = 0, executorCpuSeconds = 0,
       executorRunSeconds = 120.0,
       bytesRead = 256L << 20, bytesWritten = 128L << 20,
-      shuffleBytes = 0, peakMemory = 0)
+      shuffleBytes = 0, peakMemory = 0,
+      jobs = 0, shuffleRecords = 0, failedTasks = Nil, executions = Nil)
     val expected = 120.0 * 1.5 * 0.00001667 +
       2 * (0.004 / 10000) + 1 * (0.005 / 1000)
     assert(math.abs(m.estimatedCostUsd(1.5) - expected) < 1e-12)
     // zero work costs zero
-    val z = Sinks.JobMetrics(0, 0, 0, 0, 0, 0, 0, 0)
+    val z = Sinks.JobMetrics(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, Nil, Nil)
     assert(z.estimatedCostUsd() == 0.0)
   }
 
@@ -218,4 +244,9 @@ class SinksSpec extends AnyFunSuite {
     assert(surviving == 2)
     assert(dropped == 2)
   }
+}
+
+object SinksSpec {
+  /** Counted down by the task of the late-failure test once it runs. */
+  val lateTaskRunning = new java.util.concurrent.CountDownLatch(1)
 }

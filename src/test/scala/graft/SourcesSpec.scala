@@ -54,30 +54,8 @@ class SourcesSpec extends AnyFunSuite {
     assert(obs.get("rows_out") == 2L)
   }
 
-  /** Jobs started by `body` on this thread (and the threads it hands
-    * its local properties to).
-    */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val key = "graft.test.jobCount"
-    val id = java.util.UUID.randomUUID.toString
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(key) == id) n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty(key, id)
-    try {
-      body
-      org.apache.spark.graftbus.drainListenerBus(sc)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(l)
-    }
-    n.get
-  }
+  /** Jobs the context starts while `body` runs. */
+  private def jobsOf(body: => Unit): Int = graft.sinks.Sinks.withMetrics(spark)(body)._2.jobs
 
   test("job counts: Tables.load starts none, q01 runs 1 job and q04 runs 2") {
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
