@@ -10334,10 +10334,11 @@ object SparkEntry {
            CAST(max_abs_s // n_vecs AS BIGINT) AS max_mean_channel_micro
          FROM g""",
     // q388: tokenizer migration — the q157 encode chain to v2 rounds
-    // carries BOTH taps (s10 is v1, s20 is v2) in one training.
+    // carries BOTH taps (s at the v1 rounds, s at the v2 rounds) in
+    // one training; the select reads each round count.
     "q388_tokenizer_migration" ->
-      (bpeEncodeChainSql(20) +
-        """SELECT d.lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+      (bpeEncodeChainSql(TextAnalysis.bpeRounds) +
+        s"""SELECT d.lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(len(string_split(trim(a.stream, chr(1)),
              chr(1)||chr(1)))) AS BIGINT) AS tokens_v1,
            CAST(SUM(len(string_split(trim(b.stream, chr(1)),
@@ -10352,7 +10353,7 @@ object SparkEntry {
                chr(1)||chr(1))))) * 1000000
              // SUM(len(string_split(trim(a.stream, chr(1)),
                chr(1)||chr(1)))) AS BIGINT) AS saved_ppm
-         FROM s10 a JOIN s20 b USING (doc_id)
+         FROM s${TextAnalysis.bpeMigrationV1Rounds} a JOIN s${TextAnalysis.bpeRounds} b USING (doc_id)
          JOIN documents d ON d.doc_id = a.doc_id
          GROUP BY 1"""),
     // q389: shared-prefix mass — first-char buckets make the

@@ -1118,27 +1118,70 @@ object TextAnalysis {
   private[graft] def bpeSafeText(text: Column): Column =
     replace(text, lit("\u0001"), lit(""))
 
-  /** Each text of >= 2 chars as its sentinel-wrapped symbol `stream`
-    * (every char between U+0001 sentinels): the input of
-    * [[bpeTrainOn]] and of its recount twin.
+  /** The symbol boundary of every BPE stream, codepoint and byte. */
+  private final val SEP = "\u0001"
+
+  /** The symbols of a sentinel stream, in order. */
+  private def bpeSymbols(stream: Column): Column =
+    split(btrim(stream, lit(SEP)), SEP + SEP)
+
+  /** Apply `merges` to a sentinel stream in merge order: one
+    * codegen'd `replace` of "\u0001l\u0001\u0001r\u0001" with
+    * "\u0001lr\u0001" per merge, round 1 innermost. The training loop
+    * applies each batch with it, q173 its frozen base table, and the
+    * encoders (q157, q238, q388) a trained table (oracle twin
+    * `SparkEntry.bpeApplyCte`).
     */
-  private def sentinelStreams(docs: DataFrame): DataFrame = {
-    val SEP = "\u0001"
+  private def applyMerges(stream: Column, merges: Seq[(String, String)]): Column =
+    merges.foldLeft(stream) { case (s, (l, r)) =>
+      replace(s, lit(SEP + l + SEP + SEP + r + SEP), lit(SEP + l + r + SEP))
+    }
+
+  /** The codepoint symbolizer: every char of the U+0001-stripped
+    * text between sentinels, with `merges` applied in order (oracle
+    * twin `SparkEntry.bpeCharStream`).
+    */
+  private def codepointStream(
+      text: Column, merges: Seq[(String, String)]): Column =
+    applyMerges(
+      regexp_replace(bpeSafeText(text), "(?s)(.)", SEP + "$1" + SEP), merges)
+
+  /** Each text of >= 2 chars as its symbol `stream` under `merges`:
+    * the input of [[bpeTrainOn]] (no merges), of its recount twin and
+    * of q173's continued training (its frozen base table).
+    */
+  private def sentinelStreams(
+      docs: DataFrame, merges: Seq[(String, String)]): DataFrame =
     docs
       .where(length(col("text")) >= 2)
-      .select(regexp_replace(bpeSafeText(col("text")), "(?s)(.)", SEP + "$1" + SEP)
-        .as("stream"))
-  }
+      .select(codepointStream(col("text"), merges).as("stream"))
+
+  /** The distinct symbols of a (stream, cnt) frame — the base
+    * alphabet the merge loop's concat guard starts from, and q164's
+    * observed base vocabulary. One bounded collect (codepoints seen,
+    * or <= 256 byte values).
+    */
+  private def baseSymbols(streams: DataFrame): Set[String] =
+    streams.select(explode(bpeSymbols(col("stream"))).as("s"))
+      .distinct().collect().map(_.getString(0)).toSet
 
   /** The trainer over any one-string-column corpus (spec entry point:
     * lets the overlap semantics be pinned on adversarial literals).
     */
   def bpeTrainOn(
       spark: SparkSession, docs: DataFrame, rounds: Int): DataFrame = {
-    val streams = sentinelStreams(docs)
     import spark.implicits._
-    bpeMergeLoop(checkpointStreams(weightStreams(streams)), rounds)
+    trainStreams(sentinelStreams(docs, Nil), rounds)
       .toDF("merge_round", "left_sym", "right_sym", "merged", "n")
+  }
+
+  /** Collapse, spread and pin `streams`, then run the merge loop from
+    * their base alphabet: q155's and q173's training.
+    */
+  private def trainStreams(streams: DataFrame, rounds: Int)
+      : Seq[(Int, String, String, String, Long)] = {
+    val pinned = checkpointStreams(weightStreams(streams))
+    bpeMergeLoop(pinned, baseSymbols(pinned), rounds)
   }
 
   /** DICTIONARY COLLAPSE (round-12): fold identical sentinel streams
@@ -1162,13 +1205,13 @@ object TextAnalysis {
     streams.groupBy(col("stream")).agg(count(lit(1)).as("cnt"))
 
   /** Recount-loop twin of `bpeTrainOn` — the differential oracle the
-    * spec pins the incremental loop against (never a driver entry).
+    * spec pins the weighted, batched loop against (never a driver
+    * entry).
     */
   private[graft] def bpeTrainOnRecount(
       spark: SparkSession, docs: DataFrame, rounds: Int): DataFrame = {
-    val streams = sentinelStreams(docs)
     import spark.implicits._
-    bpeMergeLoopRecount(checkpointStreams(streams), rounds)
+    bpeMergeLoopRecount(checkpointStreams(sentinelStreams(docs, Nil)), rounds)
       .toDF("merge_round", "left_sym", "right_sym", "merged", "n")
   }
 
@@ -1187,222 +1230,122 @@ object TextAnalysis {
       .repartition(streams.sparkSession.sparkContext.defaultParallelism)
       .localCheckpoint(true)
 
-  /** The shared BPE merge loop: INCREMENTAL pair-count maintenance
-    * (round-11) + DICTIONARY WEIGHTING and MERGE BATCHING (round-12).
-    * Input is the collapsed (stream, cnt) dictionary (weightStreams);
-    * every pair aggregate weights by cnt, so per-round corpus work is
-    * bounded by UNIQUE streams while results equal the raw unweighted
-    * loop exactly. The recount twin below scans every symbol of the
-    * corpus into a hash aggregate EVERY round — at a 32k-vocab target
-    * (1,600x the fixture's 20 rounds) that full recount per round is
-    * the scale-killer the round-10 audit flagged. Real trainers
-    * (Sennrich's subword-nmt onward) maintain pair-count DELTAS: after
-    * merging (l,r), only streams that CONTAIN the merged pair change
-    * their pair multiset. This loop keeps the pair-count table as a
-    * checkpointed frame over the distinct-pair domain (<= vocab^2,
-    * thousands — never the corpus) and per iteration:
-    *   1. top-M from the COUNTS TABLE (tiny scan — no corpus read);
-    *   2. rows matching ANY batched merge pattern (one codegen'd
-    *      `contains` scan — the only corpus-wide touch) emit their
-    *      before-pairs at -cnt and after-pairs at +cnt; the summed
-    *      delta patches the counts table via a full-outer join of two
-    *      small frames;
-    *   3. the stream itself updates by ONE chained codegen'd
-    *      `replace` pass applying the whole batch (a no-op on
-    *      unmatched rows).
-    * MERGE BATCHING (round-12): instead of one merge per corpus pass,
-    * the loop takes the top-M ranked pairs and applies the longest
-    * prefix that provably yields the SAME merge sequence as the
-    * sequential loop (selectBatch — symbol-disjointness, concat
-    * guards, strict count drop after the batch; see its scaladoc for
-    * the proof obligations). Each corpus pass then retires k merges
-    * instead of one — on the fixture's frequent regime this roughly
-    * halves the passes; correctness never rests on it (an invalid
-    * prefix degrades to the sequential singleton).
-    * The per-row delta is computed whole-row (before/after multiset
-    * diff), which is row-local and exact — position-local deltas
-    * (touching only symbols adjacent to each occurrence) would save
-    * more but need per-occurrence bookkeeping no built-in expresses.
-    * The loop is TWO-PHASE: while pairs are FREQUENT (argmax count
-    * n >= weight/3 — the early rounds, where the whole-row double-
-    * explode would cost ~2x a recount because nearly every row
-    * matches) it runs the plain recount argmax with NO counts table
-    * at all, byte-identical in cost to the recount loop. The argmax
-    * count is non-increasing over merges (every delta either lowers a
-    * pair's count or creates a pair bounded by n), so once n drops
-    * below weight/3 the loop bootstraps the counts table with one
-    * recount and switches PERMANENTLY to delta maintenance — the
-    * regime of the 31,980 late rounds of a 32k-vocab run, where a
-    * round costs only the `contains` scan plus the matched explode.
-    * (A delta-mode round whose pair turns frequent again just
-    * refreshes by recount — a performance fallback, not a correctness
-    * branch. In delta mode the batch is additionally capped so its
-    * cumulative count stays under weight/3, keeping the matched
-    * explode within the bound the phase switch promises.) At 100 TB
-    * the stream update itself writes per-round deltas (changed rows
-    * only) to a merge-on-read table instead of rewriting the corpus;
-    * subword trainers additionally keep a pair -> containing-streams
-    * index to skip the contains scan, a refinement documented rather
-    * than built (no Spark built-in maintains it incrementally).
+  /** The shared BPE merge loop (q155, q164, q173) over the collapsed
+    * (stream, cnt) dictionary (weightStreams): every pair aggregate
+    * weights by cnt, so per-pass corpus work is bounded by UNIQUE
+    * streams while results equal the raw unweighted loop exactly.
+    * Each pass
+    *   1. recounts the weighted adjacent pairs of the current streams
+    *      and collects the top 16 by (n desc, l asc, r asc) — the
+    *      shuffle carries partial counts over the distinct-pair domain
+    *      (<= vocab^2, thousands), never the corpus;
+    *   2. keeps the longest top-ranked prefix that provably yields the
+    *      SAME merge sequence as one argmax per pass (selectBatch —
+    *      symbol-disjointness, concat guards, strict count drop after
+    *      the batch; see its scaladoc for the proof obligations), so a
+    *      pass retires up to 8 merges — on the fixtures about half the
+    *      passes of the sequential loop; correctness never rests on it
+    *      (an invalid prefix degrades to the sequential singleton);
+    *   3. applies the batch as ONE chained codegen'd `replace`
+    *      (applyMerges) and localCheckpoints the result, so pass p
+    *      does not recompute passes 1..p-1.
+    * A pass is two SQL executions (the top-16 collect and the pin);
+    * a run adds the input pin and the `base` collect before it.
     *
-    * Results are IDENTICAL to the recount loop (the counts table holds
-    * exact weighted counts, so every argmax and tie-break agrees);
-    * TextAnalysisSpec pins the equivalence on adversarial literals
-    * (duplicates, batch-refusal shapes, concat collisions) plus a
-    * randomized property sweep, and the DuckDB oracle replays the
-    * recount form.
+    * `base` is the starting alphabet (baseSymbols); every merged
+    * symbol joins it driver-side as merges are recorded, and
+    * selectBatch consults it to refuse batching a merge whose concat
+    * collides with a live symbol.
+    *
+    * Real trainers at a 32k-vocab target (Sennrich's subword-nmt
+    * onward) maintain pair counts by DELTAS once the top pair turns
+    * rare: only streams containing a merged pair change. That regime
+    * is far from every entry here — every pass of every run opens at
+    * 8x or more a third of the corpus weight (SURVEY §6.4) — so the
+    * loop keeps the one recount path. At 100 TB the stream update
+    * writes per-pass deltas (changed rows only) to a merge-on-read
+    * table instead of rewriting the corpus.
+    *
+    * Results are IDENTICAL to the recount loop (every argmax and
+    * tie-break agrees); TextAnalysisSpec pins the equivalence on
+    * adversarial literals (duplicates, batch-refusal shapes, concat
+    * collisions) plus a randomized property sweep, and the DuckDB
+    * oracle replays the recount form.
     */
-  private def bpeMergeLoop(streams0: DataFrame, rounds: Int)
+  private def bpeMergeLoop(
+      streams0: DataFrame, base: Set[String], rounds: Int)
       : Seq[(Int, String, String, String, Long)] = {
-    val SEP = "\u0001"
     if (rounds <= 0) return Seq.empty
-    // adjacent-pair explode with `syms` materialized through a
-    // PROJECTION BOUNDARY before the transform lambda touches it —
-    // inlining the split inside each element_at re-evaluates it per
-    // element (O(len^2) per row: measured 152 s vs 10 s on q155). The
-    // size>=2 filter guards sequence()'s auto-descend on stop < start,
-    // which would fabricate reversed pairs on 1-symbol streams.
-    // position-explode + top-level element_at (the docShingleSets
-    // codegen rule): higher-order lambdas are CodegenFallback and
-    // build the full per-row pair-struct array before exploding; this
-    // form emits the identical pair multiset in one codegen stage
-    def explodePairs(df: DataFrame, streamCol: String,
-        carry: Seq[Column]): DataFrame =
-      df.select(carry :+
-        split(btrim(col(streamCol), lit(SEP)), SEP + SEP).as("syms"): _*)
-        .where(size(col("syms")) >= 2)
-        .select(carry ++ Seq(col("syms"),
-          explode(sequence(lit(1), size(col("syms")) - 1)).as("i")): _*)
-        .select(carry :+ struct(
-          element_at(col("syms"), col("i")).as("l"),
-          element_at(col("syms"), col("i") + 1).as("r")).as("p"): _*)
-    def recount(df: DataFrame): DataFrame =
-      explodePairs(df, "stream", Seq(col("cnt")))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("n"))
-    var streams = streams0
-    var lastCkpt = streams
-    // weighted corpus size (sum of dictionary counts == raw rows) for
-    // the phase threshold (streams0 is checkpointed — a cheap scan,
-    // once per training run)
-    val w0 = streams0.agg(sum(col("cnt"))).head()
-    val totalW = if (w0.isNullAt(0)) 0L else w0.getLong(0)
-    // SYMBOL UNIVERSE for the batch concat guard: the base alphabet
-    // (distinct symbols — codepoints seen, or <=256 byte values; one
-    // up-front bounded collect) plus every merged symbol, appended
-    // driver-side as merges are recorded. selectBatch consults it to
-    // refuse batching a merge whose concat collides with a live
-    // symbol (see its scaladoc).
-    val vocab = scala.collection.mutable.Set.empty[String]
-    streams0
-      .select(explode(split(btrim(col("stream"), lit(SEP)), SEP + SEP)).as("s"))
-      .distinct().collect().foreach(r => vocab += r.getString(0))
-    // delta-phase state: the checkpointed pair-count table (null while
-    // still in the recount phase)
-    var counts: DataFrame = null
+    val vocab = scala.collection.mutable.Set.empty[String] ++= base
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
+    // streams0 arrives checkpointed (checkpointStreams); `streams` is
+    // always the one frame holding checkpointed blocks
+    var streams = streams0
     var r = 1
     var exhausted = false
     val M = 16
     while (r <= rounds && !exhausted) {
-      val topRows =
-        (if (counts == null) recount(streams) else counts)
-          .orderBy(col("n").desc, col("l").asc, col("r").asc)
-          .limit(M).collect()
+      // adjacent-pair explode with `syms` materialized through a
+      // PROJECTION BOUNDARY before element_at touches it — inlining
+      // the split inside each element_at re-evaluates it per element
+      // (O(len^2) per row: measured 152 s vs 10 s on q155). The
+      // size>=2 filter guards sequence()'s auto-descend on stop <
+      // start, which would fabricate reversed pairs on 1-symbol
+      // streams. Position-explode + top-level element_at (the
+      // docShingleSets codegen rule): higher-order lambdas are
+      // CodegenFallback and build the full per-row pair-struct array
+      // before exploding; this form emits the identical pair
+      // multiset in one codegen stage.
+      val topRows = streams
+        .select(col("cnt"), bpeSymbols(col("stream")).as("syms"))
+        .where(size(col("syms")) >= 2)
+        .select(col("cnt"), col("syms"),
+          explode(sequence(lit(1), size(col("syms")) - 1)).as("i"))
+        .select(col("cnt"), struct(
+          element_at(col("syms"), col("i")).as("l"),
+          element_at(col("syms"), col("i") + 1).as("r")).as("p"))
+        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+        .agg(sum(col("cnt")).as("n"))
+        .orderBy(col("n").desc, col("l").asc, col("r").asc)
+        .limit(M).collect()
       if (topRows.isEmpty) exhausted = true
       else {
         val ranked = topRows.toSeq.map(t =>
           (t.getString(0), t.getString(1), t.getLong(2)))
-        val frequent = ranked.head._3 >= totalW / 3
-        // true-delta iterations cap the batch's cumulative count so
-        // the matched-row explode stays within the phase bound
-        val cap =
-          if (counts != null && !frequent)
-            Some(math.max(totalW / 3, ranked.head._3))
-          else None
         val batch = selectBatch(ranked, vocab,
-          math.min(8, rounds - r + 1), complete = ranked.size < M, cap)
+          math.min(8, rounds - r + 1), complete = ranked.size < M)
         batch.zipWithIndex.foreach { case ((l, rt, n), i) =>
           merges += ((r + i, l, rt, l + rt, n))
           vocab += (l + rt)
         }
-        val pats = batch.map { case (l, rt, _) =>
-          (SEP + l + SEP + SEP + rt + SEP, SEP + l + rt + SEP) }
-        def applyBatch(c: Column): Column =
-          pats.foldLeft(c) { case (s, (p, m)) =>
-            replace(s, lit(p), lit(m)) }
-        val oldStreams = streams
         // stream update + checkpoint: ONE chained codegen'd replace
         // pass retires the whole batch (see the recount loop's
         // checkpoint-cadence note)
-        streams = streams
-          .withColumn("stream", applyBatch(col("stream")))
+        val next = streams
+          .withColumn("stream", applyMerges(col("stream"),
+            batch.map { case (l, rt, _) => (l, rt) }))
           .localCheckpoint(true)
-        val nextCounts =
-          if (counts == null && frequent) null // stay in recount phase
-          else if (frequent) {
-            // frequent pair in delta phase: a whole-row delta would
-            // explode ~2x the corpus — refresh by one recount instead
-            recount(streams).localCheckpoint(true)
-          } else if (counts == null) {
-            // SWITCH: bootstrap the counts table off the replaced
-            // stream; every later iteration is delta-maintained
-            recount(streams).localCheckpoint(true)
-          } else {
-            // rare batch: delta over MATCHED rows only — before-pairs
-            // at -cnt, the replaced stream's pairs at +cnt, summed
-            // over the (bounded) pair domain, patched into the counts
-            // table
-            val matched = pats.map { case (p, _) =>
-              col("stream").contains(p) }.reduce(_ || _)
-            val delta = explodePairs(
-              oldStreams
-                .where(matched)
-                .select(col("cnt"), posexplode(array(
-                  col("stream"), applyBatch(col("stream"))))),
-              "col", Seq(col("cnt"), col("pos")))
-              .select(col("p"),
-                (when(col("pos") === 0, lit(-1L)).otherwise(lit(1L)) *
-                  col("cnt")).as("d"))
-              .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-              .agg(sum(col("d")).as("d"))
-              .where(col("d") =!= 0)
-            counts.as("c")
-              .join(delta.as("dl"),
-                col("c.l") === col("dl.l") && col("c.r") === col("dl.r"),
-                "full_outer")
-              .select(
-                coalesce(col("c.l"), col("dl.l")).as("l"),
-                coalesce(col("c.r"), col("dl.r")).as("r"),
-                (coalesce(col("c.n"), lit(0L)) +
-                  coalesce(col("dl.d"), lit(0L))).as("n"))
-              .where(col("n") > 0)
-              .localCheckpoint(true)
-          }
-        if (counts != null) counts.unpersist()
-        counts = nextCounts
-        lastCkpt.unpersist()
-        lastCkpt = streams
+        streams.unpersist()
+        streams = next
         r += batch.size
       }
     }
-    lastCkpt.unpersist()
-    if (counts != null) counts.unpersist()
+    streams.unpersist()
     merges.result()
   }
 
   /** Select the longest top-ranked prefix of `ranked` (sorted by the
     * loop ordering: n desc, l asc, r asc) that PROVABLY produces the
     * same merge sequence as applying one argmax at a time — the
-    * round-12 batching device. The sequential loop's pick at step j
-    * is the argmax of the counts AFTER merges 1..j-1; a prefix
-    * p1..pk is safe when those earlier merges can neither change any
-    * later batch pair's count nor create/boost a pair that would
-    * outrank it:
+    * round-12 batching device of [[bpeMergeLoop]]. The sequential
+    * loop's pick at step j is the argmax of the counts AFTER merges
+    * 1..j-1; a prefix p1..pk is safe when those earlier merges can
+    * neither change any later batch pair's count nor create/boost a
+    * pair that would outrank it:
     *
     *   1. PAIRWISE SYMBOL-DISJOINT — merging (l,r) only changes
     *      counts of pairs touching l or r, so disjoint later picks
-    *      keep their table count (recorded n is exact);
+    *      keep their recounted n (recorded n is exact);
     *   2. NO CONCAT ALIASING — a later pair may not use an earlier
     *      batch concat as a symbol (its count changes mid-batch), no
     *      two batch pairs may share one concat string, and a pair
@@ -1411,7 +1354,7 @@ object TextAnalysis {
     *      symbol — safe only with no later in-batch picks); a
     *      self-pair (l==r) likewise ends the batch (its own merged
     *      symbol chains: "aa" from "aaaa" creates (aa,aa) unbounded
-    *      by any neighbor in the table);
+    *      by any neighbor in the listing);
     *   3. STRICT DROP — every pair OUTSIDE the prefix must count
     *      strictly below the weakest batch member: new pairs created
     *      by merging pi are bounded by a neighbor pair's old count
@@ -1420,9 +1363,6 @@ object TextAnalysis {
     *      outside it (disjointness), hence under that strict bound —
     *      so no created pair can outrank a remaining batch member,
     *      even by tie-break.
-    *
-    *   `cap` (delta-phase): additionally trim so cumulative n stays
-    *   under the phase bound (performance, not correctness).
     *
     * Falls back to the plain sequential singleton whenever the checks
     * refuse — batching is a pure optimization with zero semantic
@@ -1433,8 +1373,7 @@ object TextAnalysis {
       ranked: Seq[(String, String, Long)],
       vocab: String => Boolean,
       maxK: Int,
-      complete: Boolean,
-      cap: Option[Long] = None): Seq[(String, String, Long)] = {
+      complete: Boolean): Seq[(String, String, Long)] = {
     if (ranked.isEmpty) return Seq.empty
     val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     val used = scala.collection.mutable.Set.empty[String]
@@ -1455,11 +1394,6 @@ object TextAnalysis {
       }
     }
     var out = buf.toSeq
-    cap.foreach { c =>
-      var cum = 0L
-      out = out.takeWhile { case (_, _, n) =>
-        cum += n; cum <= c || cum == n } // always keep the head
-    }
     // strict-drop: pop while the weakest member ties the first
     // excluded pair (sorted desc, so this clears the whole tie group)
     while (out.size > 1 && out.size < ranked.size &&
@@ -1471,13 +1405,12 @@ object TextAnalysis {
   /** The ORIGINAL full-recount merge loop — every round scans the
     * whole corpus into a pair aggregate. Kept as the differential
     * twin: this is the form the generated DuckDB CTE oracle replays,
-    * and TextAnalysisSpec pins `bpeMergeLoop` (incremental) against it
-    * on adversarial literals. Not used by any driver entry.
+    * and TextAnalysisSpec pins `bpeMergeLoop` (weighted, batched)
+    * against it on adversarial literals. Not used by any driver entry.
     */
   private[operators] def bpeMergeLoopRecount(
       streams0: DataFrame, rounds: Int)
       : Seq[(Int, String, String, String, Long)] = {
-    val SEP = "\u0001"
     // streams0 arrives checkpointed (checkpointStreams); lastCkpt
     // tracks the one frame holding checkpointed blocks — everything
     // between checkpoints is a plain unmaterialized chain on top of it
@@ -1571,13 +1504,11 @@ object TextAnalysis {
     * #5): per-round cost bounded by UNIQUE streams, and the loop
     * never re-running the symbolizer regex on raw splits.
     */
-  private[graft] def byteLoopStreams(docs: DataFrame): DataFrame = {
-    val SEP = "\u0001"
+  private[graft] def byteLoopStreams(docs: DataFrame): DataFrame =
     checkpointStreams(weightStreams(docs
       .where(octet_length(col("text")) >= 2)
       .select(regexp_replace(hex(encode(col("text"), "UTF-8")),
         "(..)", SEP + "$1" + SEP).as("stream"))))
-  }
 
   /** The byte trainer over any one-string-column corpus (spec entry
     * point: pins the byte-vs-codepoint divergence on non-ASCII
@@ -1586,19 +1517,17 @@ object TextAnalysis {
   def bpeTrainBytesOn(
       spark: SparkSession, docs: DataFrame,
       vocabTarget: Int, maxRounds: Int): DataFrame = {
-    val SEP = "\u0001"
     val streams = byteLoopStreams(docs)
     // observed base vocabulary: distinct bytes present in the corpus
     // (<= 256 by construction) — the v0 the stop criterion counts
-    // from. Reads the checkpointed copy: one distributed scan, no
-    // re-run of the symbolizer regex. The oracle's v0 CTE twin.
-    val v0 = streams
-      .select(explode(split(btrim(col("stream"), lit(SEP)), SEP + SEP))
-        .as("s"))
-      .agg(count_distinct(col("s"))).head().getLong(0)
+    // from, and the alphabet the loop's concat guard starts from. One
+    // collect of the checkpointed copy: no re-run of the symbolizer
+    // regex. The oracle's v0 CTE twin.
+    val base = baseSymbols(streams)
+    val v0 = base.size.toLong
     val rounds = math.min(maxRounds.toLong, math.max(0L, vocabTarget - v0))
     import spark.implicits._
-    bpeMergeLoop(streams, rounds.toInt)
+    bpeMergeLoop(streams, base, rounds.toInt)
       .toDF("merge_round", "left_sym", "right_sym", "merged", "n")
       .withColumn("vocab_size", lit(v0) + col("merge_round"))
   }
@@ -1636,7 +1565,6 @@ object TextAnalysis {
       baseRounds: Int = bpeExtendBaseRounds,
       extraRounds: Int = bpeExtendExtraRounds): DataFrame =
     Scratch.withScratch(spark, "q173_bpe_ext", sfDir) { dir =>
-      val SEP = "\u0001"
       val docs = Tables.load(spark, sfDir, "documents")
         .select(col("doc_id"), col("text"))
       // day-1 base training memoized per (sfDir, rounds) — the entry
@@ -1644,31 +1572,16 @@ object TextAnalysis {
       // persisted artifact a deployment would already hold (same
       // rationale as q157's memo; deterministic, result-identical)
       import spark.implicits._
-      bpeTrainMemo.getOrElseUpdate(
-        (sfDir + "#q173base@" + Tables.fingerprint(sfDir, "documents"),
-          baseRounds),
-        bpeTrainOn(spark,
-          docs.where(col("doc_id") % 2 === 0).select(col("text")),
-          baseRounds)
-          .orderBy(col("merge_round")).collect().toSeq
-          .map(r => (r.getInt(0), r.getString(1), r.getString(2),
-            r.getString(3), r.getLong(4))))
+      memoMerges(sfDir, "#q173base", baseRounds)(bpeTrainOn(spark,
+        docs.where(col("doc_id") % 2 === 0).select(col("text")),
+        baseRounds))
         .toDF("merge_round", "left_sym", "right_sym", "merged", "n")
         .write.mode("overwrite").parquet(s"$dir/merges")
       val baseDf = Tables.parquet(spark, s"$dir/merges")
       val frozen = baseDf.orderBy(col("merge_round"))
         .select(col("left_sym"), col("right_sym"))
         .collect().toSeq.map(r => (r.getString(0), r.getString(1)))
-      val applied = frozen.foldLeft(
-        regexp_replace(bpeSafeText(col("text")), "(?s)(.)", SEP + "$1" + SEP): Column) {
-        case (s, (l, r)) =>
-          replace(s, lit(SEP + l + SEP + SEP + r + SEP),
-            lit(SEP + l + r + SEP))
-      }
-      val streams = docs.where(length(col("text")) >= 2)
-        .select(applied.as("stream"))
-      val ext = bpeMergeLoop(
-        checkpointStreams(weightStreams(streams)), extraRounds)
+      val ext = trainStreams(sentinelStreams(docs, frozen), extraRounds)
         .map { case (r, l, rt, m, n) => (baseRounds + r, l, rt, m, n) }
         .toDF("merge_round", "left_sym", "right_sym", "merged", "n")
       baseDf.withColumn("phase", lit("base"))
@@ -1676,6 +1589,33 @@ object TextAnalysis {
         .select(col("phase"), col("merge_round"), col("left_sym"),
           col("right_sym"), col("merged"), col("n"))
     }
+
+  private val bpeTrainMemo = scala.collection.concurrent.TrieMap
+    .empty[(String, Int), Seq[(Int, String, String, String, Long)]]
+
+  /** The merge table `train` yields, in round order, memoized under
+    * (sfDir + tag + "@" + documents fingerprint, rounds): tag "" is
+    * the deployment's tokenizer, "#q173base" q173's day-1 base.
+    */
+  private def memoMerges(sfDir: String, tag: String, rounds: Int)(
+      train: => DataFrame): Seq[(Int, String, String, String, Long)] =
+    bpeTrainMemo.getOrElseUpdate(
+      (sfDir + tag + "@" + Tables.fingerprint(sfDir, "documents"), rounds),
+      train.orderBy(col("merge_round"))
+        .collect().toSeq.map(r => (r.getInt(0), r.getString(1),
+          r.getString(2), r.getString(3), r.getLong(4))))
+
+  /** The deployment's trained merge table for `sfDir` — memoized per
+    * (path + data fingerprint, rounds), deterministic, shared by
+    * every consumer of the tokenizer artifact (q157 encode, q238
+    * fertility audit, q388 migration diff).
+    */
+  private[graft] def trainedMerges(
+      spark: SparkSession, sfDir: String, rounds: Int)
+      : Seq[(Int, String, String, String, Long)] =
+    memoMerges(sfDir, "", rounds)(bpeTrain(spark, sfDir, rounds))
+
+  private[graft] val bpeEncodeHeadN = 8
 
   /** The q157 driver entry: BPE tokenizer APPLICATION — the serving
     * half of q155, run as the artifact lifecycle a deployment uses:
@@ -1709,25 +1649,6 @@ object TextAnalysis {
     * per key, so a cache hit is result-identical to a fresh train;
     * the artifact write/read-back remains in the timed path.
     */
-  private val bpeTrainMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), Seq[(Int, String, String, String, Long)]]
-
-  /** The deployment's trained merge table for `sfDir` — memoized per
-    * (path + data fingerprint, rounds), deterministic, shared by
-    * every consumer of the tokenizer artifact (q157 encode, q238
-    * fertility audit).
-    */
-  private[graft] def trainedMerges(
-      spark: SparkSession, sfDir: String, rounds: Int)
-      : Seq[(Int, String, String, String, Long)] =
-    bpeTrainMemo.getOrElseUpdate(
-      (sfDir + "@" + Tables.fingerprint(sfDir, "documents"), rounds),
-      bpeTrain(spark, sfDir, rounds).orderBy(col("merge_round"))
-        .collect().toSeq.map(r => (r.getInt(0), r.getString(1),
-          r.getString(2), r.getString(3), r.getLong(4))))
-
-  private[graft] val bpeEncodeHeadN = 8
-
   def bpeEncode(
       spark: SparkSession, sfDir: String,
       rounds: Int = bpeRounds): DataFrame =
@@ -1753,21 +1674,14 @@ object TextAnalysis {
     */
   def bpeEncodeWith(
       spark: SparkSession, docs: DataFrame,
-      merges: Seq[(String, String)], headN: Int): DataFrame = {
-    val SEP = "\u0001"
-    val stream = merges.foldLeft(
-      regexp_replace(bpeSafeText(col("text")), "(?s)(.)", SEP + "$1" + SEP): Column) {
-      case (s, (l, r)) =>
-        replace(s, lit(SEP + l + SEP + SEP + r + SEP), lit(SEP + l + r + SEP))
-    }
+      merges: Seq[(String, String)], headN: Int): DataFrame =
     docs.where(length(col("text")) >= 2)
       .select(col("doc_id"),
-        split(btrim(stream, lit(SEP)), SEP + SEP).as("toks"))
+        bpeSymbols(codepointStream(col("text"), merges)).as("toks"))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
         size(array_distinct(col("toks"))).cast("long").as("n_unique"),
         array_join(slice(col("toks"), 1, headN), ",").as("head_toks"))
-  }
 
   /** The q238 driver entry: TOKENIZER FERTILITY AUDIT — the
     * per-language chars-per-token table every multilingual tokenizer
@@ -3376,6 +3290,12 @@ object TextAnalysis {
         expr("n_tokens * 1000000 DIV n_incidences"))
   }
 
+  /** Merge rounds of q388's v1 tokenizer: the first
+    * `bpeMigrationV1Rounds` merges of the deployment's `bpeRounds`
+    * (v2); its oracle reads both.
+    */
+  private[graft] val bpeMigrationV1Rounds = 10
+
   /** The q388 driver entry: TOKENIZER MIGRATION DIFF — the
     * re-encode bill for upgrading a deployment's merge table: BPE
     * training is greedy-sequential, so a v1 tokenizer of r₁ rounds
@@ -3395,11 +3315,11 @@ object TextAnalysis {
     * state is q155's (measured caps); one lang-domain aggregate.
     */
   def tokenizerMigrationDiff(spark: SparkSession, sfDir: String): DataFrame = {
-    val merges = trainedMerges(spark, sfDir, 20)
+    val merges = trainedMerges(spark, sfDir, bpeRounds)
       .map { case (_, l, r, _, _) => (l, r) }
     val docs = Tables.load(spark, sfDir, "documents")
     val e1 = bpeEncodeWith(spark, docs.select(col("doc_id"), col("text")),
-      merges.take(10), headN = 1)
+      merges.take(bpeMigrationV1Rounds), headN = 1)
       .select(col("doc_id"), col("n_tokens").as("t1"))
     val e2 = bpeEncodeWith(spark, docs.select(col("doc_id"), col("text")),
       merges, headN = 1)

@@ -168,8 +168,8 @@ class TextAnalysisSpec extends AnyFunSuite {
   }
 
   test("bpe incremental pair-count loop equals the full-recount loop (round-11)") {
-    // the delta-maintained counts table must reproduce EVERY argmax
-    // and tie-break of the recount loop — exercised on the adversarial
+    // the weighted, batched loop must reproduce EVERY argmax and
+    // tie-break of the recount loop — exercised on the adversarial
     // shapes: overlapping chains (aaaa), boundary-sharing repeats
     // (abababa), a doc that collapses to ONE symbol mid-training (ab
     // → [ab], zero pairs — the pairArr null-guard), and a doc whose
@@ -185,10 +185,10 @@ class TextAnalysisSpec extends AnyFunSuite {
         r.getString(3), r.getLong(4))).toSeq
     assert(inc == rec)
     assert(inc.nonEmpty)
-    // force the DELTA phase: 40 docs with pairwise-distinct bigrams
-    // mean every pair count is 1 < rows/3, so the loop switches to
-    // delta maintenance after round 1 and ties exercise the argmax
-    // tie-break through the counts table
+    // all-ties listing: 40 docs with pairwise-distinct bigrams give
+    // every pair count 1, so each pass's top 16 is one tie group, the
+    // batch stays a singleton and the (l, r) tie-break alone picks
+    // every merge
     val rare = (0 until 40)
       .map(i => s"${('a' + i % 26).toChar}${('A' + i / 26).toChar}")
       .toDF("text")
@@ -307,10 +307,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     // two pairs sharing one concat string stops before the second
     assert(selectBatch(Seq(("a", "bc", 10L), ("ab", "c", 9L)),
       noVocab, 8, complete = true) === Seq(("a", "bc", 10L)))
-    // delta-phase cap trims by cumulative count
-    assert(selectBatch(Seq(("a", "b", 10L), ("c", "d", 9L), ("e", "f", 8L)),
-      noVocab, 8, complete = true, cap = Some(19L)) ===
-      Seq(("a", "b", 10L), ("c", "d", 9L)))
     // incomplete listing may hide ties at rank M: never take all M
     assert(selectBatch(Seq(("a", "b", 10L), ("c", "d", 9L)),
       noVocab, 8, complete = false) === Seq(("a", "b", 10L)))
@@ -546,6 +542,28 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(r.getAs[Long]("n_stopwords") == 2)   // two "the"
     assert(r.getAs[Long]("n_punct") == 2)       // , and !
     assert(r.getAs[Double]("stopword_ratio") == 0.5)
+  }
+
+  test("bpe training executions: an input pin, a base collect, two per pass") {
+    // "abab" x2, "cdcd", "xy" train in three one-merge passes: (a,b)
+    // ends its batch at (b,a)'s shared symbol, (ab,ab) is a self-pair,
+    // and the third pass has one round left. Each run is the input
+    // pin, the base-alphabet collect, per pass the top-16 collect and
+    // the stream pin, and the caller's collect of the merge table.
+    val docs = Seq("abab", "abab", "cdcd", "xy").toDF("text")
+    val (cp, mc) = graft.sinks.Sinks.withMetrics(spark)(
+      TextAnalysis.bpeTrainOn(spark, docs, rounds = 3).collect())
+    assert(cp.map(_.getString(3)).toSeq == Seq("ab", "abab", "cd"))
+    val trainActions = mc.executions.map(_.action)
+    assert(trainActions.size == 9, trainActions)
+    // the byte trainer's v0 is the size of that same base collect
+    val (bp, mb) = graft.sinks.Sinks.withMetrics(spark)(
+      TextAnalysis.bpeTrainBytesOn(spark, docs, vocabTarget = 100,
+        maxRounds = 3).collect())
+    assert(bp.map(_.getString(3)).toSeq == Seq("6162", "61626162", "6364"))
+    assert(bp.map(_.getLong(5)).toSeq == Seq(7L, 8L, 9L))
+    val byteActions = mb.executions.map(_.action)
+    assert(byteActions.size == 9, byteActions)
   }
 
   test("byte bpe: non-ASCII splits to UTF-8 bytes where the codepoint trainer cannot") {
